@@ -1,6 +1,6 @@
 """The ``ingest`` workload: the flagship path raw JSON → translator → CMF
 wire JSON → tenant route → per-tenant parquet sink, run as batch jobs and
-as an open-loop Structured Streaming query."""
+as a Structured Streaming query fed open-loop and then in bursts."""
 
 from __future__ import annotations
 
@@ -15,14 +15,15 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
-from perfbench.common import Tracer, dir_stats, event_log_totals
+from perfbench.common import Tracer, dir_stats, event_log_sql_times, event_log_totals
 from perfbench.inputs import telemetry_lines, write_lines
 from pulsar_ingestion_spark.operators.filterer import extract_tenant, filter_routable
-from pulsar_ingestion_spark.operators.translators import cmf_to_json, union_cmf
+from pulsar_ingestion_spark.operators.translators import union_cmf
 from pulsar_ingestion_spark.plans.pipeline import (
     TRANSLATORS,
     PipelineSpec,
     SourceSpec,
+    build_cmf_stream,
     run_pipeline,
 )
 from pulsar_ingestion_spark.sources.registry import open_source
@@ -30,22 +31,30 @@ from pulsar_ingestion_spark.sources.registry import open_source
 # (translator, tenant, records).  The blank tenant is unroutable on purpose:
 # the Filterer drops it, which the conservation check must account for.
 BATCH_SOURCES = [
-    ("geotab", "acme", 48_000),
-    ("calamp", "globex", 36_000),
-    ("ford", "initech", 28_000),
-    ("geotab", " ", 8_000),
+    ("geotab", "acme", 16_000),
+    ("calamp", "globex", 12_000),
+    ("ford", "initech", 9_200),
+    ("geotab", " ", 2_800),
 ]
 BATCH_FILES_PER_SOURCE = 4
 MALFORMED_PCT = 1.0
-CUT_ROUNDS = 3
+MIN_BATCH_PASSES = 3
+CUT_ROUNDS = 2
+# The cut self times must add up to the untraced pass within the tracing
+# overhead or this share of the pass, whichever is larger.
+CUT_SUM_TOLERANCE = 0.25
 
 STREAM_SOURCES = [("geotab", "acme"), ("calamp", "globex"), ("ford", "initech")]
-STREAM_TRIGGER = "1 second"
-STREAM_FILE_RECORDS = 100
-STREAM_DROP_INTERVAL_S = 0.0625  # offered load: 16 files/s = 1600 records/s
-STREAM_MIN_OPEN_S = 3.0
+# A trigger takes about a second on a 4-core host; a 2 s interval leaves
+# headroom, so the open loop never queues behind a slow trigger.
+STREAM_TRIGGER_S = 2
+STREAM_FILE_RECORDS = 50
+STREAM_DROP_INTERVAL_S = 0.1  # offered load: 10 files/s = 500 records/s
+STREAM_MIN_OPEN_S = 4.0
 STREAM_WARMUP_S = 1.0   # untimed open-loop lead-in: the first micro-batches compile
 STREAM_WAIT_S = 60.0
+BURSTS = 2
+BURST_FILE_RECORDS = 4_000  # one file per source per burst
 
 
 @dataclass
@@ -96,11 +105,12 @@ def routed_digest(spark, out: str) -> tuple[int, int]:
     return int(row["n"]), int(row["h"] or 0)
 
 
-def check_batch_output(spark, sources: list[SourceDir], out: str, dead: str) -> list[str]:
-    """Conservation, read back from the output and dead-letter dirs:
-    in == routed + dead-lettered + unroutable, per tenant and in total,
-    and every routed payload carries the tenant of its partition."""
-    errors = []
+def check_batch_outputs(spark, sources: list[SourceDir],
+                        outputs: list[tuple[str, str]]) -> list[list[str]]:
+    """Conservation, read back from each pass's output and dead-letter
+    dirs: in == routed + dead-lettered + unroutable, per tenant and in
+    total, and every routed payload carries the tenant of its partition.
+    One job per kind of dir covers every pass; returns each pass's errors."""
     expect_routed: dict[str, int] = {}
     unroutable = 0
     for s in sources:
@@ -109,27 +119,45 @@ def check_batch_output(spark, sources: list[SourceDir], out: str, dead: str) -> 
             expect_routed[s.tenant] = expect_routed.get(s.tenant, 0) + good
         else:
             unroutable += good
-    rows = (
-        spark.read.parquet(out).groupBy("tenantId")
+    expect_dead = sum(s.malformed for s in sources)
+    total_in = sum(s.records for s in sources)
+
+    def by_pass(paths):
+        frames = [spark.read.parquet(p).withColumn("pass", F.lit(i)) for i, p in enumerate(paths)]
+        df = frames[0]
+        for f in frames[1:]:
+            df = df.unionByName(f)
+        return df
+
+    routed_rows = (
+        by_pass([o for o, _d in outputs]).groupBy("pass", "tenantId")
         .agg(F.count(F.lit(1)).alias("n"),
              F.sum((F.get_json_object("value", "$.meta.tenantId") != F.col("tenantId"))
                    .cast("int")).alias("wrong"))
         .collect()
     )
-    routed = {r["tenantId"]: r["n"] for r in rows}
-    if routed != expect_routed:
-        errors.append(f"routed per tenant {routed} != expected {expect_routed}")
-    wrong = sum(r["wrong"] or 0 for r in rows)
-    if wrong:
-        errors.append(f"{wrong} routed payloads carry another tenant")
-    dead_n = spark.read.parquet(dead).count()
-    expect_dead = sum(s.malformed for s in sources)
-    if dead_n != expect_dead:
-        errors.append(f"dead-lettered {dead_n} != malformed {expect_dead}")
-    total_in = sum(s.records for s in sources)
-    if total_in != sum(routed.values()) + dead_n + unroutable:
-        errors.append(f"in {total_in} != routed {sum(routed.values())} + dead {dead_n} "
-                      f"+ unroutable {unroutable}")
+    dead_rows = by_pass([d for _o, d in outputs]).groupBy("pass").count().collect()
+    routed = [dict() for _ in outputs]
+    wrong = [0] * len(outputs)
+    dead_n = [0] * len(outputs)
+    for r in routed_rows:
+        routed[r["pass"]][r["tenantId"]] = r["n"]
+        wrong[r["pass"]] += r["wrong"] or 0
+    for r in dead_rows:
+        dead_n[r["pass"]] = r["count"]
+    errors = []
+    for i, (out, _dead) in enumerate(outputs):
+        e = []
+        if routed[i] != expect_routed:
+            e.append(f"{out}: routed per tenant {routed[i]} != expected {expect_routed}")
+        if wrong[i]:
+            e.append(f"{out}: {wrong[i]} routed payloads carry another tenant")
+        if dead_n[i] != expect_dead:
+            e.append(f"{out}: dead-lettered {dead_n[i]} != malformed {expect_dead}")
+        if total_in != sum(routed[i].values()) + dead_n[i] + unroutable:
+            e.append(f"{out}: in {total_in} != routed {sum(routed[i].values())} "
+                     f"+ dead {dead_n[i]} + unroutable {unroutable}")
+        errors.append(e)
     return errors
 
 
@@ -138,50 +166,68 @@ def _noop(df) -> None:
 
 
 def traced_cuts(spark, tracer: Tracer, sources: list[SourceDir], work: str,
-                rounds: int = CUT_ROUNDS) -> dict:
-    """Run the flagship path cut after each layer into a ``noop`` sink,
-    then the full ``run_pipeline`` traced and untraced, ``rounds`` times
-    interleaved.  A layer's self time is the difference between the
-    medians of consecutive cuts."""
-    t0 = time.perf_counter()
+                event_log_dir: str, rounds: int = CUT_ROUNDS) -> dict:
+    """Time the flagship path layer by layer, ``rounds`` times interleaved
+    with the full ``run_pipeline`` traced and untraced.
+
+    The scan and translate cuts force ``open_source`` and ``translate_*``
+    into a ``noop`` sink; the to_json and route cuts take the wire frame
+    from the engine's own ``build_cmf_stream``, so they follow its plan.
+    The driver's plan build is timed around ``build_cmf_stream``; the sink
+    write on its own, from the routed rows held in memory; the dead-letter
+    branch is the event log's time for the traced pass's dead-letter
+    write.  Each is a median over the rounds."""
     raws = [open_source(spark, "jsonl", streaming=False, path=s.path) for s in sources]
-    goods = [
-        TRANSLATORS[s.translator](r.select("value"), tenant=s.tenant, dead_letter=True)[0]
-        .select("cmf")
-        for s, r in zip(sources, raws)
-    ]
-    cmf = union_cmf(*goods)
-    wire = cmf_to_json(cmf, out_col="value").select("value")
-    routed = filter_routable(extract_tenant(wire)).select("tenantId", "value")
-    build_s = time.perf_counter() - t0
     scan = raws[0].select("value")
     for r in raws[1:]:
         scan = scan.unionByName(r.select("value"))
-    cuts = (("sources.scan", scan), ("translators.translate", cmf),
-            ("translators.to_json", wire), ("filterer.route", routed))
+    cmf = union_cmf(*[
+        TRANSLATORS[s.translator](r.select("value"), tenant=s.tenant, dead_letter=True)[0]
+        .select("cmf")
+        for s, r in zip(sources, raws)
+    ])
+    unused = os.path.join(work, "unused")
     durations: dict[str, list[float]] = {}
-    spans = {}
+    dead_paths, full_spans = [], []
     with tracer.span(spark, "ingest.batch.cuts"):
         for r in range(rounds):
+            with tracer.span(spark, "translators.build") as sp:
+                wire, _dead = build_cmf_stream(spark, pipeline_spec(sources, unused, unused),
+                                               streaming=False)
+            durations.setdefault("translators.build", []).append(sp.end - sp.start)
+            routed = filter_routable(extract_tenant(wire)).select("tenantId", "value")
+            cuts = (("sources.scan", scan), ("translators.translate", cmf),
+                    ("translators.to_json", wire), ("filterer.route", routed))
             for name, df in cuts:
                 with tracer.span(spark, name) as sp:
                     _noop(df)
                 durations.setdefault(name, []).append(sp.end - sp.start)
+            held = routed.cache()
+            held.count()
+            with tracer.span(spark, "pipeline.write") as sp:
+                held.write.mode("append").partitionBy("tenantId").parquet(
+                    os.path.join(work, f"write-cut{r}"))
+            durations.setdefault("pipeline.write", []).append(sp.end - sp.start)
+            held.unpersist(blocking=True)
             out = os.path.join(work, f"traced-out{r}")
             dead = os.path.join(work, f"traced-dead{r}")
             with tracer.span(spark, "pipeline.run_pipeline") as sp:
                 run_pipeline(spark, pipeline_spec(sources, out, dead), streaming=False)
             durations.setdefault("pipeline.run_pipeline", []).append(sp.end - sp.start)
-            spans["pipeline.run_pipeline"] = sp
+            full_spans.append(sp)
+            dead_paths.append(dead)
             t0 = time.perf_counter()
             run_pipeline(spark, pipeline_spec(sources, out + "-untraced", dead + "-untraced"),
                          streaming=False)
             durations.setdefault("untraced", []).append(time.perf_counter() - t0)
+    sql = event_log_sql_times(event_log_dir)
+    durations["pipeline.dead_letter"] = [
+        t for path in dead_paths for plan, t in sql if f"{path}," in plan or f"{path}]" in plan]
     files, nbytes = dir_stats(out)
     dfiles, dbytes = dir_stats(dead)
     return {
-        "build_s": build_s, "durations": {k: statistics.median(v) for k, v in durations.items()},
-        "spans": spans, "out": out, "dead": dead,
+        "durations": {k: statistics.median(v) if v else 0.0 for k, v in durations.items()},
+        "full_span": full_spans[-1], "out": out, "dead": dead,
         "files_written": files + dfiles, "bytes_written": nbytes + dbytes,
     }
 
@@ -197,6 +243,23 @@ class BatchPath:
         self.input_bytes = sum(s.nbytes for s in self.sources)
         self._pass = 0
 
+    def subset(self) -> list[SourceDir]:
+        """The first file of every source: a quarter of the input."""
+        return [
+            SourceDir(s.translator, s.tenant, os.path.join(s.path, "part-000.jsonl"),
+                      s.records // BATCH_FILES_PER_SOURCE, 0, 0)
+            for s in self.sources
+        ]
+
+    def warm(self, spark) -> None:
+        """Untimed passes over a quarter of the input and then over all of
+        it: the first pass in a JVM pays code generation several times
+        over, and the JIT keeps speeding the next ones up."""
+        for i, sources in enumerate((self.subset(), self.sources)):
+            run_pipeline(spark, pipeline_spec(sources, os.path.join(self.work, f"warm-out{i}"),
+                                              os.path.join(self.work, f"warm-dead{i}")),
+                         streaming=False)
+
     def one_pass(self, spark) -> tuple[float, str, str]:
         self._pass += 1
         out = os.path.join(self.work, f"out{self._pass}")
@@ -205,59 +268,83 @@ class BatchPath:
         run_pipeline(spark, pipeline_spec(self.sources, out, dead), streaming=False)
         return time.perf_counter() - t0, out, dead
 
-    def measure(self, spark, seconds: float, min_passes: int = 3) -> dict:
-        """Full passes for ``seconds``, at least ``min_passes``; every pass
-        is checked.  The first pass pays first-use code generation, so the
-        median is a later pass."""
-        outputs, walls = [], []
+    def measure(self, spark, seconds: float) -> dict:
+        """Full passes for ``seconds``, at least ``MIN_BATCH_PASSES``, after
+        the warm-up; every pass is checked.  A pass that raises is a
+        counted failure."""
+        t_warm = time.perf_counter()
+        self.warm(spark)
+        outputs, walls, raised = [], [], 0
         start = time.perf_counter()
-        while len(walls) < min_passes or time.perf_counter() - start < seconds:
-            wall, out, dead = self.one_pass(spark)
+        print(f"batch warm-up {start - t_warm:.1f} s", flush=True)
+        while len(walls) + raised < MIN_BATCH_PASSES or time.perf_counter() - start < seconds:
+            try:
+                wall, out, dead = self.one_pass(spark)
+            except Exception as ex:  # noqa: BLE001 — a failing pass is a counted failure
+                print(f"batch pass failed: {ex!r}", flush=True)
+                raised += 1
+                if raised > MIN_BATCH_PASSES:
+                    break
+                continue
             walls.append(wall)
             outputs.append((out, dead))
-        per = [check_batch_output(spark, self.sources, out, dead) for out, dead in outputs]
-        print("batch passes (s): " + " ".join(f"{w:.3f}" for w in walls), flush=True)
-        return {"attempted": len(outputs), "failed": sum(1 for p in per if p),
-                "errors": [e for p in per for e in p],
-                "wall_s": statistics.median(walls)}
+        try:
+            per_pass = check_batch_outputs(spark, self.sources, outputs)
+        except Exception as ex:  # noqa: BLE001 — a check that raises fails every pass
+            per_pass = [[f"batch check raised {ex!r}"]] * len(outputs)
+        errors = [e for per in per_pass for e in per]
+        failed = raised + sum(1 for per in per_pass if per)
+        print("batch passes (s): " + " ".join(f"{w:.3f}" for w in walls)
+              + f"; checks {time.perf_counter() - start - sum(walls):.1f} s", flush=True)
+        return {"attempted": len(outputs) + raised, "failed": failed, "errors": errors,
+                "wall_s": statistics.median(walls) if walls else 0.0}
 
     def traced(self, spark, tracer: Tracer, event_log_dir: str) -> dict:
-        self.one_pass(spark)  # warm-up
-        res = traced_cuts(spark, tracer, self.sources, self.work)
+        self.warm(spark)
+        res = traced_cuts(spark, tracer, self.sources, self.work, event_log_dir)
         d = res["durations"]
-        errors = check_batch_output(spark, self.sources, res["out"], res["dead"])
+        errors = check_batch_outputs(spark, self.sources, [(res["out"], res["dead"])])[0]
         dead_n = sum(s.malformed for s in self.sources)
         unroutable = sum(s.records - s.malformed for s in self.sources if not s.tenant.strip())
-        full = res["spans"]["pipeline.run_pipeline"]
+        full = res["full_span"]
         totals = event_log_totals(event_log_dir).get(full.counts["group"], {})
-        return {
-            "errors": errors,
-            "wall_s": d["pipeline.run_pipeline"],
-            "untraced_wall_s": d["untraced"],
-            "layers": {
-                "sources.scan_s": d["sources.scan"],
-                "sources.read_amplification": totals.get("input_bytes", 0) / self.input_bytes,
-                "translators.build_s": res["build_s"],
-                "translators.translate_s": d["translators.translate"] - d["sources.scan"],
-                "translators.to_json_s": d["translators.to_json"] - d["translators.translate"],
-                "translators.parsed_frac": (self.records - dead_n) / self.records,
-                "filterer.route_s": d["filterer.route"] - d["translators.to_json"],
-                "filterer.unroutable_records": unroutable,
-                "pipeline.write_s": d["pipeline.run_pipeline"] - d["filterer.route"],
-                "pipeline.jobs": full.counts["jobs"],
-                "pipeline.stages": full.counts["stages"],
-                "pipeline.files_written": res["files_written"],
-                "pipeline.bytes_written": res["bytes_written"],
-            },
+        layers = {
+            "sources.scan_s": d["sources.scan"],
+            "sources.read_amplification": totals.get("input_bytes", 0) / self.input_bytes,
+            "translators.build_s": d["translators.build"],
+            "translators.translate_s": d["translators.translate"] - d["sources.scan"],
+            "translators.to_json_s": d["translators.to_json"] - d["translators.translate"],
+            "translators.parsed_frac": (self.records - dead_n) / self.records,
+            "filterer.route_s": d["filterer.route"] - d["translators.to_json"],
+            "filterer.unroutable_records": unroutable,
+            "pipeline.write_s": d["pipeline.write"],
+            "pipeline.dead_letter_s": d["pipeline.dead_letter"],
+            "pipeline.jobs": full.counts["jobs"],
+            "pipeline.stages": full.counts["stages"],
+            "pipeline.files_written": res["files_written"],
+            "pipeline.bytes_written": res["bytes_written"],
         }
+        # The scan .. route self times add up to the route cut; the plan
+        # build, the write and the dead-letter branch are measured on their
+        # own, so the sum is an independent estimate of the untraced pass.
+        cut_sum = (d["translators.build"] + d["filterer.route"] + d["pipeline.write"]
+                   + d["pipeline.dead_letter"])
+        overhead = d["pipeline.run_pipeline"] - d["untraced"]
+        gap = cut_sum - d["untraced"]
+        allowed = max(abs(overhead), CUT_SUM_TOLERANCE * d["untraced"])
+        print(f"ingest batch: cut self times sum to {cut_sum:.3f} s, untraced pass "
+              f"{d['untraced']:.3f} s, gap {gap:+.3f} s (allowed ±{allowed:.3f} s)", flush=True)
+        if not d["pipeline.dead_letter"]:
+            errors.append("no dead-letter write found in the event log")
+        elif abs(gap) > allowed:
+            errors.append(f"cut self times sum to {cut_sum:.3f} s, untraced pass "
+                          f"{d['untraced']:.3f} s")
+        return {"errors": errors, "checks": 2, "wall_s": d["pipeline.run_pipeline"],
+                "untraced_wall_s": d["untraced"], "layers": layers}
 
     def single_thread_rate(self, spark) -> float:
         """records/s of one pass over the first file of every source."""
-        subset = [
-            SourceDir(s.translator, s.tenant, os.path.join(s.path, "part-000.jsonl"),
-                      s.records // BATCH_FILES_PER_SOURCE, 0, 0)
-            for s in self.sources
-        ]
+        subset = self.subset()
         out = os.path.join(self.work, "local1-out")
         dead = os.path.join(self.work, "local1-dead")
         t0 = time.perf_counter()
@@ -296,10 +383,17 @@ def _checkpoint_files(checkpoint: str) -> tuple[dict[str, int], dict[int, float]
     return file_batch, commits
 
 
+def _next_trigger(t: float) -> float:
+    """The first processing-time trigger at or after ``t``: triggers fire
+    on wall-clock multiples of the interval."""
+    return math.ceil(t / STREAM_TRIGGER_S) * STREAM_TRIGGER_S
+
+
 class StreamPath:
     """Open loop: one generator thread drops JSONL files into the watched
     directories of a running ``run_pipeline(streaming=True)`` query on a
-    fixed schedule, whatever the query's progress."""
+    fixed schedule, whatever the query's progress.  Then bursts: a large
+    file per source dropped at once, each timed until it is committed."""
 
     def __init__(self, work: str, seed: int):
         self.seed = seed
@@ -316,6 +410,17 @@ class StreamPath:
         self._n = 0
         self.dropped: dict[str, tuple[float, float]] = {}  # name -> (due, actual)
         self.records = 0
+        self.bursts = []
+        for b in range(BURSTS):
+            files = []
+            for i, src in enumerate(self.dirs):
+                name = f"b{b}-{i}.jsonl"
+                lines, _ = telemetry_lines(src.translator, BURST_FILE_RECORDS,
+                                           seed * 100_000 + 90_000 + b * 10 + i, 0.0)
+                write_lines(os.path.join(self.staging, name), lines)
+                files.append((name, src))
+            self.bursts.append(files)
+        self.burst_records = BURST_FILE_RECORDS * len(self.dirs)
 
     def _file(self) -> tuple[str, SourceDir]:
         """Stage the next file (round-robin over the sources)."""
@@ -347,7 +452,8 @@ class StreamPath:
 
     def start(self, spark):
         self.query = run_pipeline(
-            spark, pipeline_spec(self.dirs, self.out, None, self.checkpoint, STREAM_TRIGGER),
+            spark, pipeline_spec(self.dirs, self.out, None, self.checkpoint,
+                                 f"{STREAM_TRIGGER_S} seconds"),
             streaming=True,
         )
         warm = [self._file() for _ in self.dirs]
@@ -355,11 +461,38 @@ class StreamPath:
             self._drop(name, src, time.time())
         self._wait_committed([n for n, _ in warm], STREAM_WAIT_S)
 
+    def _burst(self, files) -> float:
+        """Drop ``files`` at once, half a second before a trigger, and
+        return the seconds until the last of them is committed."""
+        due = _next_trigger(time.time() + 0.6) - 0.5
+        time.sleep(max(0.0, due - time.time()))
+        for name, src in files:
+            self._drop(name, src, due)
+        self.records += self.burst_records
+        names = [n for n, _ in files]
+        done = self._wait_committed(names, STREAM_WAIT_S)
+        if len(done) < len(names):
+            raise RuntimeError(f"burst: {len(names) - len(done)} files not committed")
+        return max(done.values()) - due
+
     def measure(self, spark, seconds: float, tracer: Tracer | None = None) -> dict:
         """Start the query, drop files for ``seconds`` on schedule, wait for
-        every file to commit, stop and check.  Latency runs from a file's
-        scheduled drop time to the commit of the batch that read it."""
+        every file to commit, drop the bursts, stop and check.  Latency runs
+        from a file's scheduled drop time to the commit of the batch that
+        read it.  An exception fails the whole stream phase."""
         tracer = tracer or Tracer("", enabled=False)
+        self.query = None
+        try:
+            return self._measure(spark, seconds, tracer)
+        except Exception as ex:  # noqa: BLE001 — a failing stream is a counted failure
+            print(f"stream failed: {ex!r}", flush=True)
+            return {"attempted": 1, "failed": 1, "errors": [f"stream raised {ex!r}"],
+                    "latency_samples": [], "drain_s": [], "raised": True}
+        finally:
+            if self.query is not None:
+                self.query.stop()
+
+    def _measure(self, spark, seconds: float, tracer: Tracer) -> dict:
         with tracer.span(spark, "stream.start"):
             self.start(spark)
         n_warm = int(STREAM_WARMUP_S / STREAM_DROP_INTERVAL_S)
@@ -368,7 +501,7 @@ class StreamPath:
         # Processing-time triggers fire on wall-clock multiples of the
         # interval; starting the schedule at a fixed phase of the clock
         # gives every run the same drop-to-trigger offsets.
-        t0 = math.ceil(time.time()) + STREAM_DROP_INTERVAL_S / 2
+        t0 = _next_trigger(time.time()) + STREAM_DROP_INTERVAL_S / 2
 
         def generator():
             for i, (name, src) in enumerate(staged):
@@ -390,19 +523,26 @@ class StreamPath:
         with tracer.span(spark, "stream.settle"):
             committed = self._wait_committed(all_names, STREAM_WAIT_S)
         self.progress = list(self.query.main.recentProgress)
+        with tracer.span(spark, "stream.bursts"):
+            drains = [self._burst(files) for files in self.bursts]
         self.query.stop()
         with tracer.span(spark, "stream.check"):
             errors = self.check(spark)
         latencies = [committed[n] - self.dropped[n][0] for n in self.open_names
                      if n in committed]
         lost = n_files - len(committed)
-        return {"attempted": n_files, "failed": n_files if errors else lost,
-                "errors": errors, "latency_samples": latencies}
+        attempted = n_files + len(drains)
+        print("burst drains (s): " + " ".join(f"{d:.3f}" for d in drains), flush=True)
+        return {"attempted": attempted, "failed": attempted if errors else lost,
+                "errors": errors, "latency_samples": latencies, "drain_s": drains}
 
     def check(self, spark) -> list[str]:
         """The streamed output must equal the batch pipeline run over the
-        same files (digest of tenant and payload)."""
-        run_pipeline(spark, pipeline_spec(self.dirs, self.ref, None), streaming=False)
+        same files (digest of tenant and payload).  The stream's files hold
+        no malformed line, so the batch run keeps the dead-letter branch of
+        the batch passes, whose generated code is already compiled."""
+        run_pipeline(spark, pipeline_spec(self.dirs, self.ref, self.ref + "-dead"),
+                     streaming=False)
         got, want = routed_digest(spark, self.out), routed_digest(spark, self.ref)
         if got != want:
             return [f"stream digest {got} != batch digest {want}"]
@@ -435,32 +575,45 @@ class StreamPath:
 
 
 class Ingest:
-    """The ``ingest`` workload: the batch path closed-loop for half the run,
-    then the stream path open-loop for the other half.  ``records_per_s``
-    and ``wall_s`` come from the batch passes, the latencies from the
-    stream's files."""
+    """The ``ingest`` workload: the batch path closed-loop, then the stream
+    path open-loop and in bursts.  ``wall_s`` is the median batch pass,
+    ``records_per_s`` the stream's median burst drain rate, and the
+    latencies come from the open-loop files."""
 
     def __init__(self, work: str, seed: int):
         self.batch = BatchPath(os.path.join(work, "batch"), seed)
         self.stream = StreamPath(os.path.join(work, "stream"), seed)
 
     def measure(self, spark, seconds: float) -> dict:
+        t0 = time.perf_counter()
         b = self.batch.measure(spark, seconds / 2)
+        t1 = time.perf_counter()
         s = self.stream.measure(spark, max(STREAM_MIN_OPEN_S, seconds / 2))
+        print(f"batch phase {t1 - t0:.1f} s, stream phase {time.perf_counter() - t1:.1f} s",
+              flush=True)
+        drain = statistics.median(s["drain_s"]) if s["drain_s"] else 0.0
         return {
             "attempted": b["attempted"] + s["attempted"],
             "failed": b["failed"] + s["failed"],
             "errors": b["errors"] + s["errors"],
-            "metrics": {"records_per_s": self.batch.records / b["wall_s"],
+            "metrics": {"records_per_s": self.stream.burst_records / drain if drain else 0.0,
                         "wall_s": b["wall_s"]},
             "latency_samples": s["latency_samples"],
         }
 
     def traced(self, spark, tracer: Tracer, event_log_dir: str, seconds: float) -> dict:
         with tracer.span(spark, "ingest.batch"):
-            b = self.batch.traced(spark, tracer, event_log_dir)
+            try:
+                b = self.batch.traced(spark, tracer, event_log_dir)
+            except Exception as ex:  # noqa: BLE001 — a failing pass is a counted failure
+                b = {"errors": [f"traced batch raised {ex!r}"], "checks": 1, "wall_s": 0.0,
+                     "untraced_wall_s": 0.0, "layers": {}}
         with tracer.span(spark, "ingest.stream"):
             s = self.stream.measure(spark, max(STREAM_MIN_OPEN_S, seconds / 2), tracer)
-        return {"errors": b["errors"] + s["errors"], "wall_s": b["wall_s"],
-                "untraced_wall_s": b["untraced_wall_s"],
-                "layers": {**b["layers"], **self.stream.layers()}}
+        layers = dict(b["layers"])
+        if not s.get("raised"):
+            layers.update(self.stream.layers())
+        return {"attempted": b["checks"] + s["attempted"],
+                "failed": len(b["errors"]) + s["failed"], "errors": b["errors"] + s["errors"],
+                "wall_s": b["wall_s"], "untraced_wall_s": b["untraced_wall_s"],
+                "layers": layers}

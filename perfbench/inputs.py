@@ -1,27 +1,18 @@
-"""Seeded input generators for the benchmark.
+"""Seeded telemetry input for the ``ingest`` workload.
 
-Everything the engine reads is generated here from ``--seed``: the same
-seed gives byte-identical files.  Sizes are fixed per workload and do not
-depend on the seed, so runs with different seeds do the same amount of
-work on different values.
+The JSON lines reuse the repo's load generator (``tools/loadgen.py``), so
+a malformed line is the exact shape that generator emits.  The same seed
+gives byte-identical files; sizes do not depend on the seed, so runs with
+different seeds do the same amount of work on different values.
 
-* Telemetry JSON-lines for the ingest workloads reuse the repo's load
-  generator (``tools/loadgen.py``), so a malformed line is the exact
-  shape that generator emits.
-* The analytics tables mirror the schemas and value distributions of the
-  repository's testdata (``region`` .. ``embeddings``), so every benchmark query
-  and its DuckDB oracle run on them unchanged.
+The ``analytics`` workload reads no generated data: it runs on the copy of
+the repository's sf0.01 testdata under ``perfbench/testdata/``.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import random
-
-import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
 
 from tools.loadgen import gen_row
 
@@ -49,156 +40,3 @@ def write_lines(path: str, lines: list[str]) -> int:
     with open(path, "wb") as fh:
         fh.write(data)
     return len(data)
-
-
-# --- analytics tables ------------------------------------------------------
-
-_REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-_SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-_PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-_PART_ADJ = ["small", "large", "red", "blue", "hot", "old", "shiny", "cold"]
-_PART_NOUN = ["ring", "widget", "bolt", "plate", "rod", "gear", "nut", "pipe"]
-_PART_TYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-_LANGS = ["en", "de", "es", "fr", "zh"]
-_LANG_P = [0.44, 0.14, 0.14, 0.14, 0.14]
-_VOCAB = (
-    "a agg batch big column customer data fast filter group hash join key "
-    "line merge order part query row scan slow small sort spark stream "
-    "table the value vector window"
-).split()
-_US_PER_DAY = 86_400_000_000
-_EPOCH_1995 = 9131  # days from 1970-01-01 to 1995-01-01
-_EPOCH_2024 = 19723  # days from 1970-01-01 to 2024-01-01
-
-# Row counts per table: the shape of the repository's sf0.01 testdata.
-TABLE_ROWS = {
-    "customer": 1500, "supplier": 100, "part": 2000, "orders": 15000,
-    "lineitem": 60000, "events": 10000, "documents": 500, "embeddings": 500,
-}
-
-
-def _money(rng: np.random.Generator, lo: float, hi: float, n: int) -> np.ndarray:
-    return np.round(rng.uniform(lo, hi, n), 2)
-
-
-def _ts_days(rng: np.random.Generator, first_day: int, n_days: int, n: int) -> pa.Array:
-    days = rng.integers(0, n_days, n) + first_day
-    return pa.array(days.astype(np.int64) * _US_PER_DAY, type=pa.timestamp("us"))
-
-
-def _documents(rng: np.random.Generator, n: int) -> pa.Table:
-    texts: list[str] = []
-    for i in range(n):
-        roll = rng.random()
-        if i > 10 and roll < 0.02:
-            texts.append(texts[int(rng.integers(0, i))])  # exact duplicate
-            continue
-        if i > 10 and roll < 0.06:
-            # near duplicate: an earlier text with a few words replaced
-            words = texts[int(rng.integers(0, i))].split()
-            for _ in range(max(1, len(words) // 20)):
-                words[int(rng.integers(0, len(words)))] = "dup"
-            texts.append(" ".join(words))
-            continue
-        n_chars = int(rng.integers(48, 554))
-        words = rng.choice(_VOCAB, size=n_chars // 3)
-        texts.append(" ".join(words)[:n_chars].rstrip())
-    return pa.table({
-        "doc_id": pa.array(np.arange(n), type=pa.int64()),
-        "text": texts,
-        "lang": rng.choice(_LANGS, size=n, p=_LANG_P).tolist(),
-        "source": [f"src{i % 20}" for i in range(n)],
-        "n_chars": pa.array([len(t) for t in texts], type=pa.int64()),
-    })
-
-
-def _embeddings(rng: np.random.Generator, n: int, dim: int = 64) -> pa.Table:
-    labels = rng.integers(0, 10, n)
-    centers = rng.normal(0.0, 1.0, (10, dim))
-    vecs = centers[labels] + rng.normal(0.0, 1.5, (n, dim))
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    vecs = vecs.astype(np.float32)
-    return pa.table({
-        "vec_id": pa.array(np.arange(n), type=pa.int64()),
-        "embedding": pa.array(list(vecs), type=pa.list_(pa.float32())),
-        "label": pa.array(labels, type=pa.int32()),
-    })
-
-
-def analytics_tables(out_dir: str, seed: int) -> dict[str, int]:
-    """Write the ten testdata-shaped tables as ``<out_dir>/<name>.parquet``;
-    returns the row count per table."""
-    rng = np.random.default_rng(seed)
-    r = TABLE_ROWS
-    n_users = r["events"] // 66
-    ev_gaps = rng.uniform(0, 2 * 30 * _US_PER_DAY / r["events"], r["events"])
-    tables = {
-        "region": pa.table({
-            "r_regionkey": pa.array(range(5), type=pa.int32()),
-            "r_name": _REGIONS,
-        }),
-        "nation": pa.table({
-            "n_nationkey": pa.array(range(25), type=pa.int32()),
-            "n_name": [f"NATION_{i}" for i in range(25)],
-            "n_regionkey": pa.array([i % 5 for i in range(25)], type=pa.int32()),
-        }),
-        "customer": pa.table({
-            "c_custkey": pa.array(np.arange(r["customer"]), type=pa.int64()),
-            "c_name": [f"Customer#{i:09d}" for i in range(r["customer"])],
-            "c_nationkey": pa.array(rng.integers(0, 25, r["customer"]), type=pa.int32()),
-            "c_acctbal": _money(rng, -999.99, 9999.99, r["customer"]),
-            "c_mktsegment": rng.choice(_SEGMENTS, r["customer"]).tolist(),
-        }),
-        "supplier": pa.table({
-            "s_suppkey": pa.array(np.arange(r["supplier"]), type=pa.int64()),
-            "s_name": [f"Supplier#{i:09d}" for i in range(r["supplier"])],
-            "s_nationkey": pa.array(rng.integers(0, 25, r["supplier"]), type=pa.int32()),
-            "s_acctbal": _money(rng, -999.99, 9999.99, r["supplier"]),
-        }),
-        "part": pa.table({
-            "p_partkey": pa.array(np.arange(r["part"]), type=pa.int64()),
-            "p_name": [f"{rng.choice(_PART_ADJ)} {rng.choice(_PART_NOUN)}"
-                       for _ in range(r["part"])],
-            "p_brand": [f"Brand#{k}" for k in rng.integers(1, 26, r["part"])],
-            "p_type": rng.choice(_PART_TYPES, r["part"]).tolist(),
-            "p_size": pa.array(rng.integers(1, 51, r["part"]), type=pa.int32()),
-            "p_retailprice": np.round(900 + (np.arange(r["part"]) % 1000) / 10, 2),
-        }),
-        "orders": pa.table({
-            "o_orderkey": pa.array(np.arange(r["orders"]), type=pa.int64()),
-            "o_custkey": pa.array(rng.integers(0, r["customer"], r["orders"]), type=pa.int64()),
-            "o_orderstatus": rng.choice(["F", "O", "P"], r["orders"]).tolist(),
-            "o_totalprice": _money(rng, 1000.0, 500000.0, r["orders"]),
-            "o_orderdate": _ts_days(rng, _EPOCH_1995, 2404, r["orders"]),
-            "o_orderpriority": rng.choice(_PRIORITIES, r["orders"]).tolist(),
-        }),
-        "lineitem": pa.table({
-            "l_orderkey": pa.array(rng.integers(0, r["orders"], r["lineitem"]), type=pa.int64()),
-            "l_partkey": pa.array(rng.integers(0, r["part"], r["lineitem"]), type=pa.int64()),
-            "l_suppkey": pa.array(rng.integers(0, r["supplier"], r["lineitem"]), type=pa.int64()),
-            "l_linenumber": pa.array(rng.integers(1, 8, r["lineitem"]), type=pa.int32()),
-            "l_quantity": rng.integers(1, 51, r["lineitem"]).astype(np.float64),
-            "l_extendedprice": _money(rng, 900.0, 105000.0, r["lineitem"]),
-            "l_discount": rng.integers(0, 11, r["lineitem"]) / 100.0,
-            "l_tax": rng.integers(0, 9, r["lineitem"]) / 100.0,
-            "l_returnflag": rng.choice(["A", "N", "R"], r["lineitem"]).tolist(),
-            "l_linestatus": rng.choice(["F", "O"], r["lineitem"]).tolist(),
-            "l_shipdate": _ts_days(rng, _EPOCH_1995 + 1, 2499, r["lineitem"]),
-        }),
-        "events": pa.table({
-            "event_id": pa.array(np.arange(r["events"]), type=pa.int64()),
-            "ts": pa.array(_EPOCH_2024 * _US_PER_DAY + np.cumsum(ev_gaps).astype(np.int64),
-                           type=pa.timestamp("us")),
-            "user_id": pa.array(rng.integers(0, n_users, r["events"]), type=pa.int64()),
-            "event_type": rng.choice(_EVENT_TYPES, r["events"]).tolist(),
-            "value": np.clip(np.round(rng.exponential(50.0, r["events"]), 2), 0.01, None),
-            "props": [json.dumps({"k": int(k)}) for k in rng.integers(0, 100, r["events"])],
-        }),
-        "documents": _documents(rng, r["documents"]),
-        "embeddings": _embeddings(rng, r["embeddings"]),
-    }
-    os.makedirs(out_dir, exist_ok=True)
-    for name, table in tables.items():
-        pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
-    return {name: t.num_rows for name, t in tables.items()}

@@ -1,7 +1,7 @@
 """The streaming maintainers of the ``analytics`` workload: each
 ``streaming/`` maintainer's ``process(batch, batch_id)`` fed deterministic
-micro-batch cuts of a generated table, the way the equivalence tests and
-``tools/stream_bench.py`` feed them.  Each maintainer's final state is
+micro-batch cuts of a testdata table, the way the equivalence tests and
+``tools/stream_bench.py`` feed them; the seed salts the cut hash.  Each maintainer's final state is
 checked against the same maintainer fed the whole table as one batch."""
 
 from __future__ import annotations
@@ -11,7 +11,7 @@ import time
 
 from pyspark.sql import functions as F
 
-from perfbench.common import Tracer
+from perfbench.common import Tracer, cached
 from pulsar_ingestion_spark.operators.versioned import VersionedTable
 from pulsar_ingestion_spark.session import load_tables
 from pulsar_ingestion_spark.streaming.ann_index import stream_ann_index
@@ -29,9 +29,9 @@ PROFILE_COLS = ["event_type", "user_id", "value"]
 MG_BUDGET = 64
 
 
-def hash_cuts(df, id_col: str, n: int):
-    """Deterministic cuts: ``pmod(xxhash64(id), n) == i``."""
-    key = F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n))
+def hash_cuts(df, id_col: str, n: int, seed: int):
+    """Deterministic cuts: ``pmod(xxhash64(id, seed), n) == i``."""
+    key = F.pmod(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)), F.lit(n))
     return [df.filter(key == i) for i in range(n)]
 
 
@@ -78,10 +78,10 @@ def _mixture_state(m: MixturePlanMaintainer) -> list[tuple]:
 
 
 class Maintainers:
-    """The seven maintainers over the generated tables in ``sf_dir``."""
+    """The seven maintainers over the testdata tables in ``sf_dir``."""
 
-    def __init__(self, work: str, sf_dir: str, rows: dict[str, int]):
-        self.work, self.sf_dir, self.rows = work, sf_dir, rows
+    def __init__(self, work: str, sf_dir: str, rows: dict[str, int], seed: int):
+        self.work, self.sf_dir, self.rows, self.seed = work, sf_dir, rows, seed
         self._roots = 0
         self.reference = None
 
@@ -105,64 +105,92 @@ class Maintainers:
             "ann_index": (
                 lambda: _Versioned(self._root(), lambda r: stream_ann_index(
                     r, app_id="pb", dim=64, num_planes=8), _ann_state),
-                lambda m, s: m.state(s), "embeddings", emb, hash_cuts(emb, "vec_id", N_CUTS)),
+                lambda m, s: m.state(s), "embeddings", emb,
+                hash_cuts(emb, "vec_id", N_CUTS, self.seed)),
             "sketch_hll": (lambda: HllStreamMaintainer("user_id"),
                            lambda m, s: dict(m.registers), "events", ev,
-                           hash_cuts(ev, "event_id", N_CUTS)),
+                           hash_cuts(ev, "event_id", N_CUTS, self.seed)),
             "quantile_logbins": (
                 lambda: QuantileLogbinsStreamMaintainer("o_totalprice"),
                 lambda m, s: (m.count(), m.n_bins(),
                               [m.quantile(q) for q in (0.01, 0.1, 0.5, 0.9, 0.99)]),
-                "orders", orders, hash_cuts(orders, "o_orderkey", N_CUTS)),
+                "orders", orders, hash_cuts(orders, "o_orderkey", N_CUTS, self.seed)),
             "mixture_plan": (MixturePlanMaintainer, lambda m, s: _mixture_state(m),
-                             "documents", docs, hash_cuts(docs, "doc_id", N_CUTS)),
+                             "documents", docs, hash_cuts(docs, "doc_id", N_CUTS, self.seed)),
             "profile": (lambda: ProfileStreamMaintainer(PROFILE_COLS, mg_budget=MG_BUDGET),
                         lambda m, s: _profile_state(m), "events", ev,
-                        hash_cuts(ev, "event_id", N_CUTS)),
+                        hash_cuts(ev, "event_id", N_CUTS, self.seed)),
             "seasonal_grid": (SeasonalGridMaintainer, lambda m, s: m.grid(), "events", ev,
-                              hash_cuts(ev, "event_id", N_CUTS)),
+                              hash_cuts(ev, "event_id", N_CUTS, self.seed)),
         }
-        self.fed_rows = sum(self.rows[spec[2]] for spec in self.specs.values())
+        self.fed_rows = {name: self.rows[spec[2]] for name, spec in self.specs.items()}
 
-    def run(self, spark, tracer: Tracer | None = None) -> dict[str, tuple]:
+    def run(self, spark, tracer: Tracer | None = None) -> tuple[dict[str, tuple], int]:
         """Feed every maintainer all its cuts; returns name -> (maintainer,
-        per-batch seconds)."""
-        done = {}
+        per-batch seconds) for those that finished, and how many raised."""
+        tracer = tracer or Tracer("", enabled=False)
+        done, failed = {}, 0
         for name, (make, _state, _table, _whole, cuts) in self.specs.items():
-            m = make()
             per = []
-            for i, batch in enumerate(cuts):
-                t0 = time.perf_counter()
-                if tracer is None:
-                    m(batch, i)
-                else:
+            try:
+                m = make()
+                for i, batch in enumerate(cuts):
+                    t0 = time.perf_counter()
                     with tracer.span(spark, f"maintainers.{name}.batch{i}"):
                         m(batch, i)
-                per.append(time.perf_counter() - t0)
+                    per.append(time.perf_counter() - t0)
+            except Exception as ex:  # noqa: BLE001 — a failing maintainer is a counted failure
+                failed += 1
+                print(f"maintainer failed: {name}: {ex!r}", flush=True)
+                continue
             done[name] = (m, per)
-        return done
+        return done, failed
+
+    def _reference(self, spark) -> dict:
+        """Each maintainer's state fed the whole table as one batch (an
+        exception in its place if that raised), and the values Misra-Gries
+        must keep: every value more frequent than n/(budget+1)."""
+        states = {}
+        for name, (make, state, _table, whole, _cuts) in self.specs.items():
+            try:
+                m = make()
+                m(whole, 0)
+                states[name] = state(m, spark)
+            except Exception as ex:  # noqa: BLE001
+                states[name] = ex
+        n = self.rows["events"]
+        heavy = {
+            c: {r["v"] for r in self.events.groupBy(F.col(c).cast("string").alias("v"))
+                .count().filter(F.col("count") > n / (MG_BUDGET + 1)).collect()}
+            for c in PROFILE_COLS
+        }
+        return {"states": states, "heavy": heavy}
 
     def check(self, spark, done: dict[str, tuple]) -> list[str]:
         """Each final state against the maintainer fed the whole table as
-        one batch (computed once, untimed)."""
+        one batch, computed untimed, once per checkout and source state
+        (it depends on neither the seed nor the cuts).  A check that raises
+        is an error like a mismatch."""
         if self.reference is None:
-            self.reference = {}
-            for name, (make, state, _table, whole, _cuts) in self.specs.items():
-                m = make()
-                m(whole, 0)
-                self.reference[name] = state(m, spark)
-            # Misra-Gries keeps every value more frequent than n/(budget+1)
-            n = self.rows["events"]
-            self.heavy = {
-                c: {r["v"] for r in self.events.groupBy(F.col(c).cast("string").alias("v"))
-                    .count().filter(F.col("count") > n / (MG_BUDGET + 1)).collect()}
-                for c in PROFILE_COLS
-            }
+            ref = cached("maintainers", lambda: self._reference(spark),
+                         keep=lambda r: not any(isinstance(v, Exception)
+                                                for v in r["states"].values()))
+            self.reference, self.heavy = ref["states"], ref["heavy"]
         errors = []
         for name, (m, _per) in done.items():
-            if self.specs[name][1](m, spark) != self.reference[name]:
+            want = self.reference[name]
+            try:
+                got = self.specs[name][1](m, spark)
+                if name == "profile":
+                    for c, p in m.profile().items():
+                        if not self.heavy[c] <= set(p["modal_candidates"]):
+                            errors.append(f"profile: a heavy value of {c} is missing "
+                                          "from its candidates")
+            except Exception as ex:  # noqa: BLE001
+                got = ex
+            if isinstance(want, Exception) or isinstance(got, Exception):
+                raised = want if isinstance(want, Exception) else got
+                errors.append(f"{name}: state raised {raised!r}")
+            elif got != want:
                 errors.append(f"{name}: state after {N_CUTS} cuts differs from one batch")
-        for c, p in done["profile"][0].profile().items():
-            if not self.heavy[c] <= set(p["modal_candidates"]):
-                errors.append(f"profile: a heavy value of {c} is missing from its candidates")
         return errors
