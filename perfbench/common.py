@@ -18,7 +18,7 @@ import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-WARMUP_ROWS = 200_000
+WARMUP_ROWS = 50_000
 HEAP = "2g"
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CACHE_DIR = os.path.join(ROOT, ".perfbench_cache")
@@ -184,11 +184,12 @@ def host_facts(parallelism: int) -> dict:
 
 def tail_percentile(values: list[float]) -> tuple[float, float, int]:
     """The highest percentile with at least ten samples beyond it, as
-    ``(percentile, value, n)``.  Under eleven samples no percentile has
-    ten beyond it; the maximum is reported with percentile 100."""
+    ``(percentile, value, n)``.  Under 21 samples that percentile would
+    lie at or below the median; the maximum is reported with percentile
+    100 instead."""
     xs = sorted(values)
     n = len(xs)
-    if n < 11:
+    if n < 21:
         return 100.0, xs[-1], n
     i = n - 11
     return 100.0 * (i + 1) / n, xs[i], n

@@ -1,6 +1,6 @@
 """The ``ingest`` workload: the flagship path raw JSON → translator → CMF
 wire JSON → tenant route → per-tenant parquet sink, run as batch jobs and
-as a Structured Streaming query fed open-loop and then in bursts."""
+as a Structured Streaming query fed open-loop and then one burst."""
 
 from __future__ import annotations
 
@@ -31,10 +31,10 @@ from pulsar_ingestion_spark.sources.registry import open_source
 # (translator, tenant, records).  The blank tenant is unroutable on purpose:
 # the Filterer drops it, which the conservation check must account for.
 BATCH_SOURCES = [
-    ("geotab", "acme", 16_000),
-    ("calamp", "globex", 12_000),
-    ("ford", "initech", 9_200),
-    ("geotab", " ", 2_800),
+    ("geotab", "acme", 8_000),
+    ("calamp", "globex", 6_000),
+    ("ford", "initech", 4_600),
+    ("geotab", " ", 1_400),
 ]
 BATCH_FILES_PER_SOURCE = 4
 MALFORMED_PCT = 1.0
@@ -48,13 +48,11 @@ STREAM_SOURCES = [("geotab", "acme"), ("calamp", "globex"), ("ford", "initech")]
 # A trigger takes about a second on a 4-core host; a 2 s interval leaves
 # headroom, so the open loop never queues behind a slow trigger.
 STREAM_TRIGGER_S = 2
-STREAM_FILE_RECORDS = 50
-STREAM_DROP_INTERVAL_S = 0.1  # offered load: 10 files/s = 500 records/s
-STREAM_MIN_OPEN_S = 4.0
-STREAM_WARMUP_S = 1.0   # untimed open-loop lead-in: the first micro-batches compile
+STREAM_FILE_RECORDS = 25
+STREAM_DROP_INTERVAL_S = 0.05  # offered load: 20 files/s = 500 records/s
+STREAM_MIN_OPEN_S = 2.5
 STREAM_WAIT_S = 60.0
-BURSTS = 2
-BURST_FILE_RECORDS = 4_000  # one file per source per burst
+BURST_FILE_RECORDS = 4_000  # one file per source
 
 
 @dataclass
@@ -95,10 +93,10 @@ def pipeline_spec(sources: list[SourceDir], out: str, dead: str | None,
     )
 
 
-def routed_digest(spark, out: str) -> tuple[int, int]:
-    """Order-insensitive digest of a routed output dir: (rows, sum of the
-    64-bit hash of tenant and payload)."""
-    row = spark.read.parquet(out).agg(
+def routed_digest(df) -> tuple[int, int]:
+    """Order-insensitive digest of routed rows: (rows, sum of the 64-bit
+    hash of tenant and payload)."""
+    row = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.xxhash64("tenantId", "value").cast("decimal(38,0)")).alias("h"),
     ).first()
@@ -252,13 +250,12 @@ class BatchPath:
         ]
 
     def warm(self, spark) -> None:
-        """Untimed passes over a quarter of the input and then over all of
-        it: the first pass in a JVM pays code generation several times
-        over, and the JIT keeps speeding the next ones up."""
-        for i, sources in enumerate((self.subset(), self.sources)):
-            run_pipeline(spark, pipeline_spec(sources, os.path.join(self.work, f"warm-out{i}"),
-                                              os.path.join(self.work, f"warm-dead{i}")),
-                         streaming=False)
+        """One untimed pass over a quarter of the input, malformed lines
+        included: the first pass in a JVM pays plan analysis and code
+        generation several times over, whatever its size."""
+        run_pipeline(spark, pipeline_spec(self.subset(), os.path.join(self.work, "warm-out"),
+                                          os.path.join(self.work, "warm-dead")),
+                     streaming=False)
 
     def one_pass(self, spark) -> tuple[float, str, str]:
         self._pass += 1
@@ -392,8 +389,8 @@ def _next_trigger(t: float) -> float:
 class StreamPath:
     """Open loop: one generator thread drops JSONL files into the watched
     directories of a running ``run_pipeline(streaming=True)`` query on a
-    fixed schedule, whatever the query's progress.  Then bursts: a large
-    file per source dropped at once, each timed until it is committed."""
+    fixed schedule, whatever the query's progress.  Then a burst: a large
+    file per source dropped at once, timed until it is committed."""
 
     def __init__(self, work: str, seed: int):
         self.seed = seed
@@ -406,20 +403,16 @@ class StreamPath:
         os.makedirs(self.staging)
         self.out = os.path.join(work, "out")
         self.checkpoint = os.path.join(work, "ckpt")
-        self.ref = os.path.join(work, "ref")
         self._n = 0
         self.dropped: dict[str, tuple[float, float]] = {}  # name -> (due, actual)
         self.records = 0
-        self.bursts = []
-        for b in range(BURSTS):
-            files = []
-            for i, src in enumerate(self.dirs):
-                name = f"b{b}-{i}.jsonl"
-                lines, _ = telemetry_lines(src.translator, BURST_FILE_RECORDS,
-                                           seed * 100_000 + 90_000 + b * 10 + i, 0.0)
-                write_lines(os.path.join(self.staging, name), lines)
-                files.append((name, src))
-            self.bursts.append(files)
+        self.burst = []
+        for i, src in enumerate(self.dirs):
+            name = f"burst-{i}.jsonl"
+            lines, _ = telemetry_lines(src.translator, BURST_FILE_RECORDS,
+                                       seed * 100_000 + 90_000 + i, 0.0)
+            write_lines(os.path.join(self.staging, name), lines)
+            self.burst.append((name, src))
         self.burst_records = BURST_FILE_RECORDS * len(self.dirs)
 
     def _file(self) -> tuple[str, SourceDir]:
@@ -461,15 +454,15 @@ class StreamPath:
             self._drop(name, src, time.time())
         self._wait_committed([n for n, _ in warm], STREAM_WAIT_S)
 
-    def _burst(self, files) -> float:
-        """Drop ``files`` at once, half a second before a trigger, and
-        return the seconds until the last of them is committed."""
+    def _drain(self) -> float:
+        """Drop the burst files at once, half a second before a trigger,
+        and return the seconds until the last of them is committed."""
         due = _next_trigger(time.time() + 0.6) - 0.5
         time.sleep(max(0.0, due - time.time()))
-        for name, src in files:
+        for name, src in self.burst:
             self._drop(name, src, due)
         self.records += self.burst_records
-        names = [n for n, _ in files]
+        names = [n for n, _ in self.burst]
         done = self._wait_committed(names, STREAM_WAIT_S)
         if len(done) < len(names):
             raise RuntimeError(f"burst: {len(names) - len(done)} files not committed")
@@ -477,7 +470,7 @@ class StreamPath:
 
     def measure(self, spark, seconds: float, tracer: Tracer | None = None) -> dict:
         """Start the query, drop files for ``seconds`` on schedule, wait for
-        every file to commit, drop the bursts, stop and check.  Latency runs
+        every file to commit, drop the burst, stop and check.  Latency runs
         from a file's scheduled drop time to the commit of the batch that
         read it.  An exception fails the whole stream phase."""
         tracer = tracer or Tracer("", enabled=False)
@@ -487,7 +480,7 @@ class StreamPath:
         except Exception as ex:  # noqa: BLE001 — a failing stream is a counted failure
             print(f"stream failed: {ex!r}", flush=True)
             return {"attempted": 1, "failed": 1, "errors": [f"stream raised {ex!r}"],
-                    "latency_samples": [], "drain_s": [], "raised": True}
+                    "latency_samples": [], "drain_s": 0.0, "raised": True}
         finally:
             if self.query is not None:
                 self.query.stop()
@@ -495,8 +488,8 @@ class StreamPath:
     def _measure(self, spark, seconds: float, tracer: Tracer) -> dict:
         with tracer.span(spark, "stream.start"):
             self.start(spark)
-        n_warm = int(STREAM_WARMUP_S / STREAM_DROP_INTERVAL_S)
-        n_files = n_warm + int(seconds / STREAM_DROP_INTERVAL_S)
+        # The query has already run a micro-batch (start), so no lead-in.
+        n_files = int(seconds / STREAM_DROP_INTERVAL_S)
         staged = [self._file() for _ in range(n_files)]
         # Processing-time triggers fire on wall-clock multiples of the
         # interval; starting the schedule at a fixed phase of the clock
@@ -515,35 +508,36 @@ class StreamPath:
         with tracer.span(spark, "stream.open_loop"):
             gen.start()
             gen.join()
-        all_names = [n for n, _ in staged]
-        self.open_names = all_names[n_warm:]
+        self.open_names = all_names = [n for n, _ in staged]
         file_batch, commits = _checkpoint_files(self.checkpoint)
         self.backlog = sum(1 for n in self.open_names
                            if n not in file_batch or file_batch[n] not in commits)
         with tracer.span(spark, "stream.settle"):
             committed = self._wait_committed(all_names, STREAM_WAIT_S)
         self.progress = list(self.query.main.recentProgress)
-        with tracer.span(spark, "stream.bursts"):
-            drains = [self._burst(files) for files in self.bursts]
+        with tracer.span(spark, "stream.burst"):
+            drain = self._drain()
         self.query.stop()
         with tracer.span(spark, "stream.check"):
             errors = self.check(spark)
         latencies = [committed[n] - self.dropped[n][0] for n in self.open_names
                      if n in committed]
         lost = n_files - len(committed)
-        attempted = n_files + len(drains)
-        print("burst drains (s): " + " ".join(f"{d:.3f}" for d in drains), flush=True)
+        attempted = n_files + 1
+        print(f"burst drain {drain:.3f} s", flush=True)
         return {"attempted": attempted, "failed": attempted if errors else lost,
-                "errors": errors, "latency_samples": latencies, "drain_s": drains}
+                "errors": errors, "latency_samples": latencies, "drain_s": drain}
 
     def check(self, spark) -> list[str]:
-        """The streamed output must equal the batch pipeline run over the
-        same files (digest of tenant and payload).  The stream's files hold
-        no malformed line, so the batch run keeps the dead-letter branch of
-        the batch passes, whose generated code is already compiled."""
-        run_pipeline(spark, pipeline_spec(self.dirs, self.ref, self.ref + "-dead"),
-                     streaming=False)
-        got, want = routed_digest(spark, self.out), routed_digest(spark, self.ref)
+        """The streamed output must equal the batch pipeline's routed rows
+        over the same files (digest of tenant and payload).  The batch side
+        is the engine's own plan (``build_cmf_stream`` then the Filterer),
+        digested without writing it out."""
+        built = build_cmf_stream(spark, pipeline_spec(self.dirs, self.out, None),
+                                 streaming=False)
+        wire = built[0] if isinstance(built, tuple) else built
+        routed = filter_routable(extract_tenant(wire))
+        got, want = routed_digest(spark.read.parquet(self.out)), routed_digest(routed)
         if got != want:
             return [f"stream digest {got} != batch digest {want}"]
         if got[0] != self.records:
@@ -576,8 +570,8 @@ class StreamPath:
 
 class Ingest:
     """The ``ingest`` workload: the batch path closed-loop, then the stream
-    path open-loop and in bursts.  ``wall_s`` is the median batch pass,
-    ``records_per_s`` the stream's median burst drain rate, and the
+    path open-loop and then one burst.  ``wall_s`` is the median batch
+    pass, ``records_per_s`` the stream's burst drain rate, and the
     latencies come from the open-loop files."""
 
     def __init__(self, work: str, seed: int):
@@ -591,7 +585,7 @@ class Ingest:
         s = self.stream.measure(spark, max(STREAM_MIN_OPEN_S, seconds / 2))
         print(f"batch phase {t1 - t0:.1f} s, stream phase {time.perf_counter() - t1:.1f} s",
               flush=True)
-        drain = statistics.median(s["drain_s"]) if s["drain_s"] else 0.0
+        drain = s["drain_s"]
         return {
             "attempted": b["attempted"] + s["attempted"],
             "failed": b["failed"] + s["failed"],

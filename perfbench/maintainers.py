@@ -12,21 +12,14 @@ import time
 from pyspark.sql import functions as F
 
 from perfbench.common import Tracer, cached
-from pulsar_ingestion_spark.operators.versioned import VersionedTable
 from pulsar_ingestion_spark.session import load_tables
-from pulsar_ingestion_spark.streaming.ann_index import stream_ann_index
 from pulsar_ingestion_spark.streaming.dedup_cascade import accepted_docs, stream_dedup_cascade
 from pulsar_ingestion_spark.streaming.mixture import MixturePlanMaintainer
-from pulsar_ingestion_spark.streaming.profile import ProfileStreamMaintainer
 from pulsar_ingestion_spark.streaming.quantile import QuantileLogbinsStreamMaintainer
-from pulsar_ingestion_spark.streaming.seasonal import SeasonalGridMaintainer
 from pulsar_ingestion_spark.streaming.sketches import HllStreamMaintainer
 
 N_CUTS = 2
-NAMES = ["dedup_cascade", "ann_index", "sketch_hll", "quantile_logbins", "mixture_plan",
-         "profile", "seasonal_grid"]
-PROFILE_COLS = ["event_type", "user_id", "value"]
-MG_BUDGET = 64
+NAMES = ["dedup_cascade", "sketch_hll", "quantile_logbins", "mixture_plan"]
 
 
 def hash_cuts(df, id_col: str, n: int, seed: int):
@@ -57,19 +50,6 @@ class _Versioned:
         return self._state(spark, self.root)
 
 
-def _ann_state(spark, root):
-    return sorted(tuple(r) for r in VersionedTable(root).read(spark)
-                  .select("vec_id", "bucket").collect())
-
-
-def _profile_state(m: ProfileStreamMaintainer) -> dict:
-    # Misra-Gries candidate sets depend on the cut by design; the exact
-    # counts and the HLL estimate do not.  Candidates are checked against
-    # the Misra-Gries guarantee instead (see check).
-    return {c: {k: v for k, v in p.items() if k not in ("modal_candidates", "mg_error_bound")}
-            for c, p in m.profile().items()}
-
-
 def _mixture_state(m: MixturePlanMaintainer) -> list[tuple]:
     # plan() sums per-source floats in first-seen order, which depends on
     # the cut; token counts are exact, shares are compared to 12 digits.
@@ -78,7 +58,7 @@ def _mixture_state(m: MixturePlanMaintainer) -> list[tuple]:
 
 
 class Maintainers:
-    """The seven maintainers over the testdata tables in ``sf_dir``."""
+    """The maintainers over the testdata tables in ``sf_dir``."""
 
     def __init__(self, work: str, sf_dir: str, rows: dict[str, int], seed: int):
         self.work, self.sf_dir, self.rows, self.seed = work, sf_dir, rows, seed
@@ -91,9 +71,8 @@ class Maintainers:
 
     def build(self, spark) -> None:
         t = load_tables(spark, self.sf_dir)
-        ev, emb, orders = t["events"], t["embeddings"], t["orders"]
+        ev, orders = t["events"], t["orders"]
         docs = t["documents"].select("doc_id", "source", "text")
-        self.events = ev
         # name -> (factory, state getter, table name, whole table, cuts)
         self.specs = {
             "dedup_cascade": (
@@ -102,11 +81,6 @@ class Maintainers:
                                                        accepted_docs(s, r).collect())),
                 lambda m, s: m.state(s), "documents", docs,
                 range_cuts(docs, "doc_id", N_CUTS, self.rows["documents"] - 1)),
-            "ann_index": (
-                lambda: _Versioned(self._root(), lambda r: stream_ann_index(
-                    r, app_id="pb", dim=64, num_planes=8), _ann_state),
-                lambda m, s: m.state(s), "embeddings", emb,
-                hash_cuts(emb, "vec_id", N_CUTS, self.seed)),
             "sketch_hll": (lambda: HllStreamMaintainer("user_id"),
                            lambda m, s: dict(m.registers), "events", ev,
                            hash_cuts(ev, "event_id", N_CUTS, self.seed)),
@@ -117,11 +91,6 @@ class Maintainers:
                 "orders", orders, hash_cuts(orders, "o_orderkey", N_CUTS, self.seed)),
             "mixture_plan": (MixturePlanMaintainer, lambda m, s: _mixture_state(m),
                              "documents", docs, hash_cuts(docs, "doc_id", N_CUTS, self.seed)),
-            "profile": (lambda: ProfileStreamMaintainer(PROFILE_COLS, mg_budget=MG_BUDGET),
-                        lambda m, s: _profile_state(m), "events", ev,
-                        hash_cuts(ev, "event_id", N_CUTS, self.seed)),
-            "seasonal_grid": (SeasonalGridMaintainer, lambda m, s: m.grid(), "events", ev,
-                              hash_cuts(ev, "event_id", N_CUTS, self.seed)),
         }
         self.fed_rows = {name: self.rows[spec[2]] for name, spec in self.specs.items()}
 
@@ -148,8 +117,7 @@ class Maintainers:
 
     def _reference(self, spark) -> dict:
         """Each maintainer's state fed the whole table as one batch (an
-        exception in its place if that raised), and the values Misra-Gries
-        must keep: every value more frequent than n/(budget+1)."""
+        exception in its place if that raised)."""
         states = {}
         for name, (make, state, _table, whole, _cuts) in self.specs.items():
             try:
@@ -158,13 +126,7 @@ class Maintainers:
                 states[name] = state(m, spark)
             except Exception as ex:  # noqa: BLE001
                 states[name] = ex
-        n = self.rows["events"]
-        heavy = {
-            c: {r["v"] for r in self.events.groupBy(F.col(c).cast("string").alias("v"))
-                .count().filter(F.col("count") > n / (MG_BUDGET + 1)).collect()}
-            for c in PROFILE_COLS
-        }
-        return {"states": states, "heavy": heavy}
+        return states
 
     def check(self, spark, done: dict[str, tuple]) -> list[str]:
         """Each final state against the maintainer fed the whole table as
@@ -172,20 +134,14 @@ class Maintainers:
         (it depends on neither the seed nor the cuts).  A check that raises
         is an error like a mismatch."""
         if self.reference is None:
-            ref = cached("maintainers", lambda: self._reference(spark),
-                         keep=lambda r: not any(isinstance(v, Exception)
-                                                for v in r["states"].values()))
-            self.reference, self.heavy = ref["states"], ref["heavy"]
+            self.reference = cached("maintainers", lambda: self._reference(spark),
+                                    keep=lambda r: not any(isinstance(v, Exception)
+                                                           for v in r.values()))
         errors = []
         for name, (m, _per) in done.items():
             want = self.reference[name]
             try:
                 got = self.specs[name][1](m, spark)
-                if name == "profile":
-                    for c, p in m.profile().items():
-                        if not self.heavy[c] <= set(p["modal_candidates"]):
-                            errors.append(f"profile: a heavy value of {c} is missing "
-                                          "from its candidates")
             except Exception as ex:  # noqa: BLE001
                 got = ex
             if isinstance(want, Exception) or isinstance(got, Exception):

@@ -29,7 +29,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKLOADS = ("ingest", "analytics")
-N_SETUPS = 3  # timed set-ups, after the one that launches the JVM
+N_SETUPS = 3  # timed set-ups after the one that launches the JVM (one when traced)
 E2E_UNITS = {
     "setup_s": "s", "records_per_s": "1/s", "wall_s": "s",
     "latency_p50_s": "s", "latency_tail_s": "s", "peak_rss_mb": "MB",
@@ -84,9 +84,9 @@ def _workload_class(name: str):
     return {"ingest": Ingest, "analytics": Analytics}[name]
 
 
-def _prepare(args, work: str):
+def _prepare(args, work: str, n_setups: int = N_SETUPS):
     """Generate the workload's inputs in a thread while the first session
-    set-up launches the JVM, then set the session up ``N_SETUPS`` more
+    set-up launches the JVM, then set the session up ``n_setups`` more
     times (the generator has finished by then, so it does not disturb
     those timings).  Returns the workload, the last session, and the
     median set-up and warm-up times of the timed set-ups."""
@@ -100,7 +100,7 @@ def _prepare(args, work: str):
         new_session(args.parallelism)
         wl = inputs.result()
     totals, warms = [], []
-    for _ in range(N_SETUPS):
+    for _ in range(n_setups):
         spark, get_s, warm_s = new_session(args.parallelism)
         totals.append(get_s + warm_s)
         warms.append(warm_s)
@@ -143,7 +143,7 @@ def run_traced(args, work: str) -> dict:
     read 0."""
     from perfbench.common import Tracer, event_log_totals, new_session
 
-    wl, spark, _setup_s, warmup_s = _prepare(args, work)
+    wl, spark, _setup_s, warmup_s = _prepare(args, work, n_setups=1)
     event_dir = os.path.join(work, "eventlog")
     os.makedirs(event_dir)
     spark, _g, _w = new_session(args.parallelism, event_log_dir=event_dir)
