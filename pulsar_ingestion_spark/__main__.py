@@ -100,8 +100,6 @@ def main(argv: list[str] | None = None) -> int:
     q = run_pipeline(spark, spec, streaming=not args.batch)
     if q is not None:
         q.awaitTermination()
-        for sq in spark.streams.active:
-            sq.awaitTermination()
     print(f"pipeline complete → {args.output}")
     return 0
 

@@ -38,12 +38,6 @@ def stopword_ratio(col: Column) -> Column:
     return stop / F.size(w)
 
 
-def avg_word_len(col: Column) -> Column:
-    w = words(col)
-    total = F.aggregate(w, F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x))
-    return total / F.size(w)
-
-
 def quality_score_from_words(w: Column) -> Column:
     """:func:`quality_score` over a pre-split word array.  Splitting once
     and reusing the array matters: the higher-order-function lambdas

@@ -95,16 +95,3 @@ def prepare_kafka_routing(df: DataFrame, payload_col: str = "value") -> DataFram
         F.col(payload_col).cast("string").alias("value"),
     )
 
-
-def route_stream_to_tenant_dirs(stream_df: DataFrame, base_path: str, checkpoint: str, payload_col: str = "value"):
-    """Streaming form: readStream → foreachBatch(partitioned write).
-    Micro-batch epoch commits + checkpointing replace the reference's
-    fire-and-forget sendAsync (Filterer.kt:41) with a stronger guarantee."""
-    def _write(batch: DataFrame, epoch_id: int) -> None:
-        route_to_tenant_dirs(batch, base_path, payload_col=payload_col, mode="append")
-
-    return (
-        stream_df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )

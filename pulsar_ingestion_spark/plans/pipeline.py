@@ -8,7 +8,16 @@ query:
 
     for each source: open_source → translate_<kind>
     union all branches (unionByName — the shared CMF topic)
-    route: extract tenant → drop unroutable → partitioned sink
+    route: extract tenant → drop unroutable → the one chosen sink
+
+The sink is chosen once per run (:func:`_sink_writer`): the per-tenant
+topic publish when ``spec.publish`` is set, else a tenant-partitioned
+parquet landing — in streaming mode by ``spec.sink_mode`` (foreachBatch
+append, Spark's native file sink, or the versioned-table committer).
+Batch and streaming then differ only in how that writer is driven: one
+``save()`` versus one checkpointed ``start()``.  Malformed originals, when
+``spec.dead_letter_path`` is set, go to one parquet dead-letter sink
+beside it (its own query in streaming mode, checkpoint ``<ckpt>-dead``).
 
 One streaming query instead of N processes: the translate branches are
 narrow (no shuffle) and fuse into the scan; only the sink write fans out
@@ -18,6 +27,7 @@ fire-and-forget async publish with at-least-once + idempotent appends.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -87,8 +97,10 @@ class PipelineRun:
 class PipelineSpec:
     sources: list[SourceSpec]
     output_path: str          # base dir for per-tenant partitioned output
-    checkpoint: str | None = None
+    checkpoint: str | None = None   # required in streaming mode
     dead_letter_path: str | None = None
+    # Parquet landing sink in streaming mode (ignored when ``publish`` is
+    # set; a batch run always does one partitioned append):
     # "foreachBatch": idempotent-append dynamic sink (flexible, at-least-once
     #   within a failed epoch); "native": Spark's transactional file sink
     #   (_spark_metadata commit log -> exactly-once file visibility);
@@ -99,9 +111,6 @@ class PipelineSpec:
     # None -> availableNow (drain-and-stop: backfills, tests, cron runs);
     # an interval string like "30 seconds" -> continuous micro-batching.
     trigger_interval: str | None = None
-    # cap rows per output file (parquet writer splits beyond this) — the
-    # per-tenant file-sizing knob; None = Spark default (no cap)
-    max_records_per_file: int | None = None
     # Topic publish (relay) mode — the reference Filterer's per-tenant
     # publish (Filterer.kt dynamic outputs; deployment/pipeline.yaml
     # relay): when set, the routed stream publishes to a topic sink
@@ -109,13 +118,10 @@ class PipelineSpec:
     # "jsonl", "topic_prefix": "..."| "topic_template": "...{tenant}...",
     # **connector options} — each record goes to topic
     # `<topic_prefix><tenantId>`, or to the template with every `{tenant}`
-    # occurrence substituted (the reference Filterer's layout is
-    # persistent://${tenantId}/integration/telemetry — tenant mid-URL, so
-    # a prefix alone can't express it), via open_topic_sink's
+    # occurrence substituted (see _topic_expr), via open_topic_sink's
     # dynamic-topic contract (jsonl = broker-less bridge, value lines
     # partitioned by topic dir).
     publish: dict | None = None
-
 
 
 def _with_trigger(writer, spec: "PipelineSpec"):
@@ -124,6 +130,7 @@ def _with_trigger(writer, spec: "PipelineSpec"):
     if spec.trigger_interval:
         return writer.trigger(processingTime=spec.trigger_interval)
     return writer.trigger(availableNow=True)
+
 
 def build_cmf_stream(spark: SparkSession, spec: PipelineSpec, streaming: bool = True) -> DataFrame:
     """Wire sources → translators → canonical CMF stream (wire JSON in
@@ -169,126 +176,64 @@ def _checkpoint_max_batch(checkpoint: str) -> int:
     file names ARE the batch ids.  -1 for a dir with no batches yet.
     Used to evidence-gate the legacy-watermark migration: a reset
     checkpoint's small ids must not inherit a large legacy watermark."""
-    import os as _os
-
     mx = -1
     for sub in ("offsets", "commits"):
-        d = _os.path.join(checkpoint, sub)
-        if not _os.path.isdir(d):
+        d = os.path.join(checkpoint, sub)
+        if not os.path.isdir(d):
             continue
-        for name in _os.listdir(d):
+        for name in os.listdir(d):
             if name.isdigit():
                 mx = max(mx, int(name))
     return mx
 
 
-def run_pipeline(spark: SparkSession, spec: PipelineSpec, streaming: bool = True):
-    """Execute the pipeline.  Streaming: returns a :class:`PipelineRun`
-    holding the main sink's StreamingQuery and, when configured, the
-    dead-letter sink's (availableNow drain-and-stop by default; set
-    spec.trigger_interval for a continuously-running service); batch:
-    writes once and returns None."""
-    built = build_cmf_stream(spark, spec, streaming=streaming)
-    wire, dead = built if isinstance(built, tuple) else (built, None)
-    routable = filter_routable(extract_tenant(wire))
-    out = routable.select("tenantId", "value")
-    # Per-batch observability (the reference only log-lines these —
-    # GeotabTranslator.kt:154-157): routed count + distinct-tenant count
-    # land in StreamingQueryProgress.observedMetrics / Observation.get.
-    out = out.observe(
-        "route_metrics",
-        F.count(F.lit(1)).alias("routed"),
-        F.approx_count_distinct("tenantId").alias("tenants"),
-    )
+def _topic_expr(template: str | None, prefix: str):
+    """Per-record publish topic: ``<prefix><tenantId>``, or ``template``
+    with every ``{tenant}`` occurrence replaced by the tenant.  The
+    template puts the tenant ANYWHERE in the topic URI — the reference
+    Filterer routes to persistent://${tenantId}/integration/telemetry
+    (tenant mid-URL, Filterer.kt dynamic outputs), which a prefix alone
+    can't express (ADVICE r10)."""
+    if template is None:
+        return F.concat(F.lit(prefix), F.col("tenantId"))
+    parts = template.split("{tenant}")
+    if len(parts) < 2:
+        raise ValueError(
+            "publish.topic_template must contain '{tenant}' "
+            f"(got {template!r})"
+        )
+    cols = []
+    for i, p in enumerate(parts):
+        if p:
+            cols.append(F.lit(p))
+        if i < len(parts) - 1:
+            cols.append(F.col("tenantId"))
+    return F.concat(*cols)
+
+
+def _sink_writer(out: DataFrame, spec: PipelineSpec, streaming: bool):
+    """The routed sink, chosen once: a configured (not yet started or
+    saved) DataStreamWriter / DataFrameWriter."""
     if spec.publish is not None:
         # relay topology: publish per-tenant instead of landing parquet
         from pulsar_ingestion_spark.sources.registry import open_topic_sink
 
         opts = dict(spec.publish)
         kind = opts.pop("kind")
-        # topic_template puts the tenant ANYWHERE in the topic URI — the
-        # reference Filterer routes to
-        # persistent://${tenantId}/integration/telemetry (tenant mid-URL,
-        # Filterer.kt dynamic outputs), which a prefix alone can't express
-        # (ADVICE r10).  `{tenant}` is the substitution point; every
-        # occurrence is replaced.  topic_prefix remains the simple form.
-        template = opts.pop("topic_template", None)
-        prefix = opts.pop("topic_prefix", "tenant-")
-        if template is not None:
-            parts = template.split("{tenant}")
-            if len(parts) < 2:
-                raise ValueError(
-                    "publish.topic_template must contain '{tenant}' "
-                    f"(got {template!r})"
-                )
-            cols = []
-            for i, p in enumerate(parts):
-                if p:
-                    cols.append(F.lit(p))
-                if i < len(parts) - 1:
-                    cols.append(F.col("tenantId"))
-            topic_expr = F.concat(*cols)
-        else:
-            topic_expr = F.concat(F.lit(prefix), F.col("tenantId"))
-        topic_frame = out.select(topic_expr.alias("__route_topic"), "value")
-        writer = open_topic_sink(
-            topic_frame, kind, streaming=streaming,
-            topic_column="__route_topic", **opts,
+        topic = _topic_expr(
+            opts.pop("topic_template", None), opts.pop("topic_prefix", "tenant-")
         )
-        if not streaming:
-            writer.mode("append").save()
-            if dead is not None:
-                dead.write.mode("append").parquet(spec.dead_letter_path)
-            return None
-        assert spec.checkpoint, "streaming pipeline needs a checkpoint dir"
-        dead_query = None
-        if dead is not None:
-            dead_query = (
-                _with_trigger(
-                    dead.writeStream.format("parquet")
-                    .option("path", spec.dead_letter_path)
-                    .option("checkpointLocation", spec.checkpoint + "-dead"),
-                    spec,
-                ).start()
-            )
-        main = _with_trigger(
-            writer.option("checkpointLocation", spec.checkpoint), spec
-        ).start()
-        return PipelineRun(main=main, dead_letter=dead_query)
-
-    if not streaming:
-        out.write.mode("append").partitionBy("tenantId").parquet(spec.output_path)
-        if dead is not None:
-            dead.write.mode("append").parquet(spec.dead_letter_path)
-        return None
-    dead_query = None
-    if dead is not None:
-        assert spec.checkpoint, "streaming pipeline needs a checkpoint dir"
-        dead_query = (
-            _with_trigger(
-                dead.writeStream.format("parquet")
-                .option("path", spec.dead_letter_path)
-                .option("checkpointLocation", spec.checkpoint + "-dead"),
-                spec,
-            ).start()
+        return open_topic_sink(
+            out.select(topic.alias("__route_topic"), "value"), kind,
+            streaming=streaming, topic_column="__route_topic", **opts,
         )
-
-    assert spec.checkpoint, "streaming pipeline needs a checkpoint dir"
-    if spec.sink_mode == "native":
-        # Transactional file sink: files become visible only via the
-        # _spark_metadata commit log — exactly-once even across mid-batch
-        # crashes.  partitionBy still gives the per-tenant layout.
-        main = (
-            _with_trigger(
-                out.writeStream.format("parquet")
-                .partitionBy("tenantId")
-                .option("path", spec.output_path)
-                .option("checkpointLocation", spec.checkpoint),
-                spec,
-            ).start()
-        )
-        return PipelineRun(main=main, dead_letter=dead_query)
-
+    if not streaming or spec.sink_mode == "native":
+        # Batch: one partitioned append.  Streaming "native": Spark's
+        # transactional file sink — files become visible only via the
+        # _spark_metadata commit log, exactly-once even across mid-batch
+        # crashes; partitionBy still gives the per-tenant layout.
+        w = out.writeStream if streaming else out.write
+        return w.format("parquet").partitionBy("tenantId").option("path", spec.output_path)
     if spec.sink_mode == "versioned":
         # Manifest-committed sink: replayed batches are no-ops (batch id
         # rides in the manifest), readers get snapshot isolation and time
@@ -312,34 +257,52 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec, streaming: bool = True
         # offsets/commits log must show it produced ids reaching the
         # legacy watermark, and migrate_default_app additionally only
         # acts before the app has any watermark of its own.
-        import os as _os
-
-        if _os.path.isdir(spec.checkpoint):
+        if os.path.isdir(spec.checkpoint):
             table.migrate_default_app(
                 spec.checkpoint,
                 committed_hint=_checkpoint_max_batch(spec.checkpoint),
             )
-        main = (
-            _with_trigger(
-                out.writeStream.foreachBatch(
-                    table.stream_batch_committer(app_id=spec.checkpoint)
-                )
-                .option("checkpointLocation", spec.checkpoint),
-                spec,
-            ).start()
+        return out.writeStream.foreachBatch(
+            table.stream_batch_committer(app_id=spec.checkpoint)
         )
-        return PipelineRun(main=main, dead_letter=dead_query)
 
     def _write(batch: DataFrame, epoch_id: int) -> None:
-        w = batch.write.mode("append")
-        if spec.max_records_per_file:
-            w = w.option("maxRecordsPerFile", spec.max_records_per_file)
-        w.partitionBy("tenantId").parquet(spec.output_path)
+        batch.write.mode("append").partitionBy("tenantId").parquet(spec.output_path)
 
-    main = (
-        _with_trigger(
-            out.writeStream.foreachBatch(_write).option("checkpointLocation", spec.checkpoint),
+    return out.writeStream.foreachBatch(_write)
+
+
+def run_pipeline(spark: SparkSession, spec: PipelineSpec, streaming: bool = True):
+    """Execute the pipeline.  Streaming: returns a :class:`PipelineRun`
+    holding the main sink's StreamingQuery and, when configured, the
+    dead-letter sink's (availableNow drain-and-stop by default; set
+    spec.trigger_interval for a continuously-running service); batch:
+    writes once and returns None."""
+    built = build_cmf_stream(spark, spec, streaming=streaming)
+    wire, dead = built if isinstance(built, tuple) else (built, None)
+    if streaming:
+        assert spec.checkpoint, "streaming pipeline needs a checkpoint dir"
+    # Per-batch observability (the reference only log-lines these —
+    # GeotabTranslator.kt:154-157): routed count + distinct-tenant count
+    # land in StreamingQueryProgress.observedMetrics / Observation.get.
+    out = filter_routable(extract_tenant(wire)).select("tenantId", "value").observe(
+        "route_metrics",
+        F.count(F.lit(1)).alias("routed"),
+        F.approx_count_distinct("tenantId").alias("tenants"),
+    )
+    writer = _sink_writer(out, spec, streaming)
+    if not streaming:
+        writer.mode("append").save()
+        if dead is not None:
+            dead.write.mode("append").parquet(spec.dead_letter_path)
+        return None
+    dead_query = None
+    if dead is not None:
+        dead_query = _with_trigger(
+            dead.writeStream.format("parquet")
+            .option("path", spec.dead_letter_path)
+            .option("checkpointLocation", spec.checkpoint + "-dead"),
             spec,
         ).start()
-    )
+    main = _with_trigger(writer.option("checkpointLocation", spec.checkpoint), spec).start()
     return PipelineRun(main=main, dead_letter=dead_query)

@@ -40,7 +40,6 @@ class MixturePlanMaintainer:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= self._seen_batch:
             return  # replay — ADD merge is not idempotent
-        self._seen_batch = batch_id
         rows = (
             batch_df.groupBy(self.source_col)
             .agg(
@@ -50,15 +49,21 @@ class MixturePlanMaintainer:
             )
             .collect()
         )
+        # merge into a copy and commit it with the batch id only once the
+        # guard passes: a raise leaves counters and watermark untouched,
+        # so a retry of the same id starts from the pre-batch state
+        tokens = dict(self._tokens)
         for r in rows:
             src = r[self.source_col]
-            self._tokens[src] = self._tokens.get(src, 0) + (r["t"] or 0)
-        if len(self._tokens) > self.max_sources:
+            tokens[src] = tokens.get(src, 0) + (r["t"] or 0)
+        if len(tokens) > self.max_sources:
             raise ValueError(
-                f"MixturePlanMaintainer: {len(self._tokens)} sources "
+                f"MixturePlanMaintainer: {len(tokens)} sources "
                 f"exceeds max_sources={self.max_sources} — driver counters "
                 "require bounded source cardinality; bucket upstream"
             )
+        self._tokens = tokens
+        self._seen_batch = batch_id
 
     def plan(self) -> list[tuple]:
         """(source, tokens, natural_share, temp_share, effective_epochs)

@@ -41,7 +41,6 @@ class QuantileLogbinsStreamMaintainer:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= self._seen_batch:
             return  # replay — ADD-merge is not idempotent (CMS rule)
-        self._seen_batch = batch_id
         cents = batch_df.filter(F.col(self.col) > 0).select(
             F.floor(F.col(self.col) * 100).cast("bigint").alias("c")
         )
@@ -59,6 +58,9 @@ class QuantileLogbinsStreamMaintainer:
             key = (r["ndig"], r["lead2"])
             self._bins[key] = self._bins.get(key, 0) + r["cnt"]
             self._n += r["cnt"]
+        # mark seen only after the merge: a batch whose job failed is
+        # retried under the same id and must not be skipped
+        self._seen_batch = batch_id
 
     def quantile(self, q: float) -> float | None:
         """Lower-bound estimate for quantile ``q`` (the batch query's

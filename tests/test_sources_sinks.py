@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.plans.pipeline import PipelineSpec, SourceSpec, run_pipeline
@@ -84,6 +85,87 @@ def test_pipeline_observed_metrics(spark, tmp_path):
     observed = progress["observedMetrics"]["route_metrics"]
     assert observed["routed"] == 5
     assert observed["tenants"] == 1
+
+
+def _sink_mode_inputs(tmp_path) -> list[SourceSpec]:
+    """Two routable Geotab records plus one malformed line under tenant
+    ``t-a``, and a CalAmp source whose tenant is blank (unroutable)."""
+    (tmp_path / "geo").mkdir()
+    (tmp_path / "geo" / "a.jsonl").write_text("\n".join(
+        [json.dumps({
+            "Device_ID": f"d{i}", "Vehicle_ID": f"v{i}",
+            "Record_DateTime": "2024-02-02T08:00:00.000Z",
+            "Latitude": 5.0, "Longitude": 6.0,
+        }) for i in range(2)] + ["{garbage"]
+    ) + "\n")
+    (tmp_path / "cal").mkdir()
+    (tmp_path / "cal" / "a.jsonl").write_text(json.dumps(
+        {"unit_id": "u1", "vid": "v9", "msg_ts": 1698827400,
+         "gps_lat": 3.0, "gps_lon": 4.0}
+    ) + "\n")
+    return [
+        SourceSpec(kind="jsonl", translator="geotab",
+                   options={"path": str(tmp_path / "geo")}, tenant="t-a"),
+        SourceSpec(kind="jsonl", translator="calamp",
+                   options={"path": str(tmp_path / "cal")}, tenant="  "),
+    ]
+
+
+def _landed_rows(spark, mode: str, out: str, topics: str) -> list[tuple]:
+    if mode == "versioned":
+        from pulsar_ingestion_spark.operators.versioned import VersionedTable
+
+        df = VersionedTable(out).read(spark)
+    elif mode == "publish":
+        df = spark.read.format("text").load(topics).select(
+            F.regexp_replace("topic", "^tenant-", "").alias("tenantId"), "value"
+        )
+    else:
+        df = spark.read.parquet(out)
+    return sorted((r["tenantId"], r["value"]) for r in df.collect())
+
+
+@pytest.mark.parametrize("mode,streaming", [
+    ("foreachBatch", True), ("native", True), ("versioned", True),
+    ("publish", True), ("foreachBatch", False),
+], ids=["foreachBatch", "native", "versioned", "publish-jsonl", "batch"])
+def test_sink_modes_dead_letters_once_and_routed_rows(spark, tmp_path, mode, streaming):
+    """Every sink choice shares one dead-letter path: the malformed line
+    lands in the dead-letter sink exactly once (also across a streaming
+    restart on the same checkpoint), the blank-tenant source is dropped,
+    and the routed rows are the Filterer's view of the CMF wire JSON."""
+    from pulsar_ingestion_spark.operators.filterer import extract_tenant, filter_routable
+    from pulsar_ingestion_spark.plans.pipeline import build_cmf_stream
+
+    out, topics = str(tmp_path / "out"), str(tmp_path / "topics")
+    spec = PipelineSpec(
+        sources=_sink_mode_inputs(tmp_path),
+        output_path=out,
+        checkpoint=str(tmp_path / "ckpt") if streaming else None,
+        dead_letter_path=str(tmp_path / "dead"),
+        sink_mode=mode if mode != "publish" else "foreachBatch",
+        publish={"kind": "jsonl", "path": topics} if mode == "publish" else None,
+    )
+    wire, _ = build_cmf_stream(spark, spec, streaming=False)
+    expected = sorted(
+        (r["tenantId"], r["value"])
+        for r in filter_routable(extract_tenant(wire)).select("tenantId", "value").collect()
+    )
+    assert len(expected) == 2 and {t for t, _ in expected} == {"t-a"}
+
+    for _ in range(2 if streaming else 1):
+        q = run_pipeline(spark, spec, streaming=streaming)
+        if streaming:
+            assert q.dead_letter is not None
+            q.awaitTermination(120)
+            assert not q.isActive
+        else:
+            assert q is None
+        dead = spark.read.parquet(str(tmp_path / "dead")).collect()
+        assert [(r["source_kind"], r["translator"], r["value"]) for r in dead] == [
+            ("jsonl", "geotab", "{garbage")
+        ]
+        assert _landed_rows(spark, mode, out, topics) == expected
 
 
 def test_event_type_split_sink(spark, tmp_path):

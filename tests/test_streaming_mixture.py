@@ -72,11 +72,49 @@ def test_stream_plan_replay_guard(spark):
 
 
 def test_stream_plan_source_guard(spark):
+    """The max_sources guard fires, and it is checked against a merged
+    COPY: the raise leaves the counters and the batch watermark as they
+    were, so a retry of the same id (here with the offending sources
+    bucketed upstream) is merged in full."""
     from pulsar_ingestion_spark.streaming.mixture import MixturePlanMaintainer
 
     m = MixturePlanMaintainer(max_sources=2)
-    df = spark.createDataFrame(
-        [(f"s{i}", "x y") for i in range(5)], "source string, text string"
-    )
+    m(_tokens_df(spark, [("a", "x y")]), 0)
+    before = m.plan()
     with pytest.raises(ValueError, match="max_sources"):
-        m(df, 0)
+        m(_tokens_df(spark, [(f"s{i}", "x y z") for i in range(5)]), 1)
+    assert m.plan() == before and m.total_tokens() == 2
+    m(_tokens_df(spark, [("a", "x y z"), ("b", "x")]), 1)  # retry, bucketed
+    ref = MixturePlanMaintainer(max_sources=2)
+    ref(_tokens_df(spark, [("a", "x y")]), 0)
+    ref(_tokens_df(spark, [("a", "x y z"), ("b", "x")]), 1)
+    assert m.plan() == ref.plan() and m.total_tokens() == 6
+
+
+def _tokens_df(spark, rows):
+    return spark.createDataFrame(rows, "source string, text string")
+
+
+def test_stream_plan_failed_batch_is_retried(spark):
+    """A batch whose job fails is redelivered under the SAME id; the
+    retry must be merged, not skipped as a replay.  The first delivery
+    of batch 0 raises inside the maintainer's Spark job; after the
+    retry the state equals a clean one-batch feed."""
+    from pyspark.sql import functions as F
+
+    from pulsar_ingestion_spark.streaming.mixture import MixturePlanMaintainer
+
+    df = _tokens_df(spark, [("a", "one two three"), ("b", "four five")])
+    failing = df.select(
+        "source",
+        F.when(F.col("source") == "b", F.raise_error(F.lit("injected batch failure")))
+        .otherwise(F.col("text")).cast("string").alias("text"),
+    )
+    m = MixturePlanMaintainer()
+    with pytest.raises(Exception, match="injected batch failure"):
+        m(failing, 0)
+    m(df, 0)  # retry of the failed batch
+    ref = MixturePlanMaintainer()
+    ref(df, 0)
+    assert m.total_tokens() == ref.total_tokens() == 5
+    assert m.plan() == ref.plan()

@@ -87,3 +87,31 @@ def test_stream_quantile_monotone_in_q(spark):
     m(spark.read.parquet(f"{SF_DIR}/orders.parquet"), 0)
     ests = [m.quantile(q) for q in (0.1, 0.25, 0.5, 0.75, 0.9, 0.99)]
     assert ests == sorted(ests)
+
+
+def test_stream_quantile_failed_batch_is_retried(spark):
+    """A batch whose job fails is redelivered under the SAME id; the
+    retry must be merged, not skipped as a replay.  The first delivery
+    of batch 0 raises inside the maintainer's Spark job; after the
+    retry the state equals a clean one-batch feed."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from pulsar_ingestion_spark.streaming.quantile import (
+        QuantileLogbinsStreamMaintainer,
+    )
+
+    df = spark.createDataFrame([(float(x),) for x in range(1, 101)], "v double")
+    failing = df.select(
+        F.when(F.col("v") > 50, F.raise_error(F.lit("injected batch failure")))
+        .otherwise(F.col("v")).cast("double").alias("v")
+    )
+    m = QuantileLogbinsStreamMaintainer("v")
+    with pytest.raises(Exception, match="injected batch failure"):
+        m(failing, 0)
+    m(df, 0)  # retry of the failed batch
+    ref = QuantileLogbinsStreamMaintainer("v")
+    ref(df, 0)
+    assert m.count() == ref.count() == 100
+    assert m._bins == ref._bins
+    assert [m.quantile(q) for q in QS] == [ref.quantile(q) for q in QS]

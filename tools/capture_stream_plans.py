@@ -22,6 +22,7 @@ import os
 import shutil
 import sys
 import tempfile
+from collections.abc import Sequence
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -83,59 +84,59 @@ def main() -> None:
 
     DataFrame.collect = spy_collect
     VersionedTable.stream_batch_committer = spy_committer
+    try:
+        def run(name: str, process, batches, extra: Sequence[tuple[str, str]] = ()):
+            nonlocal watching
+            captured.clear()
+            for i, b in enumerate(batches):
+                watching = i == len(batches) - 1  # steady-state batch only
+                process(b, i)
+            watching = False
+            parts = [
+                f"== streaming maintainer: {name} — per-batch plan at steady state "
+                f"(batch {len(batches) - 1} of {len(batches)}, sf_dir={sf_dir}) ==\n"
+            ]
+            for label, plan in list(captured) + list(extra):
+                parts.append(f"\n-- action: {label} --\n{plan}")
+            with open(os.path.join(outdir, f"stream_{name}.txt"), "w") as fh:
+                fh.write("".join(parts))
+            spark.catalog.clearCache()
+            print(name, "ok", f"({len(captured) + len(extra)} plans)")
 
-    def run(name: str, process, batches, extra: list[tuple[str, str]] = ()):
-        nonlocal watching
-        captured.clear()
-        for i, b in enumerate(batches):
-            watching = i == len(batches) - 1  # steady-state batch only
-            process(b, i)
-        watching = False
-        parts = [
-            f"== streaming maintainer: {name} — per-batch plan at steady state "
-            f"(batch {len(batches) - 1} of {len(batches)}, sf_dir={sf_dir}) ==\n"
-        ]
-        for label, plan in list(captured) + list(extra):
-            parts.append(f"\n-- action: {label} --\n{plan}")
-        with open(os.path.join(outdir, f"stream_{name}.txt"), "w") as fh:
-            fh.write("".join(parts))
-        spark.catalog.clearCache()
-        print(name, "ok", f"({len(captured) + len(extra)} plans)")
+        ev, docs, emb = tabs["events"], tabs["documents"], tabs["embeddings"]
+        li = tabs["lineitem"].withColumn("_id", F.monotonically_increasing_id())
+        ev_cuts = cuts(ev, "user_id", N_BATCHES)
+        doc_cuts = cuts(docs, "doc_id", N_BATCHES)
+        emb_cuts = cuts(emb, "vec_id", N_BATCHES)
+        li_cuts = cuts(li, "_id", N_BATCHES)
 
-    ev, docs, emb = tabs["events"], tabs["documents"], tabs["embeddings"]
-    li = tabs["lineitem"].withColumn("_id", F.monotonically_increasing_id())
-    ev_cuts = cuts(ev, "user_id", N_BATCHES)
-    doc_cuts = cuts(docs, "doc_id", N_BATCHES)
-    emb_cuts = cuts(emb, "vec_id", N_BATCHES)
-    li_cuts = cuts(li, "_id", N_BATCHES)
+        from pulsar_ingestion_spark.streaming.ann_index import ann_search, stream_ann_index
+        from pulsar_ingestion_spark.streaming.dedup_cascade import stream_dedup_cascade
+        from pulsar_ingestion_spark.streaming.sketches import (
+            CmsStreamMaintainer,
+            HllStreamMaintainer,
+            MgStreamMaintainer,
+        )
+        from pulsar_ingestion_spark.streaming.skyline import SkylineStreamMaintainer
 
-    from pulsar_ingestion_spark.streaming.ann_index import ann_search, stream_ann_index
-    from pulsar_ingestion_spark.streaming.dedup_cascade import stream_dedup_cascade
-    from pulsar_ingestion_spark.streaming.sketches import (
-        CmsStreamMaintainer,
-        HllStreamMaintainer,
-        MgStreamMaintainer,
-    )
-    from pulsar_ingestion_spark.streaming.skyline import SkylineStreamMaintainer
-
-    ann_root = os.path.join(tmp, "ann")
-    qdf = emb.limit(8)
-    run(
-        "ann_index",
-        stream_ann_index(ann_root, app_id="cp", dim=64, num_planes=8),
-        emb_cuts,
-        extra=[("ann_search read path", _explain(ann_search(spark, ann_root, qdf, 64)))],
-    )
-    run("dedup_cascade", stream_dedup_cascade(os.path.join(tmp, "casc"), app_id="cp"),
-        doc_cuts)
-    run("sketch_hll", HllStreamMaintainer("user_id"), ev_cuts)
-    run("sketch_cms", CmsStreamMaintainer("event_type"), ev_cuts)
-    run("sketch_mg", MgStreamMaintainer("event_type"), ev_cuts)
-    run("skyline", SkylineStreamMaintainer("l_quantity", "l_extendedprice"), li_cuts)
-
-    DataFrame.collect = real_collect
-    VersionedTable.stream_batch_committer = real_committer
-    shutil.rmtree(tmp, ignore_errors=True)
+        ann_root = os.path.join(tmp, "ann")
+        qdf = emb.limit(8)
+        run(
+            "ann_index",
+            stream_ann_index(ann_root, app_id="cp", dim=64, num_planes=8),
+            emb_cuts,
+            extra=[("ann_search read path", _explain(ann_search(spark, ann_root, qdf, 64)))],
+        )
+        run("dedup_cascade", stream_dedup_cascade(os.path.join(tmp, "casc"), app_id="cp"),
+            doc_cuts)
+        run("sketch_hll", HllStreamMaintainer("user_id"), ev_cuts)
+        run("sketch_cms", CmsStreamMaintainer("event_type"), ev_cuts)
+        run("sketch_mg", MgStreamMaintainer("event_type"), ev_cuts)
+        run("skyline", SkylineStreamMaintainer("l_quantity", "l_extendedprice"), li_cuts)
+    finally:
+        DataFrame.collect = real_collect
+        VersionedTable.stream_batch_committer = real_committer
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":
