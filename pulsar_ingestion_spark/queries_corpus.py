@@ -19,6 +19,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.functions.text import token_count
+from pulsar_ingestion_spark.operators.ranking import best_struct
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import load_tables
 
@@ -228,18 +229,12 @@ def q_corpus_assemble(spark, sf_dir):
     # lineage ran TWICE and the digests shuffled twice — measured ~2× the
     # single-pass wall at the 100× point (SCALE.md §6o); the r13
     # row_number window still sorted every duplicate inside its digest
-    # group.  The (tokens desc, doc_id asc) winner is
-    # max(struct(tokens, -doc_id)) — map-side partials ship one candidate
-    # per digest per task (r14); trailing fields are payload only.
+    # group; best_struct ships one candidate per digest per task (r14).
     canon = (
         gated.groupBy("h")
         .agg(
-            F.max(
-                F.struct(
-                    F.col("tokens"), (-F.col("doc_id")).alias("negid"),
-                    F.col("doc_id"), F.col("lang"),
-                )
-            ).alias("top")
+            best_struct(gated, [("tokens", "desc"), ("doc_id", "asc")], ["lang"])
+            .alias("top")
         )
         .select(
             F.col("top.doc_id").alias("doc_id"),

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.operators.ranking import best_struct
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import fan_out, load_tables
 
@@ -718,10 +719,9 @@ def label_propagation(edges, rounds: int):
     (node, label) after ``rounds`` rounds.  Each round is one join +
     one vote count + one per-node argmax (all partitioned by node).
 
-    Round 13: the per-node argmax is a ``max(struct(cnt, -label))``
-    hash aggregate instead of a row_number window — same (desc cnt,
-    asc label) winner (labels are node ids, so negation is a safe
-    order-flip), but partial map-side aggregation and no per-partition
+    Round 13: the per-node (desc cnt, asc label) argmax is a
+    ``best_struct`` hash aggregate instead of a row_number window —
+    same winner, but partial map-side aggregation and no per-partition
     sort: measured 6.44 → 5.54 s at sf0.1, output identical.
 
     Round 13 (optimization): round 1 is evaluated ALGEBRAICALLY.  With
@@ -755,10 +755,9 @@ def label_propagation(edges, rounds: int):
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
         best = votes.groupBy("node").agg(
-            F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg")))
-            .alias("b")
+            best_struct(votes, [("cnt", "desc"), ("label", "asc")]).alias("b")
         )
-        labels = best.select("node", (-F.col("b.neg")).alias("label"))
+        labels = best.select("node", F.col("b.label").alias("label"))
     return labels
 
 

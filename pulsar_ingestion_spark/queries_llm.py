@@ -21,6 +21,7 @@ from pulsar_ingestion_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_near_dups,
 )
+from pulsar_ingestion_spark.operators.ranking import best_struct
 from pulsar_ingestion_spark.operators.similarity import knn_bruteforce, knn_lsh
 from pulsar_ingestion_spark.functions.text import (
     STOPWORDS,
@@ -75,16 +76,15 @@ def q_dedup_fingerprint(spark, sf_dir):
 def q_dedup_keep_best(spark, sf_dir):
     # Corpus-dedup policy: within an exact-duplicate group keep the
     # highest-quality copy (here: most words; real pipelines use the
-    # quality score), tie-broken to the LOWEST doc_id via negated-id
-    # struct max — same lexicographic-extreme trick both engines share.
+    # quality score), tie-broken to the LOWEST doc_id.
     docs = load_tables(spark, sf_dir)["documents"]
     wc = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     scored = docs.select(
         "doc_id", F.md5("text").alias("content_hash"), wc.alias("wc")
     )
-    key = F.struct(F.col("wc").alias("wc"), (-F.col("doc_id")).alias("id"))
+    best = best_struct(scored, [("wc", "desc"), ("doc_id", "asc")])
     return scored.groupBy("content_hash").agg(
-        (F.max(key).getField("id") * -1).alias("kept_id"),
+        best.getField("doc_id").alias("kept_id"),
         F.count("*").alias("dup_cnt"),
     )
 
@@ -1486,17 +1486,12 @@ def q_corpus_curate(spark, sf_dir):
     filtered = feat.filter(F.col("quality") >= 0.5)
     # keep-best as ONE hash aggregate on the digest shuffle (r3 used
     # groupBy(h) + join-back = the same data shuffled twice; r13 used a
-    # row_number window = a per-digest sort of every duplicate): the
-    # (words desc, doc_id asc) winner is max(struct(words, -doc_id)), so
-    # map-side partials ship ONE candidate row per digest per task (r14).
-    # Trailing struct fields are payload only — (words, -doc_id) is
-    # already unique because doc_id is.
+    # row_number window = a per-digest sort of every duplicate):
+    # best_struct ships ONE candidate row per digest per task (r14).
     out = filtered.groupBy("h").agg(
-        F.max(
-            F.struct(
-                F.col("words"), (-F.col("doc_id")).alias("negid"),
-                F.col("doc_id"), F.col("lang"), F.col("text"), F.col("quality"),
-            )
+        best_struct(
+            filtered, [("words", "desc"), ("doc_id", "asc")],
+            ["lang", "text", "quality"],
         ).alias("top")
     )
     return out.select(

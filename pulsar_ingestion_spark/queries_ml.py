@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.operators.ranking import best_struct
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import load_tables
 
@@ -1185,19 +1186,11 @@ def q_sim_search_mmr(spark, sf_dir):
     s1 = cands.filter(F.col("rnk") == 1).select(
         "query_id", F.col("cand_id").alias("sel"), F.col("rel").alias("score")
     )
-    # per-step argmax = max(struct(mmr, -cand_id)): hash aggregate
-    # instead of a row_number sort (r14); mmr is a non-null rounded score
+    # per-step argmax: a hash aggregate, not a row_number sort (r14)
     def argmax(m):
         return (
             m.groupBy("query_id")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("mmr"), (-F.col("cand_id")).alias("negid"),
-                        F.col("cand_id"),
-                    )
-                ).alias("top")
-            )
+            .agg(best_struct(m, [("mmr", "desc"), ("cand_id", "asc")]).alias("top"))
             .select("query_id", F.col("top.cand_id").alias("sel"),
                     F.col("top.mmr").alias("score"))
         )
@@ -1602,7 +1595,7 @@ def q_ml_best_f1_threshold(spark, sf_dir):
 
     Global rank via the distributed exact-ranking operator; running
     positives via constant-key ``keyed_running_sums``; the argmax is
-    ONE map-side-combining max(struct(f1, −k, payload)) aggregate —
+    ONE map-side-combining ``best_struct`` aggregate —
     measured 2.9× at the 10× point as orderBy().limit(1), 1.1× as the
     struct-max (SCALE.md 6h)."""
     from pulsar_ingestion_spark.operators.ranking import (
@@ -1628,25 +1621,17 @@ def q_ml_best_f1_threshold(spark, sf_dir):
             2.0 * F.col("cum_y") / (F.col("k") + F.col("pos_total")), 6
         ).alias("f1"),
     )
-    # argmax as ONE map-side-combining aggregate: max(struct(f1, -k,
-    # payload)) picks the best F1 with smallest-k tie-break and carries
-    # the operating point out — no sort, no TakeOrdered heap over the
-    # full ranked relation (measured 2.9x at the 10x point with
-    # orderBy().limit(1); 1.0x-class with the struct-max).
     best = f1s.agg(
-        F.max(
-            F.struct(
-                F.col("f1"), (-F.col("k")).alias("nk"),
-                F.col("p"), F.col("cum_pos"), F.col("pos_total"),
-            )
+        best_struct(
+            f1s, [("f1", "desc"), ("k", "asc")], ["p", "cum_pos", "pos_total"]
         ).alias("b")
     )
     b = F.col("b")
     return best.select(
-        (-b.getField("nk")).cast("bigint").alias("best_k"),
+        b.getField("k").cast("bigint").alias("best_k"),
         F.round(b.getField("p"), 6).alias("threshold"),
         F.round(
-            b.getField("cum_pos").cast("double") / (-b.getField("nk")), 6
+            b.getField("cum_pos").cast("double") / b.getField("k"), 6
         ).alias("precision_at"),
         F.round(
             b.getField("cum_pos").cast("double") / b.getField("pos_total"), 6

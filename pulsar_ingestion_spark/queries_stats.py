@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.operators.ranking import best_struct
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import fan_out, load_tables
 
@@ -534,24 +535,13 @@ FROM r WHERE rn = 1
 def q_agg_mode(spark, sf_dir):
     """Deterministic per-group mode (ties broken by smallest value).
     Two-level agg: (group, value) counts collapse map-side first, so the
-    window only ranks distinct values per group — cardinality-bounded,
-    partitioned by group key."""
-    from pyspark.sql import Window
-
+    keep-best hash aggregate (r14: not a row_number partition sort) only
+    sees distinct values per group."""
     (li,) = _t(spark, sf_dir, "lineitem")
     c = li.groupBy("l_returnflag", "l_quantity").agg(F.count("*").alias("cnt"))
-    # (cnt desc, quantity asc) winner = max(struct(cnt, -quantity)) — a
-    # hash aggregate instead of a row_number partition sort (r14)
     return (
         c.groupBy("l_returnflag")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("cnt"), (-F.col("l_quantity")).alias("negq"),
-                    F.col("l_quantity"),
-                )
-            ).alias("top")
-        )
+        .agg(best_struct(c, [("cnt", "desc"), ("l_quantity", "asc")]).alias("top"))
         .select(
             "l_returnflag",
             F.col("top.l_quantity").alias("mode_qty"),
@@ -1537,16 +1527,10 @@ def q_ts_changepoint_mean_shift(spark, sf_dir):
             - (F.col("tot_y") - F.col("cum_y")) / (F.col("n") - F.col("i"))
         ).alias("shift"),
     )
-    # (shift desc, day asc) winner = max(struct(shift, -day)): hash
-    # aggregate instead of a row_number sort; shift is a non-null
-    # quotient of decimal-exact sums (i ≥ 1, i < n), day is bigint (r14)
+    # a hash aggregate, not a row_number sort (r14)
     return (
         scored.groupBy("event_type")
-        .agg(
-            F.max(
-                F.struct(F.col("shift"), (-F.col("day")).alias("negd"), F.col("day"))
-            ).alias("top")
-        )
+        .agg(best_struct(scored, [("shift", "desc"), ("day", "asc")]).alias("top"))
         .select("event_type", F.col("top.day").alias("split_day"),
                 F.col("top.shift").cast("double").alias("mean_shift"))
     )
@@ -2120,18 +2104,12 @@ def q_ts_downsample_lttb(spark, sf_dir):
             ).alias("area2"),
         )
     )
-    # per-bucket argmax = max(struct(area2, -day)): hash aggregate
-    # instead of a row_number sort; area2 is a non-null rounded product,
-    # day a bigint (r14)
+    # per-bucket argmax: a hash aggregate, not a row_number sort (r14)
     return (
         scored.groupBy("event_type", "bucket")
         .agg(
-            F.max(
-                F.struct(
-                    F.col("area2"), (-F.col("day")).alias("negd"),
-                    F.col("day"), F.col("cnt"),
-                )
-            ).alias("top")
+            best_struct(scored, [("area2", "desc"), ("day", "asc")], ["cnt"])
+            .alias("top")
         )
         .select("event_type", "bucket",
                 F.col("top.day").alias("day"), F.col("top.cnt").alias("cnt"))

@@ -41,6 +41,11 @@ from pulsar_ingestion_spark.streaming.sketches import (
 )
 
 
+# Cap on the threads overlapping one batch's 1 + 2·|cols| jobs: a wide
+# profile would otherwise start one driver thread per job.
+_MAX_THREADS = 8
+
+
 class ProfileStreamMaintainer:
     """foreachBatch target maintaining a per-column profile (row count,
     null count, HLL distinct estimate, MG modal-candidate set) over
@@ -69,7 +74,8 @@ class ProfileStreamMaintainer:
         # own driver state, from exactly one thread.
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=1 + 2 * len(self.cols)) as pool:
+        n = min(_MAX_THREADS, 1 + 2 * len(self.cols))
+        with ThreadPoolExecutor(max_workers=n) as pool:
             fcounts = pool.submit(
                 lambda: strs.agg(
                     F.count(F.lit(1)).alias("_n"),

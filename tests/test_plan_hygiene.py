@@ -76,6 +76,23 @@ def _n_unpartitioned_windows(plan: str) -> int:
     return n
 
 
+def _struct_extreme_fields(plan: str):
+    """Yield the field VALUES of every ``max``/``min`` (or partial) of a
+    struct in a formatted plan — rendered ``struct(name1, value1, ...)``."""
+    import re
+
+    for m in re.finditer(r"\b(?:partial_)?(?:max|min)\(struct\(", plan):
+        start = m.end()
+        depth, i = 1, start
+        while depth and i < len(plan):
+            if plan[i] in "([":
+                depth += 1
+            elif plan[i] in ")]":
+                depth -= 1
+            i += 1
+        yield _split_top(plan[start : i - 1])[1::2]
+
+
 def _all_plans(spark):
     out = {}
     for name, fn in entrymod.queries().items():
@@ -127,3 +144,20 @@ def test_no_single_partition_exchange_on_data_paths(plans):
         n for n, p in plans.items() if p.count("Exchange SinglePartition") > 2
     ]
     assert not offenders, offenders
+
+
+def test_struct_extremes_negate_only_behind_a_null_flag(plans):
+    """A keep-best ``max``/``min`` of a struct that flips a tie-break by
+    a bare ``-x`` overflows on the type's minimum under ANSI and lets a
+    NULL tie-break lose where the window's NULLS FIRST would pick it.
+    Mixed-direction keep-best goes through ``operators.ranking.
+    best_struct``, which negates only decimals and floats, and only
+    after the column's ``isnull`` flag; any other negated field is a
+    hand-written encoding."""
+    offenders = set()
+    for name, plan in plans.items():
+        for values in _struct_extreme_fields(plan):
+            for j, v in enumerate(values):
+                if v.startswith("-") and f"isnull({v[1:]})" not in values[:j]:
+                    offenders.add(name)
+    assert not offenders, sorted(offenders)

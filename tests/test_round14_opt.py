@@ -66,6 +66,11 @@ def test_ranking_boundaries_are_frozen_literals(spark):
         ("corpus_curate", True),
         # corpus_assemble keeps its genuine pack-sequence cumsum window
         ("corpus_assemble", False),
+        ("agg_mode", True),
+        ("dedup_keep_best", True),
+        # the co-occurrence edges keep their dense_rank cap window
+        ("graph_label_propagation", False),
+        ("graph_modularity", False),
     ],
 )
 def test_latest_wins_is_a_hash_aggregate(spark, name, window_free):
