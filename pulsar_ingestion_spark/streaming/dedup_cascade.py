@@ -60,7 +60,7 @@ def _features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     the exact md5 values of the batch cascade (queries_llm) so the
     streaming path's decisions are comparable term for term.
 
-    Round 14 (stream_bench finding): the signatures were the naive
+    Round 14 (maintainer timing finding): the signatures were the naive
     ``array_min(transform(w, md5))`` form — every hash through Spark's
     INTERPRETED higher-order-function evaluator, the exact shape the
     batch path rejected in round 8 (operators.dedup.minhash_signatures

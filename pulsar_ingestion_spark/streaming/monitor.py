@@ -196,25 +196,36 @@ def rate_monitor(
     ``silent`` hold for the entire outage.  Keys silent for
     ``evict_after`` consecutive batches (default ``4 * window``) are
     evicted with a final ``evicted`` record — dead keys no longer grow
-    driver state forever; a re-appearing key re-warms like a new one."""
+    driver state forever; a re-appearing key re-warms like a new one.
+
+    A re-delivered batch id is skipped: appending its counts again
+    would warm the trail early and skew ``trail_avg``."""
     from collections import deque
 
     if evict_after is None:
         evict_after = 4 * window
     trails: dict = {}
     silent_for: dict = {}
+    last_batch = -1
 
     def check(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal trails, silent_for, last_batch
+        if batch_id <= last_batch:
+            return  # replay: its alerts are written and its counts trailed
         counts = {
             r["k"]: r["cnt"]
             for r in batch_df.groupBy(F.col(key_col).alias("k"))
             .agg(F.count(F.lit(1)).alias("cnt"))
             .collect()
         }
+        # update copies and commit them with the batch id only after the
+        # alert write: a failed batch retried under its id starts clean
+        new_trails = {k: deque(t, maxlen=window) for k, t in trails.items()}
+        new_silent = dict(silent_for)
         recs = []
         for key in sorted(set(trails) | set(counts), key=str):
             cnt = counts.get(key, 0)
-            trail = trails.setdefault(key, deque(maxlen=window))
+            trail = new_trails.setdefault(key, deque(maxlen=window))
             rec: dict = {"batch_id": int(batch_id), "key": key, "n": cnt}
             if len(trail) >= min_trail:
                 avg = sum(trail) / len(trail)
@@ -227,17 +238,18 @@ def rate_monitor(
                 rec["burst"] = rec["silent"] = rec["alert"] = False
             if cnt > 0:
                 trail.append(cnt)
-                silent_for[key] = 0
+                new_silent[key] = 0
             else:
-                silent_for[key] = silent_for.get(key, 0) + 1
-                if silent_for[key] >= evict_after:
+                new_silent[key] = new_silent.get(key, 0) + 1
+                if new_silent[key] >= evict_after:
                     rec["evicted"] = True
-                    del trails[key]
-                    del silent_for[key]
+                    del new_trails[key]
+                    del new_silent[key]
             recs.append(rec)
         with open(alert_log, "a") as fh:
             for rec in recs:
                 fh.write(json.dumps(rec) + "\n")
+        trails, silent_for, last_batch = new_trails, new_silent, batch_id
 
     return check
 

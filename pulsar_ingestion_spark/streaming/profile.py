@@ -65,7 +65,7 @@ class ProfileStreamMaintainer:
         strs = batch_df.select(
             *[F.col(c).cast("string").alias(c) for c in self.cols]
         )
-        # Round 14 (stream_bench finding): the 1 + 2·|cols| per-batch
+        # Round 14 (maintainer timing finding): the 1 + 2·|cols| per-batch
         # aggregates ran SEQUENTIALLY — seven sub-second jobs whose fixed
         # scheduling/codegen overheads summed to ~1.7 s per micro-batch.
         # They are independent reads of the same batch, so they overlap

@@ -77,22 +77,26 @@ class WeightedSampleMaintainer:
             .filter(F.col("_rn") <= self.k)
             .collect()
         )
+        # merge into a copy and commit it only once the guard passes: a
+        # raise leaves the sample untouched
+        state = {grp: list(cur) for grp, cur in self._state.items()}
         for r in rows:
             cand = (r["_pri"], r[i], r[v])
-            cur = self._state.setdefault(r[g], [])
+            cur = state.setdefault(r[g], [])
             if any(c[1] == cand[1] for c in cur):
                 continue  # replayed row — identical priority, no-op
             cur.append(cand)
             cur.sort()
             del cur[self.k:]
-        if len(self._state) > self.max_groups:
+        if len(state) > self.max_groups:
             raise ValueError(
-                f"WeightedSampleMaintainer: {len(self._state)} groups "
+                f"WeightedSampleMaintainer: {len(state)} groups "
                 f"exceeds max_groups={self.max_groups} — the driver-held "
                 "sample requires bounded group cardinality (few-key "
                 "discipline); aggregate or hash-bucket the group column "
                 "upstream"
             )
+        self._state = state
 
     def sample(self) -> list[tuple]:
         """The current sample as sorted (group, rank, id, weight) rows —

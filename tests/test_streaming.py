@@ -835,6 +835,40 @@ def test_streaming_rate_monitor_trailing_window_bounded(spark, tmp_path):
     assert recs[6]["trail_avg"] == 40
 
 
+def test_streaming_rate_monitor_skips_replayed_batch(spark, tmp_path):
+    """A re-delivered batch id writes no second alert record and does not
+    enter the trail twice: the alert log and the next batch's trail_avg
+    equal a single delivery's.  A batch whose alert write fails is
+    retried under its id from the state before it."""
+    import pytest as _pytest
+
+    from pulsar_ingestion_spark.streaming.monitor import (
+        rate_monitor,
+        read_alerts,
+    )
+
+    def batch(n):
+        return spark.createDataFrame([("a",)] * n, "k string")
+
+    def feed(log, ids, check=None):
+        check = check or rate_monitor("k", log, ratio=1.5, window=3, min_trail=2)
+        for bid in ids:
+            check(batch(10 * (bid + 1)), bid)
+        return read_alerts(log)
+
+    once = feed(str(tmp_path / "once.jsonl"), [0, 1, 2])
+    twice = feed(str(tmp_path / "twice.jsonl"), [0, 0, 1, 2])
+    assert twice == once
+    assert [r["trail_avg"] for r in once] == [None, None, 15]
+
+    log = tmp_path / "later" / "retry.jsonl"  # its directory does not exist yet
+    check = rate_monitor("k", str(log), ratio=1.5, window=3, min_trail=2)
+    with _pytest.raises(OSError):
+        check(batch(10), 0)
+    log.parent.mkdir()
+    assert feed(str(log), [0, 1, 2], check) == once
+
+
 def test_streaming_rate_monitor_via_real_stream(spark, tmp_path):
     """The rate monitor driven through an actual readStream →
     foreachBatch loop (file source, availableNow): per-key counts come

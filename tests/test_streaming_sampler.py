@@ -64,16 +64,30 @@ def test_stream_sample_replay_idempotent(spark, tmp_path):
 
 
 def test_stream_sample_group_guard_fires(spark):
+    """The max_groups guard fires, and it is checked against a merged
+    COPY: the raise leaves the sample as it was, so a retry of the same
+    id (here with the groups bucketed upstream) is merged in full."""
     from pulsar_ingestion_spark.streaming.sampler import (
         WeightedSampleMaintainer,
     )
 
+    def rows(pairs):
+        return spark.createDataFrame(pairs, "g int, i int, w double")
+
+    first = rows([(0, 1, 1.0), (1, 2, 1.0)])
     m = WeightedSampleMaintainer("g", "i", "w", k=1, max_groups=3)
-    df = spark.createDataFrame(
-        [(g, g * 10, 1.0) for g in range(8)], "g int, i int, w double"
-    )
+    m(first, 0)
+    before = m.sample()
     with pytest.raises(ValueError, match="max_groups"):
-        m(df, 0)
+        m(rows([(g, g * 10, 1.0) for g in range(8)]), 1)
+    assert m.sample() == before
+    bucketed = rows([(g % 3, g * 10, 1.0) for g in range(8)])
+    m(bucketed, 1)  # retry, bucketed
+    ref = WeightedSampleMaintainer("g", "i", "w", k=1, max_groups=3)
+    ref(first, 0)
+    ref(bucketed, 1)
+    assert m.sample() == ref.sample()
+    assert {row[0] for row in m.sample()} == {0, 1, 2}
 
 
 def test_negative_and_null_weights_excluded(spark):

@@ -7,7 +7,7 @@ The maintainers are foreachBatch closures that end in an action
 (collect / versioned-table commit), so the plan is captured by
 INTERCEPTING that action: the recorded plan is exactly the DataFrame
 the maintainer executed, not a reconstruction.  Batches are the same
-deterministic ``pmod(xxhash64(id), N)`` cuts as tools/stream_bench.py;
+deterministic ``pmod(xxhash64(id, seed), N)`` cuts as tools/qtime.py;
 the captured batch is a STEADY-STATE one (state populated by the prior
 batches) so the state-side joins appear in the plan.  The ann read
 path (ann_search) returns a DataFrame and is explained directly.
@@ -31,7 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql.classic.dataframe import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from tools.stream_bench import cuts  # noqa: E402
+from perfbench.maintainers import hash_cuts  # noqa: E402
 
 N_BATCHES = 4  # capture at batch N-1: state holds 3 prior batches
 
@@ -105,10 +105,10 @@ def main() -> None:
 
         ev, docs, emb = tabs["events"], tabs["documents"], tabs["embeddings"]
         li = tabs["lineitem"].withColumn("_id", F.monotonically_increasing_id())
-        ev_cuts = cuts(ev, "user_id", N_BATCHES)
-        doc_cuts = cuts(docs, "doc_id", N_BATCHES)
-        emb_cuts = cuts(emb, "vec_id", N_BATCHES)
-        li_cuts = cuts(li, "_id", N_BATCHES)
+        ev_cuts = hash_cuts(ev, "user_id", N_BATCHES, seed=0)
+        doc_cuts = hash_cuts(docs, "doc_id", N_BATCHES, seed=0)
+        emb_cuts = hash_cuts(emb, "vec_id", N_BATCHES, seed=0)
+        li_cuts = hash_cuts(li, "_id", N_BATCHES, seed=0)
 
         from pulsar_ingestion_spark.streaming.ann_index import ann_search, stream_ann_index
         from pulsar_ingestion_spark.streaming.dedup_cascade import stream_dedup_cascade
