@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.functions.text import doc_fingerprint, shingles, words
+from pulsar_ingestion_spark.operators.sketch import md5_lane
 
 
 # Persisted intermediates created by the operators below (signature /
@@ -348,12 +349,7 @@ ENSEMBLE_BUCKET_CAP = 24
 def _ecap_order(id_col):
     """Deterministic pseudorandom cap order: the portable md5 bigint lane
     of the doc id (mirrored verbatim in the DuckDB oracle)."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("ecap:"), id_col.cast("string"))), 1, 8),
-            16, 10,
-        ).cast("bigint")
-    )
+    return md5_lane(id_col, "ecap:")
 
 
 def _size_class(sz_col):
@@ -501,8 +497,8 @@ def minhash_signatures(
     if hash == "km_md5":
         # Portable Kirsch-Mitzenmacher (VERDICT r10 item 1b): k minhash
         # functions from TWO md5-derived lanes — g_i(x) = h1(x) + i·h2(x),
-        # where h1/h2 are the first-8-hex-chars-of-md5 bigint lanes (the
-        # repo's canonical portable hash) masked to 27 bits so every
+        # where h1/h2 are `md5_lane`s (the repo's canonical portable
+        # hash, operators/sketch.py) masked to 27 bits so every
         # derived value stays < 2^31 and a band fold of two signatures
         # (`sig<<31 | sig`) stays < 2^62 — no overflow in either engine.
         # Cost: 2 md5 per shingle instead of k (4× less digest CPU than
@@ -512,14 +508,7 @@ def minhash_signatures(
         mask = (1 << 27) - 1
 
         def _lane(seed: str):
-            return (
-                F.conv(
-                    F.substring(F.md5(F.concat(F.lit(f"{seed}:"), F.col("g"))), 1, 8),
-                    16, 10,
-                )
-                .cast("bigint")
-                .bitwiseAND(F.lit(mask))
-            )
+            return md5_lane(F.col("g"), f"{seed}:").bitwiseAND(F.lit(mask))
 
         keyed = exploded.select("doc_id", _lane("km1").alias("h1"), _lane("km2").alias("h2"))
         sigs_flat = keyed.groupBy("doc_id").agg(

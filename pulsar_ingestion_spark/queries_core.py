@@ -11,6 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.operators.sketch import (
+    _HLL_ALPHA,
+    _HLL_M,
+    _HLL_WBITS,
+    _RHO_CASE,
+    hll_registers,
+    hll_summary,
+)
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import load_tables
 
@@ -394,17 +402,13 @@ def agg_count_distinct(spark, sf_dir):
 
 
 def _approx_cd_oracle() -> str:
-    from pulsar_ingestion_spark.queries_sketch import (
-        _HLL_ALPHA, _HLL_M, _HLL_WBITS, _RHO_CASE,
-    )
-
     full = f"(CAST(2 AS BIGINT) ** {_HLL_WBITS + 1})"
     return f"""
 WITH h AS (
   SELECT l_returnflag,
          CAST(('0x' || substring(md5('hll:' || CAST(l_suppkey AS VARCHAR)), 1, 8))
               AS BIGINT) AS hv
-  FROM lineitem
+  FROM lineitem WHERE l_suppkey IS NOT NULL
 ), parts AS (
   SELECT l_returnflag, hv % {_HLL_M} AS bucket, hv // {_HLL_M} AS w FROM h
 ), regs AS (
@@ -446,51 +450,19 @@ def agg_approx_count_distinct(spark, sf_dir):
     # register maxes merge map-side, per-task state = 64 registers per
     # group) AND a DuckDB oracle that reconstructs the identical sketch
     # and estimate.  Integer-exact register/harmonic-sum math (comparison
-    # ladder for rho, scaled-integer sum — see q_sketch_hll_portable);
+    # ladder for rho, scaled-integer sum — see operators.sketch);
     # the only float step is the final alpha·m²/sum estimate, rounded to
     # 4.  exact_distinct rides along as the error reference.
-    from pulsar_ingestion_spark.queries_sketch import (
-        _HLL_ALPHA, _HLL_M, _HLL_WBITS, _RHO_CASE,
-    )
-
     (li,) = _t(spark, sf_dir, "lineitem")
-    h = li.select(
-        "l_returnflag",
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("hll:"), F.col("l_suppkey").cast("string"))), 1, 8),
-            16, 10,
-        ).cast("bigint").alias("hv"),
-    )
-    parts = h.select(
-        "l_returnflag",
-        (F.col("hv") % _HLL_M).alias("bucket"),
-        F.expr(f"hv div {_HLL_M}").alias("w"),
-    )
-    regs = parts.groupBy("l_returnflag", "bucket").agg(
-        F.expr(f"max({_RHO_CASE})").alias("register")
-    )
-    two = F.lit(2).cast("bigint")
-    s = regs.groupBy("l_returnflag").agg(
-        F.count("*").alias("used"),
-        F.sum(F.pow(two, F.lit(_HLL_WBITS + 1) - F.col("register")).cast("bigint"))
-        .cast("bigint").alias("sum_scaled"),
-    )
-    full_scale = int(2 ** (_HLL_WBITS + 1))
-    sum_full = (
-        F.col("sum_scaled") + (_HLL_M - F.col("used")) * F.lit(full_scale)
-    ).cast("bigint")
-    raw_est = F.lit(_HLL_ALPHA * _HLL_M * _HLL_M * float(full_scale)) / sum_full.cast("double")
-    zeros = F.lit(_HLL_M) - F.col("used")
-    linear = F.lit(float(_HLL_M)) * F.log(F.lit(float(_HLL_M)) / zeros.cast("double"))
-    corrected = F.when((raw_est <= 2.5 * _HLL_M) & (zeros > 0), linear).otherwise(raw_est)
     exact = li.groupBy("l_returnflag").agg(
         F.countDistinct("l_suppkey").alias("exact_distinct")
     )
-    return s.join(F.broadcast(exact), "l_returnflag").select(
+    est = hll_summary(hll_registers(li, "l_suppkey", ("l_returnflag",)), ("l_returnflag",))
+    return est.join(F.broadcast(exact), "l_returnflag").select(
         "l_returnflag",
-        F.col("used").cast("bigint").alias("buckets_used"),
-        sum_full.alias("sum_scaled_full"),
-        F.round(corrected, 4).alias("approx_supp_cnt"),
+        "buckets_used",
+        "sum_scaled_full",
+        F.col("hll_estimate").alias("approx_supp_cnt"),
         "exact_distinct",
     )
 

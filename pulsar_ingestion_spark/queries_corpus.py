@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.functions.text import token_count
 from pulsar_ingestion_spark.operators.ranking import best_struct
+from pulsar_ingestion_spark.operators.sketch import md5_lane
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import load_tables
 
@@ -48,10 +49,7 @@ def q_corpus_split_train(spark, sf_dir):
     # Plan: narrow projection, no shuffle — at 100 TB this is a pure
     # map over the scan.
     docs = load_tables(spark, sf_dir)["documents"]  # no fan_out (r13)
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("bigint")
-        % 100
-    )
+    bucket = md5_lane(F.col("doc_id")) % 100
     return docs.select(
         "doc_id",
         "lang",
@@ -242,10 +240,7 @@ def q_corpus_assemble(spark, sf_dir):
             F.col("top.tokens").alias("tokens"),
         )
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("bigint")
-        % 100
-    )
+    bucket = md5_lane(F.col("doc_id")) % 100
     split = canon.withColumn(
         "split",
         F.when(bucket < 80, "train").when(bucket < 90, "validation").otherwise("test"),
@@ -375,10 +370,7 @@ def q_corpus_shard_assign(spark, sf_dir):
     The same expression is the DataFrameWriter's partitionBy column in
     the write path; here it feeds one partial-agg shuffle."""
     docs = load_tables(spark, sf_dir)["documents"]  # no fan_out (r13)
-    shard = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("shard:"), F.col("doc_id").cast("string"))), 1, 8), 16, 10)
-        .cast("bigint") % _N_SHARDS
-    )
+    shard = md5_lane(F.col("doc_id"), "shard:") % _N_SHARDS
     return (
         docs.select("doc_id", token_count(F.col("text")).alias("toks"), shard.alias("shard"))
         .groupBy("shard")

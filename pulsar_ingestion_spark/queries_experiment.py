@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.operators.sketch import md5_lane
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import fan_out, load_tables
 
@@ -33,14 +34,7 @@ _ASSIGN_SQL = (
 
 
 def _assign_col():
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("exp1:"), F.col("user_id").cast("string"))), 1, 8
-            ),
-            16, 10,
-        ).cast("bigint") % 2
-    )
+    return md5_lane(F.col("user_id"), "exp1:") % 2
 
 
 _AB_LIFT_ORACLE = f"""

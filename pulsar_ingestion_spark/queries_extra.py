@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.functions.text import STOPWORDS
 from pulsar_ingestion_spark.operators.legacy import translate_legacy
+from pulsar_ingestion_spark.operators.sketch import md5_lane
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import fan_out, load_tables
 
@@ -399,7 +400,7 @@ def sample_deterministic(spark, sf_dir):
     # Content-hash sampling — the reproducible, engine-portable way to
     # sample a training corpus (df.sample() depends on partition layout).
     ev = load_tables(spark, sf_dir)["events"]
-    bucket = F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10).cast("bigint")
+    bucket = md5_lane(F.col("event_id"))
     return ev.filter(bucket % 20 == 0).select("event_id", "user_id", "event_type")
 
 

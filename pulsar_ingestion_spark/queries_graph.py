@@ -40,6 +40,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.operators.ranking import best_struct
+from pulsar_ingestion_spark.operators.sketch import md5_lane
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import fan_out, load_tables
 
@@ -237,11 +238,7 @@ def _cooc_edges(ev):
         F.expr(f"unix_micros(ts) div {_COOC_BUCKET_SECONDS * 1_000_000}").alias("hr"),
         "user_id",
     )
-    wcap = Window.partitionBy("event_type", "hr").orderBy(
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-        .cast("bigint"),
-        "user_id",
-    )
+    wcap = Window.partitionBy("event_type", "hr").orderBy(md5_lane(F.col("user_id")), "user_id")
     buck = (
         buck0.withColumn("rn", F.dense_rank().over(wcap))
         .filter(F.col("rn") <= _COOC_CAP)
@@ -913,11 +910,7 @@ def jaccard_linkpred(edges, cap: int, topk: int, prescore: int = 4096,
         .repartition("node")
         .persist()
     )
-    wcap = Window.partitionBy("node").orderBy(
-        F.conv(F.substring(F.md5(F.col("nbr").cast("string")), 1, 8), 16, 10)
-        .cast("bigint"),
-        F.asc("nbr"),
-    )
+    wcap = Window.partitionBy("node").orderBy(md5_lane(F.col("nbr")), F.asc("nbr"))
     capped = (
         bidir.withColumn("rn", F.row_number().over(wcap))
         .filter(F.col("rn") <= cap)

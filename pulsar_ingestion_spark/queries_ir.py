@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.operators.sketch import md5_lane
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import fan_out, load_tables
 
@@ -822,10 +823,7 @@ def q_text_hashed_features(spark, sf_dir):
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok")
     )
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("freq"))
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("bigint")
-        % _FH_BUCKETS
-    )
+    bucket = md5_lane(F.col("tok")) % _FH_BUCKETS
     return vocab.select(bucket.alias("bucket"), "freq").groupBy("bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_features"),
         F.sum("freq").cast("bigint").alias("total_count"),

@@ -18,20 +18,20 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.operators.sketch import (
+    _CMS_DEPTH,
+    _CMS_WIDTH,
+    _HLL_ALPHA,
+    _HLL_M,
+    _HLL_WBITS,
+    _RHO_CASE,
+    cms_bucket,
+    hll_registers,
+    hll_summary,
+    md5_lane,
+)
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import load_tables
-
-_CMS_DEPTH = 4
-_CMS_WIDTH = 256
-
-
-def _cms_bucket_spark(depth: int, key):
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"cms{depth}:"), key)), 1, 8), 16, 10
-        ).cast("bigint")
-        % _CMS_WIDTH
-    )
 
 
 def _cms_bucket_sql(depth: str, key: str) -> str:
@@ -75,31 +75,15 @@ def q_sketch_countmin(spark, sf_dir):
     counter table (sketch-sized, broadcast)."""
     (ev,) = (load_tables(spark, sf_dir)[n] for n in ("events",))
     depths = F.array([F.lit(i) for i in range(_CMS_DEPTH)])
+    bucket = cms_bucket(F.col("depth"), F.col("event_type")).alias("bucket")
     rows_h = ev.select(
         F.explode(depths).alias("depth"), F.col("event_type")
-    ).select(
-        "depth",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("cms"), F.col("depth").cast("string"),
-                               F.lit(":"), F.col("event_type"))), 1, 8
-            ), 16, 10,
-        ).cast("bigint").__mod__(_CMS_WIDTH).alias("bucket"),
-    )
+    ).select("depth", bucket)
     counters = rows_h.groupBy("depth", "bucket").agg(F.count("*").alias("cnt"))
     keys = ev.select("event_type").distinct()
     kb = keys.select(
         "event_type", F.explode(depths).alias("depth")
-    ).select(
-        "event_type",
-        "depth",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("cms"), F.col("depth").cast("string"),
-                               F.lit(":"), F.col("event_type"))), 1, 8
-            ), 16, 10,
-        ).cast("bigint").__mod__(_CMS_WIDTH).alias("bucket"),
-    )
+    ).select("event_type", "depth", bucket)
     est = (
         kb.join(F.broadcast(counters), ["depth", "bucket"])
         .groupBy("event_type")
@@ -148,12 +132,8 @@ def q_sketch_bloom_build(spark, sf_dir):
         ev.select(F.col("user_id").cast("string").alias("k"))
         .select("k", F.explode(hashes).alias("i"))
         .select(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("bf"), F.col("i").cast("string"),
-                                   F.lit(":"), F.col("k"))), 1, 8
-                ), 16, 10,
-            ).cast("bigint").__mod__(_BLOOM_BITS).alias("pos")
+            (md5_lane(F.concat(F.col("i").cast("string"), F.lit(":"), F.col("k")), "bf")
+             % _BLOOM_BITS).alias("pos")
         )
         .distinct()
     )
@@ -170,22 +150,10 @@ def q_sketch_bloom_build(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Portable HyperLogLog + bloom-pruned semi-join
 
-_HLL_M = 64          # registers
-_HLL_WBITS = 26      # hash bits left after the bucket index (32 - log2(64))
-
-# rho = leading-zero count of the 26-bit suffix + 1 (0 suffix -> 27),
-# expressed as a pure comparison ladder — log2() is NOT exact at powers
-# of two in either engine, so no floating log anywhere.
-_RHO_CASE = "CASE " + " ".join(
-    f"WHEN w >= {1 << (_HLL_WBITS - i)} THEN {i}" for i in range(1, _HLL_WBITS + 1)
-) + f" ELSE {_HLL_WBITS + 1} END"
-
-_HLL_ALPHA = 0.7213 / (1 + 1.079 / _HLL_M)
-
 _HLL_ORACLE = f"""
 WITH h AS (
   SELECT CAST(('0x' || substring(md5('hll:' || CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT) AS hv
-  FROM events
+  FROM events WHERE user_id IS NOT NULL
 ), parts AS (
   SELECT hv % {_HLL_M} AS bucket, hv // {_HLL_M} AS w FROM h
 ), regs AS (
@@ -193,7 +161,8 @@ WITH h AS (
   FROM parts GROUP BY bucket
 ), s AS (
   SELECT count(*) AS used,
-         CAST(SUM(CAST(2 AS BIGINT) ** ({_HLL_WBITS + 1} - register)) AS BIGINT) AS sum_scaled
+         CAST(coalesce(SUM(CAST(2 AS BIGINT) ** ({_HLL_WBITS + 1} - register)), 0) AS BIGINT)
+           AS sum_scaled
   FROM regs
 )
 SELECT {_HLL_M} AS m, CAST(used AS BIGINT) AS buckets_used,
@@ -216,8 +185,9 @@ FROM (
 def q_sketch_hll_portable(spark, sf_dir):
     """Engine-portable HyperLogLog (m=64) over the user set —
     approx_count_distinct's HLL state is engine-internal bytes
-    (rows-only checkable); this one derives registers from md5 so the
-    DuckDB oracle reconstructs the identical sketch and estimate.
+    (rows-only checkable); this one derives registers from md5
+    (`operators.sketch.hll_registers` / `hll_summary`) so the DuckDB
+    oracle reconstructs the identical sketch and estimate.
     rho comes from a comparison ladder, NOT floating log2 (log2(2^k)
     lands below k in libm and floors wrong), and the harmonic sum is
     kept in scaled INTEGER arithmetic (sum of 2^(27-rho)) so no
@@ -228,35 +198,9 @@ def q_sketch_hll_portable(spark, sf_dir):
     One shuffle; per-task state ≤ 64 registers; day-partition sketches
     merge by register max."""
     (ev,) = (load_tables(spark, sf_dir)[n] for n in ("events",))
-    h = ev.select(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("hll:"), F.col("user_id").cast("string"))), 1, 8),
-            16, 10,
-        ).cast("bigint").alias("hv")
-    )
-    parts = h.select(
-        (F.col("hv") % _HLL_M).alias("bucket"),
-        F.expr(f"hv div {_HLL_M}").alias("w"),
-    )
-    regs = parts.groupBy("bucket").agg(F.expr(f"max({_RHO_CASE})").alias("register"))
-    two = F.lit(2).cast("bigint")
-    s = regs.agg(
-        F.count("*").alias("used"),
-        F.sum(F.pow(two, F.lit(_HLL_WBITS + 1) - F.col("register")).cast("bigint"))
-        .cast("bigint").alias("sum_scaled"),
-    )
-    full_scale = float(2 ** (_HLL_WBITS + 1))
-    sum_full = (F.col("sum_scaled") + (_HLL_M - F.col("used")) * F.lit(int(full_scale))).cast("bigint")
-    raw_est = F.lit(_HLL_ALPHA * _HLL_M * _HLL_M * full_scale) / sum_full.cast("double")
-    zeros = F.lit(_HLL_M) - F.col("used")
-    linear = F.lit(float(_HLL_M)) * F.log(F.lit(float(_HLL_M)) / zeros.cast("double"))
-    corrected = F.when((raw_est <= 2.5 * _HLL_M) & (zeros > 0), linear).otherwise(raw_est)
     exact = ev.agg(F.countDistinct("user_id").alias("exact_distinct"))
-    return s.crossJoin(F.broadcast(exact)).select(
-        F.lit(_HLL_M).alias("m"),
-        F.col("used").cast("bigint").alias("buckets_used"),
-        sum_full.alias("sum_scaled_full"),
-        F.round(corrected, 4).alias("hll_estimate"),
+    return hll_summary(hll_registers(ev, "user_id")).crossJoin(F.broadcast(exact)).select(
+        F.lit(_HLL_M).alias("m"), "buckets_used", "sum_scaled_full", "hll_estimate",
         "exact_distinct",
     )
 
@@ -337,7 +281,7 @@ _HLL_MERGE_SCOPES_SQL = f"""
 WITH h AS (
   SELECT event_type,
          CAST(('0x' || substring(md5('hll:' || CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT) AS hv
-  FROM events
+  FROM events WHERE user_id IS NOT NULL
 ), parts AS (
   SELECT event_type, hv % {_HLL_M} AS bucket, hv // {_HLL_M} AS w FROM h
 ), regs_g AS (
@@ -382,44 +326,14 @@ def q_sketch_hll_merge(spark, sf_dir):
     harmonic sum as sketch_hll_portable; linear-counting small-range
     correction applied per scope."""
     (ev,) = (load_tables(spark, sf_dir)[n] for n in ("events",))
-    h = ev.select(
-        "event_type",
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("hll:"), F.col("user_id").cast("string"))), 1, 8),
-            16, 10,
-        ).cast("bigint").alias("hv"),
-    )
-    parts = h.select(
-        "event_type",
-        (F.col("hv") % _HLL_M).alias("bucket"),
-        F.expr(f"hv div {_HLL_M}").alias("w"),
-    )
-    regs_g = parts.groupBy("event_type", "bucket").agg(
-        F.expr(f"max({_RHO_CASE})").alias("register")
-    )
+    regs_g = hll_registers(ev, "user_id", ("event_type",))
     merged = regs_g.groupBy("bucket").agg(F.max("register").alias("register")).select(
         F.lit("MERGED").alias("scope"), "bucket", "register"
     )
     regs_all = regs_g.select(
         F.col("event_type").alias("scope"), "bucket", "register"
     ).unionByName(merged)
-    two = F.lit(2).cast("bigint")
-    s = regs_all.groupBy("scope").agg(
-        F.count("*").cast("bigint").alias("buckets_used"),
-        F.sum(F.pow(two, F.lit(_HLL_WBITS + 1) - F.col("register")).cast("bigint"))
-        .cast("bigint").alias("sum_scaled"),
-    )
-    full_scale = int(2 ** (_HLL_WBITS + 1))
-    sum_full = (
-        F.col("sum_scaled") + (_HLL_M - F.col("buckets_used")) * F.lit(full_scale)
-    ).cast("bigint")
-    raw_est = F.lit(_HLL_ALPHA * _HLL_M * _HLL_M * float(full_scale)) / sum_full.cast("double")
-    zeros = F.lit(_HLL_M) - F.col("buckets_used")
-    linear = F.lit(float(_HLL_M)) * F.log(F.lit(float(_HLL_M)) / zeros.cast("double"))
-    corrected = F.when((raw_est <= 2.5 * _HLL_M) & (zeros > 0), linear).otherwise(raw_est)
-    return s.select(
-        "scope", "buckets_used", F.round(corrected, 4).alias("hll_estimate")
-    )
+    return hll_summary(regs_all, ("scope",)).select("scope", "buckets_used", "hll_estimate")
 
 
 _RESERVOIR_K = 5
@@ -453,10 +367,7 @@ def q_sample_reservoir_hash(spark, sf_dir):
     (ev,) = (load_tables(spark, sf_dir)[n] for n in ("events",))
     hashed = ev.select(
         "event_type", "event_id",
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("rs:"), F.col("event_id").cast("string"))), 1, 8),
-            16, 10,
-        ).cast("bigint").alias("hv"),
+        md5_lane(F.col("event_id"), "rs:").alias("hv"),
     )
     w = Window.partitionBy("event_type").orderBy("hv", "event_id")
     return (
@@ -531,14 +442,7 @@ def q_sketch_kmv_intersect(spark, sf_dir):
     def sketch(event_type: str):
         users = ev.filter(F.col("event_type") == event_type).select("user_id").distinct()
         return (
-            users.select(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit("kmv:"), F.col("user_id").cast("string"))), 1, 8
-                    ),
-                    16, 10,
-                ).cast("bigint").alias("hv")
-            )
+            users.select(md5_lane(F.col("user_id"), "kmv:").alias("hv"))
             .orderBy("hv")
             .limit(_KMV_K)
         )
@@ -698,12 +602,7 @@ def q_sample_weighted_kmv(spark, sf_dir):
     ev = load_tables(spark, sf_dir)["events"]
     pri = ev.filter(F.col("value") > 0).select(
         "event_type", "event_id", "value",
-        (
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit("ws:"), F.col("event_id").cast("string"))), 1, 8),
-                16, 10,
-            ).cast("bigint") / F.col("value")
-        ).alias("priority"),
+        (md5_lane(F.col("event_id"), "ws:") / F.col("value")).alias("priority"),
     )
     w = Window.partitionBy("event_type").orderBy("priority", "event_id")
     return (
@@ -765,15 +664,8 @@ def q_sketch_ams_f2(spark, sf_dir):
     li = load_tables(spark, sf_dir)["lineitem"]
     keys = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("cnt"))
     seeds = spark.range(_AMS_J).select(F.col("id").cast("int").alias("seed"))
-    sign = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ams"), F.col("seed"), F.lit(":"), F.col("l_partkey"))),
-                1, 8,
-            ), 16, 10
-        ).cast("bigint") % 2 == 0,
-        1,
-    ).otherwise(-1)
+    lane = md5_lane(F.concat(F.col("seed"), F.lit(":"), F.col("l_partkey")), "ams")
+    sign = F.when(lane % 2 == 0, 1).otherwise(-1)
     signed = (
         keys.crossJoin(F.broadcast(seeds))
         .groupBy("seed")

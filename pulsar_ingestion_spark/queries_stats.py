@@ -23,6 +23,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.operators.ranking import best_struct
+from pulsar_ingestion_spark.operators.sketch import md5_lane
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import fan_out, load_tables
 
@@ -290,14 +291,7 @@ def q_sample_stratified(spark, sf_dir):
     exact in expectation with no driver-side fraction map.  Pure narrow
     map — a filter fused into the scan at any scale."""
     docs = load_tables(spark, sf_dir)["documents"]  # no fan_out (r13)
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("strat:"), F.col("doc_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
+    bucket = md5_lane(F.col("doc_id"), "strat:") % 100
     return docs.select("doc_id", "lang", bucket.alias("bucket")).filter(F.col("bucket") < 20)
 
 
@@ -793,10 +787,7 @@ def q_text_js_divergence(spark, sf_dir):
     decimal-summed result.  Deterministic: per-token terms are rounded
     before the order-independent sum."""
     docs = load_tables(spark, sf_dir)["documents"]  # no fan_out (r13)
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("bigint")
-        % 100
-    )
+    bucket = md5_lane(F.col("doc_id")) % 100
     split = docs.select(
         F.when(bucket < 80, "train").otherwise("heldout").alias("split"), "text"
     )

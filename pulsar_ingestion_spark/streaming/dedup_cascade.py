@@ -189,8 +189,12 @@ def stream_dedup_cascade(
             *[f"b{b}" for b in range(_N_BANDS)],
             F.coalesce(~F.col("_rm"), F.lit(True)).alias("accepted"),
         )
-        commit(out, batch_id)
-        s1.unpersist()
+        try:
+            commit(out, batch_id)  # the batch's only action
+        finally:
+            # a failed batch is redelivered under the same id: its
+            # cached survivors must not outlive the attempt
+            s1.unpersist()
 
     return process
 

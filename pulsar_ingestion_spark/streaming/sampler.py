@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.operators.sketch import md5_lane
+
 # Priority definition shared with the batch twin (queries_sketch.py
 # sample_weighted_kmv): first 8 md5 hex chars of "ws:<id>" as an
 # integer, divided by the row weight — one IEEE division of exactly-
@@ -34,15 +36,7 @@ _PRIORITY_PREFIX = "ws:"
 
 
 def weighted_priority(id_col: str, weight_col: str):
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(_PRIORITY_PREFIX),
-                               F.col(id_col).cast("string"))), 1, 8
-            ),
-            16, 10,
-        ).cast("bigint") / F.col(weight_col)
-    )
+    return md5_lane(F.col(id_col), _PRIORITY_PREFIX) / F.col(weight_col)
 
 
 class WeightedSampleMaintainer:

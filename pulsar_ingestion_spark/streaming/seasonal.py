@@ -31,8 +31,7 @@ from decimal import Decimal
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pulsar_ingestion_spark.queries_sketch import _HLL_M, _RHO_CASE
-from pulsar_ingestion_spark.streaming.sketches import hll_estimate
+from pulsar_ingestion_spark.operators.sketch import hll_estimate, hll_registers
 
 _CELLS = 168  # 7 dows x 24 hours
 
@@ -83,25 +82,7 @@ class SeasonalGridMaintainer:
                 )
             self.last_batch = int(batch_id)
         # register MAX-merge — idempotent, safe to re-run on replay
-        hv = F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("hll:"), F.col("u").cast("string"))), 1, 8
-            ),
-            16, 10,
-        ).cast("bigint")
-        regs = (
-            cells.filter(F.col("u").isNotNull())
-            .select("dow", "hr", hv.alias("hv"))
-            .select(
-                "dow", "hr",
-                (F.col("hv") % _HLL_M).alias("bucket"),
-                F.expr(f"hv div {_HLL_M}").alias("w"),
-            )
-            .groupBy("dow", "hr", "bucket")
-            .agg(F.expr(f"max({_RHO_CASE})").alias("register"))
-            .collect()
-        )
-        for r in regs:
+        for r in hll_registers(cells, "u", ("dow", "hr")).collect():
             key = (int(r["dow"]), int(r["hr"]))
             cell = self.registers.setdefault(key, {})
             b = int(r["bucket"])

@@ -28,47 +28,32 @@ design point of this module (tests pin both):
   the candidate-generation half of the exact 2-pass heavy hitters in
   ``sketch_heavy_hitters``.
 
-Hash derivations are kept bit-identical to the batch queries
-(md5-prefix → bigint — `sketch_hll_portable`, `sketch_countmin`), so a
-stream-maintained sketch is comparable against the batch sketch of the
-same rows; the equivalence tests assert exact equality of estimates
-across arbitrary micro-batch cuts.
+Registers and buckets come from the same `operators.sketch` helpers as
+the batch queries (`hll_registers` for `sketch_hll_portable`,
+`cms_bucket` for `sketch_countmin`), so a stream-maintained sketch is
+comparable against the batch sketch of the same rows; the equivalence
+tests assert exact equality of estimates across arbitrary micro-batch
+cuts.
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pulsar_ingestion_spark.queries_sketch import (
+from pulsar_ingestion_spark.operators.sketch import (
     _CMS_DEPTH,
     _CMS_WIDTH,
-    _HLL_ALPHA,
-    _HLL_M,
-    _HLL_WBITS,
-    _RHO_CASE,
+    cms_bucket,
+    hll_estimate,
+    hll_registers,
+)
+from pulsar_ingestion_spark.queries_sketch import (
     _mg_partition_summaries,
     mg_merge_reduce,
 )
-
-
-def hll_estimate(registers: dict) -> float:
-    """Portable-HLL estimate from a bucket -> max-rho register dict —
-    the exact math of `sketch_hll_portable`, shared by every maintainer
-    that holds per-key register sets (profile columns, seasonal cells)."""
-    used = len(registers)
-    full_scale = 1 << (_HLL_WBITS + 1)
-    sum_full = sum(
-        full_scale >> reg for reg in registers.values()
-    ) + (_HLL_M - used) * full_scale
-    raw = _HLL_ALPHA * _HLL_M * _HLL_M * float(full_scale) / float(sum_full)
-    zeros = _HLL_M - used
-    if raw <= 2.5 * _HLL_M and zeros > 0:
-        raw = float(_HLL_M) * math.log(float(_HLL_M) / float(zeros))
-    return round(raw, 4)
 
 
 class HllStreamMaintainer:
@@ -88,26 +73,7 @@ class HllStreamMaintainer:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         # replay-safe WITHOUT dedup: register max-merge is idempotent
-        rows = (
-            batch_df.filter(F.col(self.col).isNotNull())
-            .select(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit("hll:"), F.col(self.col).cast("string"))),
-                        1, 8,
-                    ),
-                    16, 10,
-                ).cast("bigint").alias("hv")
-            )
-            .select(
-                (F.col("hv") % _HLL_M).alias("bucket"),
-                F.expr(f"hv div {_HLL_M}").alias("w"),
-            )
-            .groupBy("bucket")
-            .agg(F.expr(f"max({_RHO_CASE})").alias("register"))
-            .collect()
-        )
-        for r in rows:
+        for r in hll_registers(batch_df, self.col).collect():
             b = int(r["bucket"])
             if r["register"] > self.registers.get(b, 0):
                 self.registers[b] = int(r["register"])
@@ -147,7 +113,7 @@ class CmsStreamMaintainer:
         rows = (
             batch_df.filter(F.col(self.col).isNotNull())
             .select(F.explode(depths).alias("depth"), F.col(self.col).alias("k"))
-            .select("depth", self._bucket_col().alias("bucket"))
+            .select("depth", cms_bucket(F.col("depth"), F.col("k"), self.width).alias("bucket"))
             .groupBy("depth", "bucket")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .collect()
@@ -156,16 +122,6 @@ class CmsStreamMaintainer:
             cell = (int(r["depth"]), int(r["bucket"]))
             self.counters[cell] = self.counters.get(cell, 0) + int(r["cnt"])
         self.last_batch = int(batch_id)
-
-    def _bucket_col(self):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("cms"), F.col("depth").cast("string"),
-                                   F.lit(":"), F.col("k").cast("string"))), 1, 8
-                ), 16, 10,
-            ).cast("bigint") % self.width
-        )
 
     def estimate(self, key) -> int:
         """Point query: min over depths of the key's counter cells."""

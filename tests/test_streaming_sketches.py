@@ -6,17 +6,20 @@ and the replay semantics must match each sketch's merge algebra
 
 from __future__ import annotations
 
+import os
+
+import numpy as np
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _stream_events(spark, tmp_path, maintainer, cols, n_files):
+def _stream_events(spark, tmp_path, maintainer, cols, n_files, sf_dir=SF_DIR):
     """Drive `maintainer` through a real readStream over the sf0.001
     events table, re-laid-out as `n_files` parquet files with
     maxFilesPerTrigger=1 so each file is (roughly) one micro-batch."""
     src = str(tmp_path / f"src{n_files}")
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(*cols)
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(*cols)
     ev.repartition(n_files).write.parquet(src)
     q = (
         spark.readStream.schema(ev.schema)
@@ -30,17 +33,48 @@ def _stream_events(spark, tmp_path, maintainer, cols, n_files):
     q.awaitTermination(180)
 
 
+def _null_user_sf(root) -> str:
+    """The sf0.001 tables with every 7th ``events.user_id`` NULL (the
+    testdata has no NULL user at any scale factor)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    os.makedirs(root)
+    for name in os.listdir(SF_DIR):
+        if name != "events.parquet":
+            os.symlink(os.path.join(SF_DIR, name), os.path.join(root, name))
+    ev = pq.read_table(f"{SF_DIR}/events.parquet")
+    null = pa.array(np.arange(ev.num_rows) % 7 == 0)
+    uid = pc.if_else(null, pa.scalar(None, pa.int64()), ev["user_id"])
+    i = ev.schema.get_field_index("user_id")
+    pq.write_table(ev.set_column(i, "user_id", uid), os.path.join(root, "events.parquet"))
+    return str(root)
+
+
 def test_hll_stream_equals_batch_query_any_cut(spark, tmp_path):
+    """Also on NULL keys: the batch query and its oracle count only the
+    registers of non-NULL users, as the stream maintainer does."""
+    import duckdb
+
     from pulsar_ingestion_spark.streaming.sketches import HllStreamMaintainer
 
     import __spark_entry__ as e
 
-    batch = e.queries()["sketch_hll_portable"](spark, SF_DIR).first()
-    for n_files in (1, 4):
-        m = HllStreamMaintainer("user_id")
-        _stream_events(spark, tmp_path, m, ["user_id"], n_files)
-        assert m.estimate() == batch["hll_estimate"], n_files
-        assert len(m.registers) == batch["buckets_used"]
+    null_sf = _null_user_sf(str(tmp_path / "null_sf"))
+    for sf_dir in (SF_DIR, null_sf):
+        batch = e.queries()["sketch_hll_portable"](spark, sf_dir).first()
+        for n_files in (1, 4):
+            m = HllStreamMaintainer("user_id")
+            out = tmp_path / os.path.basename(sf_dir)
+            _stream_events(spark, out, m, ["user_id"], n_files, sf_dir)
+            assert m.estimate() == batch["hll_estimate"], (sf_dir, n_files)
+            assert len(m.registers) == batch["buckets_used"], (sf_dir, n_files)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{null_sf}/events.parquet')")
+    cur = con.execute(e.oracle_sql()["sketch_hll_portable"])
+    cols = [d[0] for d in cur.description]
+    assert dict(zip(cols, cur.fetchone())) == batch.asDict()
 
 
 def test_hll_replay_is_idempotent_by_algebra(spark, tmp_path):
