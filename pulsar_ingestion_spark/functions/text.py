@@ -2,7 +2,11 @@
 
 All pure built-ins (split/filter/aggregate/regexp) — vectorized JVM
 execution, no Python in the hot path.  At 100 TB these run as narrow maps
-over the documents scan with full column pruning.
+over the documents scan with full column pruning.  The n-gram kernel
+(:func:`ngrams`, :func:`shingles`) is codegen-only: one regex extract, no
+higher-order-function lambda.  Its regex consumes the separator before
+each gram; a zero-width lookbehind form would step into the middle of
+surrogate pairs (see :func:`ngrams`).
 """
 
 from __future__ import annotations
@@ -67,12 +71,30 @@ def doc_fingerprint(col: Column) -> Column:
     return F.md5(canon)
 
 
+def ngrams(col: Column, n: int = 3) -> Column:
+    """Word n-grams of lowercased text, in order and with repeats: one
+    string per window of ``n`` :func:`words`, joined by single spaces;
+    empty when the text has fewer than ``n`` words.
+
+    Codegen-only.  ``s`` joins the ``\\s+`` tokens with single spaces (a
+    token holds no space, though it may be empty), and each match of the
+    pattern over ``" " || s`` consumes the one space before a token and
+    captures the ``n`` tokens that start there.  The zero-width form
+    ``(?<![^ ])(?=(...))`` is NOT equivalent: after an empty match the
+    regex engine steps one UTF-16 unit forward, which can land inside a
+    surrogate pair (emoji) and capture half a character.  An interpreted
+    ``transform(sequence(...), slice)`` lambda gives the same grams at
+    ~7x the cost per document."""
+    s = F.array_join(words(F.lower(col)), " ")
+    pattern = f" (?=((?:[^ ]* ){{{n - 1}}}[^ ]*))"
+    return F.regexp_extract_all(F.concat(F.lit(" "), s), F.lit(pattern), 1)
+
+
 def shingles(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingle set (distinct), for Jaccard/MinHash dedup."""
+    """Word n-gram shingle set (distinct), for Jaccard/MinHash dedup; text
+    under ``n`` words is one shingle, the whole text."""
     w = words(F.lower(col))
-    idx = F.sequence(F.lit(0), F.size(w) - n)
-    gram = lambda i: F.array_join(F.slice(w, i + 1, n), " ")  # noqa: E731
-    return F.when(F.size(w) >= n, F.array_distinct(F.transform(idx, gram))).otherwise(
+    return F.when(F.size(w) >= n, F.array_distinct(ngrams(col, n))).otherwise(
         F.array(F.array_join(w, " "))
     )
 

@@ -535,17 +535,23 @@ def minhash_signatures(
         )
         return base.join(sigs_flat, "doc_id")
 
-    def _sig(seed: str):
-        if hash == "md5":
-            return F.min(F.md5(F.concat(F.lit(f"{seed}:"), F.col("g"))))
-        return F.min(F.xxhash64(F.lit(seed), F.col("g")))
+    if hash == "md5":
+        sigs = md5_minhashes(F.col("g"), seeds)
+    else:
+        sigs = [F.min(F.xxhash64(F.lit(s), F.col("g"))).alias(f"sig_{i}")
+                for i, s in enumerate(seeds)]
+    return base.join(exploded.groupBy("doc_id").agg(*sigs), "doc_id")
 
-    sigs_flat = (
-        exploded
-        .groupBy("doc_id")
-        .agg(*[_sig(s).alias(f"sig_{i}") for i, s in enumerate(seeds)])
-    )
-    return base.join(sigs_flat, "doc_id")
+
+def md5_minhashes(g, seeds: list[str] | None = None) -> list:
+    """The md5 MinHash family as aggregates over an exploded shingle
+    column ``g``: ``sig_i = min(md5('<seed_i>:' || g))``.  The one Spark
+    definition behind ``minhash_signatures(hash="md5")`` and the
+    streaming dedup cascade's state (the DuckDB oracles spell the same
+    md5 text)."""
+    seeds = MINHASH_SEEDS if seeds is None else seeds
+    return [F.min(F.md5(F.concat(F.lit(f"{s}:"), g))).alias(f"sig_{i}")
+            for i, s in enumerate(seeds)]
 
 
 def minhash_banded_pairs(

@@ -35,6 +35,7 @@ import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class CommitConflict(RuntimeError):
@@ -191,11 +192,16 @@ class VersionedTable:
 
     # -- read paths ---------------------------------------------------------
 
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
+    def read(self, spark: SparkSession, version: int | None = None,
+             schema: StructType | None = None) -> DataFrame:
+        """The table at ``version`` (default: current).  A caller that
+        knows the table's ``schema`` skips the footer-reading job Spark
+        runs to infer it."""
         m = self.describe(version)
         if not m.files:
             raise FileNotFoundError(f"version {m.version} of {self.root} is empty")
-        return spark.read.parquet(*[os.path.join(self.root, f) for f in m.files])
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*[os.path.join(self.root, f) for f in m.files])
 
     # -- streaming ----------------------------------------------------------
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from pulsar_ingestion_spark.functions.text import token_count
+from pulsar_ingestion_spark.functions.text import ngrams, token_count, words
 from pulsar_ingestion_spark.operators.ranking import best_struct
 from pulsar_ingestion_spark.operators.sketch import md5_lane
 from pulsar_ingestion_spark.registry import query
@@ -491,8 +491,6 @@ def q_text_ppl_buckets(spark, sf_dir):
     thresholds and the compared statistic at 6dp makes the boundary
     comparisons engine-stable.  The token→wordcount→join-back pipeline
     reuses the unigram plan (vocabulary side broadcastable)."""
-    from pulsar_ingestion_spark.functions.text import words
-
     # Same (doc, word, tf)-first shape as text_unigram_logprob (r5 perf
     # pass): one token-stream collapse, every later stage pair-bounded.
     docs = load_tables(spark, sf_dir)["documents"]  # no fan_out (r13)
@@ -721,17 +719,8 @@ def q_corpus_novelty_curve(spark, sf_dir):
     )
 
     docs = load_tables(spark, sf_dir)["documents"]  # no fan_out (r13)
-    toks = docs.select(
-        "doc_id", F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("t")
-    ).filter(F.size("t") >= _NOV_N)
-    grams = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size(t) - {_NOV_N - 1}),"
-                f" i -> array_join(slice(t, i, {_NOV_N}), ' '))"
-            )
-        ).alias("gram"),
+    grams = docs.filter(F.size(words(F.lower(F.col("text")))) >= _NOV_N).select(
+        "doc_id", F.explode(ngrams(F.col("text"), _NOV_N)).alias("gram"),
     ).select("doc_id", F.xxhash64("gram").alias("gk")).distinct()
     firsts = grams.groupBy("gk").agg(F.min("doc_id").alias("first_doc"))
     perdoc = (

@@ -980,15 +980,12 @@ def text_ngram_freq(spark, sf_dir):
     # Top-5 bigrams per language — n-gram language modeling / corpus-stat
     # primitive: explode bigrams → count → windowed top-k (ties broken
     # lexicographically for determinism).
+    from pulsar_ingestion_spark.functions.text import ngrams, words
+
     d = load_tables(spark, sf_dir)["documents"]
-    w = F.split(F.trim(F.lower("text")), r"\s+")
-    bigrams = F.transform(
-        F.sequence(F.lit(1), F.size(w) - 1),
-        lambda i: F.concat(F.element_at(w, i), F.lit(" "), F.element_at(w, i + 1)),
-    )
     counted = (
-        d.filter(F.size(w) >= 2)
-        .select("lang", F.explode(bigrams).alias("bigram"))
+        d.filter(F.size(words(F.lower(F.col("text")))) >= 2)
+        .select("lang", F.explode(ngrams(F.col("text"), 2)).alias("bigram"))
         .groupBy("lang", "bigram")
         .agg(F.count("*").alias("cnt"))
     )

@@ -2235,6 +2235,8 @@ def q_dedup_jaccard_prefix_filter(spark, sf_dir):
     dfs stationary); on fixed-vocab corpora cap the prefix df (skip
     prefix tokens above a df ceiling — making the join approximate) or
     fall back to dedup_minhash_banded."""
+    from pulsar_ingestion_spark.functions.text import ngrams, words
+
     docs = fan_out(load_tables(spark, sf_dir)["documents"], spark)
     # EXACT-dedup first (production order): every text cluster is reduced
     # to its min-doc_id representative, so near-dup pairs are pairs of
@@ -2250,16 +2252,10 @@ def q_dedup_jaccard_prefix_filter(spark, sf_dir):
     # (this fixture: ~7M unigram pairs ≥ 0.6 vs 241 shingle pairs at
     # sf0.1) — shingles carry word order, which is what near-duplicate
     # means.  Docs under 3 tokens have no shingles and drop out.
-    words_ = docs.join(reps.select("doc_id"), "doc_id").select(
-        "doc_id", F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("t")
-    )
-    shingle = F.expr(
-        "transform(sequence(1, size(t) - 2),"
-        " i -> concat(t[i-1], ' ', t[i], ' ', t[i+1]))"
-    )
     toks = (
-        words_.filter(F.size("t") >= 3)
-        .select("doc_id", F.explode(shingle).alias("tok"))
+        docs.join(reps.select("doc_id"), "doc_id")
+        .filter(F.size(words(F.lower(F.col("text")))) >= 3)
+        .select("doc_id", F.explode(ngrams(F.col("text"), 3)).alias("tok"))
         .distinct()
         .persist()
     )

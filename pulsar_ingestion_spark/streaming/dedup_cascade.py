@@ -5,18 +5,27 @@ in a versioned table (VERDICT r6 item 4).
 The batch cascade (queries_llm.q_text_dedup_cascade) sees the whole
 corpus at once; in operation documents arrive continuously and each
 micro-batch must be deduplicated against EVERYTHING ACCEPTED BEFORE IT
-without rescanning history.  The state that makes that possible is
-exactly the cascade's two working sets, persisted:
+without re-deduplicating history.  The state that makes that possible
+is exactly the cascade's two working sets, persisted:
 
   * the digest set (exact stage) — md5(text) of every exact survivor;
   * the LSH index (near stage)  — the 4 band values + the shingle set
     of every exact survivor (band values find candidates, shingles
     verify Jaccard).
 
-Both live as COLUMNS of one versioned-table row per exact survivor, so
-a micro-batch does: one digest anti-join (exact), one band equi-join +
-shingle verify (near), one exactly-once append (state advance).  The
-versioned table's app-id-scoped batch watermark makes the append
+Both live as COLUMNS of one versioned-table row per exact survivor.  A
+micro-batch runs one aggregation and one probe join, then one
+exactly-once append (state advance):
+
+  * ``groupBy(digest)`` over the exploded shingles keeps the min-id doc
+    of each digest (in-batch exact stage) and computes its 8 md5
+    minhashes (operators.dedup.md5_minhashes) in the same pass;
+  * each survivor's 5 keys (digest as band 0, then its 4 bands) probe
+    one index of in-batch keys plus every state key; one ``groupBy``
+    per survivor over the hits flags a state digest hit (exact) and a
+    Jaccard-verified band hit on a doc seen before (near).
+
+The versioned table's app-id-scoped batch watermark makes the append
 idempotent under Structured Streaming's at-least-once replay: a
 replayed batch no-ops BEFORE any state read, so the cascade's decisions
 are never recomputed against a state the batch itself already advanced.
@@ -31,13 +40,13 @@ batch cascade's keep set EXACTLY, regardless of how the stream is cut
 into batches (tests/test_streaming_dedup_cascade.py proves set equality
 against q_text_dedup_cascade's funnel).
 
-Scale notes (100 TB): per batch the state is touched by two equi-joins
-keyed on digest / (band, bval) — both prunable hash shuffles; nothing
-rescans history.  State grows with EXACT SURVIVORS (it is the dedup
+Scale notes (100 TB): each batch reads the whole state ONCE, as the
+index side of the (band, bval) probe join, so the steady per-batch cost
+grows with the state.  State grows with EXACT SURVIVORS (it is the dedup
 output plus tombstoned near-dups carrying their index entries), i.e.
 with the corpus the pipeline is keeping anyway.  At cluster scale the
-state table would be bucketed by digest/band so the per-batch joins are
-exchange-free on the state side; vacuum() bounds manifest history.
+state's probe keys would be kept bucketed by (band, bval) so the
+per-batch join is exchange-free on the state side; vacuum() bounds manifest history.
 
 Reference basis: the reference pipeline dedups per-tenant streams at
 ingest (docs/architecture.md:113-118 consumer model); this composes the
@@ -49,58 +58,51 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.functions.text import shingles
+from pulsar_ingestion_spark.operators.dedup import md5_minhashes
 from pulsar_ingestion_spark.operators.versioned import VersionedTable
 
 _THRESHOLD = 0.35
 _N_BANDS = 4
+_BANDS = [f"b{b}" for b in range(_N_BANDS)]
 
 
-def _features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-doc cascade features: digest, shingle set, 4 band values —
-    the exact md5 values of the batch cascade (queries_llm) so the
-    streaming path's decisions are comparable term for term.
-
-    Round 14 (maintainer timing finding): the signatures were the naive
-    ``array_min(transform(w, md5))`` form — every hash through Spark's
-    INTERPRETED higher-order-function evaluator, the exact shape the
-    batch path rejected in round 8 (operators.dedup.minhash_signatures
-    docstring; ~8×|shingles| lambda dispatches per doc, re-paid every
-    micro-batch).  Signatures now come from the same explode →
-    whole-stage-codegen min-aggregates shape as the batch operator —
-    one tiny per-batch doc_id shuffle instead; values are IDENTICAL
-    (same md5 of the same strings), so the batch-equivalence tests and
-    the versioned state format are unchanged."""
-    from pulsar_ingestion_spark.functions.text import shingles
-    from pulsar_ingestion_spark.queries_llm import _MINHASH_SEEDS
-
-    base = df.select(
-        F.col(id_col).alias("doc_id"),
-        *([F.col("source")] if "source" in df.columns else [F.lit("stream").alias("source")]),
-        F.md5(F.col(text_col)).alias("digest"),
-        shingles(F.col(text_col), n=3).alias("w"),
-    )
-    sigs_flat = base.select("doc_id", F.explode_outer("w").alias("g")).groupBy(
-        "doc_id"
-    ).agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("g")))).alias(f"sig_{i}")
-            for i, s in enumerate(_MINHASH_SEEDS)
-        ]
-    )
-    return base.join(sigs_flat, "doc_id").select(
-        "doc_id", "source", "digest", "w",
-        *[
-            F.concat(F.col(f"sig_{2 * b}"), F.col(f"sig_{2 * b + 1}")).alias(f"b{b}")
-            for b in range(_N_BANDS)
-        ],
-    )
-
-
-def _bands_long(df: DataFrame, id_alias: str) -> DataFrame:
+def _keys(df: DataFrame) -> DataFrame:
+    """One probe key per (doc, band): band 0 is the digest, bands 1..4
+    the LSH band values."""
     return df.select(
-        F.col("doc_id").alias(id_alias),
-        F.posexplode(F.array(*[F.col(f"b{b}") for b in range(_N_BANDS)]))
-        .alias("band", "bval"),
+        "*", F.posexplode(F.array("digest", *_BANDS)).alias("band", "bval")
+    )
+
+
+def _probe(table: VersionedTable, surv: DataFrame, threshold: float) -> DataFrame:
+    """The batch's state rows: one probe join of every survivor's 5 keys
+    against the index of in-batch keys plus every state key.  A state
+    digest hit is an exact dup (the row is dropped); a band hit on a doc
+    seen strictly before (state, or same batch with smaller id) at
+    Jaccard >= threshold is a near dup (``accepted`` false).  An in-batch
+    doc that a state digest removes stays in the index, but it has that
+    state doc's text, so the same bands and shingles: it matches a doc
+    exactly when the state doc does."""
+    index = surv.withColumn("old", F.lit(False))
+    try:
+        state = table.read(surv.sparkSession, schema=surv.schema)  # the state's own columns
+        index = index.unionByName(state.withColumn("old", F.lit(True)))
+    except FileNotFoundError:
+        pass
+    index = _keys(index).select(
+        F.col("doc_id").alias("y_id"), F.col("w").alias("yw"), "old", "band", "bval")
+    x = _keys(surv).select(F.struct(*surv.columns).alias("x"), "band", "bval")
+    inter = F.size(F.array_intersect("x.w", "yw"))
+    jac = F.round(inter / (F.size("x.w") + F.size("yw") - inter), 6)
+    seen_before = F.col("old") | (F.col("y_id") < F.col("x.doc_id"))
+    return (
+        x.join(index, ["band", "bval"], "left")
+        .groupBy("x")
+        .agg(F.max(F.col("old") & (F.col("band") == 0)).alias("exact"),
+             F.max(F.when(seen_before, jac >= threshold)).alias("near"))
+        .filter(~F.coalesce("exact", F.lit(False)))
+        .select("x.*", (~F.coalesce("near", F.lit(False))).alias("accepted"))
     )
 
 
@@ -131,70 +133,35 @@ def stream_dedup_cascade(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if table._batch_already_committed(batch_id, app_id):
             return  # replayed batch — state already advanced
-        spark = batch_df.sparkSession
-        feats = _features(batch_df, id_col, text_col)
-        try:
-            state = table.read(spark)
-        except FileNotFoundError:
-            state = None
-
-        # exact stage: in-batch min-id per digest, then digest anti-join
-        # against every prior exact survivor
-        keep = feats.groupBy("digest").agg(F.min("doc_id").alias("_keep_id"))
-        s1 = (
-            feats.join(keep, "digest")
-            .filter(F.col("doc_id") == F.col("_keep_id"))
-            .drop("_keep_id")
+        text = F.col(text_col)
+        source = F.col("source") if "source" in batch_df.columns else F.lit("stream")
+        # exact stage and signatures in one aggregation: equal digests
+        # mean equal text, so a digest's md5 minhashes are each of its
+        # docs' minhashes.  Only a doc's first shingle row carries the
+        # doc, so the survivor struct is shuffled once per doc.
+        docs = batch_df.filter(text.isNotNull()).select(
+            F.md5(text).alias("digest"),
+            F.struct(F.col(id_col).alias("doc_id"), source.alias("source"),
+                     shingles(text, n=3).alias("w")).alias("doc"),
         )
-        if state is not None:
-            # no distinct: state digests are unique by construction (one
-            # row per exact survivor, later batches anti-joined here),
-            # and left_anti semantics ignore right-side duplicates anyway
-            # — the distinct was a wasted per-batch state shuffle (r14)
-            s1 = s1.join(state.select("digest"), "digest", "left_anti")
-        s1 = s1.persist()
-
-        # near stage: candidate partners share >= 1 band and were seen
-        # strictly before (prior batch, or same batch with smaller id)
-        nb = _bands_long(s1, "x_id")
-        pb = _bands_long(s1, "y_id")
-        cand = (
-            nb.join(pb, ["band", "bval"])
-            .filter(F.col("y_id") < F.col("x_id"))
-            .select("x_id", "y_id")
-        )
-        if state is not None:
-            sb = _bands_long(state, "y_id")
-            cand = cand.unionByName(
-                nb.join(sb, ["band", "bval"]).select("x_id", "y_id")
+        rows = docs.select("digest", "doc", F.posexplode_outer("doc.w").alias("pos", "g"))
+        surv = (
+            rows.groupBy("digest")
+            .agg(F.min(F.when(F.col("pos") == 0, F.col("doc"))).alias("doc"),
+                 *md5_minhashes(F.col("g")))
+            .select(
+                "doc.doc_id", "doc.source", "digest", "doc.w",
+                *[F.concat(f"sig_{2 * b}", f"sig_{2 * b + 1}").alias(f"b{b}")
+                  for b in range(_N_BANDS)],
             )
-        cand = cand.distinct()
-        xw = s1.select(F.col("doc_id").alias("x_id"), F.col("w").alias("xw"))
-        partners = s1.select(F.col("doc_id").alias("y_id"), F.col("w").alias("yw"))
-        if state is not None:
-            partners = partners.unionByName(
-                state.select(F.col("doc_id").alias("y_id"), F.col("w").alias("yw"))
-            )
-        inter = F.size(F.array_intersect("xw", "yw"))
-        jac = F.round(inter / (F.size("xw") + F.size("yw") - inter), 6)
-        removed = (
-            cand.join(xw, "x_id")
-            .join(partners, "y_id")
-            .filter(jac >= threshold)
-            .select(F.col("x_id").alias("doc_id"))
-            .distinct()
-        )
-        out = s1.join(removed.withColumn("_rm", F.lit(True)), "doc_id", "left").select(
-            "doc_id", "source", "digest", "w",
-            *[f"b{b}" for b in range(_N_BANDS)],
-            F.coalesce(~F.col("_rm"), F.lit(True)).alias("accepted"),
+            .persist()
         )
         try:
-            commit(out, batch_id)  # the batch's only action
+            commit(_probe(table, surv, threshold), batch_id)  # the batch's only action
         finally:
             # a failed batch is redelivered under the same id: its
             # cached survivors must not outlive the attempt
-            s1.unpersist()
+            surv.unpersist()
 
     return process
 

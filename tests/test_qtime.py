@@ -25,3 +25,4 @@ def test_qtime_times_a_query_and_maintainers(spark, sf_dir, tmp_path):
         m = time_maintainer(spark, name, sf_dir, 2, str(tmp_path / name))
         assert m["batch0_s"] > 0 and m["steady_s"] > 0, name
         assert m["total_s"] == pytest.approx(m["batch0_s"] + m["steady_s"]), name
+        assert m["batch0_jobs"] >= 1 and m["steady_stages"] >= m["steady_jobs"] >= 1, name

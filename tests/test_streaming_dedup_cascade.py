@@ -153,3 +153,110 @@ def test_restart_from_checkpoint_end_to_end(spark, tmp_path):
     final = {tuple(r) for r in accepted_docs(spark, root).collect()}
     expected = _run_cut(spark, str(tmp_path / "ref"), 1)
     assert final == expected
+
+
+def test_exact_copies_and_null_text_get_no_state_row(spark, tmp_path):
+    """The exact stage: a later copy of a state doc's text, the second of
+    two equal new texts in one batch, and NULL text leave no state row;
+    the first of the two new texts is kept."""
+    root = str(tmp_path / "state")
+    process = stream_dedup_cascade(root, app_id="exact")
+    docs = _docs(spark)
+    process(docs, 0)
+    first = {r["doc_id"] for r in VersionedTable(root).read(spark).collect()}
+    novel = "an entirely new text about exact copies in one micro batch"
+    batch = (
+        docs.filter(F.col("doc_id") % 7 == 0)
+        .withColumn("doc_id", F.col("doc_id") + 100_000)
+        .unionByName(docs.filter(F.col("doc_id") % 11 == 0)
+                     .withColumn("doc_id", F.col("doc_id") + 200_000)
+                     .withColumn("text", F.lit(None).cast("string")))
+        .unionByName(spark.createDataFrame(
+            [(300_002, "web", novel), (300_001, "web", novel)], docs.schema))
+    )
+    process(batch, 1)
+    rows = VersionedTable(root).read(spark).collect()
+    assert {r["doc_id"] for r in rows} == first | {300_001}
+    assert all(r["accepted"] for r in rows if r["doc_id"] == 300_001)
+
+
+def _scans(spark, df, root: str) -> int:
+    """File scans under ``root`` in ``df``'s optimized plan.  A cached
+    relation's plan counts once however often the plan reads the cache:
+    it is computed once."""
+    seen, n = set(), 0
+    todo = [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        leaves = todo.pop().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            kind = leaf.getClass().getSimpleName()
+            if kind == "InMemoryRelation":
+                cache = leaf.cacheBuilder()
+                key = spark._jvm.System.identityHashCode(cache)
+                if key not in seen:
+                    seen.add(key)
+                    todo.append(cache.cachedPlan())
+            elif kind == "AdaptiveSparkPlanExec":
+                todo.append(leaf.inputPlan())
+            elif kind in ("LogicalRelation", "FileSourceScanExec"):
+                n += root in leaf.relation().location().rootPaths().toString()
+    return n
+
+
+def test_batch_plan_scans_source_and_state_once(spark, tmp_path, monkeypatch):
+    """The second batch's plan (the one with state to probe) reads the
+    micro-batch source once and the state table once."""
+    root = str(tmp_path / "state")
+    scans = []
+    real = VersionedTable.stream_batch_committer
+
+    def recording(self, app_id):
+        commit = real(self, app_id)
+
+        def wrapped(df, batch_id):
+            # while the batch's cached survivors are live
+            scans.append((_scans(spark, df, "documents.parquet"), _scans(spark, df, root)))
+            commit(df, batch_id)
+
+        return wrapped
+
+    monkeypatch.setattr(VersionedTable, "stream_batch_committer", recording)
+    process = stream_dedup_cascade(root, app_id="plan")
+    docs = _docs(spark)
+    process(docs.filter(F.col("doc_id") % 2 == 0), 0)
+    process(docs.filter(F.col("doc_id") % 2 == 1), 1)
+    assert scans == [(1, 0), (1, 1)]
+
+
+def test_state_format_matches_minhash_signatures(spark, tmp_path):
+    """The state row of each exact survivor carries md5(text), the
+    document's shingle set and the band concat of the md5 MinHash
+    signatures — the values ``minhash_signatures(hash="md5")`` gives —
+    under the columns and types existing state roots were written with."""
+    from pulsar_ingestion_spark.operators.dedup import minhash_signatures
+
+    root = str(tmp_path / "state")
+    _run_cut(spark, root, 2)
+    state = VersionedTable(root).read(spark)
+    assert [(f.name, f.dataType.simpleString()) for f in state.schema] == [
+        ("doc_id", "bigint"), ("source", "string"), ("digest", "string"),
+        ("w", "array<string>"), ("b0", "string"), ("b1", "string"),
+        ("b2", "string"), ("b3", "string"), ("accepted", "boolean"),
+    ]
+    docs = _docs(spark)
+    sigs = minhash_signatures(docs, hash="md5").select(
+        "doc_id", F.col("w").alias("want_w"),
+        *[F.concat(f"sig_{2 * b}", f"sig_{2 * b + 1}").alias(f"want_b{b}")
+          for b in range(4)],
+    )
+    got = state.join(sigs, "doc_id").join(
+        docs.select("doc_id", F.md5("text").alias("want_digest")), "doc_id"
+    )
+    assert got.count() == state.count() > 0
+    bad = got.filter(
+        (F.col("w") != F.col("want_w"))
+        | (F.col("digest") != F.col("want_digest"))
+        | F.greatest(*[F.col(f"b{b}") != F.col(f"want_b{b}") for b in range(4)])
+    )
+    assert bad.count() == 0

@@ -8,8 +8,10 @@ spans ``<id>.build`` and ``<id>.exec``, ``clearCache`` between runs
 exec seconds, jobs and stages, and shuffle bytes from the event log.
 
 Maintainers: the input table in ``--batches`` hash cuts, fed in order to
-``process(batch, batch_id)`` on fresh state.  Reported: batch 0 (it pays
-code generation), the median of the later batches (steady) and the total.
+``process(batch, batch_id)`` on fresh state, each batch under its own span.
+Reported: batch 0 (it pays code generation), the median of the later
+batches (steady) and the total, then the jobs and stages of batch 0 and
+of the median steady batch.
 
 The first line printed is the host facts and the SF dir.  Parallelism
 comes from ``$SPARK_GRAFT_CPUS``, the SF dir from ``$SPARK_GRAFT_SF_DIR``.
@@ -46,7 +48,8 @@ from pulsar_ingestion_spark.streaming import (  # noqa: E402
 
 CUT_SEED = 0
 QUERY_COLS = ["min_s", "build_s", "exec_s", "jobs", "stages", "shuffle_bytes"]
-MAINTAINER_COLS = ["batch0_s", "steady_s", "total_s"]
+MAINTAINER_COLS = ["batch0_s", "steady_s", "total_s", "batch0_jobs", "batch0_stages",
+                   "steady_jobs", "steady_stages"]
 
 
 def _ivf_index(tables, work: str):
@@ -117,20 +120,28 @@ def time_query(spark, tracer: Tracer, qid: str, sf_dir: str, n: int = 3,
 
 
 def time_maintainer(spark, name: str, sf_dir: str, n_batches: int, work: str) -> dict:
-    """Feed ``name`` its table in ``n_batches`` cuts, with state under ``work``."""
+    """Feed ``name`` its table in ``n_batches`` cuts, with state under
+    ``work``, each batch in its own tracer span.  Jobs and stages are those
+    of batch 0 and of the median steady batch (the lower middle one)."""
+    tracer = Tracer(f"qtime-{name}", enabled=True)
     table, id_col, make = MAINTAINERS[name]
     tables = load_tables(spark, sf_dir)
     df = tables[table]
     if id_col not in df.columns:  # lineitem has no single-column key
         df = df.withColumn(id_col, F.monotonically_increasing_id())
     process = make(tables, work)
-    per = []
+    per, spans = [], []
     for i, batch in enumerate(hash_cuts(df, id_col, n_batches, CUT_SEED)):
         t0 = time.perf_counter()
-        process(batch, i)
+        with tracer.span(spark, f"{name}.batch{i}") as sp:
+            process(batch, i)
         per.append(time.perf_counter() - t0)
+        spans.append(sp)
     spark.catalog.clearCache()
-    return {"batch0_s": per[0], "steady_s": statistics.median(per[1:]), "total_s": sum(per)}
+    steady = spans[1:][per[1:].index(statistics.median_low(per[1:]))]
+    return {"batch0_s": per[0], "steady_s": statistics.median(per[1:]), "total_s": sum(per),
+            "batch0_jobs": spans[0].counts["jobs"], "batch0_stages": spans[0].counts["stages"],
+            "steady_jobs": steady.counts["jobs"], "steady_stages": steady.counts["stages"]}
 
 
 def _row(name: str, values) -> str:
