@@ -70,12 +70,11 @@ class DimEnrichMaintainer:
 
     def apply_dim_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # latest-wins per key WITHIN the batch first (distributed), then
-        # merged into the snapshot — idempotent + order-tolerant, no
-        # batch-id guard needed (see module doc)
+        # merged into a copy of the snapshot, committed only once the size
+        # check passes; no batch-id guard needed (see module doc)
         from pyspark.sql import Window
 
-        if self._schema is None:
-            self._schema = self._project_schema(batch_df.schema)
+        schema = self._schema or self._project_schema(batch_df.schema)
         w = Window.partitionBy(self.key_col).orderBy(
             F.desc(self.version_col), *[F.desc(c) for c in self.payload_cols]
         )
@@ -89,11 +88,12 @@ class DimEnrichMaintainer:
             .select(self.key_col, self.version_col, *self.payload_cols)
             .collect()
         )
+        state = dict(self._state)
         for r in rows:
             key = r[self.key_col]
             ver = r[self.version_col]
             payload = tuple(r[c] for c in self.payload_cols)
-            cur = self._state.get(key)
+            cur = state.get(key)
             # same rule as the in-batch window: higher version wins; on an
             # EQUAL version the larger payload tuple wins — so the final
             # state is invariant to where the micro-batch cut falls
@@ -106,14 +106,15 @@ class DimEnrichMaintainer:
                     > self._payload_rank(cur[1])
                 )
             ):
-                self._state[key] = (ver, payload)
-        if len(self._state) > self.max_keys:
+                state[key] = (ver, payload)
+        if len(state) > self.max_keys:
             raise ValueError(
-                f"DimEnrichMaintainer: {len(self._state)} dimension keys "
+                f"DimEnrichMaintainer: {len(state)} dimension keys "
                 f"exceeds max_keys={self.max_keys} — the broadcast snapshot "
                 "requires a model-sized dimension; at larger cardinality "
                 "use the stream-stream join / state-store path"
             )
+        self._state, self._schema = state, schema
 
     def snapshot_df(self, spark) -> DataFrame:
         """Typed snapshot (possibly empty) under the captured schema;

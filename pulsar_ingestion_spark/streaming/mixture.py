@@ -2,12 +2,10 @@
 batch ``corpus_temperature_mix`` query (queries_corpus.py).
 
 Merge algebra (streaming/sketches.py design discipline): per-source
-token counts merge by ADD — NOT idempotent — so the maintainer keeps a
-batch-id high-watermark (the CMS/quantile rule; replayed
-``batch_id <= seen`` batches are skipped).  Per batch the distributed
-side is one map-side-combined token-count aggregate over the batch's
-own documents; driver state is one counter per source (few-key
-discipline, guarded).
+token counts merge by ADD — NOT idempotent — so the maintainer runs
+behind :mod:`.replay`'s guard.  Per batch the distributed side is one
+map-side-combined token-count aggregate over the batch's own documents;
+driver state is one counter per source (few-key discipline, guarded).
 
 ``plan()`` answers the same alpha = 0.5 temperature-mixture plan as
 the batch query — natural share, temperature share sqrt(n)/SUM
@@ -23,8 +21,10 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.streaming.replay import ReplayGuarded
 
-class MixturePlanMaintainer:
+
+class MixturePlanMaintainer(ReplayGuarded):
     """foreachBatch target tracking per-source whitespace token mass and
     answering the temperature-scaled mixture plan."""
 
@@ -35,11 +35,8 @@ class MixturePlanMaintainer:
         self.budget_factor = budget_factor
         self.max_sources = max_sources
         self._tokens: dict = {}
-        self._seen_batch = -1
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self._seen_batch:
-            return  # replay — ADD merge is not idempotent
+    def merge(self, batch_df: DataFrame, batch_id: int) -> None:
         rows = (
             batch_df.groupBy(self.source_col)
             .agg(
@@ -49,9 +46,7 @@ class MixturePlanMaintainer:
             )
             .collect()
         )
-        # merge into a copy and commit it with the batch id only once the
-        # guard passes: a raise leaves counters and watermark untouched,
-        # so a retry of the same id starts from the pre-batch state
+        # merge into a copy, committed only once the size check passes
         tokens = dict(self._tokens)
         for r in rows:
             src = r[self.source_col]
@@ -63,7 +58,6 @@ class MixturePlanMaintainer:
                 "require bounded source cardinality; bucket upstream"
             )
         self._tokens = tokens
-        self._seen_batch = batch_id
 
     def plan(self) -> list[tuple]:
         """(source, tokens, natural_share, temp_share, effective_epochs)

@@ -22,9 +22,12 @@ from __future__ import annotations
 import json
 import math
 import os
+from collections import deque
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pulsar_ingestion_spark.streaming.replay import ReplayGuarded
 
 _BINS = 10
 
@@ -163,6 +166,60 @@ def read_alerts(alert_log: str) -> list[dict]:
         return [json.loads(line) for line in fh if line.strip()]
 
 
+class RateMonitor(ReplayGuarded):
+    """The :func:`rate_monitor` foreachBatch target."""
+
+    def __init__(self, key_col: str, alert_log: str, ratio: float,
+                 window: int, min_trail: int, evict_after: int):
+        self.key_col = key_col
+        self.alert_log = alert_log
+        self.ratio = ratio
+        self.window = window
+        self.min_trail = min_trail
+        self.evict_after = evict_after
+        self.trails: dict = {}
+        self.silent_for: dict = {}
+
+    def merge(self, batch_df: DataFrame, batch_id: int) -> None:
+        counts = {
+            r["k"]: r["cnt"]
+            for r in batch_df.groupBy(F.col(self.key_col).alias("k"))
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .collect()
+        }
+        # update copies, committed only after the alert write
+        new_trails = {
+            k: deque(t, maxlen=self.window) for k, t in self.trails.items()
+        }
+        new_silent = dict(self.silent_for)
+        recs = []
+        for key in sorted(set(self.trails) | set(counts), key=str):
+            cnt = counts.get(key, 0)
+            trail = new_trails.setdefault(key, deque(maxlen=self.window))
+            rec: dict = {"batch_id": batch_id, "key": key, "n": cnt,
+                         "trail_avg": None, "burst": False, "silent": False,
+                         "alert": False}
+            if len(trail) >= self.min_trail:
+                avg = sum(trail) / len(trail)
+                rec["trail_avg"] = round(avg, 6)
+                rec["burst"] = bool(avg > 0 and cnt > self.ratio * avg)
+                rec["silent"] = bool(avg > 0 and cnt == 0)
+                rec["alert"] = rec["burst"] or rec["silent"]
+            if cnt > 0:
+                trail.append(cnt)
+                new_silent[key] = 0
+            else:
+                new_silent[key] = new_silent.get(key, 0) + 1
+                if new_silent[key] >= self.evict_after:
+                    rec["evicted"] = True
+                    del new_trails[key]
+                    del new_silent[key]
+            recs.append(rec)
+        with open(self.alert_log, "a") as fh:
+            fh.writelines(json.dumps(rec) + "\n" for rec in recs)
+        self.trails, self.silent_for = new_trails, new_silent
+
+
 def rate_monitor(
     key_col: str,
     alert_log: str,
@@ -170,7 +227,7 @@ def rate_monitor(
     window: int = 7,
     min_trail: int = 3,
     evict_after: int | None = None,
-):
+) -> RateMonitor:
     """foreachBatch target: per-key volume burst/dropout alarm — the
     streaming twin of the batch ``events_burst_days`` query.  Each
     micro-batch's per-key row count is compared against that key's
@@ -198,60 +255,10 @@ def rate_monitor(
     evicted with a final ``evicted`` record — dead keys no longer grow
     driver state forever; a re-appearing key re-warms like a new one.
 
-    A re-delivered batch id is skipped: appending its counts again
-    would warm the trail early and skew ``trail_avg``."""
-    from collections import deque
-
-    if evict_after is None:
-        evict_after = 4 * window
-    trails: dict = {}
-    silent_for: dict = {}
-    last_batch = -1
-
-    def check(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal trails, silent_for, last_batch
-        if batch_id <= last_batch:
-            return  # replay: its alerts are written and its counts trailed
-        counts = {
-            r["k"]: r["cnt"]
-            for r in batch_df.groupBy(F.col(key_col).alias("k"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        # update copies and commit them with the batch id only after the
-        # alert write: a failed batch retried under its id starts clean
-        new_trails = {k: deque(t, maxlen=window) for k, t in trails.items()}
-        new_silent = dict(silent_for)
-        recs = []
-        for key in sorted(set(trails) | set(counts), key=str):
-            cnt = counts.get(key, 0)
-            trail = new_trails.setdefault(key, deque(maxlen=window))
-            rec: dict = {"batch_id": int(batch_id), "key": key, "n": cnt}
-            if len(trail) >= min_trail:
-                avg = sum(trail) / len(trail)
-                rec["trail_avg"] = round(avg, 6)
-                rec["burst"] = bool(avg > 0 and cnt > ratio * avg)
-                rec["silent"] = bool(avg > 0 and cnt == 0)
-                rec["alert"] = rec["burst"] or rec["silent"]
-            else:
-                rec["trail_avg"] = None
-                rec["burst"] = rec["silent"] = rec["alert"] = False
-            if cnt > 0:
-                trail.append(cnt)
-                new_silent[key] = 0
-            else:
-                new_silent[key] = new_silent.get(key, 0) + 1
-                if new_silent[key] >= evict_after:
-                    rec["evicted"] = True
-                    del new_trails[key]
-                    del new_silent[key]
-            recs.append(rec)
-        with open(alert_log, "a") as fh:
-            for rec in recs:
-                fh.write(json.dumps(rec) + "\n")
-        trails, silent_for, last_batch = new_trails, new_silent, batch_id
-
-    return check
+    A re-delivered batch id is skipped (:mod:`.replay`): appending its
+    counts again would warm the trail early and skew ``trail_avg``."""
+    return RateMonitor(key_col, alert_log, ratio, window, min_trail,
+                       4 * window if evict_after is None else evict_after)
 
 
 def freshness_monitor(

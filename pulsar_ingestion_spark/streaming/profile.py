@@ -3,9 +3,9 @@
 chosen explicitly (the design lesson of streaming/sketches.py):
 
 * **row / null counts merge by ADD — not idempotent**, so the
-  maintainer keeps a batch-id high-watermark (the CMS discipline) and
-  the counts are EXACT for any micro-batch cut: they equal the batch
-  profile of the union of the delivered batches.
+  maintainer runs behind :mod:`.replay`'s guard and the counts are
+  EXACT for any micro-batch cut: they equal the batch profile of the
+  union of the delivered batches.
 * **distinct cardinality is NOT add-mergeable with bounded state**
   (a value seen in two batches must not count twice), so the profiler
   delegates to the portable-HLL register max-merge
@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.streaming.replay import ReplayGuarded
 from pulsar_ingestion_spark.streaming.sketches import (
     HllStreamMaintainer,
     MgStreamMaintainer,
@@ -46,7 +47,7 @@ from pulsar_ingestion_spark.streaming.sketches import (
 _MAX_THREADS = 8
 
 
-class ProfileStreamMaintainer:
+class ProfileStreamMaintainer(ReplayGuarded):
     """foreachBatch target maintaining a per-column profile (row count,
     null count, HLL distinct estimate, MG modal-candidate set) over
     ``cols``."""
@@ -57,21 +58,15 @@ class ProfileStreamMaintainer:
         self.n_null: dict[str, int] = {c: 0 for c in self.cols}
         self._hll = {c: HllStreamMaintainer(c) for c in self.cols}
         self._mg = {c: MgStreamMaintainer(c, budget=mg_budget) for c in self.cols}
-        self.last_batch = -1
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if int(batch_id) <= self.last_batch:
-            return  # at-least-once replay: counts/MG add-merge, skip whole batch
+    def merge(self, batch_df: DataFrame, batch_id: int) -> None:
         strs = batch_df.select(
             *[F.col(c).cast("string").alias(c) for c in self.cols]
         )
-        # Round 14 (maintainer timing finding): the 1 + 2·|cols| per-batch
-        # aggregates ran SEQUENTIALLY — seven sub-second jobs whose fixed
-        # scheduling/codegen overheads summed to ~1.7 s per micro-batch.
-        # They are independent reads of the same batch, so they overlap
-        # (guide §2.6: actions are only sequential because driver code
-        # calls them sequentially); each sub-maintainer mutates only its
-        # own driver state, from exactly one thread.
+        # the 1 + 2·|cols| aggregates are independent reads of the same
+        # batch, so they overlap (run one after another, their fixed job
+        # overheads summed to ~1.7 s a batch); each sub-maintainer mutates
+        # only its own driver state, from exactly one thread
         from concurrent.futures import ThreadPoolExecutor
 
         n = min(_MAX_THREADS, 1 + 2 * len(self.cols))
@@ -82,8 +77,8 @@ class ProfileStreamMaintainer:
                     *[F.count(F.col(c)).alias(c) for c in self.cols],
                 ).first()
             )
-            # sub-maintainers guard on their own last_batch; pass ours
-            # through so their watermark stays in lockstep
+            # the MG sub-maintainers guard their own ids, so a retry of a
+            # batch that failed part-way skips the columns already merged
             subs = [
                 pool.submit(m, strs, batch_id)
                 for c in self.cols
@@ -95,7 +90,6 @@ class ProfileStreamMaintainer:
         self.n_rows += int(counts["_n"])
         for c in self.cols:
             self.n_null[c] += int(counts["_n"]) - int(counts[c])
-        self.last_batch = int(batch_id)
 
     def profile(self) -> dict[str, dict]:
         """Per-column snapshot: exact counts, HLL distinct estimate,

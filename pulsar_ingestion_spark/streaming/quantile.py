@@ -1,16 +1,14 @@
 """Streaming mergeable quantile sketch — the incremental twin of the
-batch ``sketch_quantile_logbins`` query (queries_sketch.py:616).
+batch ``sketch_quantile_logbins`` query (queries_sketch.py).
 
 Merge algebra (streaming/sketches.py design discipline): decimal
 log-bin counts merge by cell-wise ADD — NOT idempotent — so the
-maintainer keeps a batch-id high-watermark exactly like the CMS/MG
-maintainers (foreachBatch ids are monotone per checkpoint; a replayed
-``batch_id <= seen`` is skipped).  Binning is pure integer/string math
-(digit count + two leading digits of the integer cent amount — never a
-float log), identical to the batch query, so the stream-maintained
-sketch answers the SAME quantile estimates as the batch sketch of the
-same rows — the equivalence tests assert exact equality across
-arbitrary micro-batch cuts.
+maintainer runs behind :mod:`.replay`'s guard.  Binning is pure
+integer/string math (digit count + two leading digits of the integer
+cent amount — never a float log), identical to the batch query, so the
+stream-maintained sketch answers the SAME quantile estimates as the
+batch sketch of the same rows — the equivalence tests assert exact
+equality across arbitrary micro-batch cuts.
 
 Per batch the distributed side is one map-side-combined groupBy over
 the batch's own rows; driver state is O(bins) ≈ 90·digits counts,
@@ -24,8 +22,10 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.streaming.replay import ReplayGuarded
 
-class QuantileLogbinsStreamMaintainer:
+
+class QuantileLogbinsStreamMaintainer(ReplayGuarded):
     """foreachBatch target maintaining decimal log-bin counts over a
     positive numeric column; ``quantile(q)`` answers the lower bound of
     the first bin whose cumulative count reaches ceil(q*n) — <=5%
@@ -36,11 +36,8 @@ class QuantileLogbinsStreamMaintainer:
         self.col = col
         self._bins: dict = {}  # (ndig, lead2) -> count
         self._n = 0
-        self._seen_batch = -1
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self._seen_batch:
-            return  # replay — ADD-merge is not idempotent (CMS rule)
+    def merge(self, batch_df: DataFrame, batch_id: int) -> None:
         cents = batch_df.filter(F.col(self.col) > 0).select(
             F.floor(F.col(self.col) * 100).cast("bigint").alias("c")
         )
@@ -58,9 +55,6 @@ class QuantileLogbinsStreamMaintainer:
             key = (r["ndig"], r["lead2"])
             self._bins[key] = self._bins.get(key, 0) + r["cnt"]
             self._n += r["cnt"]
-        # mark seen only after the merge: a batch whose job failed is
-        # retried under the same id and must not be skipped
-        self._seen_batch = batch_id
 
     def quantile(self, q: float) -> float | None:
         """Lower-bound estimate for quantile ``q`` (the batch query's

@@ -3,16 +3,15 @@ batch ``events_seasonal_dow_hour`` query, with each statistic's merge
 algebra chosen explicitly (the streaming/profile.py design lesson):
 
 * **per-cell event counts and DECIMAL value sums merge by ADD — not
-  idempotent**, so the maintainer keeps a batch-id high-watermark (the
-  CMS discipline).  Counts, means, shares and intensities are then
-  EXACT for any micro-batch cut: identical to the batch query over the
-  union of the delivered batches (the equivalence tests pin equality
-  row-for-row).
+  idempotent**, so the maintainer runs behind :mod:`.replay`'s guard.
+  Counts, means, shares and intensities are then EXACT for any
+  micro-batch cut: identical to the batch query over the union of the
+  delivered batches (the equivalence tests pin equality row-for-row).
 * **per-cell distinct users is NOT add-mergeable with bounded state**,
   so each cell keeps a portable-HLL register set (register max-merge —
   idempotent), and ``grid()`` reports the HLL estimate where the batch
   query reports the exact countDistinct.  The estimate is cut-invariant
-  and replay-proof by the max-merge algebra.
+  by the max-merge algebra.
 
 Per batch the maintainer runs TWO distributed actions over the
 micro-batch: one fused (dow, hr) counts/sums aggregate (<= 168 rows
@@ -32,11 +31,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.operators.sketch import hll_estimate, hll_registers
+from pulsar_ingestion_spark.streaming.replay import ReplayGuarded
 
 _CELLS = 168  # 7 dows x 24 hours
 
 
-class SeasonalGridMaintainer:
+class SeasonalGridMaintainer(ReplayGuarded):
     """foreachBatch target maintaining the per-(dow, hour-of-day) grid
     of event counts, exact DECIMAL value sums and per-cell HLL user
     registers over an events-shaped stream."""
@@ -49,10 +49,9 @@ class SeasonalGridMaintainer:
         self.n_events: dict[tuple[int, int], int] = {}
         self.sum_value: dict[tuple[int, int], Decimal] = {}
         self.registers: dict[tuple[int, int], dict[int, int]] = {}
-        self.last_batch = -1
 
-    def _cells(self, batch_df: DataFrame) -> DataFrame:
-        return batch_df.select(
+    def merge(self, batch_df: DataFrame, batch_id: int) -> None:
+        cells = batch_df.select(
             ((F.expr(f"unix_micros({self.ts_col}) div 86400000000") + 4) % 7
              ).alias("dow"),
             (F.expr(f"unix_micros({self.ts_col}) div 3600000000") % 24
@@ -60,29 +59,22 @@ class SeasonalGridMaintainer:
             F.col(self.user_col).alias("u"),
             F.col(self.value_col).alias("v"),
         )
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        counted = int(batch_id) <= self.last_batch
-        cells = self._cells(batch_df)
-        if not counted:
-            # ADD-merged exact counts/sums — batch-id guarded
-            rows = (
-                cells.groupBy("dow", "hr")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.col("v").cast("decimal(18,4)")).alias("s"),
-                )
-                .collect()
+        rows = (
+            cells.groupBy("dow", "hr")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("v").cast("decimal(18,4)")).alias("s"),
             )
-            for r in rows:
-                key = (int(r["dow"]), int(r["hr"]))
-                self.n_events[key] = self.n_events.get(key, 0) + int(r["n"])
-                self.sum_value[key] = self.sum_value.get(key, Decimal(0)) + (
-                    Decimal(str(r["s"])) if r["s"] is not None else Decimal(0)
-                )
-            self.last_batch = int(batch_id)
-        # register MAX-merge — idempotent, safe to re-run on replay
-        for r in hll_registers(cells, "u", ("dow", "hr")).collect():
+            .collect()
+        )
+        regs = hll_registers(cells, "u", ("dow", "hr")).collect()
+        for r in rows:
+            key = (int(r["dow"]), int(r["hr"]))
+            self.n_events[key] = self.n_events.get(key, 0) + int(r["n"])
+            self.sum_value[key] = self.sum_value.get(key, Decimal(0)) + (
+                Decimal(str(r["s"])) if r["s"] is not None else Decimal(0)
+            )
+        for r in regs:
             key = (int(r["dow"]), int(r["hr"]))
             cell = self.registers.setdefault(key, {})
             b = int(r["bucket"])

@@ -18,11 +18,9 @@ design point of this module (tests pin both):
   batch-id bookkeeping is needed.  (Same algebra that makes per-day
   sketch rollups safe to recompute at 100 TB.)
 * **CMS merges by cell-wise ADD — NOT idempotent.**  A replayed batch
-  would double-count, so the maintainer keeps a batch-id high-watermark
-  (same discipline as the exactly-once sinks): foreachBatch ids are
-  monotone per checkpoint, so ``batch_id <= seen`` is skipped.
+  would double-count, so it runs behind :mod:`.replay`'s guard.
 * **MG (Misra-Gries) merges by counter ADD + reduction — NOT
-  idempotent** (batch-id guarded like CMS), and unlike the other two its
+  idempotent** (replay-guarded like CMS), and unlike the other two its
   estimates are LOWER bounds with a provable undercount cap
   (n/(budget+1), by mass conservation across both reduction layers) —
   the candidate-generation half of the exact 2-pass heavy hitters in
@@ -54,6 +52,7 @@ from pulsar_ingestion_spark.queries_sketch import (
     _mg_partition_summaries,
     mg_merge_reduce,
 )
+from pulsar_ingestion_spark.streaming.replay import ReplayGuarded
 
 
 class HllStreamMaintainer:
@@ -84,14 +83,12 @@ class HllStreamMaintainer:
         return hll_estimate(self.registers)
 
 
-class CmsStreamMaintainer:
+class CmsStreamMaintainer(ReplayGuarded):
     """foreachBatch target maintaining a count-min sketch over ``col``.
 
     Per batch: one distributed ``groupBy(depth, bucket).count()``
     collapses the batch to ≤ depth×width rows, which ADD into the
-    driver-held counters.  Addition is not replay-idempotent, so a
-    batch-id high-watermark skips replayed ids (foreachBatch ids are
-    monotone per checkpoint — the exactly-once sinks' discipline).
+    driver-held counters.
 
     ``estimate(key)`` is the standard min-over-depths point query with
     the batch queries' exact bucket derivation (md5 prefix), so after
@@ -104,11 +101,8 @@ class CmsStreamMaintainer:
         self.depth = depth
         self.width = width
         self.counters: dict[tuple[int, int], int] = {}
-        self.last_batch = -1
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if int(batch_id) <= self.last_batch:
-            return  # at-least-once replay — already added
+    def merge(self, batch_df: DataFrame, batch_id: int) -> None:
         depths = F.array([F.lit(i) for i in range(self.depth)])
         rows = (
             batch_df.filter(F.col(self.col).isNotNull())
@@ -121,7 +115,6 @@ class CmsStreamMaintainer:
         for r in rows:
             cell = (int(r["depth"]), int(r["bucket"]))
             self.counters[cell] = self.counters.get(cell, 0) + int(r["cnt"])
-        self.last_batch = int(batch_id)
 
     def estimate(self, key) -> int:
         """Point query: min over depths of the key's counter cells."""
@@ -134,7 +127,7 @@ class CmsStreamMaintainer:
         return int(est or 0)
 
 
-class MgStreamMaintainer:
+class MgStreamMaintainer(ReplayGuarded):
     """foreachBatch target maintaining a weighted Misra-Gries frequent-
     items summary over ``col`` — the streaming twin of
     ``sketch_heavy_hitters``'s phase-1 (round 11, session 3; completes
@@ -147,9 +140,7 @@ class MgStreamMaintainer:
     driver-held counters via the shared :func:`mg_merge_reduce` (MG
     summaries are MERGEABLE — Agarwal et al. 2013 — so the merged
     summary carries the same undercount bound as a single-pass MG over
-    the concatenated stream).  Merging ADDS mass, so it is not
-    replay-idempotent: a batch-id high-watermark skips replays (the CMS
-    maintainer's discipline).
+    the concatenated stream).
 
     Guarantees after ANY micro-batch cut sequence, in terms of
     min_budget = min(budget, the summarizer's fixed per-partition
@@ -171,11 +162,8 @@ class MgStreamMaintainer:
         self.budget = budget
         self.counters: dict = {}
         self.total = 0
-        self.last_batch = -1
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if int(batch_id) <= self.last_batch:
-            return  # at-least-once replay — already merged
+    def merge(self, batch_df: DataFrame, batch_id: int) -> None:
         toks = batch_df.filter(F.col(self.col).isNotNull()).select(
             F.col(self.col).cast("string").alias("token")
         )
@@ -194,7 +182,6 @@ class MgStreamMaintainer:
                 add[r["token"]] = add.get(r["token"], 0) + int(r["est"])
         self.counters = mg_merge_reduce(dict(self.counters), add, self.budget)
         self.total += n
-        self.last_batch = int(batch_id)
 
     def error_bound(self) -> int:
         """Max undercount of any estimate: floor(n / (min_budget+1)).

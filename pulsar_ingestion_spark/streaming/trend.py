@@ -5,10 +5,9 @@ STATISTICAL TEST in the monitor family.
 Unlike the sketch maintainers (HLL/CMS/MG estimate), this one is
 EXACT at every micro-batch cut: the statistic is a closed form over
 five integer moments (N, R, SUM(t*r), SUM(t*n), SUM(t^2*n)) that all
-merge by ADD, so behind a batch-id high-watermark (the CMS discipline)
-the streamed Z^2 equals the batch query's over the union of delivered
-batches bit-for-bit — the equivalence test pins float equality, not a
-tolerance band.
+merge by ADD, so behind :mod:`.replay`'s guard the streamed Z^2 equals
+the batch query's over the union of delivered batches bit-for-bit — the
+equivalence test pins float equality, not a tolerance band.
 
 Per batch: ONE map-side-combined 24-cell aggregate collected to the
 driver; state is five Python ints.  At 100 TB that is the whole story
@@ -21,8 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.streaming.replay import ReplayGuarded
 
-class TrendMonitor:
+
+class TrendMonitor(ReplayGuarded):
     """foreachBatch target maintaining the Cochran-Armitage moments of
     a binary success flag against integer hour-of-day scores."""
 
@@ -36,11 +37,8 @@ class TrendMonitor:
         self.str_ = 0       # SUM(t * r)
         self.stn = 0        # SUM(t * n)
         self.st2n = 0       # SUM(t^2 * n)
-        self.last_batch = -1
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if int(batch_id) <= self.last_batch:
-            return  # at-least-once replay: moments ADD-merge, skip
+    def merge(self, batch_df: DataFrame, batch_id: int) -> None:
         cell = (
             batch_df.select(
                 (F.expr(f"unix_micros({self.ts_col}) div 3600000000") % 24
@@ -59,7 +57,6 @@ class TrendMonitor:
             self.str_ += t * r
             self.stn += t * n
             self.st2n += t * t * n
-        self.last_batch = int(batch_id)
 
     def z_squared(self) -> float | None:
         """The batch query's exact expression over the merged moments

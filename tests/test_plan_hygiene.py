@@ -161,3 +161,43 @@ def test_struct_extremes_negate_only_behind_a_null_flag(plans):
                 if v.startswith("-") and f"isnull({v[1:]})" not in values[:j]:
                     offenders.add(name)
     assert not offenders, sorted(offenders)
+
+
+def test_one_replay_guard_for_add_merge_maintainers(tmp_path):
+    """The batch-id replay rule lives in ``streaming/replay.py`` alone: no
+    other streaming module compares ``batch_id <=`` or keeps its own
+    watermark, and every ADD-merge maintainer is a ``ReplayGuarded``."""
+    import re
+    from pathlib import Path
+
+    from pulsar_ingestion_spark.streaming import (
+        mixture,
+        monitor,
+        profile,
+        quantile,
+        seasonal,
+        sketches,
+        trend,
+    )
+    from pulsar_ingestion_spark.streaming.replay import ReplayGuarded
+
+    root = Path(sketches.__file__).parent
+    offenders = [
+        f"{p.name}:{i}"
+        for p in sorted(root.glob("*.py"))
+        if p.name != "replay.py"
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if re.search(r"batch_id <=|last_batch *=|_seen_batch", line)
+    ]
+    assert not offenders, offenders
+    maintainers = [
+        sketches.CmsStreamMaintainer("k"),
+        sketches.MgStreamMaintainer("k"),
+        quantile.QuantileLogbinsStreamMaintainer("v"),
+        mixture.MixturePlanMaintainer(),
+        trend.TrendMonitor(),
+        seasonal.SeasonalGridMaintainer(),
+        profile.ProfileStreamMaintainer(["k"]),
+        monitor.rate_monitor("k", str(tmp_path / "rate.jsonl")),
+    ]
+    assert all(isinstance(m, ReplayGuarded) for m in maintainers)

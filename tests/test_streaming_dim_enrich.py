@@ -173,3 +173,6 @@ def test_key_guard_fires(spark):
     )
     with pytest.raises(ValueError, match="max_keys"):
         m.apply_dim_batch(df, 0)
+    assert m._state == {}  # the rejected batch left no keys behind
+    m.apply_dim_batch(df.filter("user_id < 2"), 1)
+    assert sorted(r.user_id for r in m.snapshot_df(spark).collect()) == [0, 1]

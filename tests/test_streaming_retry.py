@@ -3,7 +3,9 @@ Misra-Gries, trend, seasonal grid, profile) and the dedup cascade: a
 batch whose Spark job fails is redelivered under the SAME id, and the
 retry must be merged, not skipped as a replay.  The first delivery of
 batch 0 raises inside the maintainer's job on one poisoned column;
-after the retry the state equals a clean one-batch feed."""
+after the retry the state equals a clean one-batch feed.  A new
+ADD-merge maintainer subclasses ``streaming.replay.ReplayGuarded`` and
+gets a case here."""
 
 from __future__ import annotations
 
@@ -24,7 +26,8 @@ SF_DIR = "/root/testdata/sf0.001"
 
 # (maintainer factory, poisoned column, state snapshot).  The profile's
 # event_type sketches succeed while its counts and user_id sketches
-# fail: a batch that failed part-way.
+# fail, and the seasonal grid's counts succeed while its user HLL
+# fails: batches that failed part-way.
 CASES = {
     "cms": (lambda: CmsStreamMaintainer("user_id"), "user_id",
             lambda m: m.counters),
@@ -33,6 +36,8 @@ CASES = {
     "trend": (TrendMonitor, "ts", lambda m: m.snapshot()),
     "seasonal": (SeasonalGridMaintainer, "value",
                  lambda m: (m.n_events, m.sum_value, m.registers)),
+    "seasonal_users": (SeasonalGridMaintainer, "user_id",
+                       lambda m: (m.n_events, m.sum_value, m.registers)),
     "profile": (lambda: ProfileStreamMaintainer(["event_type", "user_id"]),
                 "user_id", lambda m: m.profile()),
 }
