@@ -58,10 +58,3 @@ def iso8601_to_epoch_millis(col: Column) -> Column:
     rejects offset-less or space-separated strings that Spark's lenient
     to_timestamp would happily translate (ADVICE r1)."""
     return F.when(col.rlike(ISO_STRICT_RE), F.unix_millis(F.to_timestamp(col)))
-
-
-def to_event_time(col: Column) -> Column:
-    """ISO-8601 string → TimestampType for event-time operations
-    (windows, watermarks).  Internal representation only; the envelope
-    keeps the string + millis forms at the edges."""
-    return F.to_timestamp(col)

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.functions.text import doc_fingerprint, shingles, words
+from pulsar_ingestion_spark.operators.iterate import ConvergenceError, fixpoint, same_count  # noqa: F401
 from pulsar_ingestion_spark.operators.sketch import md5_lane
 
 
@@ -892,12 +893,6 @@ def embedding_near_dups(
     )
 
 
-class ConvergenceError(RuntimeError):
-    """An iterative clustering loop exhausted ``max_iters`` before its
-    stability check fired — labels would be WRONG (partially propagated).
-    Raise rather than return wrong clusters (ADVICE r2)."""
-
-
 def near_dup_clusters(
     pairs: DataFrame,
     nodes: DataFrame,
@@ -914,50 +909,47 @@ def near_dup_clusters(
     one partial-agg shuffle per round.  Near-dup graphs are clique-dense
     (duplicate groups), so convergence is typically 3-5 rounds; the loop
     stops when NO node's label changed this round — an exact change-count
-    (``limit(1).count()`` over the changed-row join, a 0/1-row aggregate),
-    not a label-sum signature, which wraps mod 2^64 on large id spaces and
-    can false-converge (ADVICE r2).  ``localCheckpoint`` truncates lineage
-    so the plan stays bounded across iterations.  At 100 TB this is the
-    standard Spark CC shape (cf. GraphFrames/large-star small-star); the
-    pair graph is orders of magnitude smaller than the corpus.
+    taken inside the round's own aggregate (``min(label)`` beside the
+    node's own label), not a label-sum signature.  Rounds run on
+    :func:`~pulsar_ingestion_spark.operators.iterate.fixpoint`.  At 100 TB
+    this is the standard Spark CC shape (cf. GraphFrames/large-star
+    small-star); the pair graph is orders of magnitude smaller than the
+    corpus.
 
     ``strict=True`` raises :class:`ConvergenceError` if ``max_iters`` is
     exhausted while labels are still moving (the result would be wrong);
-    ``strict=False`` downgrades that to a warning log.
+    ``strict=False`` downgrades that to a warning.
     """
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).unionByName(
         pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    ).localCheckpoint(eager=True)
-    labels = nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("label"))
-    converged = False
-    for _ in range(max_iters):
-        neigh = edges.join(labels, edges["dst"] == labels["id"]).select(
-            F.col("src").alias("id"), F.col("label")
-        )
-        new_labels = (
-            labels.unionByName(neigh)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        msg = f"near_dup_clusters: labels still changing after {max_iters} iterations"
-        if strict:
-            raise ConvergenceError(msg)
-        import warnings
+    ).persist()  # every round joins it; filled by round 1's checkpoint job
 
-        warnings.warn(msg, stacklevel=2)
+    def _round(labels, _):
+        neigh = edges.join(labels, edges["dst"] == labels["id"]).select(
+            F.col("src").alias("id"), "label", F.lit(False).alias("own")
+        )
+        return (
+            labels.withColumn("own", F.lit(True))
+            .unionByName(neigh)
+            .groupBy("id")
+            .agg(
+                F.min("label").alias("label"),
+                F.min(F.when(F.col("own"), F.col("label"))).alias("old"),
+            )
+        )
+
+    try:
+        labels = fixpoint(
+            nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("label")),
+            _round,
+            lambda prev, cur: cur.m["changed"] == 0,
+            probe=(F.count_if(F.col("label") != F.col("old")).alias("changed"),),
+            max_iters=max_iters,
+            strict=strict,
+            what="near_dup_clusters: labels still changing",
+        )
+    finally:
+        edges.unpersist()
     return labels.select("id", F.col("label").alias("cluster_id"))
 
 
@@ -987,20 +979,14 @@ def near_dup_clusters_lss(
     (``exceptAll …limit(1)`` — both sides are distinct edge sets, so
     count-equality plus one empty difference implies equality).  No
     hash/sum signature — a wrapped-mod-2^64 sum can false-converge on
-    large id spaces (ADVICE r2).  ``localCheckpoint`` truncates lineage
-    per round.  ``strict=True`` raises :class:`ConvergenceError` when
-    ``max_iters`` is exhausted before stability.
+    large id spaces (ADVICE r2).  Rounds run on
+    :func:`~pulsar_ingestion_spark.operators.iterate.fixpoint`.
+    ``strict=True`` raises :class:`ConvergenceError` when ``max_iters``
+    is exhausted before stability.
     """
     e = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-    # undirected edge list, both orientations
-    edges = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev_cnt = edges.count()
-    converged = False
-    for _ in range(max_iters):
+
+    def _round(edges, _):
         # large-star: every neighbor v > u links to m(u) = min(N(u) + {u})
         m = edges.groupBy("u").agg(F.min("v").alias("minv"))
         m = m.select("u", F.least("minv", "u").alias("m"))
@@ -1023,27 +1009,23 @@ def near_dup_clusters_lss(
             .select(F.col("vv").alias("u"), F.col("m").alias("v"))
             .distinct()
         )
-        new_edges = (
+        return (
             large.unionByName(small)
             .unionByName(large.select(F.col("v").alias("u"), F.col("u").alias("v")))
             .unionByName(small.select(F.col("v").alias("u"), F.col("u").alias("v")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        new_cnt = new_edges.count()
-        stable = new_cnt == prev_cnt and new_edges.exceptAll(edges).limit(1).count() == 0
-        edges = new_edges
-        prev_cnt = new_cnt
-        if stable:
-            converged = True
-            break
-    if not converged:
-        msg = f"near_dup_clusters_lss: edge set still changing after {max_iters} iterations"
-        if strict:
-            raise ConvergenceError(msg)
-        import warnings
 
-        warnings.warn(msg, stacklevel=2)
+    edges = fixpoint(
+        # undirected edge list, both orientations
+        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct(),
+        _round,
+        lambda prev, cur: same_count(prev, cur)
+        and cur.df.exceptAll(prev.df).limit(1).count() == 0,
+        max_iters=max_iters,
+        strict=strict,
+        what="near_dup_clusters_lss: edge set still changing",
+    )
     roots = edges.groupBy("u").agg(F.min("v").alias("minv"))
     labels = nodes.select(F.col(id_col).alias("id")).join(
         roots.select(F.col("u").alias("id"), "minv"), "id", "left"

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.operators.iterate import fixpoint, same_count
 from pulsar_ingestion_spark.operators.ranking import best_struct
 from pulsar_ingestion_spark.operators.sketch import md5_lane
 from pulsar_ingestion_spark.registry import query
@@ -466,13 +467,12 @@ def _peel_to_kcore(edges, k: int):
     map-side-combining degree aggregation plus two LEFT SEMI joins keyed
     on the node — at cluster scale both shuffle on the node key and every
     round's input strictly shrinks, the standard Pregel-style peel.
-    ``localCheckpoint(eager=True)`` cuts the lineage per round (the
-    geo_dbscan_grid discipline — no driver materialization, only a
-    metadata-sized count crosses to the driver for the convergence
-    check).  Termination is guaranteed in <= |E| rounds because the
-    count strictly decreases; the k-core fixpoint is unique regardless
-    of peel order, which is what makes the result oracle-checkable."""
-    def _peel_once(cur):
+    Rounds run on :func:`~pulsar_ingestion_spark.operators.iterate.fixpoint`.
+    Termination is guaranteed in <= |E| rounds because the count
+    strictly decreases until it repeats; the k-core fixpoint is unique
+    regardless of peel order, which is what makes the result
+    oracle-checkable."""
+    def _peel_once(cur, _):
         deg = (
             cur.select(F.col("u").alias("node"))
             .unionAll(cur.select(F.col("v").alias("node")))
@@ -494,15 +494,7 @@ def _peel_to_kcore(edges, k: int):
                   F.col("v") == F.col("vv"), "left_anti")
         )
 
-    cur = edges.select("u", "v").localCheckpoint(eager=True)
-    n_cur = cur.count()
-    while n_cur > 0:
-        nxt = _peel_once(cur).localCheckpoint(eager=True)
-        n_nxt = nxt.count()
-        if n_nxt == n_cur:
-            break
-        cur, n_cur = nxt, n_nxt
-    return cur
+    return fixpoint(edges.select("u", "v"), _peel_once, same_count)
 
 
 @query("graph_kcore", oracle=_KCORE_ORACLE)
@@ -512,7 +504,7 @@ def q_graph_kcore(spark, sf_dir):
     ladder (which part of the graph survives requiring every member to
     have k in-core neighbors).  Peeling is the bounded-iteration
     frontier loop in the graph_hierarchy_closure / geo_dbscan style:
-    degree agg + two semi-joins per round, lineage cut per round, and
+    degree agg + two semi-joins per round (one Spark action each), and
     the k-cores are computed INCREMENTALLY (3-core peels the 2-core,
     4-core peels the 3-core) because cores are nested — at 100 TB the
     expensive first peel happens once, and later cores work on the
@@ -585,8 +577,8 @@ def q_graph_bfs_hops(spark, sf_dir):
     Plan shape (the Pregel frontier loop, same discipline as
     graph_kcore's peel): per hop, ONE equi-join of the bidirectional
     edge list against the current frontier (shuffle keyed on the node
-    id) + ONE anti-join against the visited set, lineage cut per hop
-    via localCheckpoint.  The frontier strictly grows into unvisited
+    id) + ONE anti-join against the visited set, one checkpointed round
+    per hop (``bfs_hops``).  The frontier strictly grows into unvisited
     territory, so per-hop work is bounded by the edges incident to the
     frontier — never a full-graph pass after the first hop, and the hop
     bound caps total rounds regardless of graph diameter.  At 100 TB
@@ -618,53 +610,36 @@ def bfs_hops_per_seed(bidir, seeds, max_hops: int):
     traversal advances in the same hop join — closeness previously ran
     ``bfs_hops`` once per seed, paying max_hops × #seeds checkpointed
     rounds instead of max_hops.  Returns (src, node, dist) with the MIN
-    hop distance per (seed, node), dist <= max_hops."""
-    visited = seeds.select("src", "node").withColumn(
-        "dist", F.lit(0)
-    ).localCheckpoint(eager=True)
-    frontier = visited.select("src", "node")
-    for d in range(1, max_hops + 1):
-        nxt = (
+    hop distance per (seed, node), dist <= max_hops.  Hop d expands the
+    rows at dist d-1 and anti-joins the visited set; the loop stops
+    early at a hop that adds no row (the visited count repeats)."""
+    def _hop(visited, d):
+        frontier = visited.filter(F.col("dist") == d - 1).select("src", "node")
+        fresh = (
             bidir.join(frontier, "node")
             .select("src", F.col("nbr").alias("node"))
             .distinct()
             .join(visited.select("src", "node"), ["src", "node"], "left_anti")
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionAll(
-            nxt.withColumn("dist", F.lit(d))
-        ).localCheckpoint(eager=True)
-        frontier = nxt
-    return visited
+        return visited.unionAll(fresh.withColumn("dist", F.lit(d)))
+
+    return fixpoint(
+        seeds.select("src", "node").withColumn("dist", F.lit(0)),
+        _hop,
+        same_count,
+        max_iters=max_hops,
+    )
 
 
 def bfs_hops(bidir, seeds, max_hops: int):
     """Frontier-loop BFS: ``bidir`` is a (node, nbr) bidirectional edge
     relation (persist it — every hop joins against it), ``seeds`` a
     (node) relation at distance 0.  Returns (node, dist) with the MIN
-    hop distance per reachable node, dist <= max_hops.  Per hop: one
-    node-keyed equi-join + one anti-join, lineage cut per hop."""
-    visited = seeds.select("node").withColumn("dist", F.lit(0)).localCheckpoint(
-        eager=True
-    )
-    frontier = visited.select("node")
-    for d in range(1, max_hops + 1):
-        nxt = (
-            bidir.join(frontier, "node")
-            .select(F.col("nbr").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionAll(
-            nxt.withColumn("dist", F.lit(d))
-        ).localCheckpoint(eager=True)
-        frontier = nxt
-    return visited
+    hop distance per reachable node, dist <= max_hops: the per-seed
+    loop over one constant seed source."""
+    return bfs_hops_per_seed(
+        bidir, seeds.select(F.lit(0).alias("src"), "node"), max_hops
+    ).select("node", "dist")
 
 
 # ---------------------------------------------------------------------------
@@ -1349,8 +1324,8 @@ def q_graph_closeness_centrality(spark, sf_dir):
     """Closeness ((n-1)/SUM d, the bounded-horizon variant) and harmonic
     centrality (SUM 1/d — defined even with unreachable nodes) for the
     {seeds} smallest user ids over the hub-capped co-occurrence graph,
-    horizon {hops} hops.  One frontier-loop BFS per seed reusing
-    ``bfs_hops`` (hop joins are node-keyed equi-joins; seeds are a
+    horizon {hops} hops.  One frontier-loop BFS for all seeds,
+    ``bfs_hops_per_seed`` (hop joins are node-keyed equi-joins; seeds are a
     model-sized driver list, never a row collect).  Distances collapse
     to the (seed, dist) histogram — at most {hops} rows per seed — so
     the 1/d fold is a decimal sum over an aggregate-sized relation.
@@ -1653,24 +1628,17 @@ def _peel_to_ktruss(edges, k: int):
     """Distributed k-truss peel: drop edges with support < k-2 until the
     edge count stops changing.  Each round is one ordered triangle
     enumeration (edge-keyed hash joins) + one left join; the input
-    strictly shrinks, lineage is cut per round (the k-core
-    discipline), and only a metadata-sized count crosses to the
-    driver."""
-    cur = edges.select("u", "v").localCheckpoint(eager=True)
-    n_cur = cur.count()
-    while n_cur > 0:
-        sup = _edge_support(cur)
-        nxt = (
-            cur.join(sup, ["u", "v"], "left")
+    strictly shrinks, so the count repeats within <= |E| rounds (the
+    k-core argument), on
+    :func:`~pulsar_ingestion_spark.operators.iterate.fixpoint`."""
+    def _peel_once(cur, _):
+        return (
+            cur.join(_edge_support(cur), ["u", "v"], "left")
             .filter(F.coalesce(F.col("s"), F.lit(0)) >= k - 2)
             .select("u", "v")
-            .localCheckpoint(eager=True)
         )
-        n_nxt = nxt.count()
-        if n_nxt == n_cur:
-            break
-        cur, n_cur = nxt, n_nxt
-    return cur
+
+    return fixpoint(edges.select("u", "v"), _peel_once, same_count)
 
 
 @query("graph_ktruss", oracle=_KTRUSS_ORACLE)

@@ -1,6 +1,4 @@
 from pulsar_ingestion_spark.streaming.windows import (  # noqa: F401
-    session_agg,
-    sliding_agg,
     tumbling_agg,
     watermark_dedup,
 )

@@ -32,6 +32,7 @@ tests pin.
 
 from __future__ import annotations
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -66,21 +67,24 @@ class ProfileStreamMaintainer(ReplayGuarded):
         # the 1 + 2·|cols| aggregates are independent reads of the same
         # batch, so they overlap (run one after another, their fixed job
         # overheads summed to ~1.7 s a batch); each sub-maintainer mutates
-        # only its own driver state, from exactly one thread
+        # only its own driver state, from exactly one thread.  Each task
+        # is wrapped so its pool thread runs under the caller's job group
+        # and description (plain pool threads start with none).
         from concurrent.futures import ThreadPoolExecutor
 
+        inherit = inheritable_thread_target(batch_df.sparkSession)
         n = min(_MAX_THREADS, 1 + 2 * len(self.cols))
         with ThreadPoolExecutor(max_workers=n) as pool:
-            fcounts = pool.submit(
+            fcounts = pool.submit(inherit(
                 lambda: strs.agg(
                     F.count(F.lit(1)).alias("_n"),
                     *[F.count(F.col(c)).alias(c) for c in self.cols],
                 ).first()
-            )
+            ))
             # the MG sub-maintainers guard their own ids, so a retry of a
             # batch that failed part-way skips the columns already merged
             subs = [
-                pool.submit(m, strs, batch_id)
+                pool.submit(inherit(m), strs, batch_id)
                 for c in self.cols
                 for m in (self._hll[c], self._mg[c])
             ]

@@ -34,44 +34,6 @@ def tumbling_agg(
     )
 
 
-def sliding_agg(
-    df: DataFrame,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    ts_col: str = "ts",
-    watermark: str | None = None,
-) -> DataFrame:
-    if watermark:
-        df = df.withWatermark(ts_col, watermark)
-    return (
-        df.groupBy(F.window(ts_col, window, slide).alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "cnt")
-    )
-
-
-def session_agg(
-    df: DataFrame,
-    gap: str = "30 minutes",
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    watermark: str | None = None,
-) -> DataFrame:
-    """Activity sessionization by gap — trip detection over telemetry."""
-    if watermark:
-        df = df.withWatermark(ts_col, watermark)
-    return (
-        df.groupBy(F.session_window(ts_col, gap).alias("w"), F.col(key_col))
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.col(key_col),
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "cnt",
-        )
-    )
-
-
 def watermark_dedup(
     df: DataFrame,
     keys: list[str],

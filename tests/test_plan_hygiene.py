@@ -201,3 +201,102 @@ def test_one_replay_guard_for_add_merge_maintainers(tmp_path):
         monitor.rate_monitor("k", str(tmp_path / "rate.jsonl")),
     ]
     assert all(isinstance(m, ReplayGuarded) for m in maintainers)
+
+
+# The one lineage cut outside operators/iterate.py: graph_closeness_centrality
+# freezes its limit(5) seed relation once, so the seeds it tests for
+# emptiness are the seeds its BFS runs from.
+CHECKPOINT_OK = {
+    ("operators/iterate.py", "_checkpoint"),
+    ("queries_graph.py", "q_graph_closeness_centrality"),
+}
+
+FIXPOINT_LOOPS = {
+    "queries_graph.py": ["_peel_to_kcore", "_peel_to_ktruss", "bfs_hops", "bfs_hops_per_seed"],
+    "operators/dedup.py": ["near_dup_clusters", "near_dup_clusters_lss"],
+    "queries_geo.py": ["q_geo_dbscan_grid"],
+}
+
+
+def _functions(path):
+    import ast
+
+    src = path.read_text()
+    tree = ast.parse(src)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.FunctionDef):
+            yield node, src
+
+
+def test_one_fixpoint_loop_for_the_iterative_kernels():
+    """Lineage cuts and round probes live in ``operators/iterate.py``:
+    no other ``localCheckpoint`` call outside ``CHECKPOINT_OK``, and no
+    loop runs its own ``count()``/``isEmpty()``/``limit`` probe, except
+    the large-star/small-star set-equality check on tied counts."""
+    import ast
+    from pathlib import Path
+
+    import pulsar_ingestion_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    cuts = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for fn, _ in _functions(path):
+            for node in ast.walk(fn):
+                if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "localCheckpoint"):
+                    cuts.add((rel, fn.name))
+    assert cuts <= CHECKPOINT_OK, sorted(cuts - CHECKPOINT_OK)
+    assert ("operators/iterate.py", "_checkpoint") in cuts
+
+    probes = []
+    for rel, names in FIXPOINT_LOOPS.items():
+        found = {fn.name: (fn, src) for fn, src in _functions(root / rel)}
+        for name in names:
+            fn, src = found[name]
+            for node in ast.walk(fn):
+                if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                    continue
+                attr = node.func.attr
+                if (attr == "count" and not node.args) or attr in ("isEmpty", "limit"):
+                    text = ast.get_source_segment(src, node)
+                    if not (name == "near_dup_clusters_lss" and ".exceptAll(" in text):
+                        probes.append(f"{rel}:{name}: {text}")
+    assert not probes, probes
+
+
+# Jobs to build and count() each fixpoint-loop query at sf0.001 (local[4],
+# 4 shuffle partitions): one Spark action per round.  A ceiling may
+# only come down.
+FIXPOINT_JOB_CEILINGS = {
+    "graph_kcore": 31,
+    "graph_ktruss": 12,
+    "graph_bfs_hops": 20,
+    "graph_closeness_centrality": 27,
+    "dedup_cluster_components": 19,
+    "dedup_cluster_lss": 36,
+    "geo_dbscan_grid": 57,
+}
+
+
+def test_fixpoint_query_job_ceilings(spark):
+    from pulsar_ingestion_spark.session import load_tables
+
+    qs = entrymod.queries()
+    load_tables(spark, SF)  # footer reads stay outside the counted groups
+    sc = spark.sparkContext
+    over = {}
+    for qid, ceiling in FIXPOINT_JOB_CEILINGS.items():
+        spark.catalog.clearCache()
+        group = f"fixpoint-jobs:{qid}"
+        sc.setJobGroup(group, qid)
+        try:
+            qs[qid](spark, SF).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        if jobs > ceiling:
+            over[qid] = (jobs, ceiling)
+    assert not over, over

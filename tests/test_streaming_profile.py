@@ -99,3 +99,21 @@ def test_profile_replay_is_a_no_op(spark):
     assert m.profile()["lang"]["n_rows"] == 2 * before["lang"]["n_rows"]
     # ...but the HLL distinct estimate is unchanged (idempotent algebra)
     assert m.profile()["lang"]["distinct_est"] == before["lang"]["distinct_est"]
+
+
+def test_profile_jobs_run_under_the_callers_job_group(spark):
+    """The pooled aggregates inherit the caller's job group, so a tracer
+    that attributes jobs by group sees all 1 + 2·|cols| of them."""
+    from pulsar_ingestion_spark.streaming.profile import ProfileStreamMaintainer
+
+    cols = ["lang", "source"]
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(*cols)
+    sc = spark.sparkContext
+    group = "profile-merge-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        ProfileStreamMaintainer(cols)(docs, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1 + 2 * len(cols)
