@@ -28,6 +28,7 @@ fire-and-forget async publish with at-least-once + idempotent appends.
 from __future__ import annotations
 
 import os
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -72,10 +73,19 @@ class PipelineRun:
     dead_letter: "object | None" = None
 
     def awaitTermination(self, timeout: float | None = None):  # noqa: N802 (Spark API name)
+        """Spark's contract over both queries: with ``timeout``, whether
+        both terminated within the one ``timeout`` seconds."""
+        deadline = None if timeout is None else time.monotonic() + timeout
         res = self.main.awaitTermination(timeout)
-        if self.dead_letter is not None:
-            self.dead_letter.awaitTermination(timeout)
-        return res
+        if self.dead_letter is None:
+            return res
+        if deadline is None:
+            return self.dead_letter.awaitTermination()
+        left = deadline - time.monotonic()
+        # PySpark passes whole milliseconds, and Spark rejects a wait under one
+        if left >= 0.001:
+            return self.dead_letter.awaitTermination(left) and res
+        return not self.dead_letter.isActive and res
 
     def stop(self) -> None:
         for q in (self.main, self.dead_letter):

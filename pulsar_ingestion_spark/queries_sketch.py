@@ -15,7 +15,7 @@ cell-wise add / word-wise OR, which is exactly what the final agg does.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.operators.sketch import (
@@ -740,29 +740,33 @@ def mg_merge_reduce(counters: dict, add: dict, budget: int) -> dict:
 
 
 def _mg_partition_summaries(it):
-    """Weighted Misra-Gries over Arrow batches: per batch, value_counts
-    (vectorized) merges into the counter dict via :func:`mg_merge_reduce`.
-    Every token with partition count > n_p/(budget+1) survives (the MG
-    guarantee, weighted-update form).  Emitted rows carry the residual
-    MG estimates plus ONE sentinel row (token NULL, est = the
-    partition's exact row count) so a single pass yields both the
-    summaries and the exact total — the batch query filters the
-    sentinel out; the streaming maintainer reads it instead of running
-    a second count() action over the batch (session-3 review finding
-    #4).  Real tokens are never NULL (callers filter/tokenize upstream),
-    so the sentinel cannot collide."""
+    """Weighted Misra-Gries over Arrow batches of ``(col, token)`` rows, one
+    summary per ``col`` key: per batch and key, value_counts (vectorized)
+    merges into the key's counters via :func:`mg_merge_reduce`.  Every token
+    with partition count > n_p/(budget+1) in its key survives (the MG
+    guarantee, weighted-update form).  Emitted rows carry the residual MG
+    estimates plus ONE sentinel row per key (token NULL, est = the key's
+    exact row count) so a single pass yields both the summaries and the
+    exact totals — the batch query filters the sentinels out; the streaming
+    maintainers read them instead of running a count() action.  Real tokens
+    are never NULL (callers filter upstream), so a sentinel cannot collide."""
     import pandas as pd
 
     counters: dict = {}
-    rows_seen = 0
+    rows_seen: dict = {}
     for pdf in it:
-        rows_seen += len(pdf)
-        vc = pdf["token"].value_counts()
-        counters = mg_merge_reduce(counters, vc.to_dict(), _HH_MG_COUNTERS)
-    yield pd.DataFrame({
-        "token": pd.Series(list(counters.keys()) + [None], dtype="object"),
-        "est": pd.Series(list(counters.values()) + [rows_seen], dtype="int64"),
-    })
+        for key, toks in pdf.groupby("col", sort=False)["token"]:
+            rows_seen[key] = rows_seen.get(key, 0) + len(toks)
+            vc = toks.value_counts().to_dict()
+            counters[key] = mg_merge_reduce(counters.get(key, {}), vc, _HH_MG_COUNTERS)
+    rows = [(k, t, c) for k, cs in counters.items() for t, c in [*cs.items(), (None, rows_seen[k])]]
+    yield pd.DataFrame(rows, columns=["col", "token", "est"]).astype({"est": "int64"})
+
+
+def mg_summaries(df: DataFrame) -> DataFrame:
+    """``(col, token, est)``: the MG summaries of each partition of ``df``'s
+    ``(col, token)`` rows (:func:`_mg_partition_summaries`)."""
+    return df.mapInPandas(_mg_partition_summaries, "col string, token string, est long")
 
 
 @query("sketch_heavy_hitters", oracle=_HH_ORACLE)
@@ -783,7 +787,7 @@ def q_sketch_heavy_hitters(spark, sf_dir):
         F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("token")
     ).persist()
     cand = (
-        toks.mapInPandas(_mg_partition_summaries, "token string, est long")
+        mg_summaries(toks.select(F.lit("").alias("col"), "token"))
         .filter(F.col("token").isNotNull())  # drop the per-partition sentinel
         .select("token")
         .distinct()

@@ -8,7 +8,7 @@ chosen explicitly (the design lesson of streaming/sketches.py):
   union of the delivered batches.
 * **distinct cardinality is NOT add-mergeable with bounded state**
   (a value seen in two batches must not count twice), so the profiler
-  delegates to the portable-HLL register max-merge
+  keeps portable-HLL registers per column and max-merges them
   (:class:`~pulsar_ingestion_spark.streaming.sketches.HllStreamMaintainer`)
   — idempotent, replay-proof, and equal to the batch HLL estimate of
   the same rows at any cut.
@@ -20,32 +20,28 @@ chosen explicitly (the design lesson of streaming/sketches.py):
   feeding the exact phase-2 recount exactly as ``sketch_heavy_hitters``
   does in batch.
 
-Per batch this composition runs 1 + 2·|cols| Spark actions (one fused
-counts aggregate, then one HLL collapse and one MG summarizer pass per
-column).  At 100 TB the three passes fuse into ONE unpivoted
-``(col, value)`` scan — per-(col, bucket) max-rho for HLL and
-per-partition MG summaries keyed by column ride the same shuffle as
-the counts; the per-column delegation here keeps the tested sketch
-machinery shared with the batch queries, which is what the equivalence
-tests pin.
+A batch is one scan and one action, whatever the number of columns: the
+batch is unpivoted once into ``(col, value)`` strings, and one collect
+returns the union of the per-column row and non-null counts, the
+per-column HLL registers and the per-partition MG summaries keyed by
+column (a per-column MG summary over a partition that mixes columns is
+still a mergeable MG summary, so the bounds hold).  Driver state changes
+only after that collect returns, so a failed batch leaves every column
+untouched.
 """
 
 from __future__ import annotations
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.operators.sketch import hll_registers
+from pulsar_ingestion_spark.queries_sketch import mg_summaries
 from pulsar_ingestion_spark.streaming.replay import ReplayGuarded
 from pulsar_ingestion_spark.streaming.sketches import (
     HllStreamMaintainer,
     MgStreamMaintainer,
 )
-
-
-# Cap on the threads overlapping one batch's 1 + 2·|cols| jobs: a wide
-# profile would otherwise start one driver thread per job.
-_MAX_THREADS = 8
 
 
 class ProfileStreamMaintainer(ReplayGuarded):
@@ -61,39 +57,33 @@ class ProfileStreamMaintainer(ReplayGuarded):
         self._mg = {c: MgStreamMaintainer(c, budget=mg_budget) for c in self.cols}
 
     def merge(self, batch_df: DataFrame, batch_id: int) -> None:
-        strs = batch_df.select(
+        cells = batch_df.select(
             *[F.col(c).cast("string").alias(c) for c in self.cols]
+        ).unpivot([], self.cols, "col", "value")
+        counts = cells.groupBy("col").agg(
+            F.count(F.lit(1)).alias("n"), F.count("value").alias("nn")
         )
-        # the 1 + 2·|cols| aggregates are independent reads of the same
-        # batch, so they overlap (run one after another, their fixed job
-        # overheads summed to ~1.7 s a batch); each sub-maintainer mutates
-        # only its own driver state, from exactly one thread.  Each task
-        # is wrapped so its pool thread runs under the caller's job group
-        # and description (plain pool threads start with none).
-        from concurrent.futures import ThreadPoolExecutor
-
-        inherit = inheritable_thread_target(batch_df.sparkSession)
-        n = min(_MAX_THREADS, 1 + 2 * len(self.cols))
-        with ThreadPoolExecutor(max_workers=n) as pool:
-            fcounts = pool.submit(inherit(
-                lambda: strs.agg(
-                    F.count(F.lit(1)).alias("_n"),
-                    *[F.count(F.col(c)).alias(c) for c in self.cols],
-                ).first()
-            ))
-            # the MG sub-maintainers guard their own ids, so a retry of a
-            # batch that failed part-way skips the columns already merged
-            subs = [
-                pool.submit(inherit(m), strs, batch_id)
-                for c in self.cols
-                for m in (self._hll[c], self._mg[c])
-            ]
-            counts = fcounts.result()
-            for f in subs:
-                f.result()
-        self.n_rows += int(counts["_n"])
-        for c in self.cols:
-            self.n_null[c] += int(counts["_n"]) - int(counts[c])
+        regs = hll_registers(cells, "value", by=["col"])
+        mg = mg_summaries(
+            cells.filter(F.col("value").isNotNull()).withColumnRenamed("value", "token")
+        )
+        rows = (
+            counts.unionByName(regs, allowMissingColumns=True)
+            .unionByName(mg, allowMissingColumns=True)
+            .collect()
+        )
+        by_col: dict[str, list] = {c: [] for c in self.cols}
+        for r in rows:
+            by_col[r["col"]].append(r)
+        n = 0
+        for c, rs in by_col.items():
+            for r in rs:
+                if r["n"] is not None:  # one per column of a non-empty batch
+                    n = int(r["n"])
+                    self.n_null[c] += n - int(r["nn"])
+            self._hll[c].absorb(r for r in rs if r["bucket"] is not None)
+            self._mg[c].absorb(r for r in rs if r["est"] is not None)
+        self.n_rows += n
 
     def profile(self) -> dict[str, dict]:
         """Per-column snapshot: exact counts, HLL distinct estimate,

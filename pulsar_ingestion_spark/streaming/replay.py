@@ -14,8 +14,7 @@ class ReplayGuarded:
     and the id commits only after ``merge`` returns — the Structured
     Streaming exactly-once recipe, held in driver memory.  A subclass
     keeps one condition: ``merge`` runs its Spark actions before it
-    mutates state, and a raise leaves the state untouched.  A guarded
-    maintainer nested in another commits its own id.
+    mutates state, and a raise leaves the state untouched.
     """
 
     last_batch = -1

@@ -48,10 +48,7 @@ from pulsar_ingestion_spark.operators.sketch import (
     hll_estimate,
     hll_registers,
 )
-from pulsar_ingestion_spark.queries_sketch import (
-    _mg_partition_summaries,
-    mg_merge_reduce,
-)
+from pulsar_ingestion_spark.queries_sketch import mg_merge_reduce, mg_summaries
 from pulsar_ingestion_spark.streaming.replay import ReplayGuarded
 
 
@@ -72,7 +69,11 @@ class HllStreamMaintainer:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         # replay-safe WITHOUT dedup: register max-merge is idempotent
-        for r in hll_registers(batch_df, self.col).collect():
+        self.absorb(hll_registers(batch_df, self.col).collect())
+
+    def absorb(self, rows) -> None:
+        """Max-merge collected ``(bucket, register)`` rows."""
+        for r in rows:
             b = int(r["bucket"])
             if r["register"] > self.registers.get(b, 0):
                 self.registers[b] = int(r["register"])
@@ -135,7 +136,7 @@ class MgStreamMaintainer(ReplayGuarded):
     MG = heavy hitters).
 
     Per batch: the same per-partition Arrow MG summarizer the batch
-    query runs (``_mg_partition_summaries``) collapses the batch to
+    query runs (``mg_summaries``) collapses the batch to
     <= budget rows per partition; the collected summaries merge into the
     driver-held counters via the shared :func:`mg_merge_reduce` (MG
     summaries are MERGEABLE — Agarwal et al. 2013 — so the merged
@@ -165,14 +166,15 @@ class MgStreamMaintainer(ReplayGuarded):
 
     def merge(self, batch_df: DataFrame, batch_id: int) -> None:
         toks = batch_df.filter(F.col(self.col).isNotNull()).select(
-            F.col(self.col).cast("string").alias("token")
+            F.lit(self.col).alias("col"), F.col(self.col).cast("string").alias("token")
         )
         # ONE action per batch: the summarizer's NULL-token sentinel rows
         # carry each partition's exact row count, so the total rides the
         # same collect as the summaries (<= budget+1 rows per partition)
-        summaries = toks.mapInPandas(
-            _mg_partition_summaries, "token string, est long"
-        ).collect()
+        self.absorb(mg_summaries(toks).collect())
+
+    def absorb(self, summaries) -> None:
+        """Merge collected ``(token, est)`` rows, sentinels included."""
         add: dict = {}
         n = 0
         for r in summaries:

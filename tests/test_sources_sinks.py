@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -60,6 +61,43 @@ def test_dead_letter_stream(spark, tmp_path):
     assert len(dead) == 2
     assert {r["translator"] for r in dead} == {"geotab"}
     assert {r["value"] for r in dead} == {'{"Device_ID": "missing everything"}', "{garbage"}
+
+
+class _StubQuery:
+    """StreamingQuery stand-in that terminates ``after`` seconds from now
+    (never when None); rejects a non-positive timeout as PySpark does."""
+
+    def __init__(self, after):
+        self.end = None if after is None else time.monotonic() + after
+
+    @property
+    def isActive(self):  # noqa: N802
+        return self.end is None or time.monotonic() < self.end
+
+    def awaitTermination(self, timeout):  # noqa: N802
+        if timeout <= 0:
+            raise ValueError("timeout must be positive")
+        until = time.monotonic() + timeout
+        if self.end is not None:
+            until = min(until, self.end)
+        time.sleep(max(0.0, until - time.monotonic()))
+        return not self.isActive
+
+
+def test_pipeline_run_await_shares_one_deadline():
+    """The main query ends inside the timeout and the dead-letter query
+    never does: the run has not terminated, and the call returns after
+    about ``timeout`` seconds, not twice that."""
+    from pulsar_ingestion_spark.plans.pipeline import PipelineRun
+
+    run = PipelineRun(_StubQuery(0.6), _StubQuery(None))
+    t0 = time.monotonic()
+    assert run.awaitTermination(1.0) is False
+    assert time.monotonic() - t0 < 1.4
+    both = PipelineRun(_StubQuery(0.2), _StubQuery(0.4))
+    assert both.awaitTermination(1.0) is True
+    with pytest.raises(ValueError):
+        both.awaitTermination(0)
 
 
 def test_pipeline_observed_metrics(spark, tmp_path):

@@ -47,18 +47,28 @@ def test_profile_counts_equal_batch_profile_any_cut(spark, tmp_path):
 
 
 def test_profile_distinct_estimate_is_cut_invariant_and_sane(spark, tmp_path):
-    """Register max-merge: the stream HLL estimate equals the one-batch
-    estimate of the same rows regardless of the cut, and tracks the
-    exact distinct count within the canonical ~1.04/sqrt(m) HLL band
-    (m=64 -> 13%; allow 2x for the small fixtures)."""
+    """Register max-merge: each column's registers equal the portable HLL
+    registers of that column alone, max-merged across the same cuts
+    (for any cut, the registers of the whole table), so the stream
+    estimate equals the one-batch estimate of the same rows regardless
+    of the cut; it tracks the exact distinct count within the canonical
+    ~1.04/sqrt(m) HLL band (m=64 -> 13%; allow 2x for the small
+    fixtures)."""
+    from pyspark.sql import functions as F
+
+    from pulsar_ingestion_spark.operators.sketch import hll_registers
     from pulsar_ingestion_spark.streaming.profile import ProfileStreamMaintainer
 
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
+    table = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     one = ProfileStreamMaintainer(COLS)
     _stream_docs(spark, tmp_path, one, 1, tag="a")
     four = ProfileStreamMaintainer(COLS)
     _stream_docs(spark, tmp_path, four, 4, tag="b")
     for c in COLS:
+        regs = hll_registers(table.select(F.col(c).cast("string").alias(c)), c).collect()
+        ref = {int(r["bucket"]): int(r["register"]) for r in regs}
+        assert one._hll[c].registers == ref == four._hll[c].registers, c
         est1 = one.profile()[c]["distinct_est"]
         est4 = four.profile()[c]["distinct_est"]
         assert est1 == est4, c
@@ -101,19 +111,34 @@ def test_profile_replay_is_a_no_op(spark):
     assert m.profile()["lang"]["distinct_est"] == before["lang"]["distinct_est"]
 
 
-def test_profile_jobs_run_under_the_callers_job_group(spark):
-    """The pooled aggregates inherit the caller's job group, so a tracer
-    that attributes jobs by group sees all 1 + 2·|cols| of them."""
+def _merge_jobs(spark, cols: list[str], group: str) -> list[int]:
+    """Job ids of one profile merge of ``cols`` run under job ``group``;
+    asserts that no job of the merge ran outside the group."""
     from pulsar_ingestion_spark.streaming.profile import ProfileStreamMaintainer
 
-    cols = ["lang", "source"]
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(*cols)
     sc = spark.sparkContext
-    group = "profile-merge-jobs"
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
     sc.setJobGroup(group, group)
     try:
         ProfileStreamMaintainer(cols)(docs, 0)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1 + 2 * len(cols)
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+    return list(tracker.getJobIdsForGroup(group))
+
+
+def test_profile_jobs_run_under_the_callers_job_group(spark):
+    """Every job of a merge runs under the caller's job group, so a
+    tracer that attributes jobs by group sees the profile's cost."""
+    assert len(_merge_jobs(spark, ["lang", "source"], "profile-merge-jobs")) >= 1
+
+
+def test_profile_job_count_is_independent_of_width(spark):
+    """One unpivoted scan and one action a batch: a 3-column merge starts
+    as many jobs as a 1-column merge."""
+    one = _merge_jobs(spark, COLS[:1], "profile-width-1")
+    three = _merge_jobs(spark, COLS, "profile-width-3")
+    assert len(one) == len(three) >= 1, (one, three)

@@ -25,9 +25,9 @@ from pulsar_ingestion_spark.streaming.trend import TrendMonitor
 SF_DIR = "/root/testdata/sf0.001"
 
 # (maintainer factory, poisoned column, state snapshot).  The profile's
-# event_type sketches succeed while its counts and user_id sketches
-# fail, and the seasonal grid's counts succeed while its user HLL
-# fails: batches that failed part-way.
+# one action fails on its user_id column, which must leave its
+# event_type column untouched too, and the seasonal grid's counts
+# succeed while its user HLL fails: a batch that failed part-way.
 CASES = {
     "cms": (lambda: CmsStreamMaintainer("user_id"), "user_id",
             lambda m: m.counters),

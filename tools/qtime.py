@@ -7,6 +7,11 @@ spans ``<id>.build`` and ``<id>.exec``, ``clearCache`` between runs
 (``bench.py``'s method).  The fastest run is reported: wall, build and
 exec seconds, jobs and stages, and shuffle bytes from the event log.
 
+Census (``--census``): one build and ``count()`` of each named query, or
+of every registered query when none is named, printed as ``id build_jobs
+exec_jobs``: the Spark jobs run while building the plan (eager work in
+the query function) and while executing it.
+
 Maintainers: the input table in ``--batches`` hash cuts, fed in order to
 ``process(batch, batch_id)`` on fresh state, each batch under its own span.
 Reported: batch 0 (it pays code generation), the median of the later
@@ -17,6 +22,7 @@ The first line printed is the host facts and the SF dir.  Parallelism
 comes from ``$SPARK_GRAFT_CPUS``, the SF dir from ``$SPARK_GRAFT_SF_DIR``.
 
 Usage: python tools/qtime.py <query-id|maintainer>... [-n N] [--batches B]
+       python tools/qtime.py --census [query-id...]
 """
 
 from __future__ import annotations
@@ -95,20 +101,25 @@ MAINTAINERS = {
 }
 
 
+def run_query(spark, tracer: Tracer, qid: str, sf_dir: str):
+    """One fresh build and ``count()`` of ``qid`` under the spans
+    ``<id>.build`` and ``<id>.exec``, then ``clearCache``: (wall, build
+    span, exec span)."""
+    t0 = time.perf_counter()
+    with tracer.span(spark, f"{qid}.build") as b:
+        df = entry.queries()[qid](spark, sf_dir)
+    with tracer.span(spark, f"{qid}.exec") as e:
+        df.count()
+    wall = time.perf_counter() - t0
+    spark.catalog.clearCache()
+    return wall, b, e
+
+
 def time_query(spark, tracer: Tracer, qid: str, sf_dir: str, n: int = 3,
                event_log_dir: str | None = None) -> dict:
     """The fastest of ``n`` runs after a discarded one; shuffle bytes only
     when the session writes its event log to ``event_log_dir``."""
-    query = entry.queries()[qid]
-    runs = []
-    for _ in range(n + 1):
-        t0 = time.perf_counter()
-        with tracer.span(spark, f"{qid}.build") as b:
-            df = query(spark, sf_dir)
-        with tracer.span(spark, f"{qid}.exec") as e:
-            df.count()
-        runs.append((time.perf_counter() - t0, b, e))
-        spark.catalog.clearCache()
+    runs = [run_query(spark, tracer, qid, sf_dir) for _ in range(n + 1)]
     wall, b, e = min(runs[1:], key=lambda run: run[0])
     shuffle = None
     if event_log_dir:
@@ -151,12 +162,16 @@ def _row(name: str, values) -> str:
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("names", nargs="+", metavar="query-id|maintainer")
+    ap.add_argument("names", nargs="*", metavar="query-id|maintainer")
     ap.add_argument("-n", type=int, default=3, help="measured runs per query")
     ap.add_argument("--batches", type=int, default=8, help="micro-batches per maintainer")
+    ap.add_argument("--census", action="store_true",
+                    help="print build and exec jobs per query (all queries when none named)")
     args = ap.parse_args(argv)
     if args.n < 1 or args.batches < 2:
         ap.error("-n must be at least 1 and --batches at least 2")
+    if not (args.names or args.census):
+        ap.error("name a query or maintainer, or pass --census")
     known = entry.queries()
     unknown = [x for x in args.names if x not in known and x not in MAINTAINERS]
     if unknown:
@@ -164,8 +179,10 @@ def main(argv=None) -> int:
               f"__spark_entry__.queries(), or a maintainer: {' '.join(MAINTAINERS)}",
               file=sys.stderr)
         return 2
-    queries = [x for x in args.names if x in known]
+    queries = [x for x in args.names if x in known] or (sorted(known) if args.census else [])
     maintainers = [x for x in args.names if x not in known]
+    if args.census and maintainers:
+        ap.error(f"--census takes query ids only, not {' '.join(maintainers)}")
 
     parallelism = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -182,6 +199,12 @@ def main(argv=None) -> int:
         tracer = Tracer("qtime", enabled=True)
         known["scan_project"](spark, sf_dir).count()
         spark.catalog.clearCache()
+        if args.census:
+            print(f"{'query':<40} build_jobs exec_jobs", flush=True)
+            for qid in queries:
+                _wall, b, e = run_query(spark, tracer, qid, sf_dir)
+                print(f"{qid:<40} {b.counts['jobs']:>10} {e.counts['jobs']:>9}", flush=True)
+            return 0
         if queries:
             print(_row("query", QUERY_COLS), flush=True)
         for qid in queries:
