@@ -14,7 +14,7 @@ Layout:
                 dedup, similarity, multimodal)
     sources/    batch + streaming source registry
     plans/      pipeline spec -> wired streaming/batch jobs
-    streaming/  event-time windows, watermarks, stateful transforms
+    streaming/  stateful transforms, incremental maintainers, monitors
 """
 
 __version__ = "0.1.0"

@@ -206,15 +206,6 @@ def resize_spec(df: DataFrame, max_dim: int = 32) -> DataFrame:
     )
 
 
-def media_dedup(df: DataFrame) -> DataFrame:
-    """Exact media dedup on content hash — sha2 runs JVM-side over the
-    binary column (no Python), one shuffle on the 32-byte digest."""
-    return (
-        df.groupBy(F.sha2(F.col("payload"), 256).alias("content_sha"))
-        .agg(F.min("media_id").alias("canonical_id"), F.count("*").alias("dup_cnt"))
-    )
-
-
 VIDEO_MAGIC = b"SYNV"  # synthetic video header: MAGIC + u16 n_frames
 
 FRAME_SCHEMA = StructType([

@@ -62,22 +62,6 @@ def _drop_table_and_location(spark: SparkSession, table: str) -> None:
         shutil.rmtree(loc)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    num_buckets: int = 8,
-    sort: bool = True,
-) -> None:
-    """Persist as a bucketed (+sorted) managed table, replacing any prior."""
-    spark = df.sparkSession
-    _drop_table_and_location(spark, table)
-    w = df.write.bucketBy(num_buckets, bucket_col)
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.mode("overwrite").format("parquet").saveAsTable(table)
-
-
 def compact_partitioned_output(
     spark: SparkSession,
     base_path: str,
@@ -175,16 +159,6 @@ def write_cmf_warehouse(
         .format("parquet")
         .saveAsTable(table)
     )
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables on the bucket key — plans with no
-    Exchange on either side (asserted in tests/test_plans.py)."""
-    left = spark.table(left_table)
-    right = spark.table(right_table)
-    return left.join(right, on=on, how=how)
 
 
 def overwrite_tenant_partitions(

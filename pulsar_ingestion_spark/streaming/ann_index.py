@@ -27,7 +27,7 @@ streaming trade against the batch path's ``auto_num_planes``: growing a
 live index past ``target_block << planes`` vectors means oversized
 buckets until a re-index job rebuckets under more planes (a one-pass
 kernel over the state table; the versioned table's commit makes the
-swap atomic).  ``plane_budget_exceeded`` surfaces when that is due.
+swap atomic).
 
 Exactly-once: the versioned table's app-id-scoped batch watermark makes
 the append idempotent under Structured Streaming's at-least-once replay
@@ -50,10 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pulsar_ingestion_spark.operators.similarity import (
-    auto_num_planes,
-    signlsh_buckets,
-)
+from pulsar_ingestion_spark.operators.similarity import signlsh_buckets
 from pulsar_ingestion_spark.operators.versioned import VersionedTable
 
 
@@ -163,25 +160,6 @@ def ann_search(
             "rank",
         )
     )
-
-
-def plane_budget_exceeded(
-    spark: SparkSession,
-    state_root: str,
-    num_planes: int,
-    target_block: int = 512,
-) -> bool:
-    """True when the index has outgrown its pinned plane count — i.e.
-    ``auto_num_planes`` would pick MORE planes for the current corpus
-    size than the index bakes into its stored buckets.  The operator
-    answer is a re-index job (one kernel pass over the state rows under
-    the larger plane count, committed as a new version).  An index with
-    no committed version yet has outgrown nothing → False (ADVICE r10)."""
-    try:
-        n = VersionedTable(state_root).read(spark).count()
-    except FileNotFoundError:
-        return False
-    return auto_num_planes(n, target_block=target_block, lo=1, hi=64) > num_planes
 
 
 # ---------------------------------------------------------------------------
@@ -348,29 +326,3 @@ def ivf_search(
     )
     probes = ivf_probe_cells(queries, cents, nprobe, id_col, vec_col)
     return ivf_rerank(probes, assigned, k)
-
-
-def cell_budget_exceeded(
-    spark: SparkSession,
-    state_root: str,
-    target_block: int = 512,
-) -> bool:
-    """True when the live index has outgrown its pinned cell count —
-    average cell occupancy beyond ``target_block`` means oversized
-    rerank blocks; the operator answer is a re-index job under more
-    centroids (one assignment pass over the state rows, committed as a
-    new version into a fresh root).  No committed version yet → False."""
-    try:
-        n = VersionedTable(state_root).read(spark).count()
-    except FileNotFoundError:
-        return False
-    # committed state without the sidecar is corruption — raise, don't
-    # report "within budget" (round-11 review finding #1)
-    try:
-        n_cells = len(_read_ivf_centroids(state_root))
-    except FileNotFoundError as exc:
-        raise FileNotFoundError(
-            f"IVF index at {state_root} has committed state but no "
-            "ivf_centroids.json sidecar — the index is corrupt"
-        ) from exc
-    return n > target_block * max(n_cells, 1)

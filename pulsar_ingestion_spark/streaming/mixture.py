@@ -36,16 +36,12 @@ class MixturePlanMaintainer(ReplayGuarded):
         self.max_sources = max_sources
         self._tokens: dict = {}
 
-    def merge(self, batch_df: DataFrame, batch_id: int) -> None:
-        rows = (
-            batch_df.groupBy(self.source_col)
-            .agg(
-                F.sum(
-                    F.size(F.split(F.trim(F.col(self.text_col)), r"\s+"))
-                ).alias("t")
-            )
-            .collect()
+    def summary(self, batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(self.source_col).agg(
+            F.sum(F.size(F.split(F.trim(F.col(self.text_col)), r"\s+"))).alias("t")
         )
+
+    def absorb(self, rows, batch_id: int) -> None:
         # merge into a copy, committed only once the size check passes
         tokens = dict(self._tokens)
         for r in rows:

@@ -180,13 +180,13 @@ class RateMonitor(ReplayGuarded):
         self.trails: dict = {}
         self.silent_for: dict = {}
 
-    def merge(self, batch_df: DataFrame, batch_id: int) -> None:
-        counts = {
-            r["k"]: r["cnt"]
-            for r in batch_df.groupBy(F.col(self.key_col).alias("k"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
+    def summary(self, batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(F.col(self.key_col).alias("k")).agg(
+            F.count(F.lit(1)).alias("cnt")
+        )
+
+    def absorb(self, rows, batch_id: int) -> None:
+        counts = {r["k"]: r["cnt"] for r in rows}
         # update copies, committed only after the alert write
         new_trails = {
             k: deque(t, maxlen=self.window) for k, t in self.trails.items()
@@ -259,53 +259,3 @@ def rate_monitor(
     counts again would warm the trail early and skew ``trail_avg``."""
     return RateMonitor(key_col, alert_log, ratio, window, min_trail,
                        4 * window if evict_after is None else evict_after)
-
-
-def freshness_monitor(
-    key_col: str,
-    ts_col: str,
-    alert_log: str,
-    stale_after_s: float,
-):
-    """foreachBatch target: per-key event-time freshness alarm — the
-    streaming twin of the batch ``dq_freshness`` query.  Tracks each
-    key's high-water event timestamp across batches; a key whose last
-    seen event time lags the GLOBAL high-water mark by more than
-    ``stale_after_s`` flags ``stale`` (the per-source outage a volume
-    monitor only catches if that key's traffic was steady).
-
-    Event-time against event-time (not wall clock): replaying history
-    through the monitor yields the same verdicts the live run gave —
-    the same watermark discipline as the engine's own late-data
-    handling.  State is one max-timestamp per key (O(keys)); per-batch
-    work is one map-side-combined max per key."""
-    high: dict = {}
-
-    def check(batch_df: DataFrame, batch_id: int) -> None:
-        rows = (
-            batch_df.filter(F.col(ts_col).isNotNull())
-            .groupBy(F.col(key_col).alias("k"))
-            .agg(F.max(F.unix_micros(F.col(ts_col))).alias("mx"))
-            .collect()
-        )
-        for r in rows:
-            prev = high.get(r["k"])
-            if prev is None or r["mx"] > prev:
-                high[r["k"]] = r["mx"]
-        if not high:
-            return
-        wm = max(high.values())
-        recs = []
-        for key in sorted(high, key=str):
-            lag_s = (wm - high[key]) / 1_000_000
-            recs.append({
-                "batch_id": int(batch_id),
-                "key": key,
-                "lag_seconds": round(lag_s, 3),
-                "stale": bool(lag_s > stale_after_s),
-            })
-        with open(alert_log, "a") as fh:
-            for rec in recs:
-                fh.write(json.dumps(rec) + "\n")
-
-    return check

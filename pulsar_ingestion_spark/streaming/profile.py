@@ -56,7 +56,7 @@ class ProfileStreamMaintainer(ReplayGuarded):
         self._hll = {c: HllStreamMaintainer(c) for c in self.cols}
         self._mg = {c: MgStreamMaintainer(c, budget=mg_budget) for c in self.cols}
 
-    def merge(self, batch_df: DataFrame, batch_id: int) -> None:
+    def summary(self, batch_df: DataFrame) -> DataFrame:
         cells = batch_df.select(
             *[F.col(c).cast("string").alias(c) for c in self.cols]
         ).unpivot([], self.cols, "col", "value")
@@ -67,11 +67,12 @@ class ProfileStreamMaintainer(ReplayGuarded):
         mg = mg_summaries(
             cells.filter(F.col("value").isNotNull()).withColumnRenamed("value", "token")
         )
-        rows = (
+        return (
             counts.unionByName(regs, allowMissingColumns=True)
             .unionByName(mg, allowMissingColumns=True)
-            .collect()
         )
+
+    def absorb(self, rows, batch_id: int) -> None:
         by_col: dict[str, list] = {c: [] for c in self.cols}
         for r in rows:
             by_col[r["col"]].append(r)
@@ -81,8 +82,8 @@ class ProfileStreamMaintainer(ReplayGuarded):
                 if r["n"] is not None:  # one per column of a non-empty batch
                     n = int(r["n"])
                     self.n_null[c] += n - int(r["nn"])
-            self._hll[c].absorb(r for r in rs if r["bucket"] is not None)
-            self._mg[c].absorb(r for r in rs if r["est"] is not None)
+            self._hll[c].absorb([r for r in rs if r["bucket"] is not None], batch_id)
+            self._mg[c].absorb([r for r in rs if r["est"] is not None], batch_id)
         self.n_rows += n
 
     def profile(self) -> dict[str, dict]:

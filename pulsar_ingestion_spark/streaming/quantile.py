@@ -37,20 +37,21 @@ class QuantileLogbinsStreamMaintainer(ReplayGuarded):
         self._bins: dict = {}  # (ndig, lead2) -> count
         self._n = 0
 
-    def merge(self, batch_df: DataFrame, batch_id: int) -> None:
+    def summary(self, batch_df: DataFrame) -> DataFrame:
         cents = batch_df.filter(F.col(self.col) > 0).select(
             F.floor(F.col(self.col) * 100).cast("bigint").alias("c")
         )
         s = F.col("c").cast("string")
-        rows = (
+        return (
             cents.select(
                 F.length(s).alias("ndig"),
                 F.substring(s, 1, 2).cast("bigint").alias("lead2"),
             )
             .groupBy("ndig", "lead2")
             .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
         )
+
+    def absorb(self, rows, batch_id: int) -> None:
         for r in rows:
             key = (r["ndig"], r["lead2"])
             self._bins[key] = self._bins.get(key, 0) + r["cnt"]

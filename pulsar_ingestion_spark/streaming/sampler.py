@@ -9,10 +9,10 @@ collect the bounded candidate set (k rows × #groups), and merge-prune
 into the driver-held sample.  The priority hash/weight is a pure
 function of the ROW (md5 of the event id over its weight), so the
 merge is IDEMPOTENT: re-delivered rows recompute the identical
-priority and change nothing — at-least-once replay needs no batch-id
-bookkeeping, and the maintained sample is exactly re-runnable (same
-stream prefix → same sample, the property uniform reservoir sampling
-lacks).
+priority and change nothing, whatever batch id carries them, and the
+maintained sample is exactly re-runnable (same stream prefix → same
+sample, the property uniform reservoir sampling lacks).  A replayed id
+is skipped by :mod:`.replay`'s guard without running a job.
 
 Per batch the distributed side is one per-group window bottom-k — the
 same plan as the batch query, so executors keep local candidates and
@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.operators.sketch import md5_lane
+from pulsar_ingestion_spark.streaming.replay import ReplayGuarded
 
 # Priority definition shared with the batch twin (queries_sketch.py
 # sample_weighted_kmv): first 8 md5 hex chars of "ws:<id>" as an
@@ -39,7 +40,7 @@ def weighted_priority(id_col: str, weight_col: str):
     return md5_lane(F.col(id_col), _PRIORITY_PREFIX) / F.col(weight_col)
 
 
-class WeightedSampleMaintainer:
+class WeightedSampleMaintainer(ReplayGuarded):
     """foreachBatch target maintaining a per-group weighted bottom-k
     sample over an append-only stream.
 
@@ -59,18 +60,19 @@ class WeightedSampleMaintainer:
         self.max_groups = max_groups
         self._state: dict = {}
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # idempotent merge: no batch-id guard needed (see module doc)
+    def summary(self, batch_df: DataFrame) -> DataFrame:
         g, i, v = self.group_col, self.id_col, self.weight_col
         pri = weighted_priority(i, v).alias("_pri")
         w = Window.partitionBy(g).orderBy("_pri", i)
-        rows = (
+        return (
             batch_df.filter(F.col(v).isNotNull() & (F.col(v) > 0))
             .select(g, i, v, pri)
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= self.k)
-            .collect()
         )
+
+    def absorb(self, rows, batch_id: int) -> None:
+        g, i, v = self.group_col, self.id_col, self.weight_col
         # merge into a copy and commit it only once the guard passes: a
         # raise leaves the sample untouched
         state = {grp: list(cur) for grp, cur in self._state.items()}

@@ -13,14 +13,15 @@ algebra chosen explicitly (the streaming/profile.py design lesson):
   query reports the exact countDistinct.  The estimate is cut-invariant
   by the max-merge algebra.
 
-Per batch the maintainer runs TWO distributed actions over the
-micro-batch: one fused (dow, hr) counts/sums aggregate (<= 168 rows
-collected) and one (dow, hr, bucket) max-rho collapse (<= 168 x m
-rows).  Driver state is O(168 x m) integers — independent of stream
-volume, the property that makes this a 100 TB monitor.  Calendar parts
-use the batch query's pure epoch-microsecond integer arithmetic
-((day + 4) % 7, hour = (us div 3600e6) % 24) — no engine calendar
-functions, so stream and batch cells agree bit-for-bit.
+Per batch the maintainer runs ONE distributed action over the
+micro-batch: one collect of the union of the fused (dow, hr)
+counts/sums aggregate (<= 168 rows) and the (dow, hr, bucket) max-rho
+collapse (<= 168 x m rows), as the profile does.  Driver state is
+O(168 x m) integers — independent of stream volume, the property that
+makes this a 100 TB monitor.  Calendar parts use the batch query's pure
+epoch-microsecond integer arithmetic ((day + 4) % 7, hour = (us div
+3600e6) % 24) — no engine calendar functions, so stream and batch cells
+agree bit-for-bit.
 """
 
 from __future__ import annotations
@@ -50,7 +51,7 @@ class SeasonalGridMaintainer(ReplayGuarded):
         self.sum_value: dict[tuple[int, int], Decimal] = {}
         self.registers: dict[tuple[int, int], dict[int, int]] = {}
 
-    def merge(self, batch_df: DataFrame, batch_id: int) -> None:
+    def summary(self, batch_df: DataFrame) -> DataFrame:
         cells = batch_df.select(
             ((F.expr(f"unix_micros({self.ts_col}) div 86400000000") + 4) % 7
              ).alias("dow"),
@@ -59,27 +60,26 @@ class SeasonalGridMaintainer(ReplayGuarded):
             F.col(self.user_col).alias("u"),
             F.col(self.value_col).alias("v"),
         )
-        rows = (
-            cells.groupBy("dow", "hr")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("v").cast("decimal(18,4)")).alias("s"),
-            )
-            .collect()
+        counts = cells.groupBy("dow", "hr").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("v").cast("decimal(18,4)")).alias("s"),
         )
-        regs = hll_registers(cells, "u", ("dow", "hr")).collect()
+        regs = hll_registers(cells, "u", ("dow", "hr"))
+        return counts.unionByName(regs, allowMissingColumns=True)
+
+    def absorb(self, rows, batch_id: int) -> None:
         for r in rows:
             key = (int(r["dow"]), int(r["hr"]))
-            self.n_events[key] = self.n_events.get(key, 0) + int(r["n"])
-            self.sum_value[key] = self.sum_value.get(key, Decimal(0)) + (
-                Decimal(str(r["s"])) if r["s"] is not None else Decimal(0)
-            )
-        for r in regs:
-            key = (int(r["dow"]), int(r["hr"]))
-            cell = self.registers.setdefault(key, {})
-            b = int(r["bucket"])
-            if int(r["register"]) > cell.get(b, 0):
-                cell[b] = int(r["register"])
+            if r["n"] is not None:
+                self.n_events[key] = self.n_events.get(key, 0) + int(r["n"])
+                self.sum_value[key] = self.sum_value.get(key, Decimal(0)) + (
+                    Decimal(str(r["s"])) if r["s"] is not None else Decimal(0)
+                )
+            else:
+                cell = self.registers.setdefault(key, {})
+                b = int(r["bucket"])
+                if int(r["register"]) > cell.get(b, 0):
+                    cell[b] = int(r["register"])
 
     def grid(self) -> list[dict]:
         """Snapshot matching the batch query's columns: per cell

@@ -14,11 +14,12 @@ Replay semantics differ by merge algebra, and that difference is the
 design point of this module (tests pin both):
 
 * **HLL merges by register-wise MAX — idempotent.**  An at-least-once
-  replay of a batch re-maxes the same registers and changes nothing; no
-  batch-id bookkeeping is needed.  (Same algebra that makes per-day
-  sketch rollups safe to recompute at 100 TB.)
+  replay of a batch re-maxes the same registers and changes nothing.
+  (Same algebra that makes per-day sketch rollups safe to recompute at
+  100 TB.)  It still runs on :mod:`.replay`'s fold contract, so a
+  replayed id is skipped without running a job.
 * **CMS merges by cell-wise ADD — NOT idempotent.**  A replayed batch
-  would double-count, so it runs behind :mod:`.replay`'s guard.
+  would double-count; :mod:`.replay`'s guard skips it.
 * **MG (Misra-Gries) merges by counter ADD + reduction — NOT
   idempotent** (replay-guarded like CMS), and unlike the other two its
   estimates are LOWER bounds with a provable undercount cap
@@ -52,7 +53,7 @@ from pulsar_ingestion_spark.queries_sketch import mg_merge_reduce, mg_summaries
 from pulsar_ingestion_spark.streaming.replay import ReplayGuarded
 
 
-class HllStreamMaintainer:
+class HllStreamMaintainer(ReplayGuarded):
     """foreachBatch target maintaining a portable HLL over ``col``.
 
     Per batch: one distributed ``groupBy(bucket).max(rho)`` collapses the
@@ -67,11 +68,10 @@ class HllStreamMaintainer:
         self.col = col
         self.registers: dict[int, int] = {}  # bucket -> max rho
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # replay-safe WITHOUT dedup: register max-merge is idempotent
-        self.absorb(hll_registers(batch_df, self.col).collect())
+    def summary(self, batch_df: DataFrame) -> DataFrame:
+        return hll_registers(batch_df, self.col)
 
-    def absorb(self, rows) -> None:
+    def absorb(self, rows, batch_id: int) -> None:
         """Max-merge collected ``(bucket, register)`` rows."""
         for r in rows:
             b = int(r["bucket"])
@@ -103,16 +103,17 @@ class CmsStreamMaintainer(ReplayGuarded):
         self.width = width
         self.counters: dict[tuple[int, int], int] = {}
 
-    def merge(self, batch_df: DataFrame, batch_id: int) -> None:
+    def summary(self, batch_df: DataFrame) -> DataFrame:
         depths = F.array([F.lit(i) for i in range(self.depth)])
-        rows = (
+        return (
             batch_df.filter(F.col(self.col).isNotNull())
             .select(F.explode(depths).alias("depth"), F.col(self.col).alias("k"))
             .select("depth", cms_bucket(F.col("depth"), F.col("k"), self.width).alias("bucket"))
             .groupBy("depth", "bucket")
             .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
         )
+
+    def absorb(self, rows, batch_id: int) -> None:
         for r in rows:
             cell = (int(r["depth"]), int(r["bucket"]))
             self.counters[cell] = self.counters.get(cell, 0) + int(r["cnt"])
@@ -164,16 +165,16 @@ class MgStreamMaintainer(ReplayGuarded):
         self.counters: dict = {}
         self.total = 0
 
-    def merge(self, batch_df: DataFrame, batch_id: int) -> None:
+    def summary(self, batch_df: DataFrame) -> DataFrame:
         toks = batch_df.filter(F.col(self.col).isNotNull()).select(
             F.lit(self.col).alias("col"), F.col(self.col).cast("string").alias("token")
         )
-        # ONE action per batch: the summarizer's NULL-token sentinel rows
-        # carry each partition's exact row count, so the total rides the
-        # same collect as the summaries (<= budget+1 rows per partition)
-        self.absorb(mg_summaries(toks).collect())
+        # the summarizer's NULL-token sentinel rows carry each partition's
+        # exact row count, so the total rides the same collect as the
+        # summaries (<= budget+1 rows per partition)
+        return mg_summaries(toks)
 
-    def absorb(self, summaries) -> None:
+    def absorb(self, summaries, batch_id: int) -> None:
         """Merge collected ``(token, est)`` rows, sentinels included."""
         add: dict = {}
         n = 0

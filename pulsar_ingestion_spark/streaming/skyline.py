@@ -8,8 +8,8 @@ it suffices to compute the BATCH skyline distributed, collect it
 (bounded by the frontier size, itself bounded by the x-domain), and
 merge-prune into the driver-held frontier.  Like HLL register
 max-merge, the merge is IDEMPOTENT: re-delivering points already on or
-behind the frontier changes nothing, so at-least-once replay needs no
-batch-id bookkeeping.
+behind the frontier changes nothing, whatever batch id carries them; a
+replayed id is skipped by :mod:`.replay`'s guard without running a job.
 
 Orientation matches the batch query: MINIMIZE x, MAXIMIZE y.  The
 frontier is kept as the set of distinct (x, y) value pairs (the batch
@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pulsar_ingestion_spark.streaming.replay import ReplayGuarded
 
 
 def prune_frontier(points: set[tuple]) -> set[tuple]:
@@ -47,7 +49,7 @@ def prune_frontier(points: set[tuple]) -> set[tuple]:
     return out
 
 
-class SkylineStreamMaintainer:
+class SkylineStreamMaintainer(ReplayGuarded):
     """foreachBatch target maintaining the (min x, max y) Pareto
     frontier over an append-only stream of (x_col, y_col) rows."""
 
@@ -56,16 +58,16 @@ class SkylineStreamMaintainer:
         self.y_col = y_col
         self._frontier: set[tuple] = set()
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # idempotent merge: no batch-id guard needed (see module doc)
-        rows = (
+    def summary(self, batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.filter(
                 F.col(self.x_col).isNotNull() & F.col(self.y_col).isNotNull()
             )
             .groupBy(self.x_col)
             .agg(F.max(self.y_col).alias("_y"))
-            .collect()
         )
+
+    def absorb(self, rows, batch_id: int) -> None:
         pts = {(r[self.x_col], r["_y"]) for r in rows}
         self._frontier = prune_frontier(self._frontier | pts)
 

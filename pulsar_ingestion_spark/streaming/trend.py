@@ -38,8 +38,8 @@ class TrendMonitor(ReplayGuarded):
         self.stn = 0        # SUM(t * n)
         self.st2n = 0       # SUM(t^2 * n)
 
-    def merge(self, batch_df: DataFrame, batch_id: int) -> None:
-        cell = (
+    def summary(self, batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 (F.expr(f"unix_micros({self.ts_col}) div 3600000000") % 24
                  ).alias("t"),
@@ -48,9 +48,10 @@ class TrendMonitor(ReplayGuarded):
             )
             .groupBy("t")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("s").alias("r"))
-            .collect()
         )
-        for row in cell:
+
+    def absorb(self, rows, batch_id: int) -> None:
+        for row in rows:
             t, n, r = int(row["t"]), int(row["n"]), int(row["r"])
             self.n += n
             self.r += r

@@ -14,7 +14,6 @@ from pulsar_ingestion_spark.operators.dedup import (
 )
 from pulsar_ingestion_spark.operators.multimodal import (
     extract_features,
-    media_dedup,
     resize_spec,
     synthesize_media,
 )
@@ -331,8 +330,6 @@ def test_multimodal_pipeline(spark):
     for r in rs:
         assert max(r["target_width"], r["target_height"]) <= 20
         assert r["target_width"] <= r["width"] and r["target_height"] <= r["height"]
-    dd = media_dedup(media)
-    assert dd.count() == 20  # all distinct payloads
 
 
 def test_lss_clusters_match_min_label_on_chain(spark):

@@ -163,11 +163,36 @@ def test_struct_extremes_negate_only_behind_a_null_flag(plans):
     assert not offenders, sorted(offenders)
 
 
+# The ``.collect(`` call sites under streaming/ off the fold contract:
+# the contract's own collect, the drift monitor's stateless reference
+# histogram, and the dimension snapshot that commits the batch's schema
+# with its rows.
+STREAMING_COLLECTS = {
+    ("replay.py", "__call__"),
+    ("monitor.py", "histogram"),
+    ("dim_enrich.py", "apply_dim_batch"),
+}
+
+_ACTIONS = {"collect", "count", "first", "take", "head", "toPandas", "foreach", "write"}
+
+
+def _subclasses(cls):
+    for sub in cls.__subclasses__():
+        yield sub
+        yield from _subclasses(sub)
+
+
 def test_one_replay_guard_for_add_merge_maintainers(tmp_path):
-    """The batch-id replay rule lives in ``streaming/replay.py`` alone: no
-    other streaming module compares ``batch_id <=`` or keeps its own
-    watermark, and every ADD-merge maintainer is a ``ReplayGuarded``."""
+    """The batch-id replay rule and the one collect live in
+    ``streaming/replay.py`` alone: no other streaming module compares
+    ``batch_id <=`` or keeps its own watermark, every driver-state
+    maintainer is a ``ReplayGuarded``, no subclass defines ``merge`` or
+    ``__call__``, no ``summary`` or ``absorb`` body runs a DataFrame
+    action, and ``.collect(`` appears only at ``STREAMING_COLLECTS``."""
+    import ast
+    import inspect
     import re
+    import textwrap
     from pathlib import Path
 
     from pulsar_ingestion_spark.streaming import (
@@ -175,8 +200,10 @@ def test_one_replay_guard_for_add_merge_maintainers(tmp_path):
         monitor,
         profile,
         quantile,
+        sampler,
         seasonal,
         sketches,
+        skyline,
         trend,
     )
     from pulsar_ingestion_spark.streaming.replay import ReplayGuarded
@@ -191,6 +218,7 @@ def test_one_replay_guard_for_add_merge_maintainers(tmp_path):
     ]
     assert not offenders, offenders
     maintainers = [
+        sketches.HllStreamMaintainer("k"),
         sketches.CmsStreamMaintainer("k"),
         sketches.MgStreamMaintainer("k"),
         quantile.QuantileLogbinsStreamMaintainer("v"),
@@ -199,8 +227,31 @@ def test_one_replay_guard_for_add_merge_maintainers(tmp_path):
         seasonal.SeasonalGridMaintainer(),
         profile.ProfileStreamMaintainer(["k"]),
         monitor.rate_monitor("k", str(tmp_path / "rate.jsonl")),
+        skyline.SkylineStreamMaintainer("x", "y"),
+        sampler.WeightedSampleMaintainer("g", "i", "w"),
     ]
     assert all(isinstance(m, ReplayGuarded) for m in maintainers)
+
+    subclasses = {c for c in _subclasses(ReplayGuarded)
+                  if c.__module__.startswith("pulsar_ingestion_spark.")}
+    assert {type(m) for m in maintainers} <= subclasses
+    for cls in subclasses:
+        assert not {"merge", "__call__"} & set(vars(cls)), cls.__name__
+        for hook in ("summary", "absorb"):
+            tree = ast.parse(textwrap.dedent(inspect.getsource(vars(cls)[hook])))
+            actions = {n.attr for n in ast.walk(tree)
+                       if isinstance(n, ast.Attribute) and n.attr in _ACTIONS
+                       and not (isinstance(n.value, ast.Name) and n.value.id == "F")}
+            assert not actions, (cls.__name__, hook, actions)
+
+    collects = set()
+    for path in sorted(root.glob("*.py")):
+        for fn, _ in _functions(path):
+            for node in ast.walk(fn):
+                if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "collect"):
+                    collects.add((path.name, fn.name))
+    assert collects == STREAMING_COLLECTS, sorted(collects ^ STREAMING_COLLECTS)
 
 
 # The one lineage cut outside operators/iterate.py: graph_closeness_centrality
@@ -300,3 +351,62 @@ def test_fixpoint_query_job_ceilings(spark):
         if jobs > ceiling:
             over[qid] = (jobs, ceiling)
     assert not over, over
+
+
+# Public top-level defs that no code outside tests/ calls, kept on
+# purpose.  Every other uncalled def is deleted (ROADMAP direction 10).
+KEEP_UNCALLED = {
+    # the paper's surface: the Filterer's routed writes and the legacy
+    # translator family's event-type split
+    "operators/filterer.py::route_to_tenant_dirs",
+    "operators/filterer.py::prepare_kafka_routing",
+    "operators/legacy.py::route_by_event_type",
+    # the record accounting reads and attaches these (ROADMAP direction 9)
+    "streaming/metrics.py::attach_metrics",
+    "streaming/metrics.py::throughput_summary",
+    "streaming/metrics.py::read_metrics",
+    "streaming/monitor.py::read_alerts",
+    "streaming/monitor.py::rate_monitor",
+    # the query side of the streamed IVF index
+    "streaming/ann_index.py::ivf_search",
+    # operators with tests and no caller yet, not yet decided on
+    "operators/dedup.py::release_cached_intermediates",
+    "operators/dedup.py::dedup_minhash_lsh",
+    "operators/similarity.py::knn_ivf",
+    "operators/storage.py::compact_partitioned_output",
+    "operators/storage.py::overwrite_tenant_partitions",
+    "operators/storage.py::upsert_latest",
+}
+
+
+def test_every_public_def_has_a_caller():
+    """Every public top-level def of the package (registered queries
+    and ``q_*`` aside) is named by some non-test module of the repo, its
+    own included (a package ``__init__`` re-export does not count), or
+    is on ``KEEP_UNCALLED``."""
+    import ast
+    from pathlib import Path
+
+    import pulsar_ingestion_spark as pkg
+
+    pkg_root = Path(pkg.__file__).parent
+    repo = pkg_root.parent
+    named = set()
+    for path in repo.rglob("*.py"):
+        rel = path.relative_to(repo).parts
+        if rel[0] == "tests" or rel[0].startswith(".") or path.name == "__init__.py":
+            continue
+        for n in ast.walk(ast.parse(path.read_text())):
+            if isinstance(n, ast.Name):
+                named.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                named.add(n.attr)
+            elif isinstance(n, ast.alias):
+                named.add(n.name.rsplit(".", 1)[-1])
+    uncalled = set()
+    for path in sorted(pkg_root.rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if (isinstance(node, ast.FunctionDef) and not node.decorator_list
+                    and not node.name.startswith(("_", "q_")) and node.name not in named):
+                uncalled.add(f"{path.relative_to(pkg_root).as_posix()}::{node.name}")
+    assert uncalled == KEEP_UNCALLED, sorted(uncalled ^ KEEP_UNCALLED)

@@ -95,28 +95,6 @@ def test_topk_uses_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan  # never a global sort for LIMIT k
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Same-bucketed tables join with zero shuffle (SCALE.md §1)."""
-    from pulsar_ingestion_spark.operators.storage import bucketed_join, write_bucketed
-    from pulsar_ingestion_spark.session import load_tables
-
-    t = load_tables(spark, SF)
-    write_bucketed(t["orders"], "orders_b", "o_custkey", num_buckets=4)
-    write_bucketed(
-        t["customer"].withColumnRenamed("c_custkey", "o_custkey"), "customer_b", "o_custkey", 4
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force non-broadcast
-    try:
-        j = bucketed_join(spark, "orders_b", "customer_b", on="o_custkey")
-        plan = _plan(j)
-        assert "Exchange" not in plan, plan
-        assert j.count() == t["orders"].count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10m")
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS customer_b")
-
-
 def test_fleet_dashboard_broadcasts_dim(spark):
     """The composite translate→enrich→rollup plan must broadcast the
     customer dim (never shuffle the fact side for the join)."""
@@ -560,4 +538,3 @@ def test_dynamic_partition_pruning_fires(spark, tmp_path):
         assert "dynamicpruning" in plan.lower(), plan
     finally:
         spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", prev)
-

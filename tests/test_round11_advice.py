@@ -121,11 +121,8 @@ def test_cosine_kernel_abnormal_rows_match_hof(spark):
 def test_ann_search_empty_index_returns_zero_rows(spark, tmp_path):
     """A search racing the first micro-batch (no committed version yet)
     returns an empty frame with the normal schema instead of raising
-    FileNotFoundError; the plane-budget probe reports False."""
-    from pulsar_ingestion_spark.streaming.ann_index import (
-        ann_search,
-        plane_budget_exceeded,
-    )
+    FileNotFoundError."""
+    from pulsar_ingestion_spark.streaming.ann_index import ann_search
 
     queries = spark.createDataFrame(
         [(1, [0.1] * 4)], "vec_id long, embedding array<float>"
@@ -133,9 +130,6 @@ def test_ann_search_empty_index_returns_zero_rows(spark, tmp_path):
     out = ann_search(spark, str(tmp_path / "never-committed"), queries, dim=4)
     assert out.columns == ["query_id", "cand_id", "cos_sim", "rank"]
     assert out.count() == 0
-    assert plane_budget_exceeded(
-        spark, str(tmp_path / "never-committed"), num_planes=4
-    ) is False
 
 
 def test_watermark_steal_restore_falls_back_to_rename(tmp_path, monkeypatch):

@@ -212,12 +212,11 @@ def test_banded_default_seed_guard_fires_for_wide_band_counts(spark):
 
 def test_ivf_missing_sidecar_with_committed_state_raises(spark, tmp_path):
     """Round-11 review finding #1: committed IVF state WITHOUT its
-    centroid sidecar is corruption — search and the budget probe must
-    raise, not masquerade as an empty index."""
+    centroid sidecar is corruption — search must raise, not masquerade
+    as an empty index."""
     import os
 
     from pulsar_ingestion_spark.streaming.ann_index import (
-        cell_budget_exceeded,
         ivf_search,
         stream_ivf_index,
         _ivf_centroid_file,
@@ -234,8 +233,6 @@ def test_ivf_missing_sidecar_with_committed_state_raises(spark, tmp_path):
     q = emb.filter("vec_id < 3")
     with pytest.raises(FileNotFoundError, match="corrupt"):
         ivf_search(spark, root, q).count()
-    with pytest.raises(FileNotFoundError, match="corrupt"):
-        cell_budget_exceeded(spark, root)
 
 
 def test_ivf_sidecar_create_is_atomic_or_compares(spark, tmp_path, monkeypatch):

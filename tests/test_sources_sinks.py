@@ -412,14 +412,17 @@ def test_drop_table_location_is_database_aware(spark, tmp_path):
     (ADVICE r2)."""
     import os
 
-    from pulsar_ingestion_spark.operators.storage import write_bucketed
+    from pulsar_ingestion_spark.operators.storage import write_cmf_warehouse
 
-    df = spark.range(5).withColumnRenamed("id", "k")
+    def write(df, table):
+        write_cmf_warehouse(df, table, date_col="d", key_col="k", num_buckets=2)
+
+    df = spark.range(5).withColumnRenamed("id", "k").withColumn("d", F.lit("2024-01-01"))
     spark.sql("CREATE DATABASE IF NOT EXISTS auxdb")
-    write_bucketed(df, "auxdb.samename", "k", num_buckets=2)
-    write_bucketed(df, "samename", "k", num_buckets=2)
+    write(df, "auxdb.samename")
+    write(df, "samename")
     # re-writing the db-qualified table must leave the default-db twin alive
-    write_bucketed(df.withColumn("k", df["k"] + 10), "auxdb.samename", "k", num_buckets=2)
+    write(df.withColumn("k", df["k"] + 10), "auxdb.samename")
     assert spark.table("samename").count() == 5
     assert {r["k"] for r in spark.table("auxdb.samename").collect()} == set(range(10, 15))
     from urllib.parse import urlparse

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.plans.pipeline import PipelineSpec, SourceSpec, run_pipeline
 from pulsar_ingestion_spark.streaming.stateful import ignition_transitions
-from pulsar_ingestion_spark.streaming.windows import tumbling_agg, watermark_dedup
 
 
 def _write_jsonl(path, docs):
@@ -18,67 +17,6 @@ def _write_jsonl(path, docs):
     with open(path / "part-0.jsonl", "w") as fh:
         for d in docs:
             fh.write((d if isinstance(d, str) else json.dumps(d)) + "\n")
-
-
-def _events_stream(spark, sf_dir):
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    schema = batch.schema
-    # streaming file source needs a directory: glob-filter to the one file
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return batch, stream
-
-
-def _run_to_memory(df, name):
-    q = df.writeStream.format("memory").queryName(name).outputMode("complete").trigger(
-        availableNow=True
-    ).start()
-    q.awaitTermination(120)
-    return q
-
-
-def test_tumbling_agg_stream_matches_batch(spark, sf_dir):
-    batch, stream = _events_stream(spark, sf_dir)
-    # Older testdata stored ts as TIMESTAMP(NANOS) (reads as long on the
-    # streaming path too) — convert only when the scan surfaces a long.
-    from pyspark.sql.types import LongType
-
-    def to_ts(df):
-        if isinstance(df.schema["ts"].dataType, LongType):
-            return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    expected = {
-        (r["window_start"], r["cnt"])
-        for r in tumbling_agg(to_ts(batch), "1 hour").collect()
-    }
-    _run_to_memory(tumbling_agg(to_ts(stream), "1 hour", watermark="1 hour"), "tumbling")
-    got = {
-        (r["window_start"], r["cnt"])
-        for r in spark.sql("SELECT * FROM tumbling").collect()
-    }
-    assert got == expected and len(got) > 0
-
-
-def test_watermark_dedup_stream(spark, tmp_path):
-    docs = [
-        {"k": "a", "ts": "2024-01-01T10:00:00", "v": 1},
-        {"k": "a", "ts": "2024-01-01T10:00:10", "v": 2},  # dup key within watermark
-        {"k": "b", "ts": "2024-01-01T10:01:00", "v": 3},
-    ]
-    _write_jsonl(tmp_path / "in", docs)
-    schema = "k string, ts timestamp, v long"
-    stream = spark.readStream.schema(schema).json(str(tmp_path / "in"))
-    deduped = watermark_dedup(stream, ["k"], ts_col="ts", watermark="1 hour")
-    q = (
-        deduped.writeStream.format("memory").queryName("dedup_t").outputMode("append")
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT k FROM dedup_t").collect()
-    assert sorted(r["k"] for r in rows) == ["a", "b"]
 
 
 def test_stateful_transitions_stream_matches_batch(spark, tmp_path):
@@ -313,41 +251,6 @@ def test_stream_asof_join(spark, tmp_path):
     flushed = {(r["k"], r["asof_val"]) for r in out}
     # the as-of value at 10:30 is the 10:00 dim state — not 9:00, not 11:00
     assert ("v1", "current") in flushed
-
-
-def test_dedup_state_bounded_by_watermark(spark, tmp_path):
-    """Soak: dropDuplicatesWithinWatermark state must NOT grow with total
-    history — only with keys inside the watermark horizon.  Three passes,
-    each a day later with 50 fresh keys; final state ≈ one day's keys,
-    not 150."""
-    (tmp_path / "in").mkdir()
-
-    def drop_files(day: int):
-        lines = [
-            json.dumps({"k": f"d{day}-k{i}", "ts": f"2024-01-{10+day:02d}T10:00:{i % 60:02d}", "v": i})
-            for i in range(50)
-        ]
-        (tmp_path / "in" / f"part-{day}.jsonl").write_text("\n".join(lines) + "\n")
-
-    state_rows = []
-    for day in range(3):
-        drop_files(day)
-        stream = spark.readStream.schema("k string, ts timestamp, v long").json(str(tmp_path / "in"))
-        deduped = watermark_dedup(stream, ["k"], ts_col="ts", watermark="1 hour")
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", str(tmp_path / "out"))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        progress = [p for p in q.recentProgress if p.get("stateOperators")]
-        if progress:
-            state_rows.append(progress[-1]["stateOperators"][0]["numRowsTotal"])
-    assert spark.read.parquet(str(tmp_path / "out")).count() == 150  # every key emitted once
-    # bounded: final state holds ~the last day's keys, not all 150
-    assert state_rows[-1] <= 60, state_rows
 
 
 def test_stream_static_enrichment_join(spark, tmp_path):
@@ -906,49 +809,6 @@ def test_streaming_rate_monitor_via_real_stream(spark, tmp_path):
     assert [r["n"] for r in recs] == [10, 10, 30]
     assert [r["alert"] for r in recs] == [False, False, True]
     assert recs[2]["burst"] and recs[2]["trail_avg"] == 10
-
-
-def test_streaming_freshness_monitor_flags_lagging_key(spark, tmp_path):
-    """Freshness alarm (round 8, streaming twin of dq_freshness): a key
-    that stops advancing its event-time high-water mark goes stale once
-    the global watermark moves past the threshold; it recovers when
-    fresh events arrive."""
-    from pulsar_ingestion_spark.streaming.monitor import (
-        freshness_monitor,
-        read_alerts,
-    )
-
-    log = str(tmp_path / "fresh.jsonl")
-    check = freshness_monitor("k", "ts", log, stale_after_s=3600)
-
-    def batch(rows):
-        return spark.createDataFrame(rows, "k string, ts timestamp")
-
-    import datetime as dt
-
-    t0 = dt.datetime(2026, 1, 1, 0, 0, 0)
-
-    # both keys current
-    check(batch([("a", t0), ("b", t0)]), 0)
-    recs0 = {r["key"]: r for r in read_alerts(log) if r["batch_id"] == 0}
-    assert not recs0["a"]["stale"] and not recs0["b"]["stale"]
-
-    # only a advances 2h: b is now 2h behind the watermark -> stale
-    check(batch([("a", t0 + dt.timedelta(hours=2))]), 1)
-    recs1 = {r["key"]: r for r in read_alerts(log) if r["batch_id"] == 1}
-    assert not recs1["a"]["stale"]
-    assert recs1["b"]["stale"] and recs1["b"]["lag_seconds"] == 7200.0
-
-    # b catches up -> recovers
-    check(batch([("b", t0 + dt.timedelta(hours=2))]), 2)
-    recs2 = {r["key"]: r for r in read_alerts(log) if r["batch_id"] == 2}
-    assert not recs2["b"]["stale"] and recs2["b"]["lag_seconds"] == 0.0
-
-    # event-time discipline: an out-of-order OLD event must not regress
-    # b's high-water mark
-    check(batch([("b", t0)]), 3)
-    recs3 = {r["key"]: r for r in read_alerts(log) if r["batch_id"] == 3}
-    assert not recs3["b"]["stale"]
 
 
 def test_pipeline_publish_relay_e2e(spark, tmp_path):

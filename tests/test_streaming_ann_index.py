@@ -15,7 +15,6 @@ from pulsar_ingestion_spark.operators.similarity import knn_lsh
 from pulsar_ingestion_spark.operators.versioned import VersionedTable
 from pulsar_ingestion_spark.streaming.ann_index import (
     ann_search,
-    plane_budget_exceeded,
     stream_ann_index,
 )
 
@@ -130,19 +129,6 @@ def test_ann_index_real_stream_available_now(spark, tmp_path):
         ).collect()
     }
     assert got == _batch_truth(spark)
-
-
-def test_plane_budget_probe(spark, tmp_path):
-    """plane_budget_exceeded flips when the corpus outgrows the pinned
-    plane count (re-index signal)."""
-    root = str(tmp_path / "idx")
-    _index_cut(spark, root, 1)
-    n = VersionedTable(root).read(spark).count()
-    # generous pinned planes: within budget
-    assert not plane_budget_exceeded(spark, root, num_planes=PLANES,
-                                     target_block=max(1, n))
-    # tiny target block: the same corpus needs more than 1 plane
-    assert plane_budget_exceeded(spark, root, num_planes=1, target_block=1)
 
 
 def test_ann_index_survives_vacuum(spark, tmp_path):

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from pulsar_ingestion_spark.operators.similarity import knn_ivf_pinned
 from pulsar_ingestion_spark.operators.versioned import VersionedTable
 from pulsar_ingestion_spark.streaming.ann_index import (
-    cell_budget_exceeded,
     ivf_search,
     stream_ivf_index,
 )
@@ -151,18 +150,10 @@ def test_ivf_centroid_pinning_rejects_drift(spark, tmp_path):
 
 
 def test_ivf_cell_budget_probe_and_empty_index(spark, tmp_path):
-    cents = _cents(spark)
-    root = str(tmp_path / "idx")
-    # empty index: search returns zero rows with the normal schema,
-    # budget probe is False
+    # empty index: search returns zero rows with the normal schema
     out = ivf_search(spark, str(tmp_path / "never"), _queries(spark))
     assert out.columns == ["query_id", "cand_id", "cos_sim", "rank"]
     assert out.count() == 0
-    assert cell_budget_exceeded(spark, str(tmp_path / "never")) is False
-    _index_cut(spark, root, cents, 1)
-    n = VersionedTable(root).read(spark).count()
-    assert not cell_budget_exceeded(spark, root, target_block=n)  # within budget
-    assert cell_budget_exceeded(spark, root, target_block=max(1, n // (2 * NCELLS)))
 
 
 def test_ivf_index_survives_vacuum(spark, tmp_path):

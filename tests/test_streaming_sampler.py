@@ -1,8 +1,8 @@
 """Streaming weighted bottom-k sampler (streaming/sampler.py): the
 stream-maintained sample must equal the batch sample_weighted_kmv
-query for ANY micro-batch cut; the merge must be idempotent under
-replay (no batch-id guard by algebra); the group-cardinality guard must
-fire."""
+query for ANY micro-batch cut; a replayed id is skipped, and rows
+re-delivered under a new id change nothing (the merge is idempotent by
+algebra); the group-cardinality guard must fire."""
 
 from __future__ import annotations
 
@@ -58,8 +58,13 @@ def test_stream_sample_replay_idempotent(spark, tmp_path):
     m = WeightedSampleMaintainer("event_type", "event_id", "value", k=5)
     _stream_events(spark, tmp_path, m, 2, tag="a")
     once = m.sample()
-    # replay the whole stream again into the SAME maintainer
+    # replay the whole stream again into the SAME maintainer: its ids
+    # restart at 0, so the guard skips them
     _stream_events(spark, tmp_path, m, 2, tag="b")
+    assert m.sample() == once
+    # the same rows under a new id merge, and change nothing by algebra
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    m(ev, m.last_batch + 1)
     assert m.sample() == once
 
 

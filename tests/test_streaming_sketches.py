@@ -78,16 +78,16 @@ def test_hll_stream_equals_batch_query_any_cut(spark, tmp_path):
 
 
 def test_hll_replay_is_idempotent_by_algebra(spark, tmp_path):
-    """Register max-merge makes at-least-once replay a no-op — no
-    batch-id bookkeeping needed (the property that makes per-partition
-    HLL rollups recomputable at 100 TB)."""
+    """Register max-merge makes a re-delivery a no-op even under a new
+    batch id (the property that makes per-partition HLL rollups
+    recomputable at 100 TB); a replayed id is skipped outright."""
     from pulsar_ingestion_spark.streaming.sketches import HllStreamMaintainer
 
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select("user_id")
     m = HllStreamMaintainer("user_id")
     m(ev, 0)
     before = (m.estimate(), dict(m.registers))
-    m(ev, 0)  # replay
+    m(ev, 0)  # replay, skipped by the guard
     m(ev, 1)  # same data under a new id — still a no-op for max-merge
     assert (m.estimate(), m.registers) == before
 

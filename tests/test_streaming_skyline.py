@@ -1,7 +1,7 @@
 """Streaming skyline maintenance (streaming/skyline.py): the stream-
 maintained frontier must equal the batch rank_skyline_2d query's
-distinct (price, size) pairs for any micro-batch cut; the merge must be
-idempotent under replay (no batch-id guard by algebra); and the
+distinct (price, size) pairs for any micro-batch cut; a replayed id is
+skipped and the merge is idempotent by algebra under a new id; and the
 frontier invariant (y strictly increasing along ascending x) must hold
 after every merge."""
 
@@ -59,7 +59,7 @@ def test_stream_frontier_invariant_and_replay_idempotence(spark):
     # invariant: y strictly increases along ascending x
     for (x1, y1), (x2, y2) in zip(front, front[1:]):
         assert x1 < x2 and y1 < y2
-    # replay (same id) and re-delivery (new id): both no-ops by algebra
+    # replay (same id, skipped) and re-delivery (new id, a no-op by algebra)
     m(part, 0)
     m(part, 1)
     assert m.frontier() == front
