@@ -11,13 +11,15 @@ The scale story (100 TB of documents):
   * n-gram Jaccard (exact) is the verifier on LSH candidates, never run
     all-pairs at scale.
 
-Everything below is built-ins (explode/join/groupBy) or MLlib; no Python
-row loops.
+Everything below is built-ins (explode/join/groupBy); no Python row
+loops.  The signature and shingle relations persisted before banding
+(the round-8 re-plan) are not unpersisted inside the operators, because
+the returned plan still reads them: callers free them with
+``spark.catalog.clearCache()`` after the terminal action, as bench.py,
+perfbench and the tools do between queries.
 """
 
 from __future__ import annotations
-
-import threading
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -25,49 +27,6 @@ from pyspark.sql import functions as F
 from pulsar_ingestion_spark.functions.text import doc_fingerprint, shingles, words
 from pulsar_ingestion_spark.operators.iterate import ConvergenceError, fixpoint, same_count  # noqa: F401
 from pulsar_ingestion_spark.operators.sketch import md5_lane
-
-
-# Persisted intermediates created by the operators below (signature /
-# shingle relations materialized before banding — the round-8 re-plan).
-# They are deliberately NOT unpersisted inside the operator: the returned
-# DataFrame's plan still reads them, so the terminal action needs them
-# live.  CALLERS OWN CLEANUP (ADVICE r8): after the terminal action, call
-# :func:`release_cached_intermediates` (or ``spark.catalog.clearCache()``)
-# — bench.py does this between phases — so a long-lived session running
-# many queries doesn't accumulate dead cached relations.
-_PERSISTED: list[DataFrame] = []
-_PERSISTED_LOCK = threading.Lock()
-
-
-def _still_cached(df: DataFrame) -> bool:
-    try:
-        lvl = df.storageLevel
-        return lvl.useMemory or lvl.useDisk
-    except Exception:  # session torn down — nothing to release
-        return False
-
-
-def _tracked_persist(df: DataFrame) -> DataFrame:
-    df.persist()
-    with _PERSISTED_LOCK:
-        # opportunistic trim (ADVICE r9): entries freed out-of-band
-        # (spark.catalog.clearCache(), session restart) would otherwise
-        # pin dead DataFrame references forever in a long-lived session
-        _PERSISTED[:] = [d for d in _PERSISTED if _still_cached(d)]
-        _PERSISTED.append(df)
-    return df
-
-
-def release_cached_intermediates() -> int:
-    """Unpersist every intermediate this module has persisted; returns
-    how many were released.  Safe to call at any quiesce point — the
-    next use of an operator simply re-persists."""
-    with _PERSISTED_LOCK:
-        drained, _PERSISTED[:] = list(_PERSISTED), []
-    n = len(drained)
-    for d in drained:
-        d.unpersist()
-    return n
 
 
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -107,7 +66,7 @@ def ngram_jaccard_pairs(
     sh = df.select(
         F.col(id_col).alias("id"), shingles(F.col(text_col), n).alias("sh")
     ).withColumn("sh_size", F.size("sh"))
-    sh = _tracked_persist(sh)
+    sh = sh.persist()
     # Join on a 64-bit hash of the shingle, not the string: ~8 bytes vs
     # ~(3 words) per shuffle key.  xxhash64 collisions (~1e-11 at millions
     # of distinct shingles) could at worst inflate one intersection count
@@ -177,7 +136,7 @@ def ngram_containment_pairs(
     sh = df.select(
         F.col(id_col).alias("id"), shingles(F.col(text_col), n).alias("sh")
     ).withColumn("sh_size", F.size("sh"))
-    sh = _tracked_persist(sh)
+    sh = sh.persist()
     exploded = sh.select(
         "id", "sh_size", F.explode(F.transform("sh", lambda g: F.xxhash64(g))).alias("gram_h")
     )
@@ -239,25 +198,19 @@ def _banded_candidates(
     seeds = MINHASH_SEEDS if seeds is None else seeds
     if len(seeds) < 2 * num_bands:
         raise ValueError(f"need >= {2 * num_bands} seeds for {num_bands} bands of 2")
-    sigs = _tracked_persist(
-        minhash_signatures(df, id_col, text_col, n=n, hash=hash, seeds=seeds)
-    )
+    sigs = minhash_signatures(df, id_col, text_col, n=n, hash=hash, seeds=seeds).persist()
     if hash == "md5":
         bvals = [
             F.concat(F.col(f"sig_{2 * b}"), F.col(f"sig_{2 * b + 1}"))
             for b in range(num_bands)
         ]
-    elif hash == "km_md5":
-        # both member signatures are < 2^31 (27-bit lanes + 7x multiplier
-        # headroom), so one long holds the pair exactly — 8-byte shuffle
-        # keys, engine-portable as (sig<<31) + sig in DuckDB too
+    else:
+        # km_md5: both member signatures are < 2^31 (27-bit lanes + 7x
+        # multiplier headroom), so one long holds the pair exactly —
+        # 8-byte shuffle keys, engine-portable as (sig<<31) + sig in
+        # DuckDB too
         bvals = [
             F.shiftleft(F.col(f"sig_{2 * b}"), 31) + F.col(f"sig_{2 * b + 1}")
-            for b in range(num_bands)
-        ]
-    else:
-        bvals = [
-            F.xxhash64(F.col(f"sig_{2 * b}"), F.col(f"sig_{2 * b + 1}"))
             for b in range(num_bands)
         ]
     bands = sigs.select(
@@ -431,10 +384,11 @@ def minhash_ensemble_containment(
     )
     # persisted: BOTH sides of the self-join read the capped relation —
     # without it the cap window (shuffle + per-cell sort) runs twice
-    bands1 = _tracked_persist(
+    bands1 = (
         bands1.withColumn("rn", F.row_number().over(capw))
         .filter(F.col("rn") <= ENSEMBLE_BUCKET_CAP)
         .drop("rn")
+        .persist()
     )
     a1, b1 = bands1.alias("a"), bands1.alias("b")
     cand1 = a1.join(
@@ -466,11 +420,9 @@ def minhash_signatures(
       Cost: k MessageDigest calls + hex materialization PER SHINGLE —
       measured ~800 md5/doc on the banded pipeline, the dominant CPU at
       the 10× scale point (SCALE.md §6f).
-    * ``"xxhash64"`` — Spark's codegen'd 64-bit hash, seeded per signature
-      via a literal prefix column: one JVM-native long op per shingle, no
-      string round-trip.  Use for engine-side blocking when the oracle
-      compares plain values or rows-only (precedent: text_line_dedup,
-      text_bigram_logprob's xxhash64 shuffle keys).
+    * ``"km_md5"`` — portable Kirsch-Mitzenmacher: k minhashes from two
+      27-bit md5 lanes per shingle, long-typed and also recomputable in
+      DuckDB (dedup_minhash_fast).
 
     Evaluation plan (round-8 scale fix, measured at the 10× point): the
     naive form — k × ``array_min(transform(w, hash))`` — runs every hash
@@ -486,13 +438,13 @@ def minhash_signatures(
     form (same hash of the same strings), so the md5 family's DuckDB
     oracles are unchanged.  Measured: 12.5 s → ~2 s (md5) at 10× sf0.1.
     """
-    if hash not in ("md5", "xxhash64", "km", "km_md5"):
+    if hash not in ("md5", "km_md5"):
         raise ValueError(f"unknown minhash hash family {hash!r}")
     seeds = MINHASH_SEEDS if seeds is None else seeds
-    base = _tracked_persist(df.select(
+    base = df.select(
         F.col(id_col).alias("doc_id"),
         shingles(F.col(text_col), n).alias("w"),
-    ))
+    ).persist()
 
     exploded = base.select("doc_id", F.explode_outer("w").alias("g"))
     if hash == "km_md5":
@@ -517,31 +469,7 @@ def minhash_signatures(
               for i in range(len(seeds))]
         )
         return base.join(sigs_flat, "doc_id")
-    if hash == "km":
-        # Kirsch-Mitzenmacher: k minhash functions from TWO codegen
-        # hashes — g_i(x) = h1(x) + i·h2(x), both masked to 31 bits so
-        # the arithmetic can never overflow a long under ANSI mode
-        # (h1 + 7·h2 < 2^34).  The standard double-hashing result says
-        # the family behaves like k independent hashes for
-        # Bloom/minhash purposes; the verify stage keeps precision 1
-        # regardless.  CPU: 2 hashes + k multiply-adds per shingle
-        # instead of k hashes.
-        mask = (1 << 31) - 1
-        h1 = F.xxhash64(F.lit("km1"), F.col("g")).bitwiseAND(F.lit(mask))
-        h2 = F.xxhash64(F.lit("km2"), F.col("g")).bitwiseAND(F.lit(mask))
-        keyed = exploded.select("doc_id", h1.alias("h1"), h2.alias("h2"))
-        sigs_flat = keyed.groupBy("doc_id").agg(
-            *[F.min(F.col("h1") + i * F.col("h2")).alias(f"sig_{i}")
-              for i in range(len(seeds))]
-        )
-        return base.join(sigs_flat, "doc_id")
-
-    if hash == "md5":
-        sigs = md5_minhashes(F.col("g"), seeds)
-    else:
-        sigs = [F.min(F.xxhash64(F.lit(s), F.col("g"))).alias(f"sig_{i}")
-                for i, s in enumerate(seeds)]
-    return base.join(exploded.groupBy("doc_id").agg(*sigs), "doc_id")
+    return base.join(exploded.groupBy("doc_id").agg(*md5_minhashes(F.col("g"), seeds)), "doc_id")
 
 
 def md5_minhashes(g, seeds: list[str] | None = None) -> list:
@@ -573,11 +501,10 @@ def minhash_banded_pairs(
     keys per doc); the verify join touches only surviving pairs — never
     all-pairs.  With ``hash="md5"`` this is exactly the
     dedup_minhash_banded pipeline (hex-concat band values); with
-    ``hash="xxhash64"`` band values fold the two member signatures into
-    one long (8-byte shuffle keys instead of 64-char strings), trading
-    oracle portability for hash CPU — the output is still PRECISE
-    (every emitted pair is exact-verified); only recall is
-    family-dependent.
+    ``hash="km_md5"`` band values fold the two member signatures into
+    one long (8-byte shuffle keys instead of 64-char strings) — the
+    output is PRECISE either way (every emitted pair is exact-verified);
+    only recall is family-dependent.
 
     The signature relation is PERSISTED before banding (round-8 fix,
     measured at the 10× scale point): ``posexplode`` re-evaluates its
@@ -601,39 +528,6 @@ def minhash_banded_pairs(
         .withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-    )
-
-
-def dedup_minhash_lsh(
-    df: DataFrame,
-    threshold: float = 0.6,
-    n: int = 3,
-    num_hash_tables: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash+LSH near-dup candidates (MLlib): shingle → hashed term
-    vector → MinHash signatures → approx similarity join on banded buckets.
-
-    Returns (id_a, id_b, jaccard_distance) pairs under the distance
-    threshold.  Deterministic for a fixed seed.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    sh = df.select(F.col(id_col).alias("id"), shingles(F.col(text_col), n).alias("sh"))
-    tf = HashingTF(inputCol="sh", outputCol="features", numFeatures=1 << 18)
-    feats = tf.transform(sh).filter(F.expr("size(sh) > 0"))
-    mh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed)
-    model = mh.fit(feats)
-    pairs = model.approxSimilarityJoin(feats, feats, 1.0 - threshold, distCol="jaccard_dist")
-    return (
-        pairs.filter(F.col("datasetA.id") < F.col("datasetB.id"))
-        .select(
-            F.col("datasetA.id").alias("id_a"),
-            F.col("datasetB.id").alias("id_b"),
-            F.round(F.col("jaccard_dist"), 6).alias("jaccard_dist"),
-        )
     )
 
 
@@ -722,7 +616,7 @@ def simhash_near_dups(
     # persisted: the signature is a bits-wide fold of per-word hashes;
     # the band posexplode and both self-join sides would otherwise
     # recompute it (round-8 lesson — see minhash_signatures)
-    sigs = _tracked_persist(simhash(df, text_col, id_col, bits, portable=portable))
+    sigs = simhash(df, text_col, id_col, bits, portable=portable).persist()
     nbands = max_hamming + 1
     base, rem = divmod(bits, nbands)
     bands, off = [], 0

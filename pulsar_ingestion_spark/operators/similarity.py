@@ -1,14 +1,28 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths:
-  * brute-force cosine top-k — the exact baseline; a broadcast of the query
-    set against a full scan of candidates (narrow, no shuffle of the
-    candidate side; per-partition top-k then global merge);
-  * LSH-bucketed ANN — random-hyperplane signatures restrict candidates to
-    same-bucket vectors: at 100 TB the candidate scan drops by the bucket
-    fan-out factor, trading recall for cost (standard sign-LSH).
+Every search has the same two steps: key the candidates and probe them,
+then verify exactly.
 
-Both are deterministic (hyperplanes derived from a seeded hash, not RNG).
+  * brute force (:func:`knn_bruteforce`) — the exact reference: a
+    broadcast of the query set against a full scan of candidates
+    (narrow, no shuffle of the candidate side);
+  * sign-LSH (:func:`knn_lsh`, :func:`knn_lsh_multiprobe`) — the key is
+    the random-hyperplane signature (:func:`signlsh_buckets`): at 100 TB
+    the candidate scan drops by the bucket fan-out factor, trading
+    recall for cost;
+  * IVF (:func:`knn_ivf_seeded`, :func:`knn_ivf_pinned`) — the key is
+    the nearest pinned centroid (:func:`ivf_assign_cells`); a query
+    probes its ``nprobe`` nearest cells (:func:`ivf_probe_cells`);
+  * PQ (:func:`pq_encode_kernel`) — per-subspace nearest codebook entry;
+    with one full-dim subspace it is the IVF coarse quantizer.
+
+Probes ``(qid, qv, key)`` join candidates ``(id, vec, key)`` on the key;
+:func:`rerank_score` drops self-pairs and scores the exact cosine, and
+:func:`top_k` keeps the best ``k`` per query.  The streaming indexes
+(streaming/ann_index.py) store the candidate side and search it through
+the same functions, so an index search equals the batch operator by
+construction.  Hyperplanes and centroids come from seeded md5, not RNG,
+so every result is DuckDB-oracle-checkable.
 """
 
 from __future__ import annotations
@@ -18,7 +32,41 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pulsar_ingestion_spark.functions.vectors import cosine_rounded, cosine_rounded_kernel, dot
+from pulsar_ingestion_spark.functions.vectors import cosine_rounded_kernel, dot, norm
+
+
+def top_k(scored: DataFrame, k: int, *lead: str) -> DataFrame:
+    """The ``k`` best candidates per ``(*lead, query_id)`` of a scored
+    ``(query_id, cand_id, cos_sim)`` relation, by ``cos_sim`` desc then
+    ``cand_id`` asc (a deterministic output set):
+    ``(*lead, query_id, cand_id, cos_sim, rank)``."""
+    w = Window.partitionBy(*lead, "query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*lead, "query_id", "cand_id", "cos_sim", "rank")
+    )
+
+
+def rerank_score(probes: DataFrame, cands: DataFrame, key: str) -> DataFrame:
+    """Exact-cosine verify of probed candidates: probes ``(qid, qv, key,
+    ...)`` ⋈ candidates ``(id, vec, key)`` on ``key``, self-pairs dropped
+    → ``(query_id, cand_id, cos_sim, ...)``, the probes' other columns
+    carried.  A candidate carries one key and a query's probe keys are
+    distinct, so no pair meets twice.  Cosine via the pair-dot Arrow
+    kernel, bit-identical to the HOF fold: the rerank volume is queries ×
+    probed-key occupancy (~750k pairs at the 100× point), where the
+    three HOF dot folds per pair dominated the wall."""
+    return (
+        probes.join(cands, key)
+        .filter(F.col("qid") != F.col("id"))
+        .select(
+            F.col("qid").alias("query_id"),
+            F.col("id").alias("cand_id"),
+            cosine_rounded_kernel(F.col("qv"), F.col("vec"), 6).alias("cos_sim"),
+            *[c for c in probes.columns if c not in ("qid", "qv", key)],
+        )
+    )
 
 
 def knn_bruteforce(
@@ -31,10 +79,9 @@ def knn_bruteforce(
     """Exact top-k cosine neighbors for each query vector.
 
     The query side should be small → broadcast; candidates stream through.
-    Ordering ties broken by candidate id (deterministic output set).
+    This is the reference the ANN searches are compared against, so it
+    scores with its own fold expressions and shares only :func:`top_k`.
     """
-    from pulsar_ingestion_spark.functions.vectors import dot, norm
-
     # Norms precomputed per side → one dot per (query, candidate) pair.
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
@@ -47,12 +94,7 @@ def knn_bruteforce(
         .join(c, F.col("query_id") != F.col("cand_id"))
         .withColumn("cos_sim", F.round(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cos_sim", "rank")
-    )
+    return top_k(scored, k)
 
 
 def _hyperplane(dim: int, plane_idx: int, seed: int = 42) -> list[float]:
@@ -90,66 +132,6 @@ def auto_num_planes(n_rows: int, target_block: int = 4096, lo: int = 4, hi: int 
     return max(lo, min(hi, math.ceil(math.log2(n_rows / target_block))))
 
 
-def signlsh_buckets(
-    df: DataFrame,
-    dim: int,
-    num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Random-hyperplane signature: bucket = bit-string of sign(v·h_i).
-    Cosine-similar vectors collide with high probability.
-
-    Computed by a vectorized Arrow kernel: each plane's dot product is
-    accumulated column-by-column in float64 (``acc += V[:, j] * w[j]``) —
-    the SAME IEEE add sequence as the ordered ``F.aggregate`` fold and the
-    DuckDB oracle's ``list_reduce``, so buckets are bit-identical across
-    all three forms (pinned by ``test_signlsh_kernel_matches_hof_fold``).
-    The two expression forms were measured and rejected at the 100× scale
-    point (SCALE.md §6n): the HOF fold dispatches ~2·dim interpreted
-    lambdas per row (the signature pass dominated the whole LSH family),
-    and an unrolled codegen tree (dim·planes·4 nodes per side) moves the
-    cost into seconds of per-run analysis/codegen.  The kernel is ~3×
-    faster than HOF at base and ~3.5× at 100×, with one Arrow transfer of
-    the vector column per side."""
-    from pyspark.sql.functions import pandas_udf
-
-    planes = [
-        np.array(_hyperplane(dim, i, seed), dtype=np.float64) for i in range(num_planes)
-    ]
-
-    @pandas_udf("long")
-    def _bucket(v: pd.Series) -> pd.Series:
-        n = len(v)
-        if n == 0:
-            return pd.Series([], dtype="Int64")
-        vs = v.to_numpy()
-        # NULL/wrong-dim guard (ADVICE r9): emit a NULL bucket per bad row
-        # (downstream bucket equi-joins drop it — a NULL embedding has no
-        # candidates) instead of np.vstack aborting the whole batch.
-        valid = np.fromiter(
-            (e is not None and len(e) == dim for e in vs), dtype=bool, count=n
-        )
-        res = pd.Series([pd.NA] * n, dtype="Int64")
-        if valid.any():
-            mat = np.vstack(vs[valid]).astype(np.float64)  # n_valid × dim
-            out = np.zeros(len(mat), dtype=np.int64)
-            for p, w in enumerate(planes):
-                acc = np.zeros(len(mat), dtype=np.float64)
-                for j in range(dim):
-                    acc += mat[:, j] * w[j]
-                out |= (acc > 0).astype(np.int64) << p
-            res[valid] = out
-        return res
-
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        _bucket(F.col(vec_col)).alias("bucket"),
-    )
-
-
 def signlsh_buckets_multi(
     df: DataFrame,
     dim: int,
@@ -158,16 +140,24 @@ def signlsh_buckets_multi(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """All-tables sign-LSH signatures in ONE Arrow pass (round 13): the
-    per-table kernel of :func:`signlsh_buckets` ran once per hash table —
-    T scans of the source and T JVM↔Python crossings of the vector
-    column, unioned.  This kernel computes every table's bucket in one
-    crossing and returns ``(id, vec, buckets array<long>)``; callers
-    ``posexplode`` to ``(tbl, bucket)``.  Per-plane accumulation order is
-    IDENTICAL to the single-table kernel (column-by-column float64
-    adds), so bucket values are bit-equal table by table; invalid rows
-    (NULL / wrong dim) yield a NULL per table, matching the per-table
-    NULL-bucket guard."""
+    """Random-hyperplane signatures for one hash table per seed, in ONE
+    Arrow pass: ``(id, vec, buckets array<long>)``, where a table's
+    bucket is the bit-string of sign(v·h_i).  Cosine-similar vectors
+    collide with high probability.  Multi-table callers ``posexplode``
+    to ``(tbl, bucket)``; :func:`signlsh_buckets` is the one-table form.
+
+    Each plane's dot product is accumulated column-by-column in float64
+    (``acc += V[:, j] * w[j]``) — the SAME IEEE add sequence as the
+    ordered ``F.aggregate`` fold and the DuckDB oracle's ``list_reduce``,
+    so buckets are bit-identical across all three forms (pinned by
+    ``test_signlsh_kernel_matches_hof_fold``).  The two expression forms
+    were measured and rejected at the 100× scale point (SCALE.md §6n):
+    the HOF fold dispatches ~2·dim interpreted lambdas per row, and an
+    unrolled codegen tree (dim·planes·4 nodes per side) moves the cost
+    into seconds of per-run analysis/codegen.  A NULL or wrong-dim
+    embedding gets a NULL bucket in every table (bucket equi-joins drop
+    it — such a row has no candidates) instead of np.vstack aborting the
+    whole batch."""
     from pyspark.sql.functions import pandas_udf
 
     all_planes = [
@@ -209,6 +199,20 @@ def signlsh_buckets_multi(
     )
 
 
+def signlsh_buckets(
+    df: DataFrame,
+    dim: int,
+    num_planes: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = 42,
+) -> DataFrame:
+    """One-table sign-LSH signature: ``(id, vec, bucket)`` — the
+    :func:`signlsh_buckets_multi` kernel with the one ``seed``."""
+    b = signlsh_buckets_multi(df, dim, num_planes, [seed], id_col, vec_col)
+    return b.select("id", "vec", F.col("buckets")[0].alias("bucket"))
+
+
 def pq_encode_kernel(
     df: DataFrame,
     cents: list[tuple[int, list[float]]],
@@ -225,7 +229,7 @@ def pq_encode_kernel(
     nearest-centroid assignment (the IVF coarse quantizer).
 
     ``cents`` is the codebook as driver-held rows (model-sized: K × dim
-    floats — same stance as :func:`knn_ivf`'s centroids).  Replaces the
+    floats — the same stance as the IVF centroids).  Replaces the
     relational encode (corpus ×K crossJoin + per-subspace HOF d2 +
     ``min(struct(d2, cid))`` groupBy): that plan shuffles the full
     corpus on vec_id, while this one is a narrow map — the right encode
@@ -302,73 +306,28 @@ def pq_encode_kernel(
     )
 
 
-def knn_ivf(
+def knn_lsh(
     queries: DataFrame,
     candidates: DataFrame,
+    dim: int,
     k: int = 5,
-    n_clusters: int = 16,
-    nprobe: int = 2,
+    num_planes: int | None = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
-    """IVF (inverted-file) ANN: k-means coarse quantizer → probe the
-    nprobe nearest cells → exact cosine rerank within them.
+    """ANN top-k: exact rerank within the query's LSH bucket.
 
-    The 100 TB plan: candidates live partitioned by cell id; each query
-    touches nprobe/n_clusters of the data.  Centroids are a tiny model
-    (n_clusters × dim floats) — driver-side math, broadcast join back.
-    Deterministic for a fixed seed; recall grows with nprobe.
+    The bucket equi-join replaces the cross join — this is the 100 TB plan
+    (candidates partitioned by bucket; each query probes one partition).
+    Recall < 1.0 by design; verify against knn_bruteforce on samples.
+    ``num_planes=None`` → :func:`auto_num_planes` from the candidate count
+    (one count() job against the scan, then sized buckets).
     """
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = candidates.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    model = KMeans(k=n_clusters, seed=seed, featuresCol="features").fit(feats)
-    assigned = model.transform(feats).select("id", "vec", F.col("prediction").alias("cell"))
-
-    centroids = np.vstack([np.asarray(c) for c in model.clusterCenters()])
-
-    spark = candidates.sparkSession
-    cent_rows = [(int(i), [float(x) for x in centroids[i]]) for i in range(len(centroids))]
-    cent_df = spark.createDataFrame(cent_rows, "cell int, cvec array<double>")
-
-    q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-    # nprobe nearest cells per query: tiny cross join against the centroid
-    # table (n_clusters rows, broadcast), top-nprobe by L2 distance.
-    qc = (
-        F.broadcast(cent_df)
-        .crossJoin(q)
-        .withColumn(
-            "dist2",
-            F.aggregate(
-                F.zip_with(F.col("qv"), F.col("cvec"), lambda a, b: (a.cast("double") - b) ** 2),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-    )
-    wq = Window.partitionBy("qid").orderBy(F.asc("dist2"), F.asc("cell"))
-    probes = qc.withColumn("pr", F.row_number().over(wq)).filter(F.col("pr") <= nprobe).select(
-        "qid", "qv", "cell"
-    )
-
-    scored = (
-        probes.join(assigned, "cell")
-        .filter(F.col("qid") != F.col("id"))
-        .withColumn("cos_sim", cosine_rounded(F.col("qv"), F.col("vec"), 6))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("qid").alias("query_id"), F.col("id").alias("cand_id"), "cos_sim", "rank")
-    )
+    if num_planes is None:
+        num_planes = auto_num_planes(candidates.count())
+    probes = signlsh_buckets(queries, dim, num_planes, id_col, vec_col).toDF("qid", "qv", "bucket")
+    cands = signlsh_buckets(candidates, dim, num_planes, id_col, vec_col)
+    return top_k(rerank_score(probes, cands, "bucket"), k)
 
 
 def knn_lsh_multiprobe(
@@ -388,12 +347,10 @@ def knn_lsh_multiprobe(
 
     Scale shape: the candidate side is bucketed ONCE; the query side
     explodes ×(num_planes+1) (queries are the small side), then the same
-    hash equi-join as :func:`knn_lsh`.  A candidate lives in exactly one
-    bucket and probe buckets are distinct, so no pair dedup is needed.
-    Deterministic md5 hyperplanes → DuckDB-oracle-checkable.
+    bucket equi-join and rerank as :func:`knn_lsh`.
     """
     qb = signlsh_buckets(queries, dim, num_planes, id_col, vec_col, seed)
-    cb = signlsh_buckets(candidates, dim, num_planes, id_col, vec_col, seed)
+    cands = signlsh_buckets(candidates, dim, num_planes, id_col, vec_col, seed)
     probe_buckets = F.array(
         F.col("bucket"),
         *[F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long")) for i in range(num_planes)],
@@ -403,17 +360,7 @@ def knn_lsh_multiprobe(
         F.col("vec").alias("qv"),
         F.explode(probe_buckets).alias("bucket"),
     )
-    scored = (
-        probes.join(cb, "bucket")
-        .filter(F.col("qid") != F.col("id"))
-        .withColumn("cos_sim", cosine_rounded(F.col("qv"), F.col("vec"), 6))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("qid").alias("query_id"), F.col("id").alias("cand_id"), "cos_sim", "rank")
-    )
+    return top_k(rerank_score(probes, cands, "bucket"), k)
 
 
 def _dist2(a, b):
@@ -427,39 +374,39 @@ def _dist2(a, b):
     )
 
 
-def knn_ivf_seeded(
-    queries: DataFrame,
+def seeded_centroids(
     candidates: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    nprobe: int = 2,
+    n_cells: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN with an engine-portable coarse quantizer (VERDICT r2 item 2).
-
-    Instead of k-means (engine-internal, not oracle-recomputable) the
-    ``n_cells`` cell centroids are the candidate vectors whose
-    ``md5(cast(id as string))`` sorts lowest — a deterministic uniform
-    subsample any engine reproduces; cell id = the centroid's own id.
-    Same IVF plan shape as :func:`knn_ivf`: the centroid table is a tiny
-    model (n_cells × dim) collected once and re-broadcast as literals, so
-    cell assignment and query probing are NARROW column expressions
-    (array_min / array_sort over an n_cells-element struct array — no
-    shuffle, no window); only the probe-cell rerank join shuffles.
-    Distances/cosines are ordered folds → bit-exact vs a DuckDB oracle.
-    """
-    cents = (
+) -> list[tuple[int, list[float]]]:
+    """The engine-portable IVF coarse quantizer (VERDICT r2 item 2): the
+    ``n_cells`` candidate vectors whose ``md5(cast(id as string))`` sorts
+    lowest — a deterministic uniform subsample any engine reproduces;
+    cell id = the centroid's own id.  One model-sized collect."""
+    rows = (
         candidates.select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cvec"))
         .orderBy(F.md5(F.col("cell").cast("string")))
         .limit(n_cells)
         .collect()
     )
-    return knn_ivf_pinned(
-        queries, candidates,
-        [(r["cell"], [float(x) for x in r["cvec"]]) for r in cents],
-        k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col,
-    )
+    return [(int(r["cell"]), [float(x) for x in r["cvec"]]) for r in rows]
+
+
+def check_centroids(cents) -> list[tuple[int, list[float]]]:
+    """A pinned centroid list as ``[(cell, [float])]``, or ValueError
+    unless it is non-empty, of one dimension and has distinct cell ids:
+    an empty list leaves nothing to assign to, and a ragged centroid is
+    scored differently by the assignment kernel and the probe."""
+    out = [(int(c), [float(x) for x in v]) for c, v in cents]
+    if not out:
+        raise ValueError("IVF needs at least one centroid")
+    dims = {len(v) for _, v in out}
+    if len(dims) != 1 or 0 in dims:
+        raise ValueError(f"IVF centroids must share one non-zero dimension, got {sorted(dims)}")
+    if len({c for c, _ in out}) != len(out):
+        raise ValueError("IVF centroid cell ids must be distinct")
+    return out
 
 
 def ivf_assign_cells(
@@ -490,9 +437,11 @@ def ivf_probe_cells(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Per-query nprobe nearest pinned cells: ``(qid, qv, cell)`` — a
-    NARROW column expression over the literal centroid table (no
-    shuffle, no window)."""
+    """Per-query ``nprobe`` nearest pinned cells with their probe rank:
+    ``(qid, qv, cell, probe_rank)`` (1 = nearest centroid) — a NARROW
+    column expression over the literal centroid table (no shuffle, no
+    window).  The rank lets one probing pass serve every smaller budget
+    (``probe_rank <= nprobe``, the recall-vs-nprobe sweep)."""
 
     def cell_structs(vec):
         return F.array(*[
@@ -509,27 +458,8 @@ def ivf_probe_cells(
             F.col(vec_col).alias("qv"),
             F.slice(F.array_sort(cell_structs(F.col(vec_col))), 1, nprobe).alias("pc"),
         )
-        .select("qid", "qv", F.explode(F.col("pc")["cell"]).alias("cell"))
-    )
-
-
-def ivf_rerank(probes: DataFrame, assigned: DataFrame, k: int) -> DataFrame:
-    """Exact-cosine rerank of probed cells — the shared tail of the batch
-    and streaming IVF searches.  Cosine via the pair-dot Arrow kernel:
-    the rerank volume is queries × probed-cell occupancy (~750k pairs at
-    the 100× point) and the three HOF dot folds per pair dominated the
-    wall — bit-identical finish (divide/sqrt/round stay JVM-side), see
-    cosine_rounded_kernel."""
-    scored = (
-        probes.join(assigned, "cell")
-        .filter(F.col("qid") != F.col("id"))
-        .withColumn("cos_sim", cosine_rounded_kernel(F.col("qv"), F.col("vec"), 6))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("qid").alias("query_id"), F.col("id").alias("cand_id"), "cos_sim", "rank")
+        .select("qid", "qv", F.posexplode(F.col("pc")["cell"]).alias("pos", "cell"))
+        .select("qid", "qv", "cell", (F.col("pos") + 1).alias("probe_rank"))
     )
 
 
@@ -542,80 +472,33 @@ def knn_ivf_pinned(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF ANN under an EXPLICIT pinned centroid list — the core
-    :func:`knn_ivf_seeded` delegates to after deriving its seeded
-    centroids, and the batch-equivalence reference for the streaming
-    index (streaming/ann_index.ivf_search)."""
-    assigned = ivf_assign_cells(candidates, cents, id_col, vec_col)
+    """IVF ANN under an EXPLICIT pinned centroid list: assign candidates
+    to their nearest cell, probe each query's ``nprobe`` nearest cells,
+    rerank exactly.  The batch-equivalence reference for the streaming
+    index (streaming/ann_index.ivf_search).  The candidate side lives
+    partitioned by cell; each query touches nprobe/n_cells of the data."""
+    cents = check_centroids(cents)
     probes = ivf_probe_cells(queries, cents, nprobe, id_col, vec_col)
-    return ivf_rerank(probes, assigned, k)
+    cands = ivf_assign_cells(candidates, cents, id_col, vec_col)
+    return top_k(rerank_score(probes, cands, "cell"), k)
 
 
-def knn_lsh(
+def knn_ivf_seeded(
     queries: DataFrame,
     candidates: DataFrame,
-    dim: int,
     k: int = 5,
-    num_planes: int | None = 8,
+    n_cells: int = 16,
+    nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """ANN top-k: exact rerank within the query's LSH bucket.
-
-    The bucket equi-join replaces the cross join — this is the 100 TB plan
-    (candidates partitioned by bucket; each query probes one partition).
-    Recall < 1.0 by design; verify against knn_bruteforce on samples.
-    ``num_planes=None`` → :func:`auto_num_planes` from the candidate count
-    (one count() job against the scan, then sized buckets).
-    """
-    if num_planes is None:
-        num_planes = auto_num_planes(candidates.count())
-    qb = signlsh_buckets(queries, dim, num_planes, id_col, vec_col)
-    cb = signlsh_buckets(candidates, dim, num_planes, id_col, vec_col)
-    scored = (
-        qb.alias("q")
-        .join(cb.alias("c"), (F.col("q.bucket") == F.col("c.bucket")) & (F.col("q.id") != F.col("c.id")))
-        .withColumn("cos_sim", cosine_rounded(F.col("q.vec"), F.col("c.vec"), 6))
-    )
-    w = Window.partitionBy(F.col("q.id")).orderBy(F.desc("cos_sim"), F.asc(F.col("c.id")))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("q.id").alias("query_id"), F.col("c.id").alias("cand_id"), "cos_sim", "rank")
-    )
-
-def ivf_probe_cells_ranked(
-    queries: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    max_nprobe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-query probed cells WITH their probe rank: ``(qid, qv, cell,
-    probe_rank)`` (1 = nearest centroid).  The rank-keeping twin of
-    :func:`ivf_probe_cells` — lets one probing pass serve every nprobe
-    <= max_nprobe (the recall-vs-nprobe sweep scores candidates once
-    and derives each probe budget's candidate set by ``probe_rank <=
-    nprobe``), same narrow no-shuffle shape."""
-
-    def cell_structs(vec):
-        return F.array(*[
-            F.struct(
-                _dist2(vec, F.array(*[F.lit(float(x)) for x in cvec])).alias("d2"),
-                F.lit(cell).cast("long").alias("cell"),
-            )
-            for cell, cvec in cents
-        ])
-
-    return (
-        queries.select(
-            F.col(id_col).alias("qid"),
-            F.col(vec_col).alias("qv"),
-            F.slice(F.array_sort(cell_structs(F.col(vec_col))), 1, max_nprobe).alias("pc"),
-        )
-        .select(
-            "qid", "qv",
-            F.posexplode(F.col("pc")["cell"]).alias("pos", "cell"),
-        )
-        .select("qid", "qv", "cell", (F.col("pos") + 1).alias("probe_rank"))
+    """IVF ANN over the :func:`seeded_centroids` quantizer: the centroid
+    table is a tiny model (n_cells × dim) collected once and
+    re-broadcast as literals, so cell assignment and query probing are
+    NARROW (no shuffle, no window); only the probe-cell rerank join
+    shuffles.  Distances/cosines are ordered folds → bit-exact vs a
+    DuckDB oracle."""
+    cents = seeded_centroids(candidates, n_cells, id_col, vec_col)
+    return knn_ivf_pinned(
+        queries, candidates, cents, k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col
     )

@@ -434,11 +434,8 @@ def q_dedup_minhash(spark, sf_dir):
     # was the MLlib MinHashLSH until round 11: engine-internal hash
     # families made it rows-only forever (VERDICT r10 item 1a), so it now
     # runs the portable permutation-hash pipeline whose DuckDB oracle
-    # recomputes the identical signatures; the MLlib operator
-    # (operators/dedup.py dedup_minhash_lsh) remains available and
-    # unit-tested (tests/test_llm_ops.py) for users who want MLlib's
-    # hash family.  Scale shape unchanged: band equi-join IS the
-    # candidate filter, never all-pairs.
+    # recomputes the identical signatures.  Scale shape unchanged: band
+    # equi-join IS the candidate filter, never all-pairs.
     docs = fan_out(load_tables(spark, sf_dir)["documents"], spark)
     return minhash_banded_pairs(
         docs, n=3, num_bands=6, threshold=0.5, hash="md5", seeds=_MINHASH12_SEEDS
@@ -903,8 +900,7 @@ def _ivf_seeded_oracle(n_cells: int, nprobe: int, k: int) -> str:
 def q_sim_search_ivf(spark, sf_dir):
     # IVF with the engine-portable seeded coarse quantizer (md5-ordered
     # centroid subsample) — cell assignment, probing, and rerank are all
-    # DuckDB-recomputable; knn_ivf (MLlib k-means quantizer) remains the
-    # operator for callers who want trained cells (tests/test_llm_ops.py).
+    # DuckDB-recomputable.
     from pulsar_ingestion_spark.operators.similarity import knn_ivf_seeded
 
     emb = fan_out(load_tables(spark, sf_dir)["embeddings"], spark)
@@ -1250,10 +1246,9 @@ def q_dedup_minhash_fast(spark, sf_dir):
     # ((sig<<31)+sig fold) instead of 128-char hex concats.  Until round
     # 11 this id used engine-side xxhash64 (rows-only forever — DuckDB
     # can't recompute it, VERDICT r10 item 1b); the km_md5 family keeps
-    # the fast-signature design AND a recomputing DuckDB oracle.  The
-    # xxhash64 family remains available in the operator for engine-only
-    # blocking.  Every emitted pair is exact-verified (precision 1; only
-    # LSH recall is hash-family-dependent).
+    # the fast-signature design AND a recomputing DuckDB oracle.  Every
+    # emitted pair is exact-verified (precision 1; only LSH recall is
+    # hash-family-dependent).
     docs = fan_out(load_tables(spark, sf_dir)["documents"], spark)
     return minhash_banded_pairs(
         docs, n=3, num_bands=4, threshold=0.35, hash="km_md5"
@@ -2848,38 +2843,22 @@ def q_sim_search_ivf_recall_sweep(spark, sf_dir):
     match counts over the exact-top-k total (never round a raw
     quotient); top-k sets tie-break on candidate id in both engines, so
     membership — all the aggregate sees — is hash-stable."""
-    from pulsar_ingestion_spark.functions.vectors import cosine_rounded_kernel
     from pulsar_ingestion_spark.operators.similarity import (
         ivf_assign_cells,
-        ivf_probe_cells_ranked,
+        ivf_probe_cells,
         knn_bruteforce,
+        rerank_score,
+        seeded_centroids,
+        top_k,
     )
 
     emb = fan_out(load_tables(spark, sf_dir)["embeddings"], spark)
     q = emb.filter(F.col("vec_id") < 20)
-    cents = (
-        emb.select(F.col("vec_id").alias("cell"), F.col("embedding").alias("cvec"))
-        .orderBy(F.md5(F.col("cell").cast("string")))
-        .limit(16)
-        .collect()
-    )
-    cents = [(r["cell"], [float(x) for x in r["cvec"]]) for r in cents]
-    assigned = ivf_assign_cells(emb, cents)
-    probes = ivf_probe_cells_ranked(q, cents, max_nprobe=4)
-    scored = (
-        probes.join(assigned, "cell")
-        .filter(F.col("qid") != F.col("id"))
-        .withColumn("cos_sim", cosine_rounded_kernel(F.col("qv"), F.col("vec"), 6))
-        .select("qid", F.col("id").alias("cand_id"), "probe_rank", "cos_sim")
-    )
+    cents = seeded_centroids(emb, 16)
+    scored = rerank_score(ivf_probe_cells(q, cents, 4), ivf_assign_cells(emb, cents), "cell")
     nps = spark.createDataFrame([(1,), (2,), (4,)], "nprobe: bigint")
     swept = scored.join(F.broadcast(nps), F.col("probe_rank") <= F.col("nprobe"))
-    w = Window.partitionBy("nprobe", "qid").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    ivf = (
-        swept.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("nprobe", F.col("qid").alias("query_id"), "cand_id")
-    )
+    ivf = top_k(swept, 5, "nprobe").select("nprobe", "query_id", "cand_id")
     exact = knn_bruteforce(q, emb, k=5).select(
         "query_id", "cand_id", F.lit(1).alias("hit")
     )

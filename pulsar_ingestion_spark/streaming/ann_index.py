@@ -1,26 +1,24 @@
-"""Incremental (streaming) ANN index maintenance: sign-LSH buckets over
-an embedding stream, kept in a versioned table (VERDICT r9 item 7 — the
-``dedup_cascade.py`` state pattern applied to ``sim_search_lsh``).
+"""Incremental (streaming) ANN indexes: sign-LSH buckets or pinned IVF
+cells over an embedding stream, kept in a versioned table (VERDICT r9
+item 7 — the ``dedup_cascade.py`` state pattern applied to the
+similarity searches).
 
-The batch query (queries_llm.q_sim_search_lsh / operators.similarity.
-knn_lsh) buckets the WHOLE corpus per run; in operation embeddings
-arrive continuously and each micro-batch should extend the index
-without rebucketing history.  The state is exactly the candidate side
-of the batch join, persisted: one row per indexed vector carrying
-``(vec_id, embedding, bucket)``, where ``bucket`` comes from the same
-deterministic md5-hyperplane kernel (``signlsh_buckets``) the batch
-path uses.  A micro-batch therefore does ONE narrow kernel pass and one
-exactly-once append; a search does the same bucket equi-join + exact
-cosine rerank as ``knn_lsh``, against the indexed-so-far state.
+The batch searches (operators/similarity.py) key the WHOLE corpus per
+run; in operation embeddings arrive continuously and each micro-batch
+should extend the index without re-keying history.  The state is the
+candidate side of the batch join, persisted: ``(vec_id, embedding,
+key)``, the key being the sign-LSH ``bucket`` or the IVF ``cell``.  A
+micro-batch does ONE narrow kernel pass and one exactly-once append.
 
-Semantics / batch equivalence: after any sequence of micro-batches,
+Batch equivalence: after any sequence of micro-batches,
 ``ann_search(queries)`` returns EXACTLY ``knn_lsh(queries, indexed)``
-where ``indexed`` is the union of the batches — regardless of how the
-stream was cut (tests/test_streaming_ann_index.py proves row equality
-against the batch operator for 1/2/5-batch cuts and a real
-maxFilesPerTrigger stream).  This holds by construction: buckets are a
-pure function of (embedding, planes, seed), and the search reuses the
-batch join/rerank expressions term for term.
+and ``ivf_search`` EXACTLY ``knn_ivf_pinned(queries, indexed, cents)``,
+``indexed`` being the union of the batches, however the stream was cut
+(tests/test_streaming_ann_index.py and test_streaming_ivf_index.py).
+This holds by construction: keys are a pure function of (embedding,
+pinned planes or centroids), and a search calls the batch operator's
+key, probe, ``rerank_score`` and ``top_k`` functions; only the
+candidate side is read instead of recomputed.
 
 The plane count is PINNED per index (stored buckets bake it in) — the
 streaming trade against the batch path's ``auto_num_planes``: growing a
@@ -32,7 +30,7 @@ swap atomic).
 Exactly-once: the versioned table's app-id-scoped batch watermark makes
 the append idempotent under Structured Streaming's at-least-once replay
 (same mechanism as the cascade — a replayed batch no-ops before any
-state read).
+data is written).
 
 Scale notes (100 TB): the per-batch work is a narrow Arrow kernel pass
 (no shuffle) + an append; a search shuffles only the model-sized query
@@ -47,10 +45,17 @@ SURVEY §2 similarity family into that streaming shape.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pulsar_ingestion_spark.operators.similarity import signlsh_buckets
+from pulsar_ingestion_spark.operators.similarity import (
+    check_centroids,
+    ivf_assign_cells,
+    ivf_probe_cells,
+    rerank_score,
+    signlsh_buckets,
+    top_k,
+)
 from pulsar_ingestion_spark.operators.versioned import VersionedTable
 
 
@@ -68,6 +73,30 @@ def _empty_search_result(spark: SparkSession, queries: DataFrame, id_col: str) -
         StructField("cos_sim", DoubleType()),
         StructField("rank", IntegerType()),
     ]))
+
+
+def _index_writer(state_root: str, app_id: str, assign, id_col: str, vec_col: str):
+    """The foreachBatch target of both index families: ``assign`` keys
+    the batch's ``(id_col, vec_col)`` rows as ``(id, vec, key)``, and the
+    rows are appended to the versioned state exactly once under their
+    original column names (a replayed batch id writes nothing)."""
+    commit = VersionedTable(state_root).stream_batch_committer(app_id)
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        rows = assign(batch_df.select(id_col, vec_col))
+        commit(rows.withColumnsRenamed({"id": id_col, "vec": vec_col}), batch_id)
+
+    return process
+
+
+def _read_state(spark: SparkSession, state_root: str, id_col: str, vec_col: str, key: str):
+    """The indexed-so-far candidate side ``(id, vec, key)``, or None
+    while no micro-batch has committed."""
+    try:
+        state = VersionedTable(state_root).read(spark)
+    except FileNotFoundError:
+        return None
+    return state.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), key)
 
 
 def stream_ann_index(
@@ -89,26 +118,11 @@ def stream_ann_index(
 
     Query the index with :func:`ann_search`.
     """
-    table = VersionedTable(state_root)
-    commit = table.stream_batch_committer(app_id)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if table._batch_already_committed(batch_id, app_id):
-            return  # replayed batch — index already advanced
-        b = signlsh_buckets(
-            batch_df.select(id_col, vec_col), dim, num_planes,
-            id_col, vec_col, seed,
-        )
-        commit(
-            b.select(
-                F.col("id").alias(id_col),
-                F.col("vec").alias(vec_col),
-                "bucket",
-            ),
-            batch_id,
-        )
-
-    return process
+    return _index_writer(
+        state_root, app_id,
+        lambda b: signlsh_buckets(b, dim, num_planes, id_col, vec_col, seed),
+        id_col, vec_col,
+    )
 
 
 def ann_search(
@@ -122,56 +136,32 @@ def ann_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Top-k ANN against the indexed-so-far state — the exact
-    expressions of :func:`operators.similarity.knn_lsh` with the
-    candidate side read from the index instead of rebucketed, so the
-    result equals the batch operator over the same vectors at any
-    stream cut.  ``num_planes``/``seed`` must match the index's.
+    """Top-k ANN against the indexed-so-far state — the probes and
+    rerank of :func:`operators.similarity.knn_lsh` with the candidate
+    side read from the index instead of rebucketed, so the result equals
+    the batch operator over the same vectors at any stream cut.
+    ``num_planes``/``seed`` must match the index's.
 
     A search racing the FIRST micro-batch (no committed version yet)
     returns zero rows with the normal result schema rather than raising
     (ADVICE r10) — an empty index simply has no candidates."""
-    try:
-        state = VersionedTable(state_root).read(spark)
-    except FileNotFoundError:
+    cands = _read_state(spark, state_root, id_col, vec_col, "bucket")
+    if cands is None:
         return _empty_search_result(spark, queries, id_col)
-    qb = signlsh_buckets(queries, dim, num_planes, id_col, vec_col, seed)
-    from pulsar_ingestion_spark.functions.vectors import cosine_rounded
-
-    scored = (
-        qb.alias("q")
-        .join(
-            state.alias("c"),
-            (F.col("q.bucket") == F.col("c.bucket"))
-            & (F.col("q.id") != F.col(f"c.{id_col}")),
-        )
-        .withColumn("cos_sim", cosine_rounded(F.col("q.vec"), F.col(f"c.{vec_col}"), 6))
+    probes = signlsh_buckets(queries, dim, num_planes, id_col, vec_col, seed).toDF(
+        "qid", "qv", "bucket"
     )
-    w = Window.partitionBy(F.col("q.id")).orderBy(
-        F.desc("cos_sim"), F.asc(F.col(f"c.{id_col}"))
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("q.id").alias("query_id"),
-            F.col(f"c.{id_col}").alias("cand_id"),
-            "cos_sim",
-            "rank",
-        )
-    )
+    return top_k(rerank_score(probes, cands, "bucket"), k)
 
 
 # ---------------------------------------------------------------------------
-# IVF family (VERDICT r10 item 7): the same incremental-maintenance story
-# for the second ANN family.  Where sign-LSH pins (num_planes, seed), an
-# IVF index pins its CENTROID LIST — cell assignment must be a pure
+# IVF family (VERDICT r10 item 7): where sign-LSH pins (num_planes, seed),
+# an IVF index pins its CENTROID LIST — cell assignment must be a pure
 # function of (embedding, centroids), so the centroids are fixed at index
-# creation (derived offline: the seeded-md5 rule of knn_ivf_seeded, or a
-# k-means run over a bootstrap corpus) and persisted as a sidecar next to
-# the versioned state, making every later micro-batch and search
-# self-describing.  State rows: (vec_id, embedding, cell) — exactly the
-# candidate side of knn_ivf_pinned's rerank join.
+# creation (derived offline: similarity.seeded_centroids, or a k-means
+# run over a bootstrap corpus) and persisted as a sidecar next to the
+# versioned state, making every later micro-batch and search
+# self-describing.  State rows: (vec_id, embedding, cell).
 
 def _ivf_centroid_file(state_root: str) -> str:
     import os
@@ -182,7 +172,9 @@ def _ivf_centroid_file(state_root: str) -> str:
 def _write_ivf_centroids(state_root: str, cents) -> None:
     """Persist the pinned centroid list; idempotent — an existing
     IDENTICAL sidecar is left alone, a DIFFERENT one raises (changing
-    centroids silently would orphan every stored cell assignment).
+    centroids silently would orphan every stored cell assignment).  A
+    list :func:`check_centroids` rejects raises before any sidecar
+    exists, so the root stays usable.
 
     The create is ATOMIC (write-temp + hard-link-into-place, which fails
     EEXIST instead of clobbering; O_EXCL direct-write fallback for
@@ -196,13 +188,12 @@ def _write_ivf_centroids(state_root: str, cents) -> None:
     import os
     import uuid as _uuid
 
+    cents = check_centroids(cents)
     os.makedirs(state_root, exist_ok=True)
-    payload = [[int(c), [float(x) for x in v]] for c, v in cents]
     path = _ivf_centroid_file(state_root)
 
     def _check_existing() -> None:
-        existing = _read_ivf_centroids(state_root)
-        if existing != [(int(c), [float(x) for x in v]) for c, v in cents]:
+        if _read_ivf_centroids(state_root) != cents:
             raise ValueError(
                 f"IVF index at {state_root} is pinned to a different centroid "
                 "list; re-index into a fresh root instead of mutating centroids"
@@ -213,7 +204,7 @@ def _write_ivf_centroids(state_root: str, cents) -> None:
         return
     tmp = os.path.join(state_root, f".ivfc-{_uuid.uuid4().hex}.json")
     with open(tmp, "w") as fh:
-        json.dump(payload, fh)
+        json.dump(cents, fh)
     try:
         os.link(tmp, path)
     except FileExistsError:
@@ -230,7 +221,7 @@ def _write_ivf_centroids(state_root: str, cents) -> None:
                 _check_existing()
             else:
                 with os.fdopen(fd, "w") as fh:
-                    json.dump(payload, fh)
+                    json.dump(cents, fh)
     finally:
         try:
             os.unlink(tmp)
@@ -245,6 +236,7 @@ def _read_ivf_centroids(state_root: str) -> list[tuple[int, list[float]]]:
         return [(int(c), [float(x) for x in v]) for c, v in json.load(fh)]
 
 
+
 def stream_ivf_index(
     state_root: str,
     app_id: str,
@@ -253,36 +245,21 @@ def stream_ivf_index(
     vec_col: str = "embedding",
 ):
     """foreachBatch target: assign the batch's embeddings to their pinned
-    IVF cells (Arrow argmin kernel — identical assignment to the batch
-    operator by construction) and append exactly once.  Usage::
+    IVF cells (the batch operator's Arrow argmin kernel) and append
+    exactly once.  The centroid list is checked and pinned first, so a
+    list no batch could use raises here.  Usage::
 
         q = (emb_stream.writeStream
                .foreachBatch(stream_ivf_index(root, app_id=ckpt, centroids=cents))
                .option("checkpointLocation", ckpt).start())
 
     Query with :func:`ivf_search`."""
-    from pulsar_ingestion_spark.operators.similarity import ivf_assign_cells
-
     _write_ivf_centroids(state_root, centroids)
-    table = VersionedTable(state_root)
-    commit = table.stream_batch_committer(app_id)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if table._batch_already_committed(batch_id, app_id):
-            return  # replayed batch — index already advanced
-        assigned = ivf_assign_cells(
-            batch_df.select(id_col, vec_col), centroids, id_col, vec_col
-        )
-        commit(
-            assigned.select(
-                F.col("id").alias(id_col),
-                F.col("vec").alias(vec_col),
-                "cell",
-            ),
-            batch_id,
-        )
-
-    return process
+    return _index_writer(
+        state_root, app_id,
+        lambda b: ivf_assign_cells(b, centroids, id_col, vec_col),
+        id_col, vec_col,
+    )
 
 
 def ivf_search(
@@ -296,19 +273,13 @@ def ivf_search(
 ) -> DataFrame:
     """Top-k IVF ANN against the indexed-so-far state: probe the nprobe
     nearest PINNED cells (read from the index's sidecar) and rerank
-    exactly — term-for-term the expressions of
+    exactly — the probes and rerank of
     :func:`operators.similarity.knn_ivf_pinned`, so the result equals
     the batch operator over the union of the indexed batches at any
     stream cut.  No committed version yet → zero rows, normal schema
     (same contract as :func:`ann_search`)."""
-    from pulsar_ingestion_spark.operators.similarity import (
-        ivf_probe_cells,
-        ivf_rerank,
-    )
-
-    try:
-        state = VersionedTable(state_root).read(spark)
-    except FileNotFoundError:
+    cands = _read_state(spark, state_root, id_col, vec_col, "cell")
+    if cands is None:
         return _empty_search_result(spark, queries, id_col)
     # committed state WITHOUT its centroid sidecar is corruption, not an
     # empty index — let the read raise (round-11 review finding #1: the
@@ -321,8 +292,5 @@ def ivf_search(
             "ivf_centroids.json sidecar — the index is corrupt (sidecar "
             "pruned or state copied without it); re-index into a fresh root"
         ) from exc
-    assigned = state.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), "cell"
-    )
     probes = ivf_probe_cells(queries, cents, nprobe, id_col, vec_col)
-    return ivf_rerank(probes, assigned, k)
+    return top_k(rerank_score(probes, cands, "cell"), k)

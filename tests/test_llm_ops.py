@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.operators.dedup import (
     dedup_exact,
-    dedup_minhash_lsh,
     embedding_near_dups,
     ngram_jaccard_pairs,
     simhash_near_dups,
@@ -44,13 +43,6 @@ def test_ngram_jaccard_finds_near_dups(spark):
     assert pairs[(1, 2)] == 1.0            # identical
     assert (1, 3) in pairs and pairs[(1, 3)] > 0.5
     assert all(4 not in p for p in pairs)  # unrelated doc never pairs
-
-
-def test_minhash_lsh_candidates(spark):
-    pairs = {(r["id_a"], r["id_b"]) for r in
-             dedup_minhash_lsh(_docs(spark), threshold=0.5).collect()}
-    assert (1, 2) in pairs
-    assert all(4 not in p for p in pairs)
 
 
 def test_simhash_near_dups(spark):
@@ -283,25 +275,6 @@ def test_blas_bucketed_recall_on_planted_dups(spark, sf_dir):
     assert bucketed <= exact
     recall = len(bucketed & exact) / len(exact)
     assert recall >= 0.9, f"bucketed near-dup recall too low: {recall}"
-
-
-def test_ivf_recall_vs_bruteforce(spark, sf_dir):
-    """IVF with nprobe=3 of 16 cells must recover most brute-force
-    neighbors on the test embeddings (recall sanity, not exactness)."""
-    from pulsar_ingestion_spark.operators.similarity import knn_ivf
-    from pulsar_ingestion_spark.session import load_tables
-
-    emb = load_tables(spark, sf_dir)["embeddings"]
-    q = emb.filter(F.col("vec_id") < 10)
-    exact = {
-        (r["query_id"], r["cand_id"]) for r in knn_bruteforce(q, emb, k=3).collect()
-    }
-    approx = {
-        (r["query_id"], r["cand_id"])
-        for r in knn_ivf(q, emb, k=3, n_clusters=8, nprobe=3).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.5, f"IVF recall too low: {recall}"
 
 
 def test_multimodal_pipeline(spark):

@@ -353,6 +353,52 @@ def test_fixpoint_query_job_ceilings(spark):
     assert not over, over
 
 
+def test_one_ann_search_core():
+    """The similarity searches share one implementation of each step.
+    Over ``operators/similarity.py``, ``streaming/ann_index.py`` and the
+    recall-sweep query: ``row_number`` is called in one top-level
+    function (``top_k``); the HOF ``cosine_rounded`` is never called
+    (every rerank scores with ``cosine_rounded_kernel``); the only
+    ``pandas_udf`` kernels are the one sign-LSH kernel and the PQ
+    encode; and the seeded-centroid ``.orderBy(F.md5(...))`` is written
+    once."""
+    import ast
+    from pathlib import Path
+
+    import pulsar_ingestion_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    fns = {}
+    for rel in ("operators/similarity.py", "streaming/ann_index.py", "queries_llm.py"):
+        for node in ast.parse((root / rel).read_text()).body:
+            if isinstance(node, ast.FunctionDef) and (
+                    rel != "queries_llm.py" or node.name == "q_sim_search_ivf_recall_sweep"):
+                fns[f"{rel}::{node.name}"] = node
+    assert "queries_llm.py::q_sim_search_ivf_recall_sweep" in fns
+
+    def called(node, name):
+        return (isinstance(node, ast.Call)
+                and name in (getattr(node.func, "attr", None), getattr(node.func, "id", None)))
+
+    def callers(name):
+        return sorted(q for q, fn in fns.items() if any(called(n, name) for n in ast.walk(fn)))
+
+    assert callers("row_number") == ["operators/similarity.py::top_k"]
+    assert callers("cosine_rounded") == []
+    udfs = sorted(
+        q for q, fn in fns.items() for n in ast.walk(fn)
+        if isinstance(n, ast.FunctionDef)
+        and any(called(d, "pandas_udf") for d in n.decorator_list)
+    )
+    assert udfs == ["operators/similarity.py::pq_encode_kernel",
+                    "operators/similarity.py::signlsh_buckets_multi"], udfs
+    md5_orders = [
+        q for q, fn in fns.items() for n in ast.walk(fn)
+        if called(n, "orderBy") and n.args and called(n.args[0], "md5")
+    ]
+    assert md5_orders == ["operators/similarity.py::seeded_centroids"], md5_orders
+
+
 # Public top-level defs that no code outside tests/ calls, kept on
 # purpose.  Every other uncalled def is deleted (ROADMAP direction 10).
 KEEP_UNCALLED = {
@@ -370,9 +416,6 @@ KEEP_UNCALLED = {
     # the query side of the streamed IVF index
     "streaming/ann_index.py::ivf_search",
     # operators with tests and no caller yet, not yet decided on
-    "operators/dedup.py::release_cached_intermediates",
-    "operators/dedup.py::dedup_minhash_lsh",
-    "operators/similarity.py::knn_ivf",
     "operators/storage.py::compact_partitioned_output",
     "operators/storage.py::overwrite_tenant_partitions",
     "operators/storage.py::upsert_latest",

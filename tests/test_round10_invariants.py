@@ -105,25 +105,6 @@ def test_pq_encode_kernel_null_rows_yield_null_enc(spark):
     assert list(rows[1]["codes"]) == list(ref[1]["codes"]) == [1, 0]
 
 
-def test_tracked_persist_trims_released_entries(spark):
-    """_PERSISTED must not grow unboundedly across out-of-band cache
-    clears (ADVICE r9): entries freed by spark.catalog.clearCache() are
-    trimmed on the next _tracked_persist call."""
-    from pulsar_ingestion_spark.operators import dedup as d
-
-    d.release_cached_intermediates()
-    base = spark.range(10)
-    for i in range(3):
-        d._tracked_persist(base.withColumn("i", F.lit(i)))
-    assert len(d._PERSISTED) == 3
-    spark.catalog.clearCache()  # out-of-band free: list still holds 3 refs
-    d._tracked_persist(base.withColumn("i", F.lit(99)))
-    # the three cleared entries were trimmed; only the live one remains
-    assert len(d._PERSISTED) == 1
-    assert d.release_cached_intermediates() == 1
-    assert d._PERSISTED == []
-
-
 def test_keyed_running_sums_enforces_driver_row_budget(spark):
     """VERDICT r9 item 3: the few-key discipline is now ENFORCED — a
     high-cardinality key blows the driver-row budget and raises loudly

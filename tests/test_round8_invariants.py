@@ -184,8 +184,8 @@ def test_blas_oracle_auto_matches_fixed_in_clamp_region(spark):
 def test_minhash_signatures_explode_plan_matches_naive_hof(spark):
     """The explode+codegen-aggregate signature plan (round-8 scale fix)
     must produce EXACTLY the values of the naive array_min(transform(...))
-    form it replaced, for both hash families — same minhashes, same
-    shingle sets."""
+    form it replaced for the md5 family — same minhashes, same shingle
+    sets."""
     from pyspark.sql import functions as F2
 
     from pulsar_ingestion_spark.functions.text import shingles
@@ -203,46 +203,18 @@ def test_minhash_signatures_explode_plan_matches_naive_hof(spark):
             F2.transform(w, lambda x: F2.md5(F2.concat(F2.lit(f"{s}:"), x)))
         )
 
-    def xx_sig(s):
-        return F2.array_min(F2.transform(w, lambda x: F2.xxhash64(F2.lit(s), x)))
-
-    for fam in ("md5", "xxhash64"):
-        sig = md5_sig if fam == "md5" else xx_sig
-        naive = docs.select(
-            F2.col("doc_id"),
-            w.alias("w"),
-            *[sig(s).alias(f"sig_{i}") for i, s in enumerate(MINHASH_SEEDS)],
-        )
-        got = {r["doc_id"]: r for r in minhash_signatures(docs, hash=fam).collect()}
-        want = {r["doc_id"]: r for r in naive.collect()}
-        assert set(got) == set(want)
-        for d in want:
-            assert sorted(got[d]["w"]) == sorted(want[d]["w"]), d
-            for i in range(8):
-                assert got[d][f"sig_{i}"] == want[d][f"sig_{i}"], (fam, d, i)
-
-
-def test_minhash_fast_is_precise_and_recalls_md5_pairs(spark):
-    """The xxhash64 variant (VERDICT r7 item 4): every emitted pair is a
-    true exact-Jaccard ≥ threshold pair (precision 1 by construction —
-    re-verify independently), and on the test corpus it finds the same
-    near-dup pairs as the md5 family (recall parity at this scale)."""
-    from pulsar_ingestion_spark.operators.dedup import (
-        minhash_banded_pairs,
-        ngram_jaccard_pairs,
+    naive = docs.select(
+        F2.col("doc_id"),
+        w.alias("w"),
+        *[md5_sig(s).alias(f"sig_{i}") for i, s in enumerate(MINHASH_SEEDS)],
     )
-
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    fast = {tuple(r) for r in
-            minhash_banded_pairs(docs, hash="xxhash64").collect()}
-    md5 = {tuple(r) for r in minhash_banded_pairs(docs, hash="md5").collect()}
-    # precision: the exact all-candidate jaccard relation must contain
-    # every fast pair at the same score
-    exact = {tuple(r) for r in
-             ngram_jaccard_pairs(docs, threshold=0.35, n=3).collect()}
-    assert fast <= exact
-    assert fast == md5 and fast
+    got = {r["doc_id"]: r for r in minhash_signatures(docs, hash="md5").collect()}
+    want = {r["doc_id"]: r for r in naive.collect()}
+    assert set(got) == set(want)
+    for d in want:
+        assert sorted(got[d]["w"]) == sorted(want[d]["w"]), d
+        for i in range(8):
+            assert got[d][f"sig_{i}"] == want[d][f"sig_{i}"], (d, i)
 
 
 def test_minhash_fast_rejects_unknown_hash(spark):
@@ -274,44 +246,3 @@ def test_bfs_hops_known_graph(spark):
     full = {r["node"]: r["dist"] for r in bfs_hops(bidir, seeds, 10).collect()}
     assert full == {1: 0, 8: 0, 2: 1, 9: 1, 3: 2, 4: 3, 5: 4}
     bidir.unpersist()
-
-
-def test_minhash_km_family_is_precise(spark):
-    """Kirsch-Mitzenmacher 2-hash family (round 8, measured-slower
-    alternative — kept as an option, see SCALE.md 6i): signatures are
-    min(h1 + i*h2) with both hashes masked to 31 bits (no ANSI long
-    overflow), and every emitted pair is still exact-Jaccard-verified
-    (precision 1 regardless of hash family)."""
-    from pulsar_ingestion_spark.operators.dedup import (
-        minhash_banded_pairs,
-        minhash_signatures,
-        ngram_jaccard_pairs,
-    )
-
-    txt = "the quick brown fox jumps over the lazy dog today"
-    rows = [
-        (1, txt),
-        (2, txt),  # exact duplicate: every band MUST collide
-        (3, "completely different text with no overlap at all here now"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = minhash_signatures(docs, hash="km").collect()
-    for r in sigs:
-        for i in range(8):
-            assert 0 <= r[f"sig_{i}"] < (1 << 34)
-    s12 = {r["doc_id"]: [r[f"sig_{i}"] for i in range(8)] for r in sigs}
-    assert s12[1] == s12[2]        # identical text -> identical signature
-    assert s12[1] != s12[3]
-    pairs = {(r["id_a"], r["id_b"]): r["jaccard"]
-             for r in minhash_banded_pairs(docs, hash="km",
-                                           threshold=0.35).collect()}
-    # only the duplicate pair survives, at exact jaccard 1.0 from the
-    # verify stage (precision is hash-family-independent); note the KM
-    # family's mins are CORRELATED across i (one changed shingle can
-    # flip every signature together), which is part of why it measured
-    # slightly lower recall than 8 independent hashes at sf0.1
-    assert set(pairs) == {(1, 2)}
-    assert pairs[(1, 2)] == 1.0
-    exact = {(r["id_a"], r["id_b"])
-             for r in ngram_jaccard_pairs(docs, threshold=0.35).collect()}
-    assert (1, 2) in exact

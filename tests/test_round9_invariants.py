@@ -107,29 +107,3 @@ def test_migration_is_first_resume_only(spark, tmp_path):
     committer(df, 1)  # ...but the first-resume guard must have refused
     assert t.batch_watermarks()[app] == 1
     assert t.read(spark).count() == 15
-
-
-def test_dedup_release_cached_intermediates(spark):
-    """ADVICE r8: the banded-dedup operators persist their signature
-    relations (scale re-plan) but never unpersisted them — callers own
-    cleanup via release_cached_intermediates()."""
-    from pulsar_ingestion_spark.operators import dedup
-
-    df = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog %d" % (i % 3),)
-         for i in range(30)],
-        "doc_id long, text string",
-    )
-    sc = spark.sparkContext._jsc.sc()
-    baseline = sc.getPersistentRDDs().size()  # other tests may cache too
-    dedup.minhash_banded_pairs(df).count()
-    assert len(dedup._PERSISTED) > 0
-    assert sc.getPersistentRDDs().size() > baseline
-    released = dedup.release_cached_intermediates()
-    assert released > 0
-    assert dedup.release_cached_intermediates() == 0  # idempotent
-    # release drops everything the module ever tracked — in a shared
-    # session that includes OTHER tests' leftover dedup persists, so the
-    # population can end up BELOW this test's baseline; it must never
-    # end above it
-    assert sc.getPersistentRDDs().size() <= baseline

@@ -46,6 +46,7 @@ from perfbench.common import (  # noqa: E402
     Tracer, event_log_totals, host_facts, new_session, stop_jvm,
 )
 from perfbench.maintainers import hash_cuts  # noqa: E402
+from pulsar_ingestion_spark.operators.similarity import seeded_centroids  # noqa: E402
 from pulsar_ingestion_spark.session import load_tables  # noqa: E402
 from pulsar_ingestion_spark.streaming import (  # noqa: E402
     ann_index, dedup_cascade, dim_enrich, mixture, monitor, profile, quantile, sampler,
@@ -59,14 +60,8 @@ MAINTAINER_COLS = ["batch0_s", "steady_s", "total_s", "batch0_jobs", "batch0_sta
 
 
 def _ivf_index(tables, work: str):
-    root = os.path.join(work, "ivf")
-    cents = [
-        (r["vec_id"], r["embedding"])
-        for r in tables["embeddings"].orderBy(F.md5(F.col("vec_id").cast("string")))
-        .limit(16).collect()
-    ]
-    ann_index._write_ivf_centroids(root, cents)
-    return ann_index.stream_ivf_index(root, app_id="qt", centroids=cents)
+    cents = seeded_centroids(tables["embeddings"], 16)
+    return ann_index.stream_ivf_index(os.path.join(work, "ivf"), app_id="qt", centroids=cents)
 
 
 def _drift_monitor(tables, work: str):
