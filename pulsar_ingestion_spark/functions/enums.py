@@ -4,6 +4,10 @@ Reference semantics (GeotabTranslator.kt:120-124, asserted for the AJAR
 case in GeotabTranslatorTest.kt:126-142): uppercase the input, keep it if
 it is a member of the closed value set, otherwise UNKNOWN.  Absent/null
 input is also UNKNOWN — the enums are never null in CMF output.
+Kotlin's ``uppercase()`` is ``String.toUpperCase(Locale.ROOT)``, and so
+is ``F.upper`` here: the session maps case on the JVM (JDK 17, Unicode
+13), not through ICU (see functions/text.py), so "ß" becomes "SS" in
+both and a letter newer than Unicode 13 is left as it is in both.
 
 Pure CASE WHEN — stays inside whole-stage codegen, no UDF.
 """

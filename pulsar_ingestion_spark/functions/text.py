@@ -7,6 +7,16 @@ over the documents scan with full column pruning.  The n-gram kernel
 higher-order-function lambda.  Its regex consumes the separator before
 each gram; a zero-width lookbehind form would step into the middle of
 surrogate pairs (see :func:`ngrams`).
+
+Case mapping: every ``F.lower``/``F.upper`` here (and in the queries)
+is ``java.lang.String.toLowerCase``/``toUpperCase`` with
+``Locale.ROOT``, because the session turns off
+``spark.sql.icu.caseMappings.enabled`` (session.py).  That is JDK 17's
+Unicode 13 case table, and the mapping of the reference's Kotlin
+``uppercase()``.  ICU (Unicode 16) would map letters added in Unicode
+14 and later (Glagolitic U+2C2F, Vithkuqi U+10570..., Latin U+A7C0)
+that the JDK leaves unchanged; on older letters, including İ, final
+sigma, ß and the ﬃ ligature, the two agree.
 """
 
 from __future__ import annotations

@@ -53,6 +53,7 @@ class Version:
     op: str
     files: list[str]  # relative to table root
     parent: int | None
+    schema: StructType | None = None  # as committed; None in older manifests
 
 
 class VersionedTable:
@@ -92,8 +93,10 @@ class VersionedTable:
                 raise FileNotFoundError(f"no committed version in {self.root}")
         with open(self._manifest_path(version)) as fh:
             m = json.load(fh)
+        schema = m.get("meta", {}).get("schema")
         return Version(
-            version=version, op=m["op"], files=m["files"], parent=m.get("parent")
+            version=version, op=m["op"], files=m["files"], parent=m.get("parent"),
+            schema=None if schema is None else StructType.fromJson(schema),
         )
 
     def _commit(
@@ -175,31 +178,38 @@ class VersionedTable:
     def append(self, df: DataFrame) -> int:
         new_files = self._write_files(df)
         return self._commit_with_retries(
-            "append", lambda base_files: base_files + new_files
+            "append", lambda base_files: base_files + new_files,
+            meta={"schema": df.schema.jsonValue()},
         )
 
     def overwrite(self, df: DataFrame) -> int:
         """Replace table contents; old versions stay readable (time
         travel) until vacuumed."""
         new_files = self._write_files(df)
-        return self._commit_with_retries("overwrite", lambda _base: new_files)
+        return self._commit_with_retries(
+            "overwrite", lambda _base: new_files, meta={"schema": df.schema.jsonValue()}
+        )
 
     def rollback(self, to_version: int) -> int:
         """Re-commit an old file list as the NEW current version —
         history stays append-only, nothing is deleted."""
-        files = self.describe(to_version).files
-        return self._commit_with_retries("rollback", lambda _base: files)
+        old = self.describe(to_version)
+        meta = None if old.schema is None else {"schema": old.schema.jsonValue()}
+        return self._commit_with_retries("rollback", lambda _base: old.files, meta=meta)
 
     # -- read paths ---------------------------------------------------------
 
     def read(self, spark: SparkSession, version: int | None = None,
              schema: StructType | None = None) -> DataFrame:
-        """The table at ``version`` (default: current).  A caller that
-        knows the table's ``schema`` skips the footer-reading job Spark
-        runs to infer it."""
+        """The table at ``version`` (default: current), in ``schema``
+        (default: the schema its commit recorded).  A known schema skips
+        the footer-reading job Spark runs to infer one, which only a
+        manifest written before commits recorded their schema still pays."""
         m = self.describe(version)
         if not m.files:
             raise FileNotFoundError(f"version {m.version} of {self.root} is empty")
+        if schema is None:
+            schema = m.schema
         reader = spark.read if schema is None else spark.read.schema(schema)
         return reader.parquet(*[os.path.join(self.root, f) for f in m.files])
 
@@ -534,7 +544,8 @@ class VersionedTable:
                 try:
                     self._commit(
                         "stream-append", base_files + new_files, base,
-                        meta={"batch_id": int(batch_id), "app_id": app_id},
+                        meta={"batch_id": int(batch_id), "app_id": app_id,
+                              "schema": batch_df.schema.jsonValue()},
                     )
                     self._raise_batch_watermark(int(batch_id), app_id)
                     return

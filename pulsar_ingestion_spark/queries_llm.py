@@ -2381,9 +2381,13 @@ def q_text_dedup_cascade(spark, sf_dir):
     near_removed → n_final) hash-matches the oracle."""
     docs = fan_out(load_tables(spark, sf_dir)["documents"], spark)
     ex = docs.select("doc_id", "source", "text", F.md5("text").alias("h"))
-    keep = ex.groupBy("h").agg(F.min("doc_id").alias("keep_id"))
+    # the keep side's digest is renamed: a groupBy("h") of ``ex`` keeps
+    # ex's own ``h`` attribute, so ex["h"] == keep["h"] compares it with
+    # itself and the join would key on the digest only through Spark's
+    # by-name re-resolution of a trivially true self-join predicate
+    keep = ex.groupBy(F.col("h").alias("keep_h")).agg(F.min("doc_id").alias("keep_id"))
     s1 = (
-        ex.join(keep, (ex["h"] == keep["h"]) & (ex["doc_id"] == keep["keep_id"]))
+        ex.join(keep, (ex["h"] == keep["keep_h"]) & (ex["doc_id"] == keep["keep_id"]))
         .select("doc_id", "source", "text")
         .persist()
     )

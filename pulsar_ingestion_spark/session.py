@@ -78,6 +78,12 @@ _LOCAL_DEFAULTS = {
     # which breaks instant functions (unix_millis) and diverges from
     # DuckDB's epoch interpretation; read them as instants instead.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # lower/upper map case as java.lang.String.toLowerCase/toUpperCase
+    # (Locale.ROOT), the mapping of the reference's Kotlin uppercase()
+    # (GeotabTranslator.kt:120-124), not through ICU: ICU's first use
+    # costs every JVM over a second, and the two differ only on letters
+    # newer than the JDK's Unicode version (functions/text.py).
+    "spark.sql.icu.caseMappings.enabled": "false",
     "spark.ui.enabled": "false",
     # No stderr progress bars: they corrupt line-oriented tool output
     # (the driver's bench tail-capture lost BENCH_r03's JSON to them).

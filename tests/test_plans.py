@@ -538,3 +538,23 @@ def test_dynamic_partition_pruning_fires(spark, tmp_path):
         assert "dynamicpruning" in plan.lower(), plan
     finally:
         spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", prev)
+
+
+def test_text_dedup_cascade_exact_join_compares_two_digests(spark):
+    """The exact stage joins each row to its digest group on the row's
+    digest and the group's, two attributes.  Checked with Spark's
+    re-resolution of a trivially true self-join predicate (``h = h``)
+    turned off, so the query does not lean on it."""
+    from pulsar_ingestion_spark.queries_llm import q_text_dedup_cascade
+
+    key = "spark.sql.selfJoinAutoResolveAmbiguity"
+    spark.conf.set(key, "false")
+    try:
+        plan = q_text_dedup_cascade(spark, SF)._jdf.queryExecution().analyzed().toString()
+    finally:
+        spark.conf.unset(key)
+    conds = [ln for ln in plan.splitlines() if "Join Inner" in ln]
+    eqs = [m for ln in conds for m in re.findall(r"\((\w+)#(\d+)L? = (\w+)#(\d+)L?\)", ln)]
+    digests = [(a, b) for name, a, _, b in eqs if name == "h"]
+    assert digests, plan
+    assert all(a != b for _, a, _, b in eqs), conds

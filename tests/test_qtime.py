@@ -15,11 +15,13 @@ MAINTAINER_NAMES = {
 
 def test_qtime_times_a_query_and_maintainers(spark, sf_dir, tmp_path):
     from perfbench.common import Tracer
-    from tools.qtime import MAINTAINERS, time_maintainer, time_query
+    from tools.qtime import MAINTAINERS, QUERY_COLS, time_maintainer, time_query
 
     assert set(MAINTAINERS) == MAINTAINER_NAMES
     q = time_query(spark, Tracer("qtime-test", enabled=True), "agg_mode", sf_dir, n=1)
-    assert q["min_s"] > 0 and q["build_s"] > 0 and q["exec_s"] > 0
+    assert set(q) == set(QUERY_COLS) and QUERY_COLS[0] == "first_s"
+    # the discarded first run is reported too
+    assert q["first_s"] > 0 and q["min_s"] > 0 and q["build_s"] > 0 and q["exec_s"] > 0
     assert q["jobs"] >= 1 and q["stages"] >= 1
     for name in ("sketch_hll", "dedup_cascade"):
         m = time_maintainer(spark, name, sf_dir, 2, str(tmp_path / name))

@@ -95,6 +95,18 @@ def test_ann_index_replay_is_idempotent(spark, tmp_path):
     assert got == _batch_truth(spark)
 
 
+def test_ann_search_builds_without_a_job(spark, tmp_path, jobs_run_by):
+    """The index state's schema rides in its manifest, so building a
+    search over it reads no parquet footer: no Spark job runs."""
+    root = str(tmp_path / "idx")
+    stream_ann_index(root, app_id="schema", dim=DIM, num_planes=PLANES)(_emb(spark), 0)
+    queries = _queries(spark)
+    df, jobs = jobs_run_by(
+        lambda: ann_search(spark, root, queries, dim=DIM, k=K, num_planes=PLANES))
+    assert jobs == 0
+    assert {tuple(r) for r in df.collect()} == _batch_truth(spark)
+
+
 def test_ann_index_real_stream_available_now(spark, tmp_path):
     """End-to-end through a real Structured Streaming query: the corpus
     split across 3 parquet files, maxFilesPerTrigger=1 (3 micro-batches),

@@ -155,6 +155,16 @@ def test_restart_from_checkpoint_end_to_end(spark, tmp_path):
     assert final == expected
 
 
+def test_accepted_docs_builds_without_a_job(spark, tmp_path, jobs_run_by):
+    """The state's schema rides in its manifest, so building the
+    accepted-docs frame reads no parquet footer: no Spark job runs."""
+    root = str(tmp_path / "state")
+    stream_dedup_cascade(root, app_id="schema")(_docs(spark), 0)
+    df, jobs = jobs_run_by(lambda: accepted_docs(spark, root))
+    assert jobs == 0
+    assert df.count() > 0
+
+
 def test_exact_copies_and_null_text_get_no_state_row(spark, tmp_path):
     """The exact stage: a later copy of a state doc's text, the second of
     two equal new texts in one batch, and NULL text leave no state row;

@@ -43,6 +43,26 @@ def test_rollback_is_append_only(spark, tmp_path):
     assert t.versions() == [0, 1, 2]  # history never truncated
 
 
+def test_every_commit_records_its_schema(spark, tmp_path, jobs_run_by):
+    """append, overwrite, rollback and a stream append each record the
+    schema they wrote, so a read of any version needs no footer job; a
+    hand-written manifest without one is still read by inference."""
+    t = VersionedTable(str(tmp_path / "t"))
+    wide = _df(spark, 0, 4).withColumn("tag", F.lit("x"))
+    t.append(_df(spark, 0, 10))
+    t.overwrite(wide)
+    t.rollback(0)
+    t.stream_batch_committer("app")(wide, 0)
+    for v, df in enumerate([_df(spark, 0, 10), wide, _df(spark, 0, 10), wide]):
+        assert t.describe(v).schema == df.schema, v
+        read, jobs = jobs_run_by(lambda: t.read(spark, v))
+        assert jobs == 0, v
+        assert read.columns == df.columns, v
+    t._commit("append", t.describe(0).files, base=t.current_version())
+    assert t.describe().schema is None
+    assert t.read(spark).count() == 10
+
+
 def test_snapshot_isolation_while_writing(spark, tmp_path):
     """Files staged by an in-flight write are invisible until the
     manifest commits."""
