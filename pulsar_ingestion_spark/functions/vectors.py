@@ -1,8 +1,9 @@
 """Vector math over array<float> embedding columns — pure built-ins.
 
-Dot products / norms use ``F.aggregate`` (an ordered left fold), so the
-floating-point summation order is DETERMINISTIC (array order) — required
-for cross-engine hash parity (DuckDB oracle uses list_reduce, same fold).
+Dot products, squared distances and norms use ``F.aggregate`` (an
+ordered left fold), so the floating-point summation order is
+DETERMINISTIC (array order) — required for cross-engine hash parity
+(DuckDB oracle uses list_reduce, same fold).
 Everything stays in whole-stage codegen; no UDF.
 """
 
@@ -18,6 +19,17 @@ def dot(a: Column, b: Column) -> Column:
     """Ordered-fold dot product in double precision."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def dist2(a: Column, b: Column) -> Column:
+    """Ordered-fold squared L2 distance in double precision (DuckDB
+    list_reduce over the same zip order is bit-identical)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double"))
+                   * (x.cast("double") - y.cast("double"))),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )

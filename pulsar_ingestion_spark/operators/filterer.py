@@ -5,16 +5,22 @@ Reference (Filterer.kt:22-50): parse the CMF JSON, read ``meta.tenantId``
 string (:39-45, asserted FiltererTest.kt:113) to the computed destination
 ``persistent://{tenantId}/integration/telemetry`` (:36).
 
-Spark mapping (SURVEY.md §2.3):
-  * tenant extraction is ``get_json_object`` on the raw string — we route
-    on the parsed field but forward the original bytes, so the payload
-    column is never re-serialized;
-  * the drop rule is the ``filter_not_blank`` predicate;
-  * the dynamic per-tenant destination becomes a partitioned sink:
-    ``foreachBatch { batch.write.partitionBy("tenantId") }`` for files, or
-    a per-row ``topic`` column for Kafka/Pulsar sinks.  Partitioning by
+This module is the one router every ingest run goes through:
+
+  * :func:`route` is the routing decision — tenant extraction
+    (``get_json_object`` on the raw string: we route on the parsed field
+    but forward the original bytes, so the payload column is never
+    re-serialized) followed by the ``not_blank`` drop rule;
+  * :func:`tenant_topic` is the computed destination as a per-row topic
+    column, for topic sinks (Kafka/Pulsar/the jsonl bridge);
+  * :func:`append_tenant_dirs` is the file-sink form of the dynamic
+    destination: one ``partitionBy("tenantId")`` append, run once per
+    batch run or per ``foreachBatch`` micro-batch.  Partitioning by
     tenant in the sink is the scale-correct analog — one shuffle-free
-    write with dynamic partition overwrite, not N per-tenant jobs.
+    write, not N per-tenant jobs.
+
+``plans/pipeline.py::route_plan`` composes these with the sources and
+translators into the routed plan that batch and streaming runs share.
 """
 
 from __future__ import annotations
@@ -23,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TENANT_PATH = "$.meta.tenantId"
+# the reference destination (Filterer.kt:36); ``{tenant}`` marks the tenant
+REFERENCE_TOPIC = "persistent://{tenant}/integration/telemetry"
 
 
 def not_blank(col: Column) -> Column:
@@ -51,47 +59,31 @@ def filter_routable(df: DataFrame, tenant_col: str = "tenantId") -> DataFrame:
     return df.filter(not_blank(F.col(tenant_col)))
 
 
-def topic_for_tenant(tenant_col: str = "tenantId") -> Column:
-    """The computed destination (Filterer.kt:36) as a column, for sinks
-    that take a per-row topic (Kafka/Pulsar)."""
-    return F.concat(F.lit("persistent://"), F.col(tenant_col), F.lit("/integration/telemetry"))
+def route(df: DataFrame, payload_col: str = "value") -> DataFrame:
+    """The routing decision: the routable ``(tenantId, <payload_col>)``
+    rows of ``df``, the payload forwarded byte-identical."""
+    return filter_routable(extract_tenant(df, payload_col)).select("tenantId", payload_col)
 
 
-def route_to_tenant_dirs(
-    df: DataFrame,
-    base_path: str,
-    payload_col: str = "value",
-    mode: str = "append",
-) -> None:
-    """Batch/foreachBatch body of the dynamic sink: one partitioned write.
-
-    Writes the ORIGINAL payload strings under ``base_path/tenantId=<t>/``.
-    In streaming this is invoked via ``writeStream.foreachBatch``; the
-    partitionBy keeps per-tenant file layouts without per-tenant jobs and
-    scales to thousands of tenants (each partition dir is written by the
-    tasks that own its rows — no extra shuffle unless requested).
-    """
-    routable = filter_routable(extract_tenant(df, payload_col))
-    routable.select(F.col("tenantId"), F.col(payload_col)).write.mode(mode).partitionBy(
-        "tenantId"
-    ).parquet(base_path)
+def tenant_topic(template: str = REFERENCE_TOPIC) -> Column:
+    """The computed destination (Filterer.kt:36) as a per-row topic column:
+    ``template`` with every ``{tenant}`` replaced by the tenant.  The
+    default is the reference's Pulsar URI; Kafka topic names forbid '/',
+    so a Kafka publish passes e.g. ``"{tenant}.integration.telemetry"``."""
+    parts = template.split("{tenant}")
+    if len(parts) < 2:
+        raise ValueError(f"topic template must contain '{{tenant}}' (got {template!r})")
+    cols = []
+    for i, p in enumerate(parts):
+        if p:
+            cols.append(F.lit(p))
+        if i < len(parts) - 1:
+            cols.append(F.col("tenantId"))
+    return F.concat(*cols)
 
 
-def prepare_kafka_routing(df: DataFrame, payload_col: str = "value") -> DataFrame:
-    """Shape a routable stream for Spark's Kafka sink with PER-ROW topics:
-    the sink reads the ``topic`` column, so the computed destination
-    (Filterer.kt:36) needs no foreachBatch at all.  Kafka topic names
-    forbid '/', so the Pulsar-style URI is sanitized to
-    ``<tenantId>.integration.telemetry``.
-
-    Start with:
-        prepare_kafka_routing(extract_tenant(df)).writeStream
-            .format("kafka").option("kafka.bootstrap.servers", ...).start()
-    """
-    routable = filter_routable(df)
-    topic = F.concat(F.col("tenantId"), F.lit(".integration.telemetry"))
-    return routable.select(
-        topic.alias("topic"),
-        F.col(payload_col).cast("string").alias("value"),
-    )
-
+def append_tenant_dirs(routed: DataFrame, base_path: str) -> None:
+    """Append routed rows under ``base_path/tenantId=<t>/``: one
+    partitioned write (each partition dir is written by the tasks that
+    own its rows — no shuffle, any number of tenants)."""
+    routed.write.mode("append").partitionBy("tenantId").parquet(base_path)

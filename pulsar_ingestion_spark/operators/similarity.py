@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pulsar_ingestion_spark.functions.vectors import cosine_rounded_kernel, dot, norm
+from pulsar_ingestion_spark.functions.vectors import cosine_rounded_kernel, dist2, dot, norm
 
 
 def top_k(scored: DataFrame, k: int, *lead: str) -> DataFrame:
@@ -363,17 +363,6 @@ def knn_lsh_multiprobe(
     return top_k(rerank_score(probes, cands, "bucket"), k)
 
 
-def _dist2(a, b):
-    """Ordered-fold squared L2 distance (deterministic summation order —
-    DuckDB list_reduce over the same zip order is bit-identical)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-                   * (x.cast("double") - y.cast("double"))),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def seeded_centroids(
     candidates: DataFrame,
     n_cells: int,
@@ -446,7 +435,7 @@ def ivf_probe_cells(
     def cell_structs(vec):
         return F.array(*[
             F.struct(
-                _dist2(vec, F.array(*[F.lit(float(x)) for x in cvec])).alias("d2"),
+                dist2(vec, F.array(*[F.lit(float(x)) for x in cvec])).alias("d2"),
                 F.lit(cell).cast("long").alias("cell"),
             )
             for cell, cvec in cents

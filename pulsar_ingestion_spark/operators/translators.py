@@ -141,14 +141,6 @@ def _validity(parsed: Column, required: Iterable[str]) -> Column:
     return cond
 
 
-def _split(df: DataFrame, payload_col: str, schema, required, cmf_builder, dead_letter: bool,
-           cache_key=None):
-    return _split_with_extra(
-        df, payload_col, schema, required, lambda p: F.lit(True), cmf_builder, dead_letter,
-        cache_key=cache_key,
-    )
-
-
 # Built Column trees are pure unresolved expressions (they reference input
 # columns by NAME, not by DataFrame), so they are reusable across any
 # DataFrame with a ``payload_col`` string column.  Building them is pure
@@ -214,17 +206,22 @@ def translate_geotab(
         return iso8601_to_epoch_millis(p.getField("Record_DateTime")).isNotNull()
 
     return _split_with_extra(
-        df, payload_col, GEOTAB_RAW_SCHEMA, required, _valid_extra, _build, dead_letter,
-        cache_key=("geotab", tenant, payload_col),
+        df, payload_col, GEOTAB_RAW_SCHEMA, required, _build, dead_letter,
+        extra_pred=_valid_extra, cache_key=("geotab", tenant, payload_col),
     )
 
 
-def _split_with_extra(df, payload_col, schema, required, extra_pred, cmf_builder, dead_letter,
-                      cache_key=None):
+def _split_with_extra(df, payload_col, schema, required, cmf_builder, dead_letter,
+                      extra_pred=None, cache_key=None):
+    """Parse, validate and build the CMF: ``good`` rows with ``cmf``, and
+    with ``dead_letter`` also ``dead``, the malformed originals.
+    ``extra_pred`` adds a validity condition beyond required-field
+    presence."""
     # Dead-letter discipline: the reference logs+drops malformed input
     # (GeotabTranslator.kt:154-157); we keep the originals addressable.
     def _build_exprs():
         raw = F.col(payload_col)
+        extra = F.lit(True) if extra_pred is None else extra_pred(F.col("_parsed"))
         # explode(array(from_json(...))) is a Generate barrier: Catalyst cannot
         # substitute the parse into downstream filter conjuncts (predicate
         # pushdown stops at generator outputs), so the JSON document is parsed
@@ -233,9 +230,7 @@ def _split_with_extra(df, payload_col, schema, required, extra_pred, cmf_builder
         # array(x) always has one element, so row counts are unchanged and a
         # malformed parse (null struct) still flows to the dead-letter branch.
         parsed_c = F.explode(F.array(F.from_json(raw, schema)))
-        valid_c = (
-            raw.isNotNull() & _validity(F.col("_parsed"), required) & extra_pred(F.col("_parsed"))
-        )
+        valid_c = raw.isNotNull() & _validity(F.col("_parsed"), required) & extra
         return parsed_c, valid_c, cmf_builder(F.col("_parsed"))
 
     if cache_key is not None:
@@ -283,8 +278,10 @@ def translate_calamp(
             translator_tag="CalAmpTranslator_v1.0",
         )
 
-    return _split(df, payload_col, CALAMP_RAW_SCHEMA, CALAMP_REQUIRED, _build, dead_letter,
-                  cache_key=("calamp", tenant, payload_col))
+    return _split_with_extra(
+        df, payload_col, CALAMP_RAW_SCHEMA, CALAMP_REQUIRED, _build, dead_letter,
+        cache_key=("calamp", tenant, payload_col),
+    )
 
 
 def translate_ford(
@@ -329,8 +326,8 @@ def translate_ford(
         )
 
     return _split_with_extra(
-        df, payload_col, FORD_RAW_SCHEMA, FORD_REQUIRED, _valid_extra, _build, dead_letter,
-        cache_key=("ford", tenant, payload_col),
+        df, payload_col, FORD_RAW_SCHEMA, FORD_REQUIRED, _build, dead_letter,
+        extra_pred=_valid_extra, cache_key=("ford", tenant, payload_col),
     )
 
 

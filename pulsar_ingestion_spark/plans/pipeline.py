@@ -3,21 +3,23 @@
 The reference provisions: source connectors → raw-<source> topics →
 translator functions → one CMF topic → Filterer → per-tenant topics
 (deployment/pipeline.yaml:1-68, docs/architecture.md:105-118).  Here one
-spec instantiates the same topology as a single Structured Streaming
-query:
+spec instantiates the same topology as one DataFrame plan,
+:func:`route_plan`, which batch and streaming runs share:
 
-    for each source: open_source → translate_<kind>
-    union all branches (unionByName — the shared CMF topic)
-    route: extract tenant → drop unroutable → the one chosen sink
+    for each source: open_source → translate_<kind> → (good, dead)
+    union_cmf of the good branches (the shared CMF topic) → wire JSON
+    the Filterer's ``route`` (operators/filterer.py) → route_metrics
 
-The sink is chosen once per run (:func:`_sink_writer`): the per-tenant
-topic publish when ``spec.publish`` is set, else a tenant-partitioned
-parquet landing — in streaming mode by ``spec.sink_mode`` (foreachBatch
-append, Spark's native file sink, or the versioned-table committer).
-Batch and streaming then differ only in how that writer is driven: one
-``save()`` versus one checkpointed ``start()``.  Malformed originals, when
-``spec.dead_letter_path`` is set, go to one parquet dead-letter sink
-beside it (its own query in streaming mode, checkpoint ``<ckpt>-dead``).
+The dead-letter branches fan in through the same ``union_cmf``.
+:func:`run_pipeline` is ``route_plan`` plus the one sink chosen for the
+run: the per-tenant topic publish when ``spec.publish`` is set, else a
+tenant-partitioned parquet landing — in streaming mode by
+``spec.sink_mode`` (foreachBatch append, Spark's native file sink, or the
+versioned-table committer).  Batch and streaming then differ only in how
+that sink is driven: one write versus one checkpointed ``start()``.
+Malformed originals, when ``spec.dead_letter_path`` is set, go to one
+parquet dead-letter sink beside it (its own query in streaming mode,
+checkpoint ``<ckpt>-dead``).
 
 One streaming query instead of N processes: the translate branches are
 narrow (no shuffle) and fuse into the scan; only the sink write fans out
@@ -34,7 +36,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pulsar_ingestion_spark.operators.filterer import extract_tenant, filter_routable
+from pulsar_ingestion_spark.operators.filterer import append_tenant_dirs, route, tenant_topic
 from pulsar_ingestion_spark.operators.translators import (
     cmf_to_json,
     translate_calamp,
@@ -128,9 +130,9 @@ class PipelineSpec:
     # "jsonl", "topic_prefix": "..."| "topic_template": "...{tenant}...",
     # **connector options} — each record goes to topic
     # `<topic_prefix><tenantId>`, or to the template with every `{tenant}`
-    # occurrence substituted (see _topic_expr), via open_topic_sink's
-    # dynamic-topic contract (jsonl = broker-less bridge, value lines
-    # partitioned by topic dir).
+    # occurrence substituted (filterer.tenant_topic), via
+    # open_topic_sink's dynamic-topic contract (jsonl = broker-less
+    # bridge, value lines partitioned by topic dir).
     publish: dict | None = None
 
 
@@ -142,14 +144,12 @@ def _with_trigger(writer, spec: "PipelineSpec"):
     return writer.trigger(availableNow=True)
 
 
-def build_cmf_stream(spark: SparkSession, spec: PipelineSpec, streaming: bool = True) -> DataFrame:
-    """Wire sources → translators → canonical CMF stream (wire JSON in
-    `value`, tenant extracted for routing).
-
-    With ``spec.dead_letter_path`` set, malformed originals from every
-    source are unioned and appended there (tagged by source kind/translator)
-    — the observable upgrade of the reference's log-and-vaporize policy
-    (GeotabTranslator.kt:154-157).
+def build_cmf_stream(spark: SparkSession, spec: PipelineSpec, streaming: bool = True):
+    """Wire sources → translators → canonical CMF stream: ``(wire, dead)``,
+    the wire JSON in ``value`` and, when ``spec.dead_letter_path`` is set,
+    the malformed originals of every source tagged by source
+    kind/translator (else ``None``) — the observable upgrade of the
+    reference's log-and-vaporize policy (GeotabTranslator.kt:154-157).
     """
     if not spec.sources:
         raise ValueError("PipelineSpec.sources is empty — nothing to ingest")
@@ -157,27 +157,35 @@ def build_cmf_stream(spark: SparkSession, spec: PipelineSpec, streaming: bool = 
     dead_branches = []
     for src in spec.sources:
         raw = open_source(spark, src.kind, streaming=streaming, **src.options)
-        translate = TRANSLATORS[src.translator]
-        if spec.dead_letter_path:
-            good, dead = translate(raw.select("value"), tenant=src.tenant, dead_letter=True)
-            dead_branches.append(
-                dead.select(
-                    F.lit(src.kind).alias("source_kind"),
-                    F.lit(src.translator).alias("translator"),
-                    F.col("value"),
-                )
-            )
-        else:
-            good = translate(raw.select("value"), tenant=src.tenant)
+        good, dead = TRANSLATORS[src.translator](
+            raw.select("value"), tenant=src.tenant, dead_letter=True
+        )
         branches.append(good.select("cmf"))
-    cmf = union_cmf(*branches)
-    wire = cmf_to_json(cmf, out_col="value").select("value")
-    if dead_branches:
-        dead_all = dead_branches[0]
-        for d in dead_branches[1:]:
-            dead_all = dead_all.unionByName(d)
-        return wire, dead_all
-    return wire
+        dead_branches.append(dead.select(
+            F.lit(src.kind).alias("source_kind"),
+            F.lit(src.translator).alias("translator"),
+            F.col("value"),
+        ))
+    wire = cmf_to_json(union_cmf(*branches), out_col="value").select("value")
+    return wire, union_cmf(*dead_branches) if spec.dead_letter_path else None
+
+
+def route_plan(spark: SparkSession, spec: PipelineSpec, streaming: bool = True):
+    """The routed plan of one run, batch or streaming: ``(routed, dead)``.
+
+    ``routed`` is the Filterer's ``(tenantId, value)`` rows of the wire
+    stream, observed per batch as ``route_metrics`` (routed count and
+    distinct-tenant count, in StreamingQueryProgress.observedMetrics /
+    Observation.get — the reference only log-lines these,
+    GeotabTranslator.kt:154-157); ``dead`` is as in
+    :func:`build_cmf_stream`."""
+    wire, dead = build_cmf_stream(spark, spec, streaming=streaming)
+    routed = route(wire).observe(
+        "route_metrics",
+        F.count(F.lit(1)).alias("routed"),
+        F.approx_count_distinct("tenantId").alias("tenants"),
+    )
+    return routed, dead
 
 
 def _checkpoint_max_batch(checkpoint: str) -> int:
@@ -197,53 +205,34 @@ def _checkpoint_max_batch(checkpoint: str) -> int:
     return mx
 
 
-def _topic_expr(template: str | None, prefix: str):
-    """Per-record publish topic: ``<prefix><tenantId>``, or ``template``
-    with every ``{tenant}`` occurrence replaced by the tenant.  The
-    template puts the tenant ANYWHERE in the topic URI — the reference
-    Filterer routes to persistent://${tenantId}/integration/telemetry
-    (tenant mid-URL, Filterer.kt dynamic outputs), which a prefix alone
-    can't express (ADVICE r10)."""
-    if template is None:
-        return F.concat(F.lit(prefix), F.col("tenantId"))
-    parts = template.split("{tenant}")
-    if len(parts) < 2:
-        raise ValueError(
-            "publish.topic_template must contain '{tenant}' "
-            f"(got {template!r})"
-        )
-    cols = []
-    for i, p in enumerate(parts):
-        if p:
-            cols.append(F.lit(p))
-        if i < len(parts) - 1:
-            cols.append(F.col("tenantId"))
-    return F.concat(*cols)
+def _publish_writer(out: DataFrame, spec: PipelineSpec, streaming: bool):
+    """The relay topology: publish per tenant instead of landing parquet,
+    through open_topic_sink's dynamic-topic contract."""
+    from pulsar_ingestion_spark.sources.registry import open_topic_sink
+
+    opts = dict(spec.publish)
+    kind = opts.pop("kind")
+    prefix = opts.pop("topic_prefix", "tenant-")
+    topic = tenant_topic(opts.pop("topic_template", prefix + "{tenant}"))
+    return open_topic_sink(
+        out.select(topic.alias("__route_topic"), "value"), kind,
+        streaming=streaming, topic_column="__route_topic", **opts,
+    )
 
 
-def _sink_writer(out: DataFrame, spec: PipelineSpec, streaming: bool):
-    """The routed sink, chosen once: a configured (not yet started or
-    saved) DataStreamWriter / DataFrameWriter."""
+def _stream_writer(out: DataFrame, spec: PipelineSpec):
+    """The routed streaming sink, chosen once: a configured (not yet
+    started) DataStreamWriter."""
     if spec.publish is not None:
-        # relay topology: publish per-tenant instead of landing parquet
-        from pulsar_ingestion_spark.sources.registry import open_topic_sink
-
-        opts = dict(spec.publish)
-        kind = opts.pop("kind")
-        topic = _topic_expr(
-            opts.pop("topic_template", None), opts.pop("topic_prefix", "tenant-")
+        return _publish_writer(out, spec, streaming=True)
+    if spec.sink_mode == "native":
+        # Spark's transactional file sink — files become visible only via
+        # the _spark_metadata commit log, exactly-once even across
+        # mid-batch crashes; partitionBy still gives the per-tenant layout.
+        return (
+            out.writeStream.format("parquet").partitionBy("tenantId")
+            .option("path", spec.output_path)
         )
-        return open_topic_sink(
-            out.select(topic.alias("__route_topic"), "value"), kind,
-            streaming=streaming, topic_column="__route_topic", **opts,
-        )
-    if not streaming or spec.sink_mode == "native":
-        # Batch: one partitioned append.  Streaming "native": Spark's
-        # transactional file sink — files become visible only via the
-        # _spark_metadata commit log, exactly-once even across mid-batch
-        # crashes; partitionBy still gives the per-tenant layout.
-        w = out.writeStream if streaming else out.write
-        return w.format("parquet").partitionBy("tenantId").option("path", spec.output_path)
     if spec.sink_mode == "versioned":
         # Manifest-committed sink: replayed batches are no-ops (batch id
         # rides in the manifest), readers get snapshot isolation and time
@@ -275,34 +264,25 @@ def _sink_writer(out: DataFrame, spec: PipelineSpec, streaming: bool):
         return out.writeStream.foreachBatch(
             table.stream_batch_committer(app_id=spec.checkpoint)
         )
-
-    def _write(batch: DataFrame, epoch_id: int) -> None:
-        batch.write.mode("append").partitionBy("tenantId").parquet(spec.output_path)
-
-    return out.writeStream.foreachBatch(_write)
+    return out.writeStream.foreachBatch(
+        lambda batch, _epoch: append_tenant_dirs(batch, spec.output_path)
+    )
 
 
 def run_pipeline(spark: SparkSession, spec: PipelineSpec, streaming: bool = True):
-    """Execute the pipeline.  Streaming: returns a :class:`PipelineRun`
-    holding the main sink's StreamingQuery and, when configured, the
-    dead-letter sink's (availableNow drain-and-stop by default; set
-    spec.trigger_interval for a continuously-running service); batch:
-    writes once and returns None."""
-    built = build_cmf_stream(spark, spec, streaming=streaming)
-    wire, dead = built if isinstance(built, tuple) else (built, None)
-    if streaming:
-        assert spec.checkpoint, "streaming pipeline needs a checkpoint dir"
-    # Per-batch observability (the reference only log-lines these —
-    # GeotabTranslator.kt:154-157): routed count + distinct-tenant count
-    # land in StreamingQueryProgress.observedMetrics / Observation.get.
-    out = filter_routable(extract_tenant(wire)).select("tenantId", "value").observe(
-        "route_metrics",
-        F.count(F.lit(1)).alias("routed"),
-        F.approx_count_distinct("tenantId").alias("tenants"),
-    )
-    writer = _sink_writer(out, spec, streaming)
+    """Execute the pipeline: :func:`route_plan` plus the chosen sink.
+    Streaming: returns a :class:`PipelineRun` holding the main sink's
+    StreamingQuery and, when configured, the dead-letter sink's
+    (availableNow drain-and-stop by default; set spec.trigger_interval for
+    a continuously-running service); batch: writes once and returns None."""
+    if streaming and not spec.checkpoint:
+        raise ValueError("a streaming pipeline needs PipelineSpec.checkpoint")
+    routed, dead = route_plan(spark, spec, streaming=streaming)
     if not streaming:
-        writer.mode("append").save()
+        if spec.publish is not None:
+            _publish_writer(routed, spec, streaming=False).mode("append").save()
+        else:
+            append_tenant_dirs(routed, spec.output_path)
         if dead is not None:
             dead.write.mode("append").parquet(spec.dead_letter_path)
         return None
@@ -314,5 +294,7 @@ def run_pipeline(spark: SparkSession, spec: PipelineSpec, streaming: bool = True
             .option("checkpointLocation", spec.checkpoint + "-dead"),
             spec,
         ).start()
-    main = _with_trigger(writer.option("checkpointLocation", spec.checkpoint), spec).start()
+    main = _with_trigger(
+        _stream_writer(routed, spec).option("checkpointLocation", spec.checkpoint), spec
+    ).start()
     return PipelineRun(main=main, dead_letter=dead_query)

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.functions.vectors import dist2, dot
 from pulsar_ingestion_spark.operators.ranking import best_struct
 from pulsar_ingestion_spark.registry import query
 from pulsar_ingestion_spark.session import load_tables
@@ -34,12 +35,6 @@ _K = 8  # clusters / PQ codebook size
 _D2 = """list_reduce(list_prepend(0.0, list_transform(range(1, len({a})+1),
   i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))
      * (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE)))), (x,y) -> x+y)"""
-
-
-def _spark_d2(a, b):
-    diff = F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double"))
-                      * (x.cast("double") - y.cast("double")))
-    return F.aggregate(diff, F.lit(0.0), lambda acc, v: acc + v)
 
 
 _KMEANS_ORACLE = f"""
@@ -82,7 +77,7 @@ def q_emb_kmeans_lloyd(spark, sf_dir):
         "vec_id",
         "embedding",
         "cid",
-        _spark_d2(F.col("embedding"), F.col("cvec")).alias("d2"),
+        dist2(F.col("embedding"), F.col("cvec")).alias("d2"),
     )
     # per-vector argmin over k candidates: min(struct(d2, cid)) folds
     # map-side inside the broadcast-join stage — no window, no shuffle
@@ -769,7 +764,7 @@ def q_dedup_semantic_cluster(spark, sf_dir):
     )
     scored = emb.crossJoin(F.broadcast(cents)).select(
         "vec_id", "embedding", "cid",
-        _spark_d2(F.col("embedding"), F.col("cvec")).alias("d2"),
+        dist2(F.col("embedding"), F.col("cvec")).alias("d2"),
     )
     assigned = (
         scored.groupBy("vec_id")
@@ -781,12 +776,6 @@ def q_dedup_semantic_cluster(spark, sf_dir):
             F.col("b.embedding").alias("vec"),
         )
     )
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p.cast("double") * q.cast("double")),
-            F.lit(0.0), lambda acc, v: acc + v,
-        )
 
     a = assigned.alias("a")
     b = assigned.alias("b")
@@ -938,7 +927,7 @@ def q_sim_search_pq_adc(spark, sf_dir):
     lut_cells = queries.crossJoin(F.broadcast(cents)).select(
         "qid", "cid",
         *[
-            _spark_d2(
+            dist2(
                 F.slice("qvec", j * _SUBDIM + 1, _SUBDIM),
                 F.slice("cvec", j * _SUBDIM + 1, _SUBDIM),
             ).alias(f"ld{j}")
@@ -1299,11 +1288,9 @@ def q_emb_triplet_margin(spark, sf_dir):
     makes this runnable at 10⁹ vectors where any sampled pairwise
     audit would be noise."""
     emb = load_tables(spark, sf_dir)["embeddings"]  # no fan_out (r13)
-    from pulsar_ingestion_spark.functions.vectors import dot as vdot
-
     pernorm = emb.select(
         "label",
-        F.round(vdot(F.col("embedding"), F.col("embedding")), 6)
+        F.round(dot(F.col("embedding"), F.col("embedding")), 6)
         .cast("decimal(18,6)").alias("nsq"),
     )
     lab = pernorm.groupBy("label").agg(

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pulsar_ingestion_spark.functions.vectors import dot
 from pulsar_ingestion_spark.operators.ranking import best_struct
 from pulsar_ingestion_spark.operators.sketch import md5_lane
 from pulsar_ingestion_spark.registry import query
@@ -878,14 +879,7 @@ def _pca_step(emb, varr):
     decimal agg over 64 dims), then normalize via a one-row agg cross
     join.  Returns the 64-row (dim, w) frame and the one-row norm."""
     x2 = emb.crossJoin(F.broadcast(varr))
-    u = F.round(
-        F.aggregate(
-            F.zip_with(F.col("embedding"), F.col("v"), lambda a, b: a.cast("double") * b),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        ),
-        10,
-    )
+    u = F.round(dot(F.col("embedding"), F.col("v")), 10)
     exploded = x2.select(u.alias("u"), F.posexplode("embedding").alias("dim", "xf"))
     w = exploded.groupBy("dim").agg(
         F.sum((F.col("xf").cast("double") * F.col("u")).cast("decimal(28,12)"))

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pulsar_ingestion_spark.operators.filterer import extract_tenant, filter_routable, topic_for_tenant
+from pulsar_ingestion_spark.operators.filterer import route, tenant_topic
 from pulsar_ingestion_spark.operators.legacy import event_type_routing_key, translate_legacy
 from pulsar_ingestion_spark.operators.translators import (
     translate_calamp,
@@ -267,8 +267,8 @@ def route_tenant(spark, sf_dir):
             F.struct(tenant.alias("tenantId")).alias("meta"),
         )
     )
-    routed = filter_routable(extract_tenant(ev.withColumn("value", cmf_json)))
-    return routed.groupBy(topic_for_tenant().alias("topic")).agg(F.count("*").alias("msg_cnt"))
+    routed = route(ev.withColumn("value", cmf_json))
+    return routed.groupBy(tenant_topic().alias("topic")).agg(F.count("*").alias("msg_cnt"))
 
 
 _SPLIT_ORACLE = """

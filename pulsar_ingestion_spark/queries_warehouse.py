@@ -529,10 +529,10 @@ def q_warehouse_changelog_compact(spark, sf_dir):
     insert/update/delete log, keep each key's highest-version row and
     drop keys whose final op is a delete — the read-side state a Kafka
     compacted topic or Debezium stream converges to.  One row_number
-    window on the key shuffle — identical cost to dedup_keep_best, and
-    at scale it runs per bucket of the upsert layout
-    (operators/storage.py:upsert_latest) so a batch only compacts the
-    buckets it touched."""
+    window on the key shuffle — identical cost to dedup_keep_best; at
+    scale the compacted state lands in a versioned table
+    (operators/versioned.py), whose overwrite commits are snapshot
+    isolated."""
     (li,) = _t(spark, sf_dir, "lineitem")
     log = li.select(
         F.col("l_orderkey").alias("key"),

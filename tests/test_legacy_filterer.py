@@ -8,9 +8,11 @@ import json
 from pyspark.sql import functions as F
 
 from pulsar_ingestion_spark.operators.filterer import (
+    append_tenant_dirs,
     extract_tenant,
     filter_routable,
-    topic_for_tenant,
+    route,
+    tenant_topic,
 )
 from pulsar_ingestion_spark.operators.legacy import (
     event_type_routing_key,
@@ -92,25 +94,34 @@ def test_filterer_routing_matrix(spark):
     ]
     df = _df(spark, *[c[0] for c in cases])
     out = filter_routable(extract_tenant(df))
-    rows = out.withColumn("topic", topic_for_tenant()).collect()
+    rows = out.withColumn("topic", tenant_topic()).collect()
     assert len(rows) == 1
     assert rows[0]["value"] == routed  # byte-identical passthrough
     assert rows[0]["topic"] == "persistent://acme-corp/integration/telemetry"
 
 
-def test_prepare_kafka_routing(spark):
-    from pulsar_ingestion_spark.operators.filterer import prepare_kafka_routing
+def test_prepare_kafka_routing(spark, tmp_path):
+    """Per-row Kafka topics come from a pipeline publish with a Kafka-safe
+    template (Kafka topic names forbid '/'); the configured sink is read
+    back without a broker."""
+    from pulsar_ingestion_spark.plans.pipeline import PipelineSpec, SourceSpec, _publish_writer
 
+    spec = PipelineSpec(
+        sources=[SourceSpec(kind="jsonl", translator="geotab")],
+        output_path=str(tmp_path / "unused"),
+        publish={"kind": "kafka", "topic_template": "{tenant}.integration.telemetry",
+                 "bootstrap_servers": "k:9092"},
+    )
     df = _df(spark, _cmf_with_meta({"tenantId": "acme-corp"}), _cmf_with_meta({}))
-    out = prepare_kafka_routing(extract_tenant(df)).collect()
+    w = _publish_writer(route(df), spec, streaming=False)
+    out = w._df.collect()
+    assert sorted(w._df.columns) == ["topic", "value"]
     assert len(out) == 1  # unroutable dropped
     assert out[0]["topic"] == "acme-corp.integration.telemetry"
     assert out[0]["value"] == _cmf_with_meta({"tenantId": "acme-corp"})  # byte passthrough
 
 
 def test_route_to_tenant_dirs(spark, tmp_path):
-    from pulsar_ingestion_spark.operators.filterer import route_to_tenant_dirs
-
     payloads = [
         _cmf_with_meta({"tenantId": "t1"}),
         _cmf_with_meta({"tenantId": "t2"}),
@@ -118,9 +129,10 @@ def test_route_to_tenant_dirs(spark, tmp_path):
         _cmf_with_meta({}),
     ]
     base = str(tmp_path / "routed")
-    route_to_tenant_dirs(_df(spark, *payloads), base)
+    append_tenant_dirs(route(_df(spark, *payloads)), base)
     back = spark.read.parquet(base)
     assert back.count() == 3
     assert {r["tenantId"] for r in back.select("tenantId").distinct().collect()} == {"t1", "t2"}
     t1 = spark.read.parquet(base + "/tenantId=t1")
     assert t1.count() == 2
+    assert sorted(r["value"] for r in t1.collect()) == [payloads[0], payloads[2]]

@@ -207,7 +207,8 @@ def test_pq_encode_kernel_matches_relational(spark, sf_dir):
     smallest-cid tie-break.  Codes AND per-subspace distances compared on
     the real fixture."""
     from pulsar_ingestion_spark.operators.similarity import pq_encode_kernel
-    from pulsar_ingestion_spark.queries_ml import _K, _SUBDIM, _SUBSPACES, _spark_d2
+    from pulsar_ingestion_spark.functions.vectors import dist2
+    from pulsar_ingestion_spark.queries_ml import _K, _SUBDIM, _SUBSPACES
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cents = (
@@ -221,7 +222,7 @@ def test_pq_encode_kernel_matches_relational(spark, sf_dir):
         off = j * _SUBDIM
         scored = scored.withColumn(
             f"d2_{j}",
-            _spark_d2(F.slice("embedding", off + 1, _SUBDIM), F.slice("cvec", off + 1, _SUBDIM)),
+            dist2(F.slice("embedding", off + 1, _SUBDIM), F.slice("cvec", off + 1, _SUBDIM)),
         )
         aggs.append(F.min(F.struct(F.col(f"d2_{j}"), F.col("cid"))).alias(f"b{j}"))
     rel = {

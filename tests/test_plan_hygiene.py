@@ -399,13 +399,81 @@ def test_one_ann_search_core():
     assert md5_orders == ["operators/similarity.py::seeded_centroids"], md5_orders
 
 
+def test_one_tenant_router():
+    """The Filterer decision is written once (``operators/filterer.py``)
+    and every ingest run goes through it.  Over the package:
+    ``extract_tenant`` and ``filter_routable`` are composed only in
+    ``route``; one function builds the tenant topic (a ``concat`` beside
+    a tenant-column reference); one batch write appends
+    ``partitionBy("tenantId")`` dirs, and the only other tenant
+    partitioning is the native streaming file sink;
+    ``build_cmf_stream``'s result is never shape-tested; and
+    the ordered-fold vector expressions ``F.aggregate(F.zip_with(...))``
+    are ``vectors.dot`` and ``vectors.dist2``."""
+    import ast
+    from pathlib import Path
+
+    import pulsar_ingestion_spark as pkg
+
+    root = Path(pkg.__file__).parent
+
+    def name(node):
+        return getattr(node, "attr", None) or getattr(node, "id", None)
+
+    def receivers(node):
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            node = node.func if isinstance(node, ast.Call) else node.value
+            if isinstance(node, ast.Attribute):
+                yield node.attr
+
+    sites = {k: [] for k in ("extract_tenant", "filter_routable", "topic", "write",
+                             "writeStream", "tuple_check", "fold")}
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for top in ast.parse(path.read_text()).body:
+            defs = top.body if isinstance(top, ast.ClassDef) else [top]
+            for fn in defs:
+                if not isinstance(fn, ast.FunctionDef):
+                    continue
+                where = f"{rel}::{fn.name}"
+                for n in ast.walk(fn):
+                    if not isinstance(n, ast.Call):
+                        continue
+                    f = name(n.func)
+                    if f in ("extract_tenant", "filter_routable"):
+                        sites[f].append(where)
+                    elif f == "concat" and any(
+                        isinstance(c, ast.Call) and name(c.func) == "col" and c.args
+                        and (getattr(c.args[0], "value", None) == "tenantId"
+                             or name(c.args[0]) == "tenant_col")
+                        for c in ast.walk(fn)
+                    ):
+                        sites["topic"].append(where)
+                    elif (f == "partitionBy" and n.args
+                          and getattr(n.args[0], "value", None) == "tenantId"):
+                        chain = list(receivers(n))
+                        sites["writeStream" if "writeStream" in chain else "write"].append(where)
+                    elif (f == "isinstance" and rel == "plans/pipeline.py"
+                          and name(n.args[1]) == "tuple"):
+                        sites["tuple_check"].append(where)
+                    elif f == "aggregate" and n.args and isinstance(n.args[0], ast.Call) \
+                            and name(n.args[0].func) == "zip_with":
+                        sites["fold"].append(where)
+    assert {k: sorted(v) for k, v in sites.items()} == {
+        "extract_tenant": ["operators/filterer.py::route"],
+        "filter_routable": ["operators/filterer.py::route"],
+        "topic": ["operators/filterer.py::tenant_topic"],
+        "write": ["operators/filterer.py::append_tenant_dirs"],
+        "writeStream": ["plans/pipeline.py::_stream_writer"],
+        "tuple_check": [],
+        "fold": ["functions/vectors.py::dist2", "functions/vectors.py::dot"],
+    }, sites
+
+
 # Public top-level defs that no code outside tests/ calls, kept on
 # purpose.  Every other uncalled def is deleted (ROADMAP direction 10).
 KEEP_UNCALLED = {
-    # the paper's surface: the Filterer's routed writes and the legacy
-    # translator family's event-type split
-    "operators/filterer.py::route_to_tenant_dirs",
-    "operators/filterer.py::prepare_kafka_routing",
+    # the paper's surface: the legacy translator family's event-type split
     "operators/legacy.py::route_by_event_type",
     # the record accounting reads and attaches these (ROADMAP direction 9)
     "streaming/metrics.py::attach_metrics",
@@ -415,10 +483,6 @@ KEEP_UNCALLED = {
     "streaming/monitor.py::rate_monitor",
     # the query side of the streamed IVF index
     "streaming/ann_index.py::ivf_search",
-    # operators with tests and no caller yet, not yet decided on
-    "operators/storage.py::compact_partitioned_output",
-    "operators/storage.py::overwrite_tenant_partitions",
-    "operators/storage.py::upsert_latest",
 }
 
 

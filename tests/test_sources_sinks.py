@@ -234,30 +234,6 @@ def test_parquet_merge_schema_evolution(spark, tmp_path):
     assert rows == {(1, "a", None), (2, "b", 9.5)}
 
 
-def test_compact_partitioned_output(spark, tmp_path):
-    import glob
-
-    from pulsar_ingestion_spark.operators.storage import compact_partitioned_output
-
-    base = str(tmp_path / "routed")
-    # simulate many micro-batches: 6 small appends -> many files per tenant
-    for batch in range(6):
-        df = spark.createDataFrame(
-            [(f"t{i % 2}", f"payload-{batch}-{i}") for i in range(10)],
-            "tenantId string, value string",
-        ).repartition(4)
-        df.write.mode("append").partitionBy("tenantId").parquet(base)
-    files_before = len(glob.glob(f"{base}/tenantId=*/*.parquet"))
-    assert files_before > 10
-    n = compact_partitioned_output(spark, base, "tenantId", target_files_per_partition=1)
-    assert n == 60
-    files_after = len(glob.glob(f"{base}/tenantId=*/*.parquet"))
-    assert files_after <= 4  # ~1 per tenant (+hash-partition remainder)
-    back = spark.read.parquet(base)
-    assert back.count() == 60
-    assert back.select("tenantId").distinct().count() == 2
-
-
 def test_native_sink_exactly_once(spark, tmp_path):
     (tmp_path / "geo").mkdir()
     (tmp_path / "geo" / "a.jsonl").write_text(
@@ -285,6 +261,23 @@ def test_native_sink_exactly_once(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "out")).count() == 1
 
 
+def test_streaming_pipeline_without_checkpoint_raises(spark, tmp_path):
+    """The checkpoint is checked with a real exception (an ``assert`` is
+    stripped under ``python -O``) before any source is opened."""
+    (tmp_path / "geo").mkdir()
+    spec = PipelineSpec(
+        sources=[SourceSpec(kind="jsonl", translator="geotab",
+                            options={"path": str(tmp_path / "geo")})],
+        output_path=str(tmp_path / "out"),
+        dead_letter_path=str(tmp_path / "dead"),
+    )
+    active = [q.id for q in spark.streams.active]
+    with pytest.raises(ValueError, match="checkpoint"):
+        run_pipeline(spark, spec, streaming=True)
+    assert [q.id for q in spark.streams.active] == active
+    assert not (tmp_path / "out").exists() and not (tmp_path / "dead").exists()
+
+
 def test_empty_pipeline_spec_raises(spark, tmp_path):
     import pytest
 
@@ -294,116 +287,6 @@ def test_empty_pipeline_spec_raises(spark, tmp_path):
             PipelineSpec(sources=[], output_path=str(tmp_path / "out")),
             streaming=False,
         )
-
-
-def test_overwrite_tenant_partitions_leaves_neighbors(spark, tmp_path):
-    """Dynamic partition overwrite must replace ONLY the tenants present
-    in the reprocessed frame; other tenant dirs keep their rows."""
-    from pulsar_ingestion_spark.operators.storage import overwrite_tenant_partitions
-
-    base = str(tmp_path / "tenants")
-    first = spark.createDataFrame(
-        [("acme", "a1"), ("acme", "a2"), ("beta", "b1")], "tenantId string, value string"
-    )
-    first.write.mode("append").partitionBy("tenantId").parquet(base)
-
-    fixed = spark.createDataFrame([("acme", "a1-fixed")], "tenantId string, value string")
-    overwrite_tenant_partitions(fixed, base)
-
-    back = spark.read.parquet(base)
-    acme = sorted(r["value"] for r in back.filter("tenantId = 'acme'").collect())
-    beta = sorted(r["value"] for r in back.filter("tenantId = 'beta'").collect())
-    assert acme == ["a1-fixed"]          # replaced wholesale
-    assert beta == ["b1"]                # untouched by the overwrite
-
-
-def test_upsert_latest_merges_by_version(spark, tmp_path):
-    """CDC upsert: later versions win, untouched buckets keep their rows,
-    version ties resolve to the incoming batch."""
-    from pulsar_ingestion_spark.operators.storage import upsert_latest
-
-    base = str(tmp_path / "upsert")
-    b1 = spark.createDataFrame(
-        [("k1", 1, "v1-old"), ("k2", 1, "v2"), ("k3", 1, "v3")],
-        "k string, ver long, payload string",
-    )
-    upsert_latest(spark, b1, base, key_col="k", version_col="ver")
-    # batch 2: update k1 (newer), tie on k2 (incoming wins), new k4
-    b2 = spark.createDataFrame(
-        [("k1", 2, "v1-new"), ("k2", 1, "v2-tie"), ("k4", 1, "v4")],
-        "k string, ver long, payload string",
-    )
-    upsert_latest(spark, b2, base, key_col="k", version_col="ver")
-    got = {r["k"]: (r["ver"], r["payload"]) for r in spark.read.parquet(base).collect()}
-    assert got == {
-        "k1": (2, "v1-new"),
-        "k2": (1, "v2-tie"),
-        "k3": (1, "v3"),
-        "k4": (1, "v4"),
-    }
-
-
-def test_upsert_latest_streaming_foreachbatch(spark, tmp_path):
-    """The upsert composes as a foreachBatch sink: a two-batch stream
-    materializes to the latest-per-key view."""
-    import json as _json
-
-    from pulsar_ingestion_spark.operators.storage import upsert_latest
-
-    src = tmp_path / "in"
-    src.mkdir()
-    rows = [
-        {"k": "a", "ver": 1, "payload": "a1"},
-        {"k": "a", "ver": 2, "payload": "a2"},
-        {"k": "b", "ver": 1, "payload": "b1"},
-    ]
-    with open(src / "part-0.jsonl", "w") as fh:
-        for r in rows:
-            fh.write(_json.dumps(r) + "\n")
-    base = str(tmp_path / "out")
-    stream = spark.readStream.schema("k string, ver long, payload string").json(str(src))
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda batch, epoch: upsert_latest(spark, batch, base, key_col="k", version_col="ver")
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["k"]: r["payload"] for r in spark.read.parquet(base).collect()}
-    assert got == {"a": "a2", "b": "b1"}
-
-
-def test_upsert_latest_mixed_new_and_existing_buckets(spark, tmp_path):
-    """Regression: a batch touching one EXISTING bucket and one BRAND-NEW
-    bucket must not lose the existing bucket's unrelated keys."""
-    from pyspark.sql import functions as F
-
-    from pulsar_ingestion_spark.operators.storage import upsert_latest
-
-    base = str(tmp_path / "upsert")
-    # find two keys in the same bucket and one in a different bucket
-    probe = spark.createDataFrame(
-        [(f"k{i}",) for i in range(40)], "k string"
-    ).withColumn("bucket", F.pmod(F.xxhash64("k"), F.lit(16)))
-    bk = {r["k"]: r["bucket"] for r in probe.collect()}
-    by_bucket: dict[int, list[str]] = {}
-    for k, b in bk.items():
-        by_bucket.setdefault(b, []).append(k)
-    same = next(ks for ks in by_bucket.values() if len(ks) >= 2)
-    other = next(ks for b, ks in by_bucket.items() if ks[0] not in same)
-    k_a, k_b, k_new = same[0], same[1], other[0]
-
-    b1 = spark.createDataFrame([(k_a, 1, "keep-me")], "k string, ver long, payload string")
-    upsert_latest(spark, b1, base, key_col="k", version_col="ver")
-    b2 = spark.createDataFrame(
-        [(k_b, 1, "same-bucket-new-key"), (k_new, 1, "new-bucket")],
-        "k string, ver long, payload string",
-    )
-    upsert_latest(spark, b2, base, key_col="k", version_col="ver")
-    got = {r["k"]: r["payload"] for r in spark.read.parquet(base).collect()}
-    assert got == {k_a: "keep-me", k_b: "same-bucket-new-key", k_new: "new-bucket"}
 
 
 def test_drop_table_location_is_database_aware(spark, tmp_path):
